@@ -53,9 +53,6 @@ from ai_data_pipeline_spark.profiling.oracle import (
     profile_summary_oracle_sql,
 )
 
-# Order matters: within each driver-budget rank (see queries()), entries
-# keep this module order, so the families with the least driver evidence
-# go first — TPC-H, temporal, streaming, vault, io, text, multimodal.
 QUERY_DEF_MODULES = [
     tpch_extra,
     tpch_extra2,
@@ -222,230 +219,6 @@ def _profile_catalog_oracle() -> str:
     )
 
 
-# Driver-evidence bookkeeping. The round driver checks roughly the
-# FIRST 50 queries() entries per round (observed across CORRECTNESS_r02
-# to r04 — an undocumented driver behavior this ordering depends on;
-# if the driver ever checks all entries, the ordering becomes harmless).
-# Queries proven green in an earlier round yield their slots to the
-# still-unproven tail — ordering only; every query remains declared and
-# locally verified via tools/drive_contract.py at the same SF.
-#
-# The green set is DERIVED from the committed CORRECTNESS_r*.json
-# artifacts at import time (a hand-maintained copy went stale in r4 and
-# burned half the round-4 budget on re-proof).
-
-
-def _driver_evidence(
-    base_dir: str | None = None,
-) -> tuple[dict[str, int], dict[str, int]]:
-    """(green, seen): green maps query name -> LAST round it was
-    driver-green in — the round number orders the proven tier
-    oldest-evidence-first (VERDICT r7 task #2), so spare driver slots
-    refresh the longest-unchecked greens instead of re-proving last
-    round's a second time. seen maps every name that has EVER received
-    a driver row (green or not) to the LAST round it got one:
-    rows-only queries absent from it have zero driver evidence and
-    rank ahead of the proven tier for their first row (VERDICT r9
-    task #3); rows-only queries present in it rank INSIDE the proven
-    tier by that last-seen round, so their execution evidence
-    refreshes periodically instead of staling forever at the tail
-    (VERDICT r11 task #7)."""
-    import glob
-    import json
-    import os
-    import re
-
-    here = base_dir or os.path.dirname(os.path.abspath(__file__))
-    green: dict[str, int] = {}
-    seen: dict[str, int] = {}
-    # r* (not r0*): round 10+ records are CORRECTNESS_r10.json etc. —
-    # the old r0* glob would silently drop all post-r9 evidence and
-    # freeze the rotation (round-10 review finding)
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            record = json.load(open(path))
-        except (OSError, ValueError):
-            continue
-        for name, r in record.items():
-            seen[name] = max(seen.get(name, 0), rnd)
-            if (
-                r.get("hash_match")
-                and r.get("rows_match")
-                and r.get("schema_match")
-            ):
-                green[name] = max(green.get(name, 0), rnd)
-    return green, seen
-
-
-# Queries whose implementation (or oracle) changed AFTER their last
-# green round — their green predates the current code, so they are
-# demoted out of the proven tier and re-proven after the never-checked
-# tier drains. Convention: any rewrite of a driver-green query adds its
-# name here IN THE SAME COMMIT (comment-only edits excepted), and the
-# entry is only cleared against a green row proven on the post-rewrite
-# code. History: every prior cohort (r4–r10, 66 names total) was
-# driver-re-proven green on its post-rewrite code in the following
-# round's CORRECTNESS record and cleared — see git history of this
-# block for the per-cohort narratives.
-# r11 rewrites: (a) q_daily_users_hll — the HLL tolerance flag widened
-# from 3σ to 5σ (ADVICE r10: an in-contract sketch exceeds 3σ for
-# ~0.3% of groups, a persistent false red on an unlucky dataset).
-# (b) q_cheapest_supplier — the per-part argmin is now a struct-MIN
-# hash aggregate with map-side combines instead of a row_number
-# window sorting lineitem inside the shuffle (VERDICT r10 item #1);
-# same deterministic tie-break, A/B-verified at sf0.001/0.01/0.1.
-# (c) the sf1 memory-pressure sweep cohort (SCALING.md r11):
-# dedup_clusters / dedup_clusters_logstar — cluster_size is now an
-# aggregate + hash join (no corpus-sorting window) and the CC loop
-# width scales with the measured edge count instead of a hard-coded
-# 8; dedup_embedding_cosine — the all-pairs block count now scales
-# with the corpus (fixed B let per-task matrices grow quadratically).
-# (d) multimodal_image_phash — tile pass extracted into
-# _phash_relation so the cross-modal agreement audit can phash an
-# augmented corpus; identical plan, shared helper.
-# [r11 cohort all re-proved green in CORRECTNESS_r11.json — cleared.]
-# [r12 cohort (the six AQP rewrites + ann_ivf's _ivf_search
-# extraction) all re-proved green in CORRECTNESS_r12.json — cleared.]
-# r13 rewrites: ann_ivf_pq — its serving plan extracted into the
-# shared _ivfpq_search helper (+ _pq_subvectors/_standin_pq_model) so
-# the MLlib-KMeans-trained variant reuses it byte-for-byte — identical
-# plan shape, re-proven per convention (the r12 ann_ivf precedent).
-# Re-verified green vs oracle at sf0.001/0.01/0.1 via
-# tools/drive_subset.py on the new code.
-# [r13 cohort (ann_ivf_pq serving extraction, unigram MATERIALIZED
-# oracles, stream fixture memoization, dedup shared-helper cohort)
-# all re-proved green in CORRECTNESS_r13.json — cleared.]
-# r14 rewrites (ADVICE r13 cohort):
-# (a) aqp_bootstrap — the uniform ppm draw is now projected once as a
-#     column and the Poisson CASE ladder compares the column (both
-#     engines); previously each of the 8 WHEN branches re-inlined the
-#     md5/conv expression. Same draw, same weights, same output.
-# (b) dedup_minhash_lsh / dedup_minhash_estimate — their verbatim
-#     signature/banding copies replaced by the shared
-#     _hashed_digests/_sig_relation/_band_relation/
-#     _candidates_from_bands decomposition that _banded_candidates
-#     (the recall + band-tuning audits) is now built from; a banding
-#     change hits every consumer at once.
-# (c) dedup_lsh_recall / dedup_lsh_band_tuning — consumers of
-#     _banded_candidates, whose sig sub-plan gained a (pruned) sz
-#     column in the decomposition. Identical candidate output.
-# All re-verified green vs oracle at sf0.001/0.01/0.1 via
-# tools/drive_subset.py on the new code.
-# (d) ann_ivf_pq — _ivfpq_search split into _ivfpq_approx +
-#     _ivfpq_rerank (identical composition) so ann_ivf_pq_rerank and
-#     the trained audit can price the re-rank stage; plan unchanged.
-# (e) ann_ivf_pq_trained_audit — gained the trained-path
-#     rerank_ge_adc_ok predicate (oracle changed: new literal column)
-#     and now builds the trained ADC relation once for both paths.
-# (f) dedup_containment — the corpus now includes deterministic
-#     planted wrapper docs (A+' '+successor, offset ids) so the
-#     asymmetric engulfed case is REAL on the fixture, plus the
-#     n_jaccard_missed census + planted_catch_ok flag (VERDICT r13
-#     task #4); oracle changed to match.
-# [the r14 cohort — aqp_bootstrap, the dedup minhash/LSH family,
-# dedup_containment, the MG pair, ann_ivf_pq + trained_audit — all
-# re-proved green in CORRECTNESS_r14.json and now ranks in the proven
-# tier — cleared.]
-# r15 optimization-round rewrites (results oracle-identical, plans
-# changed — guide §2.3/§2.4, VERDICT r14 task #1):
-# (a) ann_ivf_pq / ann_ivf_pq_rerank / ann_ivf_pq_trained_audit (and
-#     rows-only ann_ivf_pq_trained) — `_ivfpq_approx` fuses coarse
-#     assignment + PQ encode into ONE map-side corpus projection
-#     against the broadcast 1-row model (`_pq_model_row`), the ADC
-#     candidate score becomes a broadcast-map lookup projection (no
-#     posexplode / join / groupBy tail), probes gets an explicit
-#     broadcast hint (the planner picked a SortMergeJoin that shuffled
-#     the encoded corpus into N_CELLS partitions), the audit's two
-#     distortion passes fused into one corpus scan computing both
-#     codebooks' sums, and the rerank/audit exact-truth streams get
-#     the gated `_spread` repartition (single-row-group scan = one
-#     task; no-op at cluster scale). Re-verified green vs oracle at
-#     sf0.001/0.01/0.1 via tools/drive_subset.py on the new code.
-_REWRITTEN_SINCE_GREEN: set[str] = {
-    "ann_ivf_pq",
-    "ann_ivf_pq_rerank",
-    "ann_ivf_pq_trained_audit",
-}
-
-# Oracled queries declared late in a round, AFTER that round's driver
-# budget was already filled: these rank behind every re-proof so they
-# cannot displace scheduled evidence conversion, and ahead of the
-# proven tier. Cleared r8: the three r7 deferrals now rank as ordinary
-# never-green tier-1 entries (first driver slots) automatically.
-_NEW_DEFERRED: set[str] = set()
-
-# Rows whose (weaker, rows-only) execution evidence has gone stale and
-# which the proven tier's oldest-first rotation keeps missing (it
-# orders by round, and the oracle-green tiers drain first): force them
-# into the first driver slots this round, after the rewrite re-proofs
-# but ahead of the proven rotation. r14: ann_mllib_brp last executed
-# r10 (VERDICT r13 task #2 — r12 task #7 asked and the rotation
-# didn't surface it).
-_FORCED_REFRESH: set[str] = {"ann_mllib_brp"}
-
-# Red rows re-fixed in the current round go here so the fix is
-# driver-proven first. (The r10 cohort — the seven DECIMAL-output
-# reds, fixed by BIGINT output casts on both engines — all re-proved
-# green in CORRECTNESS_r10.json; tools/drive_contract.py lints any
-# decimal output column so the class cannot recur.) No reds in r10,
-# so the set is empty this round.
-_REFIXED_FIRST: list[str] = []
-
-# Ordering of the never-checked oracle-bearing tier (first driver
-# slots). Historical note: through r10 this list carried the full
-# per-round narrative of every batch ever added (~115 lines); with the
-# tier now essentially empty — everything oracled has been driver-green
-# at least once — the history lives in git and the derived ledger
-# (_driver_evidence) encodes the truth (VERDICT r10 item #2). Only
-# CURRENT never-green names belong here, flagship-first; names that
-# have gone green just rank in the proven tier (the rank() lookup
-# ignores stale entries).
-_UNPROVEN_PRIORITY: list[str] = [
-    # [the full r12 cohort went green in CORRECTNESS_r12.json and now
-    # ranks in the proven tier — cleared.]
-    # round-13: trained-PQ audit (VERDICT r12 task #1 — the trained
-    # codebook's guarantees as integer predicates: distortion vs the
-    # stand-in codebook, corpus-level ADC recall floor vs the exact
-    # integer-L2 top-k; the trained path itself is rows-only and
-    # ranks in tier (2,2) automatically)
-    "ann_ivf_pq_trained_audit",
-    # round-13: one PRUNING turn of the SentencePiece train loop
-    # (VERDICT r12 task #4 — EM → prune → re-EM, loss/coverage
-    # trajectory as exact integers, same recursive-CTE oracle)
-    "corpus_unigram_prune",
-    # round-13: MinHash banding S-curve audit (VERDICT r12 task #5 —
-    # 1−(1−s^r)^b at pinned grid points in integer ppm, the p=1/2
-    # crossing, and observed band recall above it vs the model's own
-    # prediction)
-    "dedup_lsh_band_tuning",
-    # round-13 second batch: residual PQ (the actual FAISS IVFPQ
-    # encoding — PQ over v − c(v), exact-integer residuals) and
-    # asymmetric containment dedup (Broder's second axis — catches
-    # engulfed copies symmetric Jaccard misses)
-    "emb_pq_residual_encode",
-    "dedup_containment",
-    # [the r13 cohort above went green in CORRECTNESS_r13.json and
-    # now ranks in the proven tier — cleared.]
-    # round-14: the bootstrap generalized to a genuinely non-linear
-    # estimator (VERDICT r13 task #3 — avg revenue per ORDER, a ratio
-    # of correlated sums, order-keyed cluster sample, bootstrap SE vs
-    # delta-method SE 3x band + 5σ band vs the exact population ratio)
-    "aqp_bootstrap_ratio",
-    # round-14: the re-rank stage priced against the plain-ADC ranking
-    # on the same candidate relation (VERDICT r13 task #5 — per-query
-    # ADC/re-rank/truth hit census under the stand-in model,
-    # hash-exact; the rerank>=adc flag is a theorem)
-    "ann_ivf_pq_rerank",
-    # round-14: the SentencePiece loop run to a target — two
-    # consecutive prune turns (10 -> 6 multis), each EM's counts
-    # ranking the next prune, exact-integer loss trajectory + monotone
-    # flags, three-DP-pass MATERIALIZED oracle (VERDICT r13 task #6)
-    "corpus_unigram_converge",
-]
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for t in PROFILED_TABLES:
@@ -458,39 +231,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     for mod in QUERY_DEF_MODULES:
         for d in mod.QUERY_DEFS:
             q[d.name] = d.fn
-    oracled = set(oracle_sql())
-    last_green, seen = _driver_evidence()
-    green = set(last_green) - _REWRITTEN_SINCE_GREEN
-    refixed_rank = {n: i for i, n in enumerate(_REFIXED_FIRST)}
-    unproven_rank = {n: i for i, n in enumerate(_UNPROVEN_PRIORITY)}
-
-    def rank(name: str) -> tuple[int, int]:
-        if name in refixed_rank:
-            return (0, refixed_rank[name])
-        if name in _FORCED_REFRESH:  # stale evidence, rotation-missed
-            return (2, 3)
-        if name not in oracled:
-            if name not in seen:
-                # rows-only with NO driver row ever: ahead of the proven
-                # tier so it gets its first (weaker, rows-only) evidence
-                return (2, 2)
-            # rows-only with prior evidence: rides the proven tier's
-            # oldest-first rotation by its LAST-SEEN round, so its
-            # execution evidence refreshes periodically instead of
-            # staling forever at the tail (VERDICT r11 task #7)
-            return (3, seen[name])
-        if name in _NEW_DEFERRED:  # late additions: behind re-proofs
-            return (2, 1)
-        if name in green:
-            # Proven on current code: oldest evidence first, so spare
-            # driver slots refresh the longest-unchecked greens.
-            return (3, last_green[name])
-        if name in _REWRITTEN_SINCE_GREEN:  # green once, code changed since
-            return (2, 0)
-        # oracle-bearing, never driver-checked: the budget target
-        return (1, unproven_rank.get(name, len(_UNPROVEN_PRIORITY)))
-
-    return {n: q[n] for n in sorted(q, key=lambda n: (rank(n), n))}
+    return q
 
 
 def oracle_sql() -> dict[str, str]:

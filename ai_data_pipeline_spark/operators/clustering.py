@@ -36,8 +36,8 @@ CC_MAX_ITERS = 20
 # dedup_triangles, and each consumer references it from several join
 # branches (2 in the symmetrized edge list, 3 in the triangle join).
 # Without materialization Spark re-executes the whole shingle-join
-# subtree once per branch per query (~5× the work — the top line of
-# BENCH_r02). One eager localCheckpoint computes it once per
+# subtree once per branch per query (~5× the work). One eager
+# localCheckpoint computes it once per
 # (session, sf_dir) and every branch reads the materialized blocks.
 # Cached per live session (weak-keyed — see session.session_scoped_cache).
 

@@ -2196,7 +2196,7 @@ def ann_ivf_pq_trained_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # checkpoint Catalyst inlined the whole ADC subtree (coarse
         # assignment + PQ encode + probe + LUT joins) once per
         # consumer — the shipped audit plan carried 54 Exchanges / 30
-        # parquet scans (plans/r14/ann_ivf_pq_trained_audit_before.txt).
+        # parquet scans.
         # Eager, not lazy: the checkpoint's computed size stats keep
         # the downstream full-outer joins broadcast-eligible
         approx_t = _ivfpq_approx(vfp, cents_t, book).localCheckpoint()
@@ -2253,8 +2253,7 @@ def ann_ivf_pq_trained_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         _book_row(book, "tb_arr")
     )
     dists = (
-        _spread(vfp.filter(F.col("vec_id") >= N_QUERIES))
-        .crossJoin(F.broadcast(books_row))
+        corpus.crossJoin(F.broadcast(books_row))
         .select(
             F.expr(_pq_distortion_expr("sb_arr")).alias("sd"),
             F.expr(_pq_distortion_expr("tb_arr")).alias("td"),
@@ -2726,7 +2725,7 @@ def emb_outlier_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop is a single linear lineage chain (each iteration's cents is
     consumed exactly once by the next assignment —
     emb_kmeans_fixed_point's shape); the plan's 24 embeddings scans /
-    64 Exchanges (plans/r14/emb_outlier_distance_before.txt) come from
+    64 Exchanges come from
     the final pass referencing `assigned` twice (directly and inside
     the final `cents` broadcast). THREE materialization variants were
     TRIED and REVERTED against the 1.16 s clean-window baseline:

@@ -924,7 +924,7 @@ def merge_mg_summaries(
     Catalyst inlines a subtree per consumer — the shipped plan of
     sketch_mg_merge_days carried 74 Exchanges / 36 re-scans of the
     checkpointed daily relation, and stream_mg_heavy_hitters re-ran
-    the corpus-scale `exact` aggregate 4× (plans/r14/*_before.txt).
+    the corpus-scale `exact` aggregate 4×.
     The summary-sized fork (pre) and the one item-scaled fork
     (joined — |items| rows, the same size class as `exact`, which any
     evaluation materializes anyway) are LAZILY localCheckpoint'd

@@ -1,6 +1,5 @@
 from __future__ import annotations
 
-import math
 import os
 
 import duckdb
@@ -8,6 +7,7 @@ import pytest
 
 from ai_data_pipeline_spark.catalog import TABLES
 from ai_data_pipeline_spark.session import get_spark
+from tools.drive_contract import check_query
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -29,67 +29,10 @@ def duck():
     con.close()
 
 
-def _norm(v):
-    """Normalize a cell for exact cross-engine comparison."""
-    if v is None:
-        return None
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return v
-    if hasattr(v, "isoformat"):  # datetime/date
-        return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return tuple(_norm(x) for x in v)
-    try:
-        import numpy as np
-
-        if isinstance(v, np.generic):
-            return _norm(v.item())
-    except ImportError:
-        pass
-    import decimal
-
-    if isinstance(v, decimal.Decimal):
-        return float(v)
-    return v
-
-
-def assert_query_matches_oracle(spark_df, duck_con, sql, check_values=True):
-    """Mirror of the driver's t2 check: row count + column names +
-    order-insensitive exact value comparison.
-
-    Also rejects HUGEINT oracle output columns: DuckDB's arrow export
-    maps HUGEINT to float64, so the driver's value-hash mismatches
-    Spark's int64 even when values are equal (the r02/r03 hash-fail
-    artifact). fetchall() returns Python ints and would hide it here —
-    check the declared types instead."""
-    hugeint_cols = [
-        c for c, t, *_ in duck_con.execute(f"DESCRIBE {sql}").fetchall()
-        if "HUGEINT" in t.upper()
-    ]
-    assert not hugeint_cols, (
-        f"oracle emits HUGEINT columns {hugeint_cols}; wrap in "
-        f"CAST(... AS BIGINT) or the driver hash will mismatch"
-    )
-    scols = sorted(spark_df.columns)
-    srows = [tuple(_norm(r[c]) for c in scols) for r in spark_df.collect()]
-
-    res = duck_con.execute(sql)
-    dcols_raw = [d[0] for d in res.description]
-    drows_raw = res.fetchall()
-    dcols = sorted(dcols_raw)
-    idx = [dcols_raw.index(c) for c in dcols]
-    drows = [tuple(_norm(row[i]) for i in idx) for row in drows_raw]
-
-    assert scols == dcols, f"columns differ: spark={scols} duck={dcols}"
-    assert len(srows) == len(drows), f"row count differ: spark={len(srows)} duck={len(drows)}"
-    if check_values:
-        sset = sorted(srows, key=repr)
-        dset = sorted(drows, key=repr)
-        mismatches = [
-            (a, b) for a, b in zip(sset, dset) if a != b
-        ]
-        assert sset == dset, (
-            f"values differ; first mismatches: {mismatches[:3]}"
-        )
+def assert_query_matches_oracle(spark, duck_con, queries, oracles, name):
+    """The strict contract check of ``tools/drive_contract.py`` at the
+    test scale factor: column names, row count, order-insensitive exact
+    values, result-type categories, no HUGEINT oracle columns and no
+    DECIMAL output columns."""
+    status = check_query(spark, duck_con, queries, oracles, name, SF_DIR)
+    assert status == "OK", f"{name}: {status}"

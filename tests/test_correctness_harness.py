@@ -1,5 +1,5 @@
-"""Replicates the driver's t2 gate locally: every queries() entry with an
-oracle must match the DuckDB result exactly at the test scale factor."""
+"""Every queries() entry with an oracle must pass the strict check of
+tools/drive_contract.py at the test scale factor."""
 
 from __future__ import annotations
 
@@ -29,8 +29,7 @@ def test_query_names_unique_across_modules():
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(spark, duck, name):
-    sdf = QUERIES[name](spark, SF_DIR)
-    assert_query_matches_oracle(sdf, duck, ORACLES[name])
+    assert_query_matches_oracle(spark, duck, QUERIES, ORACLES, name)
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
@@ -44,49 +43,6 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert len(df.columns) > 0
-
-
-def test_evidence_bookkeeping_names_are_fresh():
-    """The driver-evidence rotation machinery is load-bearing: a stale
-    name in the hand-maintained sets silently corrupts the ordering (the
-    r4 stale-set bug class). Every name in _REWRITTEN_SINCE_GREEN /
-    _REFIXED_FIRST / _UNPROVEN_PRIORITY must be a declared query, and
-    every green-derived name must still exist in the contract."""
-    declared = set(QUERIES)
-    for label, names in (
-        ("_REWRITTEN_SINCE_GREEN", entry_mod._REWRITTEN_SINCE_GREEN),
-        ("_REFIXED_FIRST", entry_mod._REFIXED_FIRST),
-        ("_UNPROVEN_PRIORITY", entry_mod._UNPROVEN_PRIORITY),
-        ("_NEW_DEFERRED", entry_mod._NEW_DEFERRED),
-        ("_FORCED_REFRESH", entry_mod._FORCED_REFRESH),
-    ):
-        stale = [n for n in names if n not in declared]
-        assert not stale, f"{label} references undeclared queries: {stale}"
-    green, seen = entry_mod._driver_evidence()
-    gone = [n for n in green if n not in declared]
-    assert not gone, f"CORRECTNESS greens for queries no longer declared: {gone}"
-    # every green row is also driver evidence, never FRESHER than it
-    assert set(green) <= set(seen)
-    assert all(green[n] <= seen[n] for n in green)
-
-
-def test_evidence_glob_reads_double_digit_rounds(tmp_path):
-    """The evidence reader must pick up CORRECTNESS_r10.json and later —
-    the original r0* glob silently dropped every post-r9 record, which
-    would freeze the proven-tier rotation (round-10 review finding).
-    Also pins last-green = MAX round across records, and (r12) that
-    seen carries the LAST-SEEN round per name — the rows-only periodic
-    refresh ranks on it (VERDICT r11 task #7)."""
-    import json
-
-    row = {"rows_match": True, "schema_match": True, "hash_match": True}
-    (tmp_path / "CORRECTNESS_r09.json").write_text(json.dumps({"a": row}))
-    (tmp_path / "CORRECTNESS_r10.json").write_text(
-        json.dumps({"a": row, "b": dict(row, hash_match=False)})
-    )
-    green, seen = entry_mod._driver_evidence(str(tmp_path))
-    assert green == {"a": 10}
-    assert seen == {"a": 10, "b": 10}
 
 
 def test_coverage_doc_names_every_contract_query():

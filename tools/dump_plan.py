@@ -1,8 +1,9 @@
-"""Dump .explain('formatted') for named contract queries into
-plans/$PLAN_ROUND/<query>_<tag>.txt (the judge-facing plan evidence;
-PLAN_ROUND defaults to r15).
+"""Print .explain('formatted') and the Exchange/scan counts of named
+contract queries.
 
-    python tools/dump_plan.py after ann_ivf_pq emb_outlier_distance ...
+    python tools/dump_plan.py ann_ivf_pq emb_outlier_distance ...
+
+``SPARK_GRAFT_SF_DIR`` picks the scale-factor directory (default sf0.1).
 """
 
 from __future__ import annotations
@@ -16,14 +17,8 @@ from ai_data_pipeline_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entry_mod  # noqa: E402
 
 
-def main(tag: str, names: list[str]) -> int:
+def main(names: list[str]) -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        os.environ.get("PLAN_ROUND", "r15"),
-    )
-    os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("dump-plan", cpus=8)
     qs = entry_mod.queries()
     for name in names:
@@ -31,17 +26,14 @@ def main(tag: str, names: list[str]) -> int:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        path = os.path.join(out_dir, f"{name}_{tag}.txt")
-        with open(path, "w") as fh:
-            fh.write(plan)
         scans = plan.count("Scan parquet") + plan.count("Scan ExistingRDD")
+        print(plan, flush=True)
         print(
-            f"{name}: {plan.count('Exchange')} Exchange / {scans} scans"
-            f" -> {path}",
+            f"{name}: {plan.count('Exchange')} Exchange / {scans} scans",
             flush=True,
         )
     return 0
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2:]))
+    sys.exit(main(sys.argv[1:]))

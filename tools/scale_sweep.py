@@ -26,7 +26,7 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 DEFAULT_QUERIES = [
-    # top of BENCH_r10.json by cost, one per plan family
+    # the costliest query of each plan family
     "dedup_minhash_estimate",
     "graph_pagerank_nations",
     "q7_nation_trade",
