@@ -5,8 +5,16 @@ from ai_data_pipeline_spark.functions.expressions import (
     dec_avg,
     dec_sum,
     epoch_us,
+    spread,
     time_bucket_start,
     topk_per_key,
 )
 
-__all__ = ["dec_avg", "dec_sum", "epoch_us", "time_bucket_start", "topk_per_key"]
+__all__ = [
+    "dec_avg",
+    "dec_sum",
+    "epoch_us",
+    "spread",
+    "time_bucket_start",
+    "topk_per_key",
+]

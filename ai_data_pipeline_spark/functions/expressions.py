@@ -15,7 +15,7 @@ deterministic.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -43,6 +43,19 @@ def time_bucket_start(ts: Column, bucket_seconds: int) -> Column:
     what turns range predicates into shuffle-friendly hash keys."""
     sec = F.unix_timestamp(ts)
     return sec - sec % bucket_seconds
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Redistribute a CPU-bound pass: a single-row-group parquet file
+    scans as ONE task no matter its size, which serializes the per-row
+    work onto one core. Repartition to the local parallelism when the
+    scan has fewer partitions; no-ops at cluster scale where the scan
+    already has thousands of splits. Callers' results are joins or
+    aggregates over the rows, so they are partitioning-invariant."""
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < parallelism:
+        return df.repartition(parallelism)
+    return df
 
 
 def topk_per_key(df, keys: list, order_cols: list, k: int):

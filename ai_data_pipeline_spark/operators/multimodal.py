@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
+from ai_data_pipeline_spark.functions import spread
 from ai_data_pipeline_spark.registry import QueryDef
 
 FEATURE_SCHEMA = "doc_id long, source string, n_bytes long, first_byte int, last_byte int, byte_sum long"
@@ -1135,10 +1136,7 @@ def gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-row-group test parquet that would otherwise scan (and
     LZW-encode 50k images) in one task; no-ops at cluster scale where
     the scan already has thousands of splits."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    parallelism = spark.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() < parallelism:
-        d = d.repartition(parallelism)
+    d = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
     return d.mapInPandas(_gif_roundtrip_batches, schema=GIF_RT_SCHEMA)
 
 

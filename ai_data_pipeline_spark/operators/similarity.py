@@ -33,15 +33,18 @@ the row axis. float32→float64 casts are exact; cosines are rounded to
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, GroupedData, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, LongType
 
 from ai_data_pipeline_spark.catalog import load_table
+from ai_data_pipeline_spark.functions import spread, topk_per_key as _topk_per_key
 from ai_data_pipeline_spark.registry import QueryDef
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
@@ -82,15 +85,88 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from ai_data_pipeline_spark.functions import topk_per_key as _topk_per_key
+def _split(rel: DataFrame, *q_cols: Column) -> tuple[DataFrame, DataFrame]:
+    """(corpus, queries) of a vector relation: vec_id < N_QUERIES are the
+    query vectors, every other row is the corpus. Given ``q_cols``, the
+    query side is projected to (q_id, *q_cols); otherwise it is whole."""
+    queries = rel.filter(F.col("vec_id") < N_QUERIES)
+    if q_cols:
+        queries = queries.select(F.col("vec_id").alias("q_id"), *q_cols)
+    return rel.filter(F.col("vec_id") >= N_QUERIES), queries
+
+
+def _standin(rel: DataFrame, n: int, *cols: Column | str) -> DataFrame:
+    """The first ``n`` corpus rows (N_QUERIES <= vec_id < N_QUERIES + n)
+    projected to ``cols``: the deterministic stand-in model (centroids,
+    codewords) that keeps the ANN tier oracle-checkable end to end. At
+    100 TB the model comes from k-means on a sample instead
+    (``_trained_centroids``, ``_trained_codebook``)."""
+    return rel.filter(
+        (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + n)
+    ).select(*cols)
+
+
+def _cos_cents(e: DataFrame) -> DataFrame:
+    """Stand-in cosine centroids (cell_id = vec_id, cv) of ``_vectors``."""
+    return _standin(
+        e, N_CELLS, F.col("vec_id").alias("cell_id"), F.col("v").alias("cv")
+    )
+
+
+def _assign_cos(
+    rel: DataFrame, cents: DataFrame, keys: list[str], payload: list[str]
+) -> DataFrame:
+    """Nearest-centroid cell of every row of ``rel`` (column v) against
+    the broadcast (cell_id, cv) table, cos desc then cell_id asc, as
+    (*keys, *payload, cell_id). It is a max_by aggregate over ``keys``,
+    not a row_number window: the map-side partial combine collapses the
+    N_CELLS candidate rows per key before the exchange, so ONE copy of
+    each row (with its payload) rides the shuffle and nothing sorts."""
+    scored = rel.crossJoin(F.broadcast(cents)).select(
+        *keys, *payload, "cell_id", _cosine_udf("v", "cv").alias("c_cos")
+    )
+    # argmax ordered by (c_cos, -cell_id) lexicographic
+    order = F.struct(F.col("c_cos").alias("c"), (-F.col("cell_id")).alias("nc"))
+    if not payload:
+        return scored.groupBy(*keys).agg(
+            F.max_by(F.col("cell_id"), order).alias("cell_id")
+        )
+    return (
+        scored.groupBy(*keys)
+        .agg(F.max_by(F.struct("cell_id", *payload), order).alias("best"))
+        .select(
+            *keys,
+            *[F.col(f"best.{c}").alias(c) for c in payload],
+            F.col("best.cell_id").alias("cell_id"),
+        )
+    )
+
+
+def _member(df: DataFrame, flag: str) -> DataFrame:
+    """(q_id, vec_id, ``flag`` = 1): a top-k result as a membership
+    relation for ``_reconcile``."""
+    return df.select("q_id", "vec_id", F.lit(1).alias(flag))
+
+
+def _reconcile(*rels: DataFrame) -> GroupedData:
+    """Full-outer join of ``_member`` relations on (q_id, vec_id),
+    grouped per query for ``_hits`` counts. Every side is |queries|·k
+    rows, so the reconciliation is negligible at any corpus size."""
+    return reduce(
+        lambda a, b: a.join(b, ["q_id", "vec_id"], "full_outer"), rels
+    ).groupBy("q_id")
+
+
+def _hits(*flags: str) -> Column:
+    """Per-query count of the pairs present in every flagged relation."""
+    return F.sum(
+        reduce(lambda a, b: a * b, [F.coalesce(f, F.lit(0)) for f in flags])
+    )
 
 
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _vectors(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-    )
-    pairs = e.filter(F.col("vec_id") >= N_QUERIES).crossJoin(F.broadcast(q))
+    corpus, q = _split(_vectors(spark, sf_dir), F.col("v").alias("qv"))
+    pairs = corpus.crossJoin(F.broadcast(q))
     scored = pairs.select(
         "q_id", "vec_id", F.round(_cosine_udf("v", "qv"), 6).alias("cosine")
     )
@@ -197,26 +273,9 @@ def _ivf_search(corpus: DataFrame, q: DataFrame, cents: DataFrame) -> DataFrame:
 
     Scale: cost drops from |corpus|x|queries| to |corpus|x|queries|x
     N_PROBE/N_CELLS; the centroid table is broadcast (tiny), the corpus
-    shuffles once on cell, queries are broadcast to their probed cells.
-    The nearest-centroid assignment is a max_by aggregate, not a
-    row_number window: the map-side partial combine collapses the
-    N_CELLS candidate rows per vector before the exchange, so ONE copy
-    of each vector rides the shuffle (not N_CELLS copies) and nothing
-    sorts."""
-    # assign: each corpus vector -> nearest centroid (cos desc, cell asc)
-    # as an argmax aggregate ordered by (c_cos, -cell_id) lexicographic
-    assigned = (
-        corpus.crossJoin(F.broadcast(cents))
-        .select("vec_id", "v", "cell_id", _cosine_udf("v", "cv").alias("c_cos"))
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.struct("cell_id", "v"),
-                F.struct(F.col("c_cos").alias("c"), (-F.col("cell_id")).alias("nc")),
-            ).alias("best")
-        )
-        .select("vec_id", F.col("best.v").alias("v"), F.col("best.cell_id").alias("cell_id"))
-    )
+    shuffles once on cell (one copy per vector: ``_assign_cos``),
+    queries are broadcast to their probed cells."""
+    assigned = _assign_cos(corpus, cents, ["vec_id"], ["v"])
     # probe: each query -> N_PROBE nearest centroids
     wq = W.partitionBy("q_id").orderBy(F.desc("q_cos"), F.asc("cell_id"))
     probes = (
@@ -248,14 +307,8 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     have no DuckDB counterpart and whose guarantees are therefore
     audited by ``ann_ivf_trained_recall`` instead)."""
     e = _vectors(spark, sf_dir)
-    cents = e.filter(
-        (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + N_CELLS)
-    ).select(F.col("vec_id").alias("cell_id"), F.col("v").alias("cv"))
-    corpus = e.filter(F.col("vec_id") >= N_QUERIES)
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-    )
-    return _ivf_search(corpus, q, cents)
+    corpus, q = _split(e, F.col("v").alias("qv"))
+    return _ivf_search(corpus, q, _cos_cents(e))
 
 
 def _ann_ivf_oracle() -> str:
@@ -302,27 +355,18 @@ def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: composes two already-bounded plans (the tournament
     brute-force ranking and the broadcast-centroid IVF ranking) and
     reconciles two k-row-per-query relations with one full-outer
-    equi-join + a query-keyed aggregate — both sides are
-    |queries|·k rows, so the reconciliation is negligible at any
-    corpus size. Ratios integer ppm (div == // on non-negatives)."""
-    exact = ann_cosine_topk(spark, sf_dir).select(
-        "q_id", "vec_id", F.lit(1).alias("e")
-    )
-    ivf = ann_ivf(spark, sf_dir).select("q_id", "vec_id", F.lit(1).alias("i"))
-    return (
-        exact.join(ivf, ["q_id", "vec_id"], "full_outer")
-        .groupBy("q_id")
-        .agg(
-            F.sum(F.coalesce("e", F.lit(0))).cast("long").alias("n_exact"),
-            F.sum(F.coalesce("i", F.lit(0))).cast("long").alias("n_ivf"),
-            F.sum(F.coalesce("e", F.lit(0)) * F.coalesce("i", F.lit(0)))
-            .cast("long")
-            .alias("n_hit"),
-            F.expr(
-                "cast((sum(coalesce(e, 0) * coalesce(i, 0)) * 1000000)"
-                " div nullif(sum(coalesce(e, 0)), 0) as bigint)"
-            ).alias("recall_ppm"),
-        )
+    equi-join + a query-keyed aggregate (``_reconcile``). Ratios
+    integer ppm (div == // on non-negatives)."""
+    exact = _member(ann_cosine_topk(spark, sf_dir), "e")
+    ivf = _member(ann_ivf(spark, sf_dir), "i")
+    return _reconcile(exact, ivf).agg(
+        _hits("e").cast("long").alias("n_exact"),
+        _hits("i").cast("long").alias("n_ivf"),
+        _hits("e", "i").cast("long").alias("n_hit"),
+        F.expr(
+            "cast((sum(coalesce(e, 0) * coalesce(i, 0)) * 1000000)"
+            " div nullif(sum(coalesce(e, 0)), 0) as bigint)"
+        ).alias("recall_ppm"),
     )
 
 
@@ -357,29 +401,16 @@ def ann_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     share, and load factor vs perfect balance (load_ppm = n·N_CELLS·10⁶
     // total — 10⁶ means perfectly balanced, 2·10⁶ a 2× hot cell).
 
-    Scale: the assignment subtree is ann_ivf's (broadcast centroids,
-    keyed max_by — one copy of each vector rides the shuffle); the
+    Scale: the assignment subtree is ann_ivf's (``_assign_cos``); the
     audit itself aggregates to N_CELLS rows before anything else
     touches it. The long arithmetic n·N_CELLS·10⁶ holds to ~5·10¹¹
     vectors per index shard (beyond that, shard the index — the audit
     then runs per shard anyway). Non-negative operands, so Spark's
     truncating div and DuckDB's flooring // agree."""
     e = _vectors(spark, sf_dir)
-    cents = e.filter(
-        (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + N_CELLS)
-    ).select(F.col("vec_id").alias("cell_id"), F.col("v").alias("cv"))
-    corpus = e.filter(F.col("vec_id") >= N_QUERIES)
-    assigned = (
-        corpus.crossJoin(F.broadcast(cents))
-        .select("vec_id", "cell_id", _cosine_udf("v", "cv").alias("c_cos"))
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.col("cell_id"),
-                F.struct(F.col("c_cos").alias("c"), (-F.col("cell_id")).alias("nc")),
-            ).alias("cell_id")
-        )
-    )
+    cents = _cos_cents(e)
+    corpus, _ = _split(e)
+    assigned = _assign_cos(corpus, cents, ["vec_id"], [])
     sizes = assigned.groupBy("cell_id").agg(F.count(F.lit(1)).alias("n_vecs"))
     return (
         cents.select("cell_id")
@@ -441,11 +472,10 @@ def ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair is scored twice."""
     e = _vectors(spark, sf_dir)
     bucketed = e.select("vec_id", "v", _lsh_bucket_udf("v").alias("bucket"))
-    corpus = bucketed.filter(F.col("vec_id") >= N_QUERIES)
+    corpus, queries = _split(bucketed)
     flips = F.array(F.lit(0), *[F.lit(1 << j) for j in range(LSH_BITS)])
     probes = (
-        bucketed.filter(F.col("vec_id") < N_QUERIES)
-        .select(
+        queries.select(
             F.col("vec_id").alias("q_id"),
             F.col("v").alias("qv"),
             F.explode(flips).alias("flip"),
@@ -633,8 +663,7 @@ def ann_mllib_brp(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.transform("embedding", lambda x: x.cast("double"))
         ).alias("features"),
     )
-    corpus = e.filter(F.col("vec_id") >= N_QUERIES)
-    q = e.filter(F.col("vec_id") < N_QUERIES)
+    corpus, q = _split(e)
     if corpus.isEmpty():
         # MLlib refuses to fit on zero rows; an empty index answers
         # every query with zero matches — return the declared schema
@@ -677,11 +706,10 @@ def _l2_udf(va: pd.Series, vb: pd.Series) -> pd.Series:
 
 
 def ann_mllib_brp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-bearing audit of ``ann_mllib_brp`` (VERDICT r10 task #1):
-    the BRP candidate pairs themselves are MLlib-seed-dependent (no
-    DuckDB counterpart), but their GUARANTEES are exact integer
-    predicates — the ``sketch_quantile_tolerance`` recipe applied to
-    the MLlib path. Per query point:
+    """Oracle-bearing audit of ``ann_mllib_brp``: the BRP candidate
+    pairs themselves are MLlib-seed-dependent (no DuckDB counterpart),
+    but their GUARANTEES are exact integer predicates — the
+    ``sketch_quantile_tolerance`` recipe applied to the MLlib path. Per query point:
 
     - ``n_exact``     — #corpus vectors within BRP_THRESHOLD Euclidean
                         distance (exact; the oracle recomputes it with
@@ -706,11 +734,7 @@ def ann_mllib_brp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann_cosine_topk); the BRP side joins candidate pairs back on
     (q_id, vec_id) — candidates are a few per query, so the join is a
     broadcast hash join at any corpus size."""
-    e = _vectors(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-    )
-    corpus = e.filter(F.col("vec_id") >= N_QUERIES)
+    corpus, q = _split(_vectors(spark, sf_dir), F.col("v").alias("qv"))
     exact = (
         corpus.crossJoin(F.broadcast(q))
         .select("q_id", "vec_id", _l2_udf("v", "qv").alias("dist"))
@@ -772,10 +796,9 @@ GROUP BY q.q_id
 """
 
 
-# Trained-IVF contract constants (VERDICT r11 task #4). The recall
-# floor is CORPUS-level and set well below the measured mean (see
-# ann_ivf_trained_recall docstring) so only a genuinely broken index
-# build trips it: per-QUERY recall legitimately reaches 0/5 when both
+# Trained-IVF contract constants. The recall floor is CORPUS-level and
+# set well below the measured mean (see ann_ivf_trained_recall
+# docstring) so only a genuinely broken index build trips it: per-QUERY recall legitimately reaches 0/5 when both
 # probed cells miss a neighbor's cell (N_PROBE=2 of N_CELLS=8 on
 # structureless synthetic vectors), so a per-query floor would bake an
 # expected failure into the flag.
@@ -857,11 +880,7 @@ def ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterations) with no DuckDB counterpart to hash-compare against; the
     path's GUARANTEES are oracle-checked by ``ann_ivf_trained_recall``,
     the ``ann_mllib_brp``/``ann_mllib_brp_recall`` recipe."""
-    e = _vectors(spark, sf_dir)
-    corpus = e.filter(F.col("vec_id") >= N_QUERIES)
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-    )
+    corpus, q = _split(_vectors(spark, sf_dir), F.col("v").alias("qv"))
     cents = _trained_centroids(spark, sf_dir)
     if cents is None:
         # empty corpus: KMeans cannot fit and an empty index answers
@@ -875,10 +894,10 @@ def ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ann_ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-bearing audit of ``ann_ivf_trained`` (VERDICT r11 task
-    #4): the trained-IVF top-k membership is MLlib-seed-dependent (no
-    DuckDB counterpart), but its GUARANTEES are exact integer
-    predicates against the brute-force relation. One corpus-level row:
+    """Oracle-bearing audit of ``ann_ivf_trained``: the trained-IVF
+    top-k membership is MLlib-seed-dependent (no DuckDB counterpart),
+    but its GUARANTEES are exact integer predicates against the
+    brute-force relation. One corpus-level row:
 
     - ``n_queries`` / ``n_exact_total`` — exact top-k census from
       ``ann_cosine_topk`` (oracle recomputes both).
@@ -900,36 +919,29 @@ def ann_ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     argument).
 
     Scale: composes two bounded plans and reconciles two k-row-per-query
-    relations with one full-outer equi-join + one tiny aggregate —
-    negligible at any corpus size."""
-    exact = ann_cosine_topk(spark, sf_dir).select(
-        "q_id", "vec_id", F.lit(1).alias("e")
+    relations (``_reconcile``) — negligible at any corpus size."""
+    exact = _member(ann_cosine_topk(spark, sf_dir), "e")
+    trained = _member(ann_ivf_trained(spark, sf_dir), "i")
+    per_q = _reconcile(exact, trained).agg(
+        _hits("e").alias("ne"), _hits("i").alias("ni"), _hits("e", "i").alias("nh")
     )
-    trained = ann_ivf_trained(spark, sf_dir).select(
-        "q_id", "vec_id", F.lit(1).alias("i")
-    )
-    per_q = (
-        exact.join(trained, ["q_id", "vec_id"], "full_outer")
-        .groupBy("q_id")
-        .agg(
-            F.sum(F.coalesce("e", F.lit(0))).alias("ne"),
-            F.sum(F.coalesce("i", F.lit(0))).alias("ni"),
-            F.sum(F.coalesce("e", F.lit(0)) * F.coalesce("i", F.lit(0))).alias(
-                "nh"
-            ),
-        )
-    )
+    return _recall_floor(per_q, IVF_TRAINED_RECALL_MIN_PCT)
+
+
+def _recall_floor(per_q: DataFrame, min_pct: int, *extra: Column) -> DataFrame:
+    """The trained-model audits' corpus-level row over per-query exact
+    (ne), served (ni) and hit (nh) counts: the exact top-k census, k_ok
+    (no query served more than TOP_K rows) and recall_floor_ok (hits
+    cover >= ``min_pct`` of the exact mass), then ``extra`` aggregates.
+    Empty inputs coalesce to the vacuous 1."""
     return per_q.agg(
         F.count(F.lit(1)).cast("long").alias("n_queries"),
         F.coalesce(F.sum("ne"), F.lit(0)).cast("long").alias("n_exact_total"),
         F.coalesce((F.max("ni") <= TOP_K).cast("int"), F.lit(1)).alias("k_ok"),
         F.coalesce(
-            (
-                F.sum("nh") * 100
-                >= F.sum("ne") * IVF_TRAINED_RECALL_MIN_PCT
-            ).cast("int"),
-            F.lit(1),
+            (F.sum("nh") * 100 >= F.sum("ne") * min_pct).cast("int"), F.lit(1)
         ).alias("recall_floor_ok"),
+        *extra,
     )
 
 
@@ -980,13 +992,22 @@ KMEANS_K = 8
 KMEANS_ITERS = 2
 _FP = "CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)"
 
-# squared L2 distance over fixed-point vectors — pure integer fold,
-# bit-identical in both engines (diffs ≤ ~2·10⁶, squares ≤ 4·10¹², sum
-# over 64 dims ≤ 3·10¹⁴ — far inside long range)
-_DIST_SPARK = (
-    "aggregate(zip_with(v_fp, c_fp, (x, y) -> (x - y) * (x - y)),"
-    " cast(0 as bigint), (acc, t) -> acc + t)"
-)
+
+def _int_l2(a: str, b: str) -> str:
+    """Integer squared-L2 fold over two ×10⁶ fixed-point array columns —
+    bit-identical in both engines (diffs ≤ ~2·10⁶, squares ≤ 4·10¹², sum
+    over 64 dims ≤ 3·10¹⁴ — far inside long range)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
+        " cast(0 as bigint), (acc, t) -> acc + t)"
+    )
+
+
+def _vfp(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ×10⁶ fixed-point embedding relation (vec_id, v_fp)."""
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.expr(f"transform(embedding, x -> {_FP})").alias("v_fp")
+    )
 
 
 def _dist_duck(v: str, c: str) -> str:
@@ -1012,14 +1033,17 @@ def emb_kmeans_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     only; the same loop trains on 10⁹ vectors with K in the thousands
     (assignment then goes through the pandas-UDF kernel and AQE picks
     shuffle strategy, but the relation algebra is unchanged)."""
-    e = load_table(spark, sf_dir, "embeddings")
-    vecs = e.select(
-        "vec_id",
-        F.expr(f"transform(embedding, x -> {_FP})").alias("v_fp"),
-    ).cache()
-    cents = (
-        vecs.filter(F.col("vec_id") < KMEANS_K)
-        .select(F.col("vec_id").alias("cell"), F.col("v_fp").alias("c_fp"))
+    assigned, _ = _lloyd_fp(_vfp(spark, sf_dir).cache())
+    return assigned.select("vec_id", "cell")
+
+
+def _lloyd_fp(vecs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """KMEANS_ITERS fixed-point Lloyd iterations over ``vecs`` (vec_id,
+    v_fp) from the first KMEANS_K vectors. Returns the last assignment
+    (vec_id, v_fp, cell) and the centroids (cell, c_fp) updated from
+    it."""
+    cents = vecs.filter(F.col("vec_id") < KMEANS_K).select(
+        F.col("vec_id").alias("cell"), F.col("v_fp").alias("c_fp")
     )
     assigned = None
     for _ in range(KMEANS_ITERS):
@@ -1027,7 +1051,7 @@ def emb_kmeans_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
         # partials collapse the K candidates per vector pre-exchange
         assigned = (
             vecs.crossJoin(F.broadcast(cents))
-            .withColumn("dist", F.expr(_DIST_SPARK))
+            .withColumn("dist", F.expr(_int_l2("v_fp", "c_fp")))
             .groupBy("vec_id")
             .agg(
                 F.min_by(
@@ -1040,9 +1064,7 @@ def emb_kmeans_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("best.cell").alias("cell"),
             )
         )
-        dims = assigned.select(
-            "cell", F.posexplode("v_fp").alias("dim", "val")
-        )
+        dims = assigned.select("cell", F.posexplode("v_fp").alias("dim", "val"))
         cell_dims = dims.groupBy("cell", "dim").agg(
             F.sum("val").alias("s"), F.count(F.lit(1)).alias("n")
         )
@@ -1057,7 +1079,7 @@ def emb_kmeans_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("c_fp")
             )
         )
-    return assigned.select("vec_id", "cell")
+    return assigned, cents
 
 
 def _kmeans_oracle() -> str:
@@ -1179,24 +1201,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold), and how many lower-id near-dups it has.
     """
     e = _vectors(spark, sf_dir)
-    cents = e.filter(
-        (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + N_CELLS)
-    ).select(F.col("vec_id").alias("cell_id"), F.col("v").alias("cv"))
-    # nearest-centroid assignment as a max_by aggregate (not a window):
-    # map-side partials collapse the N_CELLS candidates per vector
-    # before the exchange — one vector copy on the wire, no sort
-    assigned = (
-        e.crossJoin(F.broadcast(cents))
-        .select("vec_id", "v", "cell_id", _cosine_udf("v", "cv").alias("c_cos"))
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.struct("cell_id", "v"),
-                F.struct(F.col("c_cos").alias("c"), (-F.col("cell_id")).alias("nc")),
-            ).alias("best")
-        )
-        .select("vec_id", F.col("best.v").alias("v"), F.col("best.cell_id").alias("cell_id"))
-    )
+    assigned = _assign_cos(e, _cos_cents(e), ["vec_id"], ["v"])
     a, b = assigned.alias("a"), assigned.alias("b")
     dup_pairs = (
         a.join(
@@ -1285,7 +1290,6 @@ def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no shuffle, no broadcast, no UDF; whole-stage codegen end to end).
     At 1000 executors this runs at scan speed and reduces downstream
     shuffle width 4×."""
-    e = load_table(spark, sf_dir, "embeddings")
     # One 2-D literal: transform over the matrix rows keeps the codegen
     # compact (measured ~10% faster and far less first-run JIT variance
     # than RP_DIM separate aggregate expressions).
@@ -1297,10 +1301,7 @@ def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         + ")"
     )
-    vfp = e.select(
-        "vec_id", F.expr(f"transform(embedding, x -> {_FP})").alias("v_fp")
-    )
-    return vfp.select(
+    return _vfp(spark, sf_dir).select(
         "vec_id",
         F.posexplode(
             F.expr(
@@ -1357,40 +1358,54 @@ def emb_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vec_id, m, dist, code) tuples, never raw vectors, and the
     broadcast join itself is map-side. Output: one row per (vector,
     subspace) with the chosen code and its distortion."""
-    e = load_table(spark, sf_dir, "embeddings")
-    vfp = e.select(
-        "vec_id", F.expr(f"transform(embedding, x -> {_FP})").alias("v_fp")
-    )
-    subs = vfp.select(
+    subs = _pq_subvectors(_vfp(spark, sf_dir))
+    return _pq_encode(subs, _standin_book(subs), ["vec_id"])
+
+
+def _sub(arr: str, m: int) -> str:
+    """Subspace ``m`` (PQ_SUB dims) of a fixed-point array column."""
+    return f"slice({arr}, {m * PQ_SUB + 1}, {PQ_SUB})"
+
+
+def _pq_subvectors(vfp: DataFrame, *keep: str) -> DataFrame:
+    """Explode a ×10⁶ fixed-point vector relation (vec_id, *keep, v_fp)
+    to one row per (vec_id, *keep, subspace m, PQ_SUB-dim subvector sub)
+    — the input shape of every PQ stage (codebook build, corpus encode,
+    query LUT)."""
+    return vfp.select(
         "vec_id",
+        *keep,
         F.posexplode(
-            F.array(
-                *[
-                    F.expr(f"slice(v_fp, {m * PQ_SUB + 1}, {PQ_SUB})")
-                    for m in range(PQ_M)
-                ]
-            )
+            F.array(*[F.expr(_sub("v_fp", m)) for m in range(PQ_M)])
         ).alias("m", "sub"),
     )
-    cents = subs.filter(
-        (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + PQ_K)
-    ).select(
+
+
+def _standin_book(subs: DataFrame) -> DataFrame:
+    """Stand-in codebook (m, code, csub): the subvectors of the first
+    PQ_K corpus vectors, code = vec_id - N_QUERIES."""
+    return _standin(
+        subs,
+        PQ_K,
         "m",
         (F.col("vec_id") - N_QUERIES).alias("code"),
         F.col("sub").alias("csub"),
     )
-    dists = subs.join(F.broadcast(cents), "m").select(
-        "vec_id",
-        "m",
-        "code",
-        F.expr(
-            "aggregate(zip_with(sub, csub, (x, y) -> (x - y) * (x - y)),"
-            " cast(0 as bigint), (acc, t) -> acc + t)"
-        ).alias("dist_fp"),
-    )
-    return dists.groupBy("vec_id", "m").agg(
-        F.min_by("code", F.struct("dist_fp", "code")).alias("code"),
-        F.min("dist_fp").alias("dist_fp"),
+
+
+def _pq_encode(subs: DataFrame, book: DataFrame, keys: list[str]) -> DataFrame:
+    """Nearest codeword per (*keys, m) against the broadcast book —
+    integer-L2 argmin, ties to the lowest code — as (*keys, m, code,
+    dist_fp). A min_by aggregate with map-side partials: the shuffle
+    carries (keys, m, code, distance) tuples, never raw vectors."""
+    return (
+        subs.join(F.broadcast(book), "m")
+        .select(*keys, "m", "code", F.expr(_int_l2("sub", "csub")).alias("d_fp"))
+        .groupBy(*keys, "m")
+        .agg(
+            F.min_by("code", F.struct("d_fp", "code")).alias("code"),
+            F.min("d_fp").alias("dist_fp"),
+        )
     )
 
 
@@ -1427,52 +1442,12 @@ SELECT vec_id, m, code, dist_fp FROM (
 IVFPQ_RERANK = 3 * TOP_K  # PQ shortlist size fed to the exact re-rank
 
 
-def _int_l2(a: str, b: str) -> str:
-    """Integer squared-L2 fold over two fixed-point array columns —
-    bit-identical in both engines (see _DIST_SPARK bounds note)."""
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
-        " cast(0 as bigint), (acc, t) -> acc + t)"
-    )
-
-
 def _int_l2_duck(a: str, b: str, d: int) -> str:
     return (
         f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
         f"list_transform(range(1, {d} + 1), i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i]))), "
         f"(x, y) -> x + y)"
     )
-
-
-def _pq_subvectors(vfp: DataFrame) -> DataFrame:
-    """Explode a ×10⁶ fixed-point vector relation (vec_id, v_fp) to one
-    row per (vec_id, subspace m, PQ_SUB-dim subvector) — the input shape
-    of every PQ stage (codebook build, corpus encode, query LUT)."""
-    return vfp.select(
-        "vec_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.expr(f"slice(v_fp, {m * PQ_SUB + 1}, {PQ_SUB})")
-                    for m in range(PQ_M)
-                ]
-            )
-        ).alias("m", "sub"),
-    )
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Redistribute a CPU-bound corpus pass: a single-row-group parquet
-    file scans as ONE task no matter its size, which serializes the
-    per-row integer folds onto one core. Repartition first so the pass
-    uses the whole local parallelism; no-ops at cluster scale where the
-    scan already has thousands of splits (the profiler._scalar_stats
-    discipline). Results are joins/aggregates over the rows, so they
-    are partitioning-invariant by construction."""
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < parallelism:
-        return df.repartition(parallelism)
-    return df
 
 
 def _pq_model_row(cents: DataFrame, book: DataFrame) -> DataFrame:
@@ -1488,50 +1463,44 @@ def _pq_model_row(cents: DataFrame, book: DataFrame) -> DataFrame:
     cents_arr = cents.agg(
         F.sort_array(F.collect_list(F.struct("cell", "c_fp"))).alias("cents_arr")
     )
-    book_arr = book.agg(
-        F.sort_array(F.collect_list(F.struct("m", "code", "csub"))).alias("book_arr")
+    return cents_arr.crossJoin(_book_row(book, "book_arr"))
+
+
+# The single-pass encode of one corpus row against the 1-row
+# ``_pq_model_row``: coarse cell = array_min over the centroid
+# distances, codes[m] = array_min over subspace m's codeword distances.
+# Same integer arithmetic and (distance, id) tie-break as a min_by
+# aggregate per model, but one map-side projection: one corpus scan and
+# no shuffle before candidate pruning.
+_CELL_EXPR = (
+    "array_min(transform(cents_arr, c -> struct("
+    f"{_int_l2('v_fp', 'c.c_fp')} AS d, c.cell AS cell))).cell"
+)
+_CODES_EXPR = "array({})".format(
+    ", ".join(
+        "array_min(transform(filter(book_arr, b -> b.m = "
+        f"{m}), b -> struct("
+        + _int_l2(_sub("v_fp", m), "b.csub")
+        + " AS d, b.code AS code))).code"
+        for m in range(PQ_M)
     )
-    return cents_arr.crossJoin(book_arr)
+)
 
 
 def _ivfpq_approx(vfp: DataFrame, cents: DataFrame, book: DataFrame) -> DataFrame:
     """The ADC HALF of the IVF-PQ serving plan: coarse assignment, PQ
-    encode, probe, and the asymmetric-distance candidate scores —
-    (q_id, vec_id, approx_dist_fp), BEFORE any shortlist/re-rank
-    (extracted from ``_ivfpq_search`` so ``ann_ivf_pq_rerank`` can
-    price the re-rank stage against the plain-ADC ranking on the same
-    relation — VERDICT r13 task #5). Inputs as ``_ivfpq_search``.
-
-    Round-15 single-pass encode (guide §2.3/§2.4, VERDICT r14 task #1):
-    coarse assignment and PQ encoding previously ran as TWO corpus
-    aggregates (a crossJoin(cents) + groupBy(vec_id) min_by, and an
-    explode + broadcast-join(book) + groupBy(vec_id, m) min_by) — two
-    full corpus scans and two corpus-wide shuffles (|corpus| and
-    PQ_M·|corpus| rows) before any candidate pruning. Both are argmins
-    over BROADCAST-SIZED model relations, so they now run as one
-    map-side projection per corpus row against the 1-row
-    ``_pq_model_row``: cell = array_min over centroid distances,
-    codes[m] = array_min over codeword distances — same integer
-    arithmetic, same (distance, id) tie-break, ONE corpus scan and
-    ZERO pre-candidate shuffles. Equivalence re-proven vs the DuckDB
-    oracle at sf0.001/0.01/0.1 (PQ family)."""
-    corpus = _spread(vfp.filter(F.col("vec_id") >= N_QUERIES))
-    queries = vfp.filter(F.col("vec_id") < N_QUERIES)
-    cell_expr = (
-        "array_min(transform(cents_arr, c -> struct("
-        f"{_int_l2('v_fp', 'c.c_fp')} AS d, c.cell AS cell))).cell"
-    )
-    code_exprs = ", ".join(
-        "array_min(transform(filter(book_arr, b -> b.m = "
-        f"{m}), b -> struct("
-        + _int_l2(f"slice(v_fp, {m * PQ_SUB + 1}, {PQ_SUB})", "b.csub")
-        + " AS d, b.code AS code))).code"
-        for m in range(PQ_M)
-    )
-    enc = corpus.crossJoin(F.broadcast(_pq_model_row(cents, book))).select(
+    encode (``_CELL_EXPR``, ``_CODES_EXPR``), probe, and the
+    asymmetric-distance candidate scores — (q_id, vec_id,
+    approx_dist_fp), BEFORE any shortlist/re-rank, so
+    ``ann_ivf_pq_rerank`` can price the re-rank stage against the
+    plain-ADC ranking on the same relation. Inputs as
+    ``_ivfpq_search``."""
+    corpus, queries = _split(vfp)
+    model = F.broadcast(_pq_model_row(cents, book))
+    enc = spread(corpus).crossJoin(model).select(
         "vec_id",
-        F.expr(cell_expr).alias("cell"),
-        F.expr(f"array({code_exprs})").alias("codes"),
+        F.expr(_CELL_EXPR).alias("cell"),
+        F.expr(_CODES_EXPR).alias("codes"),
     )
     probes = (
         queries.withColumnRenamed("vec_id", "q_id")
@@ -1546,24 +1515,41 @@ def _ivfpq_approx(vfp: DataFrame, cents: DataFrame, book: DataFrame) -> DataFram
         .filter(F.col("prk") <= N_PROBE)
         .select("q_id", "cell")
     )
+    adc_expr = " + ".join(
+        "coalesce(try_element_at(lut_map, "
+        f"(q_id * {PQ_M} + {m}) * {PQ_K} + codes[{m}]), cast(0 as bigint))"
+        for m in range(PQ_M)
+    )
+    # probes is provably bounded (N_QUERIES × N_PROBE rows) but sits
+    # behind a window whose size estimate the planner can't see
+    # through — without the hint it picks a SortMergeJoin that
+    # shuffles the whole encoded corpus into N_CELLS partitions.
+    # Broadcasting keeps the inverted-list read map-side.
+    return (
+        enc.join(F.broadcast(probes), "cell")
+        .crossJoin(F.broadcast(_adc_lut(queries, book)))
+        .select("q_id", "vec_id", F.expr(adc_expr).alias("approx_dist_fp"))
+    )
+
+
+def _adc_lut(queries: DataFrame, book: DataFrame) -> DataFrame:
+    """The ADC lookup table as ONE row holding a map keyed by the packed
+    (q_id, m, code) — N_QUERIES·PQ_M·PQ_K entries. The per-candidate
+    score is then a pure projection (PQ_M map lookups + adds — the
+    literal FAISS ADC serving step): no explode, no join fan-out, and no
+    candidate aggregate or its shuffle. ``_ivfpq_approx`` coalesces a
+    missing key to 0, which gives inner-join semantics (a subspace
+    absent from the book contributes nothing; a book missing an m
+    entirely implies an empty book ⇒ empty corpus ⇒ no candidates)."""
     lut = (
-        _pq_subvectors(vfp)
-        .filter(F.col("vec_id") < N_QUERIES)
+        _pq_subvectors(queries)
         .withColumnRenamed("vec_id", "q_id")
         .join(F.broadcast(book), "m")
         .select("q_id", "m", "code", F.expr(_int_l2("sub", "csub")).alias("d_fp"))
     )
-    # The ADC lookup table as ONE broadcast map keyed by the packed
-    # (q_id, m, code) — N_QUERIES·PQ_M·PQ_K entries. The per-candidate
-    # score is then a pure projection (PQ_M map lookups + adds — the
-    # literal FAISS ADC serving step), replacing the round-14 tail of
-    # posexplode(PQ_M×) + broadcast join + groupBy(q_id, vec_id) sum:
-    # no explode, no join fan-out, and the candidate aggregate's
-    # shuffle disappears. coalesce(…, 0) per subspace reproduces the
-    # old inner-join semantics (a subspace absent from the book
-    # contributed nothing; a book missing an m entirely implies an
-    # empty book ⇒ empty corpus ⇒ no candidate rows at all).
-    lut_map = lut.agg(
+    # map_from_entries throws on a duplicate key: the book must be unique
+    # on (m, code), as the stand-in and trained books are (test-pinned)
+    return lut.agg(
         F.map_from_entries(
             F.sort_array(
                 F.collect_list(
@@ -1578,20 +1564,16 @@ def _ivfpq_approx(vfp: DataFrame, cents: DataFrame, book: DataFrame) -> DataFram
             )
         ).alias("lut_map")
     )
-    adc_expr = " + ".join(
-        "coalesce(try_element_at(lut_map, "
-        f"(q_id * {PQ_M} + {m}) * {PQ_K} + codes[{m}]), cast(0 as bigint))"
-        for m in range(PQ_M)
-    )
-    # probes is provably bounded (N_QUERIES × N_PROBE rows) but sits
-    # behind a window whose size estimate the planner can't see
-    # through — without the hint it picks a SortMergeJoin that
-    # shuffles the whole encoded corpus into N_CELLS partitions.
-    # Broadcasting keeps the inverted-list read map-side.
+
+
+def _adc_topk(approx: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best ADC candidates per query (approx_dist_fp asc,
+    vec_id asc) as (q_id, vec_id, approx_dist_fp)."""
+    w = W.partitionBy("q_id").orderBy(F.asc("approx_dist_fp"), F.asc("vec_id"))
     return (
-        enc.join(F.broadcast(probes), "cell")
-        .crossJoin(F.broadcast(lut_map))
-        .select("q_id", "vec_id", F.expr(adc_expr).alias("approx_dist_fp"))
+        approx.withColumn("srk", F.row_number().over(w))
+        .filter(F.col("srk") <= k)
+        .select("q_id", "vec_id", "approx_dist_fp")
     )
 
 
@@ -1599,23 +1581,10 @@ def _ivfpq_rerank(approx: DataFrame, vfp: DataFrame) -> DataFrame:
     """The RE-RANK half: ADC top-IVFPQ_RERANK shortlist, then exact
     integer-L2 re-rank of only those rows to top-TOP_K — the stage
     where raw vectors are touched for the second and last time."""
-    corpus = vfp.filter(F.col("vec_id") >= N_QUERIES)
-    queries = vfp.filter(F.col("vec_id") < N_QUERIES)
-    short = (
-        approx.withColumn(
-            "srk",
-            F.row_number().over(
-                W.partitionBy("q_id").orderBy(
-                    F.asc("approx_dist_fp"), F.asc("vec_id")
-                )
-            ),
-        )
-        .filter(F.col("srk") <= IVFPQ_RERANK)
-        .select("q_id", "vec_id", "approx_dist_fp")
-    )
-    qv = queries.select(F.col("vec_id").alias("q_id"), F.col("v_fp").alias("q_fp"))
+    corpus, qv = _split(vfp, F.col("v_fp").alias("q_fp"))
     exact = (
-        short.join(corpus, "vec_id")
+        _adc_topk(approx, IVFPQ_RERANK)
+        .join(corpus, "vec_id")
         .join(F.broadcast(qv), "q_id")
         .withColumn("exact_dist_fp", F.expr(_int_l2("v_fp", "q_fp")))
     )
@@ -1624,6 +1593,22 @@ def _ivfpq_rerank(approx: DataFrame, vfp: DataFrame) -> DataFrame:
         exact.withColumn("rk", F.row_number().over(we))
         .filter(F.col("rk") <= TOP_K)
         .select("q_id", "vec_id", "approx_dist_fp", "exact_dist_fp", "rk")
+    )
+
+
+def _l2_truth(corpus: DataFrame, q: DataFrame) -> DataFrame:
+    """The exact integer-L2 top-TOP_K of every query (q_id, q_fp) over
+    ``corpus`` (d asc, vec_id asc) as a ``_member`` relation flagged
+    ``e``. The stream is N_QUERIES integer folds per corpus row, so
+    callers pass a ``spread`` corpus: it is CPU-bound on a single-task
+    scan."""
+    wk = W.partitionBy("q_id").orderBy(F.asc("d_fp"), F.asc("vec_id"))
+    return _member(
+        corpus.crossJoin(F.broadcast(q))
+        .select("q_id", "vec_id", F.expr(_int_l2("v_fp", "q_fp")).alias("d_fp"))
+        .withColumn("rk", F.row_number().over(wk))
+        .filter(F.col("rk") <= TOP_K),
+        "e",
     )
 
 
@@ -1640,29 +1625,21 @@ def _ivfpq_search(vfp: DataFrame, cents: DataFrame, book: DataFrame) -> DataFram
     return _ivfpq_rerank(_ivfpq_approx(vfp, cents, book), vfp)
 
 
-def _vfp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ×10⁶ fixed-point embedding relation shared by the PQ tier."""
-    return load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.expr(f"transform(embedding, x -> {_FP})").alias("v_fp")
+def _fp_cents(vfp: DataFrame) -> DataFrame:
+    """Stand-in fixed-point centroids (cell = vec_id - N_QUERIES, c_fp)."""
+    return _standin(
+        vfp,
+        N_CELLS,
+        (F.col("vec_id") - N_QUERIES).alias("cell"),
+        F.col("v_fp").alias("c_fp"),
     )
 
 
 def _standin_pq_model(vfp: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """The deterministic stand-in model relations (coarse centroids =
-    first N_CELLS corpus vectors; codebook = subvectors of the first
-    PQ_K corpus vectors) that keep ``ann_ivf_pq`` oracle-checkable end
-    to end — the trained model is ``_trained_codebook`` below."""
-    cents = vfp.filter(
-        (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + N_CELLS)
-    ).select(
-        (F.col("vec_id") - N_QUERIES).alias("cell"), F.col("v_fp").alias("c_fp")
-    )
-    book = _pq_subvectors(vfp).filter(
-        (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + PQ_K)
-    ).select(
-        "m", (F.col("vec_id") - N_QUERIES).alias("code"), F.col("sub").alias("csub")
-    )
-    return cents, book
+    """The deterministic stand-in (cents, book) that keeps ``ann_ivf_pq``
+    oracle-checkable end to end — the trained model is
+    ``_trained_pq_relations`` below."""
+    return _fp_cents(vfp), _standin_book(_pq_subvectors(vfp))
 
 
 def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1685,7 +1662,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query subvectors are all broadcast; the corpus streams once
     through assignment + encoding (map-side), candidates come from an
     equi-join on cell id (the inverted-list read), the per-candidate
-    score is a PQ_M-row sum with map-side partials, and only
+    score is PQ_M lookups into the broadcast ADC map, and only
     IVFPQ_RERANK rows per query ever touch raw vectors again. This is
     exactly the memory/compute topology that serves billion-vector
     indexes: raw vectors are read twice (build, re-rank), never
@@ -1762,9 +1739,9 @@ SELECT q_id, vec_id, approx_dist_fp, exact_dist_fp, rk FROM (
 
 
 def ann_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """What the exact re-rank stage BUYS (VERDICT r13 task #5 — the
-    standard FAISS serving recipe is ADC shortlist → exact re-rank;
-    this query prices that recipe): per query, the recall against the
+    """What the exact re-rank stage BUYS (the standard FAISS serving
+    recipe is ADC shortlist → exact re-rank; this query prices that
+    recipe): per query, the recall against the
     exact global integer-L2 top-k of (a) the plain-ADC top-k (ranking
     candidates by quantized distance alone — what you'd serve without
     touching raw vectors again) vs (b) the re-ranked top-k (ADC
@@ -1805,44 +1782,18 @@ def ann_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize once (the house multi-consumer convention; the raw
     # builder stays visible to plan tests via _ivfpq_approx itself).
     # EAGER: a lazy checkpoint's ExistingRDD scan carries no size
-    # stats and degrades downstream joins to sort-merge (measured
-    # +0.16 s on this query in the round-14 A/B)
+    # stats and degrades downstream joins to sort-merge
     approx = _ivfpq_approx(vfp, cents, book).localCheckpoint()
-    wa = W.partitionBy("q_id").orderBy(F.asc("approx_dist_fp"), F.asc("vec_id"))
-    adc = (
-        approx.withColumn("ark", F.row_number().over(wa))
-        .filter(F.col("ark") <= TOP_K)
-        .select("q_id", "vec_id", F.lit(1).alias("a"))
-    )
-    rr = _ivfpq_rerank(approx, vfp).select("q_id", "vec_id", F.lit(1).alias("r"))
-    # the exact-truth stream is N_QUERIES integer folds per corpus row
-    # — CPU-bound on the single-row-group scan task (guide §2.6 /
-    # _spread): 0.42 → 0.29 s isolated, interleaved min-of-5
-    corpus = _spread(vfp.filter(F.col("vec_id") >= N_QUERIES))
-    q = vfp.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("v_fp").alias("q_fp")
-    )
-    wk = W.partitionBy("q_id").orderBy(F.asc("d_fp"), F.asc("vec_id"))
-    truth = (
-        corpus.crossJoin(F.broadcast(q))
-        .select("q_id", "vec_id", F.expr(_int_l2("v_fp", "q_fp")).alias("d_fp"))
-        .withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= TOP_K)
-        .select("q_id", "vec_id", F.lit(1).alias("e"))
-    )
-    j = truth.join(adc, ["q_id", "vec_id"], "full_outer").join(
-        rr, ["q_id", "vec_id"], "full_outer"
-    )
+    adc = _member(_adc_topk(approx, TOP_K), "a")
+    rr = _member(_ivfpq_rerank(approx, vfp), "r")
+    corpus, q = _split(vfp, F.col("v_fp").alias("q_fp"))
+    truth = _l2_truth(spread(corpus), q)
     return (
-        j.groupBy("q_id")
+        _reconcile(truth, adc, rr)
         .agg(
-            F.sum(F.coalesce("e", F.lit(0))).cast("long").alias("n_truth"),
-            F.sum(F.coalesce("e", F.lit(0)) * F.coalesce("a", F.lit(0)))
-            .cast("long")
-            .alias("adc_hits"),
-            F.sum(F.coalesce("e", F.lit(0)) * F.coalesce("r", F.lit(0)))
-            .cast("long")
-            .alias("rerank_hits"),
+            _hits("e").cast("long").alias("n_truth"),
+            _hits("e", "a").cast("long").alias("adc_hits"),
+            _hits("e", "r").cast("long").alias("rerank_hits"),
         )
         .select(
             "q_id",
@@ -1955,8 +1906,8 @@ FROM uni GROUP BY q_id
 """
 
 
-# Trained-PQ contract constants (VERDICT r12 task #1 — the r11 task #4
-# trained-IVF recipe applied per subspace). The recall floor is
+# Trained-PQ contract constants (the trained-IVF recipe applied per
+# subspace). The recall floor is
 # CORPUS-level for the same reason as IVF_TRAINED_RECALL_MIN_PCT:
 # per-query recall legitimately reaches 0/5 when both probed cells
 # miss on structureless synthetic vectors, so a per-query floor would
@@ -2109,23 +2060,14 @@ def _pq_distortion_expr(arr: str) -> str:
     exactly the rows the old broadcast-join formulation skipped."""
     return " + ".join(
         f"coalesce(array_min(transform(filter({arr}, b -> b.m = {m}), b -> "
-        + _int_l2(f"slice(v_fp, {m * PQ_SUB + 1}, {PQ_SUB})", "b.csub")
+        + _int_l2(_sub("v_fp", m), "b.csub")
         + ")), cast(0 as bigint))"
         for m in range(PQ_M)
     )
 
 
-# [round 15] The former `_pq_total_distortion` helper (explode(PQ_M×)
-# + broadcast-join(book) + groupBy(vec_id, m) min + global sum — a
-# corpus-wide shuffle of PQ_M·|corpus| rows PER CODEBOOK, and one full
-# corpus scan per call) is gone: its only consumer, the trained audit,
-# now evaluates both codebooks' distortions as map-side
-# `_pq_distortion_expr` columns in ONE corpus pass (guide §2.3/§2.4).
-
-
 def ann_ivf_pq_trained_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-bearing audit of the trained PQ model (VERDICT r12 task
-    #1): the trained codebook and the trained-IVF-PQ top-k are
+    """Oracle-bearing audit of the trained PQ model: the trained codebook and the trained-IVF-PQ top-k are
     MLlib-seed-dependent (no DuckDB counterpart), but their GUARANTEES
     are exact integer predicates against oracle-recomputable relations.
     One corpus-level row:
@@ -2151,8 +2093,7 @@ def ann_ivf_pq_trained_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
       ties) on the TRAINED path too: corpus-wide re-ranked hits ≥
       plain-ADC top-k hits on the same trained candidate relation
       (the ``ann_ivf_pq_rerank`` theorem — the subset argument is
-      codebook-independent — exercised here against the MLlib model;
-      VERDICT r13 task #5's trained-path predicate).
+      codebook-independent — exercised here against the MLlib model).
 
     Determinism: both KMeans fits are seed-pinned on seed-pinned
     samples with deterministic input partitioning, so every flag is a
@@ -2165,19 +2106,9 @@ def ann_ivf_pq_trained_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     + tiny aggregates — the crossJoins at the end glue 1-row
     broadcast relations."""
     vfp = _vfp(spark, sf_dir)
-    # exact-truth stream _spread per the ann_ivf_pq_rerank note
-    corpus = _spread(vfp.filter(F.col("vec_id") >= N_QUERIES))
-    q = vfp.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("v_fp").alias("q_fp")
-    )
-    wk = W.partitionBy("q_id").orderBy(F.asc("d_fp"), F.asc("vec_id"))
-    exact = (
-        corpus.crossJoin(F.broadcast(q))
-        .select("q_id", "vec_id", F.expr(_int_l2("v_fp", "q_fp")).alias("d_fp"))
-        .withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= TOP_K)
-        .select("q_id", "vec_id", F.lit(1).alias("e"))
-    )
+    corpus, q = _split(vfp, F.col("v_fp").alias("q_fp"))
+    corpus = spread(corpus)  # feeds the truth and the distortion pass
+    exact = _l2_truth(corpus, q)
     rel = _trained_pq_relations(spark, sf_dir)
     if rel is None:
         # empty corpus: 0 ≤ 0 distortion and an empty top-k census —
@@ -2192,51 +2123,24 @@ def ann_ivf_pq_trained_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and the re-ranked serving path, so the rerank-vs-ADC flag
         # compares two orderings of the same candidates (the
         # ann_ivf_pq_rerank construction on the trained model).
-        # Materialized eagerly (round-14, guide §2.4): without the
-        # checkpoint Catalyst inlined the whole ADC subtree (coarse
-        # assignment + PQ encode + probe + LUT joins) once per
-        # consumer — the shipped audit plan carried 54 Exchanges / 30
-        # parquet scans.
-        # Eager, not lazy: the checkpoint's computed size stats keep
-        # the downstream full-outer joins broadcast-eligible
+        # Materialized eagerly: without the checkpoint Catalyst inlines
+        # the whole ADC subtree (coarse assignment + PQ encode + probe +
+        # LUT joins) once per consumer. Eager, not lazy: the
+        # checkpoint's computed size stats keep the downstream
+        # full-outer joins broadcast-eligible
         approx_t = _ivfpq_approx(vfp, cents_t, book).localCheckpoint()
-        wa = W.partitionBy("q_id").orderBy(
-            F.asc("approx_dist_fp"), F.asc("vec_id")
-        )
-        adc_t = (
-            approx_t.withColumn("ark", F.row_number().over(wa))
-            .filter(F.col("ark") <= TOP_K)
-            .select("q_id", "vec_id", F.lit(1).alias("a"))
-        )
-        trained = _ivfpq_rerank(approx_t, vfp).select(
-            "q_id", "vec_id", F.lit(1).alias("i")
-        )
+        adc_t = _member(_adc_topk(approx_t, TOP_K), "a")
+        trained = _member(_ivfpq_rerank(approx_t, vfp), "i")
     _, standin_book = _standin_pq_model(vfp)
-    per_q = (
-        exact.join(trained, ["q_id", "vec_id"], "full_outer")
-        .join(adc_t, ["q_id", "vec_id"], "full_outer")
-        .groupBy("q_id")
-        .agg(
-            F.sum(F.coalesce("e", F.lit(0))).alias("ne"),
-            F.sum(F.coalesce("i", F.lit(0))).alias("ni"),
-            F.sum(F.coalesce("e", F.lit(0)) * F.coalesce("i", F.lit(0))).alias(
-                "nh"
-            ),
-            F.sum(F.coalesce("e", F.lit(0)) * F.coalesce("a", F.lit(0))).alias(
-                "na"
-            ),
-        )
+    per_q = _reconcile(exact, trained, adc_t).agg(
+        _hits("e").alias("ne"),
+        _hits("i").alias("ni"),
+        _hits("e", "i").alias("nh"),
+        _hits("e", "a").alias("na"),
     )
-    recall = per_q.agg(
-        F.count(F.lit(1)).cast("long").alias("n_queries"),
-        F.coalesce(F.sum("ne"), F.lit(0)).cast("long").alias("n_exact_total"),
-        F.coalesce((F.max("ni") <= TOP_K).cast("int"), F.lit(1)).alias("k_ok"),
-        F.coalesce(
-            (
-                F.sum("nh") * 100 >= F.sum("ne") * PQ_TRAINED_RECALL_MIN_PCT
-            ).cast("int"),
-            F.lit(1),
-        ).alias("recall_floor_ok"),
+    recall = _recall_floor(
+        per_q,
+        PQ_TRAINED_RECALL_MIN_PCT,
         # theorem on the trained path too (ann_ivf_pq_rerank proves it
         # for the stand-in): re-ranked hits >= plain-ADC hits, any
         # codebook — the subset argument is codebook-independent
@@ -2244,11 +2148,9 @@ def ann_ivf_pq_trained_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum("nh") >= F.sum("na")).cast("int"), F.lit(1)
         ).alias("rerank_ge_adc_ok"),
     )
-    # Both codebooks' distortions in ONE corpus pass (round 15, guide
-    # §2.3/§2.4): the two `_pq_total_distortion` calls each streamed
-    # the corpus once; the min-codeword distance is a map-side
-    # expression against the broadcast 1-row codebook arrays, so one
-    # scan evaluates both sums side by side.
+    # Both codebooks' distortions in ONE corpus pass: the min-codeword
+    # distance is a map-side expression against the broadcast 1-row
+    # codebook arrays, so one scan evaluates both sums side by side.
     books_row = _book_row(standin_book, "sb_arr").crossJoin(
         _book_row(book, "tb_arr")
     )
@@ -2348,10 +2250,9 @@ def emb_pq_residual_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (vector, subspace) with the assigned cell, chosen code, and
     residual distortion."""
     vfp = _vfp(spark, sf_dir)
-    corpus = vfp.filter(F.col("vec_id") >= N_QUERIES)
-    cents, _ = _standin_pq_model(vfp)
+    corpus, _ = _split(vfp)
     assigned = (
-        corpus.crossJoin(F.broadcast(cents))
+        corpus.crossJoin(F.broadcast(_fp_cents(vfp)))
         .withColumn("cdist", F.expr(_int_l2("v_fp", "c_fp")))
         .groupBy("vec_id")
         .agg(
@@ -2368,39 +2269,9 @@ def emb_pq_residual_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # carry `cell` through the subvector explode (no self-join back to
-    # the shuffle-bearing assignment aggregate — review r13 finding)
-    rsubs = assigned.select(
-        "vec_id",
-        "cell",
-        F.posexplode(
-            F.array(
-                *[
-                    F.expr(f"slice(v_fp, {m * PQ_SUB + 1}, {PQ_SUB})")
-                    for m in range(PQ_M)
-                ]
-            )
-        ).alias("m", "sub"),
-    )
-    book = rsubs.filter(
-        (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + PQ_K)
-    ).select(
-        "m", (F.col("vec_id") - N_QUERIES).alias("code"), F.col("sub").alias("csub")
-    )
-    return (
-        rsubs.join(F.broadcast(book), "m")
-        .select(
-            "vec_id",
-            "cell",
-            "m",
-            "code",
-            F.expr(_int_l2("sub", "csub")).alias("d_fp"),
-        )
-        .groupBy("vec_id", "cell", "m")
-        .agg(
-            F.min_by("code", F.struct("d_fp", "code")).alias("code"),
-            F.min("d_fp").alias("dist_fp"),
-        )
-    )
+    # the shuffle-bearing assignment aggregate)
+    rsubs = _pq_subvectors(assigned, "cell")
+    return _pq_encode(rsubs, _standin_book(rsubs), ["vec_id", "cell"])
 
 
 def _pq_residual_oracle() -> str:
@@ -2466,16 +2337,13 @@ def emb_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     _fold_dot sums dimensions in the same left-assoc IEEE order as the
     oracle's list_reduce, so the doubles are bit-identical before
     rounding and the 6dp rank keys cannot diverge at tie boundaries."""
-    e = _vectors(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.expr(f"slice(v, 1, {PRE_DIM})").alias("qp"),
+    prefix = F.expr(f"slice(v, 1, {PRE_DIM})")
+    corpus, q = _split(
+        _vectors(spark, sf_dir), F.col("v").alias("qv"), prefix.alias("qp")
     )
-    corpus = e.filter(F.col("vec_id") >= N_QUERIES).select(
-        "vec_id", "v", F.expr(f"slice(v, 1, {PRE_DIM})").alias("vp")
+    pairs = corpus.select("vec_id", "v", prefix.alias("vp")).crossJoin(
+        F.broadcast(q)
     )
-    pairs = corpus.crossJoin(F.broadcast(q))
     w_full = W.partitionBy("q_id").orderBy(F.desc("cos_full"), F.asc("vec_id"))
     w_pre = W.partitionBy("q_id").orderBy(F.desc("cos_pre"), F.asc("vec_id"))
     scored = pairs.select(
@@ -2558,10 +2426,7 @@ def emb_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one narrow map computes digest + norm, one digest-keyed
     aggregate sizes the dup groups (map-side partials), one join back —
     the exact-dedup plan shape applied to the vector column."""
-    vfp = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.expr(f"transform(embedding, x -> {_FP})").alias("v_fp")
-    )
-    per_vec = vfp.select(
+    per_vec = _vfp(spark, sf_dir).select(
         "vec_id",
         F.md5(F.expr("cast(v_fp as string)")).alias("h"),
         F.expr(
@@ -2627,12 +2492,9 @@ def ann_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").alias("v"), "label"
     )
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("label").alias("actual_label"),
+    corpus, q = _split(
+        e, F.col("v").alias("qv"), F.col("label").alias("actual_label")
     )
-    corpus = e.filter(F.col("vec_id") >= N_QUERIES)
     scored = corpus.crossJoin(F.broadcast(q)).select(
         "q_id",
         "actual_label",
@@ -2721,73 +2583,28 @@ def emb_outlier_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     back as a broadcast; one corpus-scaled exchange total per
     iteration (the assignment min_by groupBy).
 
-    Round-14 (guide §2.4) — audited and deliberately left LAZY. The
-    loop is a single linear lineage chain (each iteration's cents is
-    consumed exactly once by the next assignment —
-    emb_kmeans_fixed_point's shape); the plan's 24 embeddings scans /
-    64 Exchanges come from
-    the final pass referencing `assigned` twice (directly and inside
-    the final `cents` broadcast). THREE materialization variants were
-    TRIED and REVERTED against the 1.16 s clean-window baseline:
-    per-iteration `assigned` checkpoints (~1.7 s), one post-loop
-    `assigned` checkpoint (~2.0 s normalized), and a narrow
-    final-distances checkpoint (~1.7 s normalized) — eagerly
-    materializing the 64-long-array column (or even the narrow
-    distance relation, whose lineage must still evaluate the wide
-    chain once as a blocking job) loses to the lazy duplicate
-    recompute, whose duplicated subtrees are embarrassingly parallel
-    scans+folds at this geometry (the r9 wide-relation lesson). At a
+    Deliberately LAZY. The loop (``_lloyd_fp``) is a single linear
+    lineage chain (each iteration's cents is consumed exactly once by
+    the next assignment); the plan's 24 embeddings scans / 64
+    Exchanges come from the final pass referencing `assigned` twice
+    (directly and inside the final `cents` broadcast). Checkpointing
+    per-iteration `assigned`, one post-loop `assigned` or a narrow
+    final-distances relation each measured slower than the lazy plan:
+    eagerly materializing the 64-long-array column (or even the narrow
+    distance relation, whose lineage must still evaluate the wide chain
+    once as a blocking job) loses to the lazy duplicate recompute, whose
+    duplicated subtrees are embarrassingly parallel scans+folds at this
+    geometry. At a
     corpus scale where one assignment pass dominates, the standard
     Lloyd's-loop persist per iteration is the documented production
     posture (SCALING.md); it is a net loss at bench scale and is
     therefore not hard-coded."""
-    e = load_table(spark, sf_dir, "embeddings")
-    vecs = e.select(
-        "vec_id",
-        F.expr(f"transform(embedding, x -> {_FP})").alias("v_fp"),
-    )
-    cents = vecs.filter(F.col("vec_id") < KMEANS_K).select(
-        F.col("vec_id").alias("cell"), F.col("v_fp").alias("c_fp")
-    )
-    assigned = None
-    for _ in range(KMEANS_ITERS):
-        assigned = (
-            vecs.crossJoin(F.broadcast(cents))
-            .withColumn("dist", F.expr(_DIST_SPARK))
-            .groupBy("vec_id")
-            .agg(
-                F.min_by(
-                    F.struct("cell", "v_fp", "dist"), F.struct("dist", "cell")
-                ).alias("best")
-            )
-            .select(
-                "vec_id",
-                F.col("best.v_fp").alias("v_fp"),
-                F.col("best.cell").alias("cell"),
-                F.col("best.dist").alias("dist"),
-            )
-        )
-        dims = assigned.select("cell", F.posexplode("v_fp").alias("dim", "val"))
-        cell_dims = dims.groupBy("cell", "dim").agg(
-            F.sum("val").alias("s"), F.count(F.lit(1)).alias("n")
-        )
-        cents = (
-            cell_dims.withColumn(
-                "c", F.floor(F.col("s") / F.col("n")).cast("long")
-            )
-            .groupBy("cell")
-            .agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(dim, c))), t -> t.c)"
-                ).alias("c_fp")
-            )
-        )
+    assigned, cents = _lloyd_fp(_vfp(spark, sf_dir))
     # distance to the FINAL centroids (the loop's `dist` is to the
     # previous iteration's), then per-cell stats + multiplicative flag
     final = (
-        assigned.select("vec_id", "v_fp", "cell")
-        .join(F.broadcast(cents), "cell")
-        .select("vec_id", "cell", F.expr(_DIST_SPARK).alias("dist"))
+        assigned.join(F.broadcast(cents), "cell")
+        .select("vec_id", "cell", F.expr(_int_l2("v_fp", "c_fp")).alias("dist"))
     )
     stats = final.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n_vecs"),
@@ -2897,14 +2714,9 @@ def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").alias("v"), "label"
     )
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("label").alias("q_label"),
-    )
+    corpus, q = _split(e, F.col("v").alias("qv"), F.col("label").alias("q_label"))
     scored = (
-        e.filter(F.col("vec_id") >= N_QUERIES)
-        .crossJoin(F.broadcast(q))
+        corpus.crossJoin(F.broadcast(q))
         .select(
             "q_id",
             "q_label",

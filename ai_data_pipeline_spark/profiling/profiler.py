@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ai_data_pipeline_spark.functions import spread
 from ai_data_pipeline_spark.profiling import cascade, patterns as P
 
 SAMPLE_TRUNC = 40
@@ -128,12 +129,7 @@ def _scalar_stats(
     ]
     if not scalars:
         return None
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < parallelism:
-        # CPU-bound pass: a single-row-group parquet file scans as ~1 task
-        # no matter its size; redistribute first. No-ops at cluster scale
-        # where the scan already has thousands of splits.
-        df = df.repartition(parallelism)
+    df = spread(df)  # CPU-bound pass over a possibly single-task scan
     pairs = df.select(
         F.explode(
             F.array(

@@ -1,6 +1,5 @@
 """Incremental ANN index maintenance: streaming upsert of IVF cell
-assignments (round-11 frontier family — VERDICT r10 stretch item,
-joining the streaming tier to the similarity tier).
+assignments, joining the streaming tier to the similarity tier.
 
 Production shape: an embedding store receives new and RE-EMBEDDED
 vectors continuously; the IVF index (vec_id -> cell assignment) must
@@ -44,42 +43,21 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ai_data_pipeline_spark.catalog import load_table
 from ai_data_pipeline_spark.registry import QueryDef
 from ai_data_pipeline_spark.session import session_scoped_cache
 from ai_data_pipeline_spark.sources.readers import scratch_dir
 from ai_data_pipeline_spark.operators.similarity import (
-    EMB_DIM,
     N_CELLS,
     N_QUERIES,
+    _assign_cos,
+    _cos_cents,
     _cos_sql,
-    _cosine_udf,
+    _split,
+    _vectors,
 )
 
 UPDATE_MOD = 7  # vec_id % 7 == 3 gets a version-1 re-embedding
 UPDATE_REM = 3
-
-
-def _assign_cells(batch: DataFrame, cents: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment as a max_by aggregate over the
-    broadcast centroid table (cos desc, cell_id asc tie-break) — the
-    ann_ivf plan shape (similarity.py), pinned aggregate-not-window."""
-    return (
-        batch.crossJoin(F.broadcast(cents))
-        .select(
-            "vec_id",
-            "version",
-            "cell_id",
-            _cosine_udf("v", "cv").alias("c_cos"),
-        )
-        .groupBy("vec_id", "version")
-        .agg(
-            F.max_by(
-                F.col("cell_id"),
-                F.struct(F.col("c_cos").alias("c"), (-F.col("cell_id")).alias("nc")),
-            ).alias("cell_id")
-        )
-    )
 
 
 def _ivf_assignment_log(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,13 +69,9 @@ def _ivf_assignment_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     if sf_dir in cache:
         return cache[sf_dir]
 
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").alias("v")
-    )
-    corpus = e.filter(F.col("vec_id") >= N_QUERIES)
-    cents = e.filter(
-        (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + N_CELLS)
-    ).select(F.col("vec_id").alias("cell_id"), F.col("v").alias("cv"))
+    e = _vectors(spark, sf_dir)
+    corpus, _ = _split(e)
+    cents = _cos_cents(e)
 
     batch0 = corpus.select("vec_id", F.lit(0).alias("version"), "v")
     batch1 = corpus.filter(
@@ -120,9 +94,9 @@ def _ivf_assignment_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _assign_cells(batch_df, cents).write.mode("overwrite").parquet(
-            f"{sink}/batch_id={batch_id}"
-        )
+        # nearest cell per (vec_id, version): the ann_ivf max_by shape
+        assigned = _assign_cos(batch_df, cents, ["vec_id", "version"], [])
+        assigned.write.mode("overwrite").parquet(f"{sink}/batch_id={batch_id}")
 
     q = (
         stream.writeStream.outputMode("append")

@@ -1253,8 +1253,8 @@ def test_stream_ivf_assign_is_aggregate_not_window(spark):
     from ai_data_pipeline_spark.operators.similarity import (
         N_CELLS,
         N_QUERIES,
+        _assign_cos,
     )
-    from ai_data_pipeline_spark.streaming.ivf import _assign_cells
 
     e = load_table(spark, SF_DIR, "embeddings").select(
         "vec_id", F.col("embedding").alias("v")
@@ -1265,7 +1265,8 @@ def test_stream_ivf_assign_is_aggregate_not_window(spark):
     cents = e.filter(
         (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + N_CELLS)
     ).select(F.col("vec_id").alias("cell_id"), F.col("v").alias("cv"))
-    plan = _plan(_assign_cells(batch, cents))
+    # the per-batch call the stream's foreachBatch makes
+    plan = _plan(_assign_cos(batch, cents, ["vec_id", "version"], []))
     assert "partial_max_by" in plan
     assert "Window" not in plan
 

@@ -1,4 +1,4 @@
-"""Focused pins for the round-15 optimization changes: the IVF-PQ
+"""Focused pins for the IVF-PQ serving optimizations: the
 single-pass assign+encode fusion and the broadcast-map ADC lookup.
 Each pins the INTERNAL property the optimization relies on, so a
 future refactor that silently breaks the equivalence fails here, not
@@ -19,17 +19,15 @@ def _plan(df) -> str:
 
 def test_ivfpq_fused_encode_matches_two_pass(spark):
     """The fused map-side (cell, codes[]) projection must reproduce the
-    pre-r15 two-aggregate formulation exactly — same argmin, same
+    two-aggregate formulation exactly — same argmin, same
     (distance, id) tie-break — on every corpus vector."""
-    from pyspark.sql.window import Window as W
-
     import ai_data_pipeline_spark.operators.similarity as S
 
     vfp = S._vfp(spark, SF_DIR)
     cents, book = S._standin_pq_model(vfp)
     corpus = vfp.filter(F.col("vec_id") >= S.N_QUERIES)
 
-    # the pre-r15 two-aggregate reference formulation, verbatim
+    # the two-aggregate reference formulation
     assigned = {
         r["vec_id"]: r["cell"]
         for r in corpus.crossJoin(F.broadcast(cents))
@@ -49,26 +47,13 @@ def test_ivfpq_fused_encode_matches_two_pass(spark):
         .collect()
     }
 
-    # the shipped fused projection (rebuilt here exactly as
-    # _ivfpq_approx builds it, so the expressions under test are the
-    # shipped ones)
-    cell_expr = (
-        "array_min(transform(cents_arr, c -> struct("
-        f"{S._int_l2('v_fp', 'c.c_fp')} AS d, c.cell AS cell))).cell"
-    )
-    code_exprs = ", ".join(
-        "array_min(transform(filter(book_arr, b -> b.m = "
-        f"{m}), b -> struct("
-        + S._int_l2(f"slice(v_fp, {m * S.PQ_SUB + 1}, {S.PQ_SUB})", "b.csub")
-        + " AS d, b.code AS code))).code"
-        for m in range(S.PQ_M)
-    )
+    # the shipped fused projection: the expressions _ivfpq_approx uses
     enc = (
         corpus.crossJoin(F.broadcast(S._pq_model_row(cents, book)))
         .select(
             "vec_id",
-            F.expr(cell_expr).alias("cell"),
-            F.expr(f"array({code_exprs})").alias("codes"),
+            F.expr(S._CELL_EXPR).alias("cell"),
+            F.expr(S._CODES_EXPR).alias("codes"),
         )
         .collect()
     )
@@ -78,6 +63,26 @@ def test_ivfpq_fused_encode_matches_two_pass(spark):
         assert r["cell"] == assigned[r["vec_id"]], r
         for m in range(S.PQ_M):
             assert r["codes"][m] == codes[(r["vec_id"], m)], (r, m)
+
+
+def test_pq_books_unique_per_code_and_lut_is_full(spark):
+    """The ADC LUT is built with map_from_entries, which throws on a
+    duplicate (q_id, m, code) key: both the stand-in and the trained
+    codebook must be unique on (m, code), and the LUT must hold exactly
+    one entry per (query, subspace, codeword)."""
+    import ai_data_pipeline_spark.operators.similarity as S
+
+    vfp = S._vfp(spark, SF_DIR)
+    _, standin = S._standin_pq_model(vfp)
+    rel = S._trained_pq_relations(spark, SF_DIR)
+    assert rel is not None, "empty corpus at the test SF"
+    _, trained = rel
+    for book in (standin, trained):
+        keys = [(r["m"], r["code"]) for r in book.select("m", "code").collect()]
+        assert keys, "empty codebook at the test SF"
+        assert len(keys) == len(set(keys)), sorted(keys)
+        lut = S._adc_lut(S._split(vfp)[1], book).collect()[0]["lut_map"]
+        assert len(lut) == S.N_QUERIES * S.PQ_M * S.PQ_K
 
 
 def test_ivfpq_serving_reads_corpus_exactly_twice(spark):
@@ -110,7 +115,7 @@ def test_ivfpq_serving_reads_corpus_exactly_twice(spark):
 def test_ivfpq_adc_score_is_projection_not_aggregate(spark):
     """The per-candidate ADC score must be the broadcast-map lookup
     projection — no posexplode fan-out and no (q_id, vec_id) aggregate
-    after the encode (the round-15 tail restructure). The only
+    after the encode. The only
     Generate (explode) nodes allowed in the serving plan belong to the
     codebook/LUT builders on the bounded model side."""
     from ai_data_pipeline_spark.operators.similarity import ann_ivf_pq

@@ -107,11 +107,14 @@ def test_stream_ivf_upsert_equals_batch_rebuild(spark):
     from pyspark.sql import functions as F
 
     from ai_data_pipeline_spark.catalog import load_table
-    from ai_data_pipeline_spark.operators.similarity import N_CELLS, N_QUERIES
+    from ai_data_pipeline_spark.operators.similarity import (
+        N_CELLS,
+        N_QUERIES,
+        _assign_cos,
+    )
     from ai_data_pipeline_spark.streaming.ivf import (
         UPDATE_MOD,
         UPDATE_REM,
-        _assign_cells,
         stream_ivf_index_upsert,
     )
     from tests.conftest import SF_DIR
@@ -136,7 +139,7 @@ def test_stream_ivf_upsert_equals_batch_rebuild(spark):
     )
     want = {
         r.cell_id: (r.n_vectors, r.sum_vec_id)
-        for r in _assign_cells(final, cents)
+        for r in _assign_cos(final, cents, ["vec_id", "version"], [])
         .groupBy("cell_id")
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),

@@ -4,11 +4,14 @@ contract queries.
     python tools/dump_plan.py ann_ivf_pq emb_outlier_distance ...
 
 ``SPARK_GRAFT_SF_DIR`` picks the scale-factor directory (default sf0.1).
+Catalyst expression ids (``#123``) and exchange plan ids print as ``#``
+and ``plan_id=``, so the output of two commits diffs line by line.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -17,14 +20,21 @@ from ai_data_pipeline_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entry_mod  # noqa: E402
 
 
+def normalize(plan: str) -> str:
+    """Drop the per-session numbering from a plan string."""
+    return re.sub(r"plan_id=\d+", "plan_id=", re.sub(r"#\d+", "#", plan))
+
+
 def main(names: list[str]) -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("dump-plan", cpus=8)
     qs = entry_mod.queries()
     for name in names:
         df = qs[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
+        plan = normalize(
+            df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
         )
         scans = plan.count("Scan parquet") + plan.count("Scan ExistingRDD")
         print(plan, flush=True)
