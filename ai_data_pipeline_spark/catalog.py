@@ -78,9 +78,6 @@ TABLES: dict[str, list[tuple[str, str]]] = {
     "embeddings": [("vec_id", "long"), ("embedding", "vector"), ("label", "int")],
 }
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar parquet scan — Catalyst pushes filters/projections into it.
 
@@ -105,8 +102,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif isinstance(field.dataType, TimestampNTZType):
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

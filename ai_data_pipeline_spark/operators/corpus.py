@@ -30,8 +30,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
+from ai_data_pipeline_spark.operators.text import (
+    token_arrays,
+    word_ngrams,
+    word_ngrams_duck,
+)
 from ai_data_pipeline_spark.registry import QueryDef
-from ai_data_pipeline_spark.session import session_scoped_cache
 
 DECON_N = 5  # tokens per contamination shingle (13 in prod; 5 so the
 # synthetic 55-token docs actually collide — same plan shape)
@@ -44,44 +48,6 @@ REP_TOP_NUM, REP_TOP_DEN = 1, 10  # top-bigram fraction >= 10% -> flag
 SPLIT_PCT = (96, 98)  # train < 96, val < 98, test < 100
 
 
-def _grams_spark(n: int) -> str:
-    """Sliding word n-grams over a pre-materialized token array `l`.
-    The array must be bound behind an exchange (see dedup.SHINGLES_SPARK
-    note: inlining the split into the lambda re-evaluates it per
-    element)."""
-    return (
-        f"array_distinct(transform(sequence(1, greatest(size(l) - {n - 1}, 1)),"
-        f" i -> concat_ws(' ', slice(l, i, {n}))))"
-    )
-
-
-def _grams_duck(n: int) -> str:
-    return (
-        f"list_distinct([array_to_string(l[i:i+{n - 1}], ' ') "
-        f"for i in range(1, greatest(len(l)-{n - 1}, 1)+1)])"
-    )
-
-
-# Tokenized documents feed four corpus operators (decontaminate,
-# repetition, oov, bpe); one eager localCheckpoint per (session, sf_dir)
-# tokenizes once and every consumer reads the materialized blocks —
-# the shared intermediate a real curation pipeline persists between
-# stages. Cached per live session (weak-keyed — see
-# session.session_scoped_cache).
-
-
-def _token_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cache = session_scoped_cache(spark, "corpus_tokens")
-    if sf_dir not in cache:
-        cache[sf_dir] = (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", F.split(F.col("text"), r"\s+").alias("l"))
-            .repartition(spark.sparkContext.defaultParallelism)
-            .localCheckpoint()
-        )
-    return cache[sf_dir]
-
-
 def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination (the eval-leakage scan every training
     run needs): distinct 5-gram shingles of the held-out set (doc_id %
@@ -89,8 +55,9 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct shingles leak, with an exact-rational contamination flag.
     Only contaminated docs are emitted — at corpus scale the clean
     (overwhelming) majority never leaves the map side."""
-    grams = _token_arrays(spark, sf_dir).select(
-        "doc_id", F.explode(F.expr(_grams_spark(DECON_N))).alias("gram")
+    grams = token_arrays(spark, sf_dir).select(
+        "doc_id",
+        F.explode(F.array_distinct(F.expr(word_ngrams(DECON_N)))).alias("gram"),
     )
     bench = (
         grams.filter(F.col("doc_id") % DECON_BENCH_MOD == 0)
@@ -121,7 +88,7 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 DECONTAMINATE_ORACLE = rf"""
 WITH toks AS (SELECT doc_id, string_split_regex(text, '\s+') AS l FROM documents),
 grams AS (
-  SELECT doc_id, unnest({_grams_duck(DECON_N)}) AS gram FROM toks
+  SELECT doc_id, unnest(list_distinct({word_ngrams_duck(DECON_N)})) AS gram FROM toks
 ),
 bench AS (SELECT DISTINCT gram FROM grams WHERE doc_id % {DECON_BENCH_MOD} = 0),
 train AS (SELECT * FROM grams WHERE doc_id % {DECON_BENCH_MOD} <> 0),
@@ -142,15 +109,10 @@ def corpus_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction, flagged with an exact-rational threshold. One (doc,
     bigram) keyed aggregation, then a doc_id rollup that AQE coalesces
     onto the same partitioning — no second wide shuffle."""
-    toks = _token_arrays(spark, sf_dir)
+    toks = token_arrays(spark, sf_dir)
     bigrams = toks.select(
         "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, greatest(size(l) - 1, 1)),"
-                " i -> concat_ws(' ', slice(l, i, 2)))"
-            )
-        ).alias("bigram"),
+        F.explode(F.expr(word_ngrams(2))).alias("bigram"),
     )
     per_bigram = bigrams.groupBy("doc_id", "bigram").agg(
         F.count(F.lit(1)).alias("c")
@@ -290,13 +252,9 @@ def corpus_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.select(
             "doc_id",
             "split",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, greatest(size(l) - {LEAK_SHINGLE_K - 1}, 1)),"
-                    f" i -> md5(concat_ws(' ', slice(l, i, {LEAK_SHINGLE_K}))))"
-                )
-            ).alias("h"),
+            F.explode(F.expr(word_ngrams(LEAK_SHINGLE_K))).alias("gram"),
         )
+        .select("doc_id", "split", F.md5("gram").alias("h"))
         .distinct()
         .localCheckpoint()  # tokenize/scan the corpus exactly once
     )
@@ -529,7 +487,7 @@ def corpus_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side against the broadcast set, and the only wide shuffle is
     the global tf aggregation — with map-side partial aggregation its
     reduce input is bounded by |vocab| per task, not corpus size."""
-    toks = _token_arrays(spark, sf_dir).select(
+    toks = token_arrays(spark, sf_dir).select(
         "doc_id", F.explode("l").alias("tok")
     )
     vocab = (
@@ -693,7 +651,7 @@ def corpus_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable; the top-K is a tiny single-partition sort of the pair
     vocabulary, not the data."""
     words = (
-        _token_arrays(spark, sf_dir)
+        token_arrays(spark, sf_dir)
         .select(F.explode("l").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("f"))
@@ -756,7 +714,7 @@ def corpus_token_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     same table (two longs, broadcast back); the corpus streams through
     a token-keyed join against tf (the identical shape corpus_oov_rate
     uses), and the per-doc rollup is a doc_id-keyed agg."""
-    toks = _token_arrays(spark, sf_dir).select(
+    toks = token_arrays(spark, sf_dir).select(
         "doc_id", F.explode("l").alias("tok")
     )
     tf = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("tf"))
@@ -1031,7 +989,7 @@ def corpus_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice over the token array) — chunking is map-side; the explode
     multiplies rows by ~n/stride, which is the intended fan-out of the
     operator, not a shuffle."""
-    toks = _token_arrays(spark, sf_dir)
+    toks = token_arrays(spark, sf_dir)
     overlap = CHUNK_LEN - CHUNK_STRIDE
     chunks = toks.select(
         "doc_id",
@@ -1095,8 +1053,11 @@ def corpus_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-pass count/annotate plan as sentence-level dedup. Novelty is
     integer ppm (truncating division), engine-exact."""
     grams = (
-        _token_arrays(spark, sf_dir)
-        .select("doc_id", F.explode(F.expr(_grams_spark(DECON_N))).alias("gram"))
+        token_arrays(spark, sf_dir)
+        .select(
+            "doc_id",
+            F.explode(F.array_distinct(F.expr(word_ngrams(DECON_N)))).alias("gram"),
+        )
         .select("doc_id", F.md5("gram").alias("h"))
         .distinct()
     )
@@ -1123,7 +1084,7 @@ NGRAM_NOVELTY_ORACLE = rf"""
 WITH toks AS (SELECT doc_id, string_split_regex(text, '\s+') AS l FROM documents),
 grams AS (
   SELECT DISTINCT doc_id, md5(gram) AS h FROM (
-    SELECT doc_id, unnest({_grams_duck(DECON_N)}) AS gram FROM toks
+    SELECT doc_id, unnest(list_distinct({word_ngrams_duck(DECON_N)})) AS gram FROM toks
   )
 ), first AS (
   SELECT h, min(doc_id) AS first_doc FROM grams GROUP BY h
@@ -1154,14 +1115,9 @@ def corpus_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     content) and joins back compressed — no window over a whole source,
     no driver collect."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    grams = _token_arrays(spark, sf_dir).select(
+    grams = token_arrays(spark, sf_dir).select(
         "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, greatest(size(l) - {BOILER_N - 1}, 1)),"
-                f" i -> concat_ws(' ', slice(l, i, {BOILER_N})))"
-            )
-        ).alias("gram"),
+        F.explode(F.expr(word_ngrams(BOILER_N))).alias("gram"),
     )
     occ = grams.groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("c"))
     occ_src = occ.join(docs, "doc_id")

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
 from ai_data_pipeline_spark.functions.expressions import topk_per_key
+from ai_data_pipeline_spark.operators.text import token_arrays, word_ngrams
 from ai_data_pipeline_spark.registry import QueryDef
 
 # Span-dedup gram width: a position is duplicated if the K-token gram
@@ -72,9 +73,8 @@ def dedup_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup_tokens, longest_span) for every doc containing at least one
     K-gram that occurs >= 2 times corpus-wide.
 
-    Plan: tokenize once behind an exchange (the SHINGLES_SPARK
-    materialization discipline — dedup.py:60), emit (pos, md5(gram))
-    per position from a transform lambda over the bound array, count
+    Plan: read the shared token arrays (text.token_arrays), emit
+    (pos, md5(gram)) per position of the word_ngrams array, count
     gram occurrences (one keyed shuffle, partial aggregation),
     semi-join the duplicated digests back onto positions, then merge
     covered intervals [pos, pos+K-1] into maximal spans with the
@@ -82,24 +82,11 @@ def dedup_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     length). The gram relation is localCheckpointed because both the
     count and the semi-join probe read it."""
     k = DUP_SPAN_K
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", F.split(F.col("text"), r"\s+").alias("l"))
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
     grams = (
-        d.filter(F.size("l") >= k)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, size(l) - {k - 1}),"
-                    f" i -> struct(i AS pos,"
-                    f" md5(concat_ws(' ', slice(l, i, {k}))) AS h))"
-                )
-            ).alias("s"),
-        )
-        .select("doc_id", F.col("s.pos").alias("pos"), F.col("s.h").alias("h"))
+        token_arrays(spark, sf_dir)
+        .filter(F.size("l") >= k)
+        .select("doc_id", F.posexplode(F.expr(word_ngrams(k))).alias("i", "g"))
+        .select("doc_id", (F.col("i") + 1).alias("pos"), F.md5("g").alias("h"))
         .localCheckpoint()
     )
     dup = (

@@ -37,6 +37,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
+from ai_data_pipeline_spark.functions.expressions import spread
+from ai_data_pipeline_spark.operators.text import (
+    token_arrays,
+    word_ngrams,
+    word_ngrams_duck,
+)
 from ai_data_pipeline_spark.registry import QueryDef
 from ai_data_pipeline_spark.session import session_scoped_cache
 
@@ -55,21 +61,8 @@ NGRAM_NUM, NGRAM_DEN = 3, 10  # ngram-jaccard report threshold 0.3
 # and carry no near-dup signal.
 NGRAM_DF_CAP = 128
 
-# Word-trigram shingles over a pre-materialized token array column `l`.
-# The split must NOT appear inside the transform lambda: projection
-# collapse would substitute it into the lambda body and re-evaluate the
-# full split per element — O(tokens^2) per document (measured 3x the
-# whole operator's runtime). _doc_shingles materializes `l` behind an
-# exchange so the lambda sees a bound column.
-SHINGLES_SPARK = (
-    r"array_distinct(transform(sequence(1, greatest(size(l) - 2, 1)),"
-    r" i -> concat_ws(' ', slice(l, i, 3))))"
-)
-# DuckDB dialect: list comprehension over the split tokens.
-SHINGLES_DUCK = (
-    r"list_distinct([array_to_string(l[i:i+2], ' ') "
-    r"for i in range(1, greatest(len(l)-2, 1)+1)])"
-)
+SHINGLE_N = 3  # word-trigram shingles
+SHINGLES_DUCK = f"list_distinct({word_ngrams_duck(SHINGLE_N)})"
 SHINGLES_DUCK_FROM = r"(SELECT doc_id, string_split_regex(text, '\s+') AS l FROM documents)"
 
 
@@ -87,9 +80,17 @@ FROM documents GROUP BY text
 """
 
 
+def _shingles(toks: DataFrame) -> DataFrame:
+    """(doc_id, l) token arrays -> distinct (doc_id, shingle) rows."""
+    return toks.select(
+        "doc_id",
+        F.explode(F.array_distinct(F.expr(word_ngrams(SHINGLE_N)))).alias("shingle"),
+    )
+
+
 # The exploded (doc_id, shingle) relation feeds dedup_ngram_jaccard AND
 # dedup_minhash_lsh; one eager localCheckpoint per (session, sf_dir)
-# computes the CPU-heavy split+explode once and every consumer reads the
+# computes the CPU-heavy explode once and every consumer reads the
 # materialized blocks — the "shared materialized intermediate" a real
 # dedup pipeline would persist between its candidate stages. Cached per
 # live session (weak-keyed — see session.session_scoped_cache).
@@ -97,22 +98,9 @@ FROM documents GROUP BY text
 
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache = session_scoped_cache(spark, "dedup_shingles")
-    key = sf_dir
-    if key not in cache:
-        # Testdata parquet is a single row group -> one scan task;
-        # shingling is CPU-bound string work, so spread it across all
-        # cores first. The repartition exchange also materializes the
-        # token array, pinning the split to one evaluation per row (see
-        # SHINGLES_SPARK comment).
-        d = (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", F.split(F.col("text"), r"\s+").alias("l"))
-            .repartition(spark.sparkContext.defaultParallelism)
-        )
-        cache[key] = d.select(
-            "doc_id", F.explode(F.expr(SHINGLES_SPARK)).alias("shingle")
-        ).localCheckpoint()
-    return cache[key]
+    if sf_dir not in cache:
+        cache[sf_dir] = _shingles(token_arrays(spark, sf_dir)).localCheckpoint()
+    return cache[sf_dir]
 
 
 def _df_capped_shingles(sh: DataFrame, cap: int) -> DataFrame:
@@ -695,12 +683,11 @@ def _containment_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    # same materialize-the-split-behind-an-exchange trick as
-    # _doc_shingles (the SHINGLES_SPARK O(tokens²) note)
-    psh = (
-        planted.select("doc_id", F.split(F.col("text"), r"\s+").alias("l"))
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("doc_id", F.explode(F.expr(SHINGLES_SPARK)).alias("shingle"))
+    # the spread's exchange binds the split (see text.token_arrays)
+    psh = _shingles(
+        spread(
+            planted.select("doc_id", F.split(F.col("text"), r"\s+").alias("l"))
+        )
     )
     return base.unionByName(psh)
 
@@ -1086,9 +1073,7 @@ SIMHASH_BITS = 16
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash over distinct tokens: per-bit majority vote of token
     md5 bits; exact-signature groups = near-dup clusters."""
-    d = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread(load_table(spark, sf_dir, "documents"))
     tokens = d.select(
         "doc_id",
         F.explode(
@@ -1156,12 +1141,7 @@ def dedup_chunk_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurring in more than one document. At 100 TB the chunk relation
     shuffles once on the hash — linear, mergeable; the exact-substring
     suffix-array pass runs only inside flagged doc groups."""
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", F.split(F.col("text"), r"\s+").alias("l"))
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    chunks = d.select(
+    chunks = token_arrays(spark, sf_dir).select(
         "doc_id",
         F.posexplode(
             F.expr(

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
+from ai_data_pipeline_spark.functions.expressions import spread
 from ai_data_pipeline_spark.registry import QueryDef
 
 ER_MAX_DIST = 2  # levenshtein admission threshold inside a block
@@ -41,19 +42,15 @@ def er_fuzzy_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     block on (nation, segment, name-prefix), score with levenshtein <= 2,
     keep the best match per dirty record."""
     c = load_table(spark, sf_dir, "customer")
-    # The testdata parquet is one row group → one scan task; without the
-    # repartition every in-block levenshtein runs serially in that task.
-    # At cluster scale the scan has real parallelism and this exchange
-    # is a cheap width-normalizer of the (small) dirty side.
-    dirty = (
-        c.filter(F.col("c_custkey") % 3 == 0)
-        .select(
+    # spread: without it every in-block levenshtein runs serially in the
+    # one scan task of the single-row-group testdata parquet
+    dirty = spread(
+        c.filter(F.col("c_custkey") % 3 == 0).select(
             F.col("c_custkey").alias("dirty_id"),
             F.expr("substr(c_name, 1, length(c_name) - 1)").alias("dirty_name"),
             F.col("c_nationkey").alias("d_nation"),
             F.col("c_mktsegment").alias("d_segment"),
         )
-        .repartition(spark.sparkContext.defaultParallelism)
     )
     # Bounded-band levenshtein (threshold arg): O(threshold·n) per pair
     # instead of O(n·m), returning -1 above the cutoff — the admitted

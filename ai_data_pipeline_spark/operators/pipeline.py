@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
+from ai_data_pipeline_spark.functions.expressions import spread
 from ai_data_pipeline_spark.operators.text import TOKEN_RX, TOKEN_RX_SQL
 from ai_data_pipeline_spark.registry import QueryDef
 
@@ -30,9 +31,7 @@ def clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     the kept min-doc_id row equal any group member's; struct-min picks
     the representative deterministically. That is the 100 TB plan:
     text stays in the scan stage, shuffles move ~40-byte rows."""
-    d = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread(load_table(spark, sf_dir, "documents"))
     n_tokens = F.regexp_count(F.col("text"), F.lit(TOKEN_RX))
     rows = d.filter(F.length("text") >= MIN_CHARS).select(
         F.md5("text").alias("h"),

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
+from ai_data_pipeline_spark.functions.expressions import spread
 from ai_data_pipeline_spark.registry import QueryDef
 
 EMAIL_RX = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -129,9 +130,7 @@ def corpus_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelism and the exchange is a no-op rebalance). Flagged-row
     output is a fixed fraction of the corpus (the planted moduli);
     text itself is never emitted, only lengths and counts."""
-    d = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread(load_table(spark, sf_dir, "documents"))
     did = F.col("doc_id")
 
     def planted(mod: int, *parts) -> Column:

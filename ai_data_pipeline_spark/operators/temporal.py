@@ -421,9 +421,6 @@ GROUP BY 1, 2
 """
 
 
-TWA_CUTOFF_US = 0  # full-range integral
-
-
 def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-weighted average of `value` per user (hypertable-style):
     each observation holds until the next one; weight = microseconds to

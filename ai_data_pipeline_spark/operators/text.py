@@ -5,6 +5,11 @@ fingerprinting).
 All are single-scan, shuffle-light (aggregations keyed on low-cardinality
 columns), JVM-side expressions only — no Python UDFs in any hot path.
 Cross-engine exactness: integer counts + decimal-exact ratios.
+
+This module imports no other operator module, so it also holds the
+front end every document operator shares: ``token_arrays`` (the one
+whitespace tokenization of ``documents``) and ``word_ngrams`` (the one
+sliding word-n-gram expression over it).
 """
 
 from __future__ import annotations
@@ -13,7 +18,9 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
+from ai_data_pipeline_spark.functions.expressions import spread
 from ai_data_pipeline_spark.registry import QueryDef
+from ai_data_pipeline_spark.session import session_scoped_cache
 
 # Stopword sets for the n-gram/stopword language-ID heuristic. Tiny and
 # deterministic on purpose: the score is count of stopword occurrences.
@@ -26,6 +33,48 @@ LANG_STOPWORDS = {
 
 TOKEN_RX = r"[A-Za-z0-9]+(?:'[A-Za-z]+)?"  # BPE-ish word tokenizer
 TOKEN_RX_SQL = TOKEN_RX.replace("'", "''")  # SQL-literal-escaped
+
+
+def token_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(doc_id, l)`` with ``l = split(text, '\\s+')``: the whitespace
+    tokens of ``documents``, spread and localCheckpointed once per
+    (session, sf_dir) and read by every word-n-gram, chunking and
+    vocabulary operator — the shared intermediate a curation pipeline
+    persists between stages (weak-keyed per live session, see
+    session.session_scoped_cache).
+
+    Lambdas over the tokens must read this bound ``l``, never a split
+    of ``text``: projection collapse inlines a split from an adjacent
+    projection into the transform lambda body, which then re-evaluates
+    the full split per element — O(tokens²) per document (measured 3x
+    the whole operator's runtime). tests/test_plans.py pins the rule on
+    every n-gram consumer."""
+    cache = session_scoped_cache(spark, "corpus_tokens")
+    if sf_dir not in cache:
+        cache[sf_dir] = spread(
+            load_table(spark, sf_dir, "documents").select(
+                "doc_id", F.split(F.col("text"), r"\s+").alias("l")
+            )
+        ).localCheckpoint()
+    return cache[sf_dir]
+
+
+def word_ngrams(n: int) -> str:
+    """Spark SQL: the sliding word n-grams of a token array column ``l``
+    (a doc shorter than n tokens yields one shorter gram). Bind ``l``
+    first — see ``token_arrays``."""
+    return (
+        f"transform(sequence(1, greatest(size(l) - {n - 1}, 1)),"
+        f" i -> concat_ws(' ', slice(l, i, {n})))"
+    )
+
+
+def word_ngrams_duck(n: int) -> str:
+    """DuckDB counterpart of ``word_ngrams``."""
+    return (
+        f"[array_to_string(l[i:i+{n - 1}], ' ') "
+        f"for i in range(1, greatest(len(l)-{n - 1}, 1)+1)]"
+    )
 
 
 def _stopword_count_expr(col: str, words: list[str]):
@@ -45,11 +94,7 @@ def _stopword_count_sql(col: str, words: list[str]) -> str:
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality metrics: lengths, token counts, ratios, and a
     deterministic quality score — aggregated per (lang, source)."""
-    # single-row-group parquet -> repartition so the regex-heavy per-doc
-    # pass uses every core
-    d = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread(load_table(spark, sf_dir, "documents"))
     n_tokens = F.regexp_count(F.col("text"), F.lit(TOKEN_RX))
     n_ws = F.size(F.split(F.col("text"), r"\s+"))
     n_punct = F.length(F.regexp_replace("text", r"[^.,;:!?]", ""))
@@ -146,9 +191,7 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-profile language ID: score each language by stopword hits,
     argmax with deterministic tie-break (score desc, lang asc), compared
     against the labeled lang column as a confusion matrix."""
-    d = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread(load_table(spark, sf_dir, "documents"))
     scored = d.select(
         "doc_id",
         "lang",
@@ -227,21 +270,8 @@ def winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     and deterministically comparable)."""
     from pyspark.sql import Window as W
 
-    # token array materialized behind the exchange: a split inside the
-    # transform lambda would re-evaluate per element (O(tokens^2)/doc)
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", F.split(F.col("text"), r"\s+").alias("l"))
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    grams = d.select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                rf"transform(sequence(1, greatest(size(l) - {WINNOW_K - 1}, 1)),"
-                rf" i -> concat_ws(' ', slice(l, i, {WINNOW_K})))"
-            )
-        ).alias("pos", "gram"),
+    grams = token_arrays(spark, sf_dir).select(
+        "doc_id", F.posexplode(F.expr(word_ngrams(WINNOW_K))).alias("pos", "gram")
     ).select("doc_id", "pos", F.md5("gram").alias("h"))
     win = (
         W.partitionBy("doc_id")
@@ -401,9 +431,7 @@ def encoding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     is hash-exact. Scale: one narrow regex pass over the scan, then a
     tiny (lang, source)-keyed aggregate with map-side partials — scan
     speed at any corpus size."""
-    d = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread(load_table(spark, sf_dir, "documents"))
     n_chars = F.length("text")
     n_repl = n_chars - F.length(F.regexp_replace("text", "�", ""))
     n_ctrl = n_chars - F.length(
@@ -466,9 +494,7 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one narrow regex pass over the scan — no shuffle at all
     until a consumer aggregates."""
-    d = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread(load_table(spark, sf_dir, "documents"))
     s = F.lower(F.col("text"))
     # regexp_count, not size(regexp_extract_all): identical counts
     # without materializing every match into an array (~25% faster,
@@ -755,9 +781,7 @@ def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     text_tfidf_top_terms."""
     from pyspark.sql import Window as W
 
-    d = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread(load_table(spark, sf_dir, "documents"))
     arr = F.regexp_extract_all(F.lower(F.col("text")), F.lit(TOKEN_RX), F.lit(0))
     toks = d.select("doc_id", F.posexplode(arr).alias("pos", "tok"))
     wdoc = W.partitionBy("doc_id").orderBy("pos")

@@ -63,6 +63,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
 from ai_data_pipeline_spark.catalog import load_table
+from ai_data_pipeline_spark.operators.text import token_arrays
 from ai_data_pipeline_spark.registry import QueryDef
 from ai_data_pipeline_spark.session import session_scoped_cache
 
@@ -73,18 +74,16 @@ UNI_MAX_WORD = 63  # word-length cap, both engines (BPE range(1,64) bound)
 
 def _word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The distinct-word frequency table the whole family trains on —
-    built from corpus.py's session-checkpointed token arrays (ONE
+    built from the session-checkpointed text.token_arrays (ONE
     corpus text split per session, shared with the n-gram/BPE family)
     and itself checkpoint-memoized: seed counts, the EM pass, and the
     apply/roundtrip segmentations all read the materialized word
     relation instead of re-splitting the corpus (it contains a
     shuffle and has 4+ consumers — the house materialize-once rule)."""
-    from ai_data_pipeline_spark.operators.corpus import _token_arrays
-
     cache = session_scoped_cache(spark, "unigram_wf")
     if sf_dir not in cache:
         cache[sf_dir] = (
-            _token_arrays(spark, sf_dir)
+            token_arrays(spark, sf_dir)
             .select(F.explode("l").alias("w"))
             .filter((F.length("w") >= 1) & (F.length("w") <= UNI_MAX_WORD))
             .groupBy("w")

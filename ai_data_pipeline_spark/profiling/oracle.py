@@ -9,11 +9,8 @@ rendering, array aggregation).
 from __future__ import annotations
 
 from ai_data_pipeline_spark.profiling import cascade, patterns as P
+from ai_data_pipeline_spark.profiling.cascade import _sq
 from ai_data_pipeline_spark.profiling.profiler import SAMPLE_N, SAMPLE_TRUNC
-
-
-def _sq(s: str) -> str:
-    return "'" + s.replace("'", "''") + "'"
 
 
 def duck_render(col: str, kind: str) -> str | None:

@@ -101,10 +101,6 @@ PATTERNS: list[tuple[str, str, str]] = [
 ]
 
 PATTERN_NAMES = [name for _, name, _ in PATTERNS]
-PATTERN_BY_NAME = {name: (typ, rx) for typ, name, rx in PATTERNS}
-
-# Types claimed via the >=80% pattern loop, in decision order (fixed mode).
-CLAIM_ORDER = [EMAIL, DATE, PHONE, NUMERIC, BOOLEAN]
 
 
 def patterns_of(semantic_type: str) -> list[tuple[str, str]]:

@@ -74,9 +74,13 @@ def render_expr(col: str, kind: str) -> Column | None:
 
     Renderings are chosen to agree byte-for-byte with the DuckDB oracle's
     (oracle.py): plain cast for ints/doubles/bools, explicit second-
-    precision formatting for timestamps. (Caveat, documented: Java
-    renders |x| >= 1e7 doubles in scientific notation where DuckDB does
-    not — irrelevant for pattern ratios unless a column straddles 1e7.)
+    precision formatting for timestamps. Known divergence, open: Java
+    renders doubles with |x| >= 1e7 AND with 0 < |x| < 1e-3 in
+    scientific notation where DuckDB does not (12345678.5 is
+    ``1.23456785E7`` vs ``12345678.5``; 0.0005 is ``5.0E-4`` vs
+    ``0.0005``). Both ranges change the pattern hit counts and
+    ``sample_values`` of such a column, not only its pattern ratios;
+    the fix is ROADMAP.md open item 4.
     """
     c = _qcol(col)
     if kind == "string":

@@ -1457,7 +1457,7 @@ def test_minhash_verify_equals_direct_set_intersection(spark):
     }
 
     def shingles(text):
-        # mirror SHINGLES_SPARK: whitespace split, word-trigram slices
+        # mirror dedup._shingles: whitespace split, word-trigram slices
         # with a greatest(n-2, 1) floor, distinct
         toks = re.split(r"\s+", text)
         return {

@@ -1641,3 +1641,68 @@ def test_mg_summary_counts_are_partial_aggregates(spark):
         assert not _has_global_sort(plan), plan
     # sketch_mg_topk keeps its tournament inline (single-consumer)
     assert _plan(sketch_mg_topk(spark, SF_DIR)).count("Window") >= 2
+
+
+def test_ngram_lambdas_read_a_bound_token_array(spark):
+    """No word-n-gram lambda may re-split the text: a split inlined into
+    a transform lambda body re-evaluates per element, O(tokens²) per
+    document (see text.token_arrays). The optimized plan prints each
+    node on one line, so an inlined split shows up as
+    ``slice(split(text#…`` on a ``lambdafunction(`` line."""
+    from ai_data_pipeline_spark.operators.corpus import (
+        corpus_boilerplate_ngrams,
+        corpus_decontaminate,
+        corpus_split_leakage,
+    )
+    from ai_data_pipeline_spark.operators.curation import dedup_dup_spans
+    from ai_data_pipeline_spark.operators.dedup import (
+        _containment_scored,
+        dedup_chunk_passages,
+        dedup_containment,
+    )
+    from ai_data_pipeline_spark.operators.text import winnowing_fingerprint
+
+    for q in (
+        winnowing_fingerprint,
+        dedup_chunk_passages,
+        dedup_dup_spans,
+        dedup_containment,
+        _containment_scored,
+        corpus_decontaminate,
+        corpus_boilerplate_ngrams,
+        corpus_split_leakage,
+    ):
+        plan = q(spark, SF_DIR)._jdf.queryExecution().optimizedPlan().toString()
+        for line in plan.splitlines():
+            if "lambdafunction(" in line:
+                assert "split(" not in line, (q.__name__, line)
+
+
+def test_spread_repartitions_only_narrow_inputs(spark):
+    """``spread`` widens an input with fewer partitions than the local
+    parallelism to exactly that parallelism and returns a wide-enough
+    input as is."""
+    from ai_data_pipeline_spark.functions.expressions import spread
+
+    par = spark.sparkContext.defaultParallelism
+    narrow = spark.range(100).coalesce(1)
+    assert spread(narrow).rdd.getNumPartitions() == par
+    wide = spark.range(0, 100, 1, par)
+    assert spread(wide) is wide
+
+
+def test_spread_is_the_only_parallelism_repartition():
+    """The spread policy lives in one place: no module but
+    functions/expressions.py repartitions to ``defaultParallelism``
+    (a module that names both is flagged, so a count bound to a local
+    name first is caught too)."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "ai_data_pipeline_spark"
+    offenders = [
+        path.relative_to(pkg).as_posix()
+        for path in sorted(pkg.rglob("*.py"))
+        if "defaultParallelism" in (src := path.read_text())
+        and ".repartition(" in src
+    ]
+    assert offenders == ["functions/expressions.py"]

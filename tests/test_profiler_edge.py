@@ -104,3 +104,24 @@ def test_profile_invariants_random_frames(spark, seed):
             "identifier", "business_key", "date", "numeric", "text",
             "boolean", "email", "phone", "address",
         }
+
+
+def test_vector_unique_count_matches_duckdb_distinct(spark):
+    """``count(DISTINCT array<float>)`` normalizes -0.0 to 0.0 and NaN to
+    one NaN in Spark and in DuckDB alike (2 distinct rows here), while a
+    string-rendered distinct counts 3. A profile that computes vector
+    distincts from a rendered melt would silently diverge."""
+    import duckdb
+    from pyspark.sql.types import ArrayType, FloatType, StructField, StructType
+
+    nan = float("nan")
+    rows = [([0.0, 1.0],), ([-0.0, 1.0],), ([nan],), ([nan],)]
+    df = spark.createDataFrame(
+        rows, StructType([StructField("v", ArrayType(FloatType()))])
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (v FLOAT[])")
+    con.executemany("INSERT INTO t VALUES (?)", rows)
+    (duck,) = con.execute("SELECT count(DISTINCT v) FROM t").fetchone()
+    assert duck == 2
+    assert _profiles(df)["v"]["unique_count"] == duck

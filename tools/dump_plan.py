@@ -4,8 +4,10 @@ contract queries.
     python tools/dump_plan.py ann_ivf_pq emb_outlier_distance ...
 
 ``SPARK_GRAFT_SF_DIR`` picks the scale-factor directory (default sf0.1).
-Catalyst expression ids (``#123``) and exchange plan ids print as ``#``
-and ``plan_id=``, so the output of two commits diffs line by line.
+Catalyst expression ids (``#123``), exchange plan ids and the RDD behind
+a checkpoint scan (``MapPartitionsRDD[57] at localCheckpoint at
+<call site>``) print as ``#``, ``plan_id=`` and ``MapPartitionsRDD[] at
+localCheckpoint``, so the output of two commits diffs line by line.
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ import __spark_entry__ as entry_mod  # noqa: E402
 
 def normalize(plan: str) -> str:
     """Drop the per-session numbering from a plan string."""
+    plan = re.sub(r"(\w+RDD)\[\d+\] at (\w+) at \S+", r"\1[] at \2", plan)
     return re.sub(r"plan_id=\d+", "plan_id=", re.sub(r"#\d+", "#", plan))
 
 
