@@ -47,7 +47,11 @@ from ai_data_pipeline_spark.streaming import ivf as streaming_ivf
 from ai_data_pipeline_spark.streaming import sketch as streaming_sketch
 from ai_data_pipeline_spark.streaming import watermark as streaming_watermark
 from ai_data_pipeline_spark.streaming import windows as streaming_windows
-from ai_data_pipeline_spark.profiling.profiler import profile_summary, profile_table
+from ai_data_pipeline_spark.profiling.profiler import (
+    profile_summary,
+    profile_table,
+    profile_tables,
+)
 from ai_data_pipeline_spark.profiling.oracle import (
     profile_oracle_sql,
     profile_summary_oracle_sql,
@@ -197,19 +201,12 @@ def _profile_approx_audit_oracle(table: str) -> str:
 
 def _profile_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Warehouse sweep: profile every table in the catalog in one query
-    (one aggregation pass per table; the union is metadata-sized — one
-    row per column — so a 10,000-table lake reduces to a small profile
-    relation that is itself queryable)."""
-    from functools import reduce
-    from pyspark.sql import functions as F
-
-    parts = [
-        profile_table(load_table(spark, sf_dir, t), TABLES[t]).select(
-            F.lit(t).alias("table_name"), "*"
-        )
-        for t in PROFILED_TABLES
-    ]
-    return reduce(lambda a, b: a.unionByName(b), parts)
+    (one melt and one two-level aggregation over all tables; the result
+    is metadata-sized — one row per column — so a 10,000-table lake
+    reduces to a small profile relation that is itself queryable)."""
+    return profile_tables(
+        [(t, load_table(spark, sf_dir, t), TABLES[t]) for t in PROFILED_TABLES]
+    )
 
 
 def _profile_catalog_oracle() -> str:

@@ -24,6 +24,9 @@ DuckDB, one row per profiled column):
     f_name_pii   string   PII level implied by the name       (python-lit)
     f_suggested  string   snake_case(name)                    (python-lit)
 
+The python-lit fields, with column_name and kind, are
+patterns.name_literals.
+
 All thresholds are integer-exact (ratio >= a/b  <=>  b*hits >= a*n), so
 no floating-point comparison can diverge between engines.
 """
@@ -108,14 +111,10 @@ def _ratio_sql(numer: str) -> str:
     )
 
 
-def layer2_exprs(suggested_name: str | None = None) -> dict[str, str]:
+def layer2_exprs() -> dict[str, str]:
     """Final profile columns over the stats row + layer-1 ``data_type``.
-
-    ``business_meaning`` depends on the (python-literal) suggested name, so
-    when generating a per-column SQL branch pass ``suggested_name``;
-    the Spark path passes None and the meaning CASE falls back to the
-    f_suggested column via concat (both dialects support ||).
-    """
+    ``business_meaning`` is the op21 template for ``data_type``
+    (pattern_classifier.py:243-258 shape) || the suggested name."""
     pk_a, pk_b = P.UR_PK
     bk_a, bk_b = P.UR_BK_STRUCT
     pk = (
@@ -131,23 +130,14 @@ def layer2_exprs(suggested_name: str | None = None) -> dict[str, str]:
         f"CASE WHEN data_type IN ({_sq(P.EMAIL)}, {_sq(P.PHONE)}) "
         f"THEN {_sq(P.PII_HIGH)} ELSE f_name_pii END"
     )
-    # meaning: searched CASE over data_type with fully-literal strings when
-    # the suggested name is known at generation time; else template || name.
-    if suggested_name is not None:
-        branches = " ".join(
-            f"WHEN {_sq(t)} THEN {_sq(P.business_meaning(t, suggested_name))}"
-            for t in P.MEANING_TEMPLATES
-        )
-        meaning = f"CASE data_type {branches} ELSE {_sq('Attribute')} END"
-    else:
-        branches = " ".join(
-            f"WHEN {_sq(t)} THEN {_sq(P.MEANING_TEMPLATES[t] + ' for ')}"
-            for t in P.MEANING_TEMPLATES
-        )
-        meaning = (
-            f"(CASE data_type {branches} ELSE {_sq('Attribute for ')} END"
-            " || replace(f_suggested, '_', ' '))"
-        )
+    branches = " ".join(
+        f"WHEN {_sq(t)} THEN {_sq(P.MEANING_TEMPLATES[t] + ' for ')}"
+        for t in P.MEANING_TEMPLATES
+    )
+    meaning = (
+        f"(CASE data_type {branches} ELSE {_sq('Attribute for ')} END"
+        " || replace(f_suggested, '_', ' '))"
+    )
     return {
         "column_name": "column_name",
         "suggested_name": "f_suggested",

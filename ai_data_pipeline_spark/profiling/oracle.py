@@ -28,9 +28,13 @@ def duck_render(col: str, kind: str) -> str | None:
 def _col_stats_sql(table: str, col: str, kind: str) -> str:
     rend = duck_render(col, kind)
     scalar = rend is not None
+    lits = {
+        k: _sq(v) if isinstance(v, str) else str(v)
+        for k, v in P.name_literals(col, kind).items()
+    }
     sel = [
-        f"{_sq(col)} AS column_name",
-        f"{_sq(kind if kind in ('vector', 'binary') else 'scalar')} AS kind",
+        f"{lits.pop('column_name')} AS column_name",
+        f"{lits.pop('kind')} AS kind",
         "count(*) AS n_total",
         f"count({col}) AS n_nonnull",
         f"count(DISTINCT {col}) AS n_distinct",
@@ -50,14 +54,7 @@ def _col_stats_sql(table: str, col: str, kind: str) -> str:
         )
     else:
         sel.append("'' AS sample_values")
-    sel += [
-        f"{P.name_has(col, P.ID_NAME_PARTS)} AS f_idname",
-        f"{'id' in col.lower()} AS f_id_in_name",
-        f"{P.name_has(col, ('id', 'key'))} AS f_pkname",
-        f"{P.name_has(col, P.BK_NAME_PARTS)} AS f_bkname",
-        f"{_sq(P.name_pii(col))} AS f_name_pii",
-        f"{_sq(P.snake_case(col))} AS f_suggested",
-    ]
+    sel += [f"{v} AS {k}" for k, v in lits.items()]
     src = f"(SELECT {col}, {rend} AS render FROM {table}) __t" if scalar else table
     return "SELECT " + ", ".join(sel) + f" FROM {src}"
 
@@ -68,7 +65,7 @@ def profile_oracle_sql(table: str, columns: list[tuple[str, str]]) -> str:
     )
     l1 = cascade.layer1_exprs()
     l1_sel = ", ".join(f"{sql} AS {name}" for name, sql in l1.items())
-    l2 = cascade.layer2_exprs(None)
+    l2 = cascade.layer2_exprs()
     l2_sel = ", ".join(f"{sql} AS {name}" for name, sql in l2.items())
     return (
         f"WITH stats AS (\n{stats_union}\n), "

@@ -166,6 +166,22 @@ def snake_case(name: str) -> str:
     return s.strip("_")
 
 
+def name_literals(name: str, kind: str) -> dict[str, object]:
+    """The python-literal part of a column's stats row (cascade.py
+    contract), which the Spark profiler and the DuckDB oracle both embed
+    as literals."""
+    return {
+        "column_name": name,
+        "kind": kind if kind in (VECTOR, BINARY) else "scalar",
+        "f_idname": name_has(name, ID_NAME_PARTS),
+        "f_id_in_name": "id" in name.lower(),
+        "f_pkname": name_has(name, ("id", "key")),
+        "f_bkname": name_has(name, BK_NAME_PARTS),
+        "f_name_pii": name_pii(name),
+        "f_suggested": snake_case(name),
+    }
+
+
 MEANING_TEMPLATES = {
     IDENTIFIER: "Unique identifier",
     BUSINESS_KEY: "Business key or category code",
@@ -179,11 +195,6 @@ MEANING_TEMPLATES = {
     VECTOR: "Embedding vector",
     BINARY: "Binary payload",
 }
-
-
-def business_meaning(semantic_type: str, suggested_name: str) -> str:
-    """op21 meaning template (pattern_classifier.py:243-258 shape)."""
-    return f"{MEANING_TEMPLATES[semantic_type]} for {suggested_name.replace('_', ' ')}"
 
 
 # Confidence constants (op22: pattern results carry 0.8,

@@ -1,29 +1,35 @@
-"""Single-pass Spark column profiler.
+"""Spark column profiler: one plan for one table or many.
 
 Re-expresses the reference's per-column pandas loops
-(pattern_classifier.py:110-137 / base.py:121-152) as ONE wide
-``df.agg(...)`` over the whole table:
+(pattern_classifier.py:110-137 / base.py:121-152) as one melt and one
+two-level aggregation over every profiled table:
 
-    count(*), and per column: count, count(distinct),
-    one regex-hit count per pattern (21), BK-code hits, sorted sample
+    melt:    each table's scalar columns → (cid, lossless rendering) rows,
+             cid a global column id                      [map-side]
+    level 1: groupBy(cid, render_l) count               [shuffle 1]
+    level 2: groupBy(cid): counts, distinct count, one
+             weighted regex-hit count per pattern (21),
+             sorted sample                               [shuffle 2]
 
-— a single scan with partial+final hash aggregation and whole-stage
-codegen. No per-column passes, no driver-side data loops: the only thing
-that leaves the executors is one tiny stats row of width O(C·P).
+No per-column passes, no driver-side data loops: what leaves the
+executors is one small stats row per column. Vector/binary columns have
+no string rendering; each table holding them adds one wide aggregate.
+The stats rows then pick up their name literals from a literal array
+indexed by cid, and the cascade runs on them as the same SQL expression
+strings the DuckDB oracle uses (cascade.py).
 
 Scale notes (100 TB posture):
 - The scan is columnar parquet; Catalyst prunes to exactly the profiled
   columns.
-- ``count(distinct)`` over many columns expands via Spark's Expand
-  operator (one replicated stream per distinct aggregate). That is the
-  correct exact-path plan; at the 100 TB tier pass
-  ``exact_distinct=False`` to use ``approx_count_distinct`` (HLL sketch,
-  no Expand) — the oracle-checked path keeps exact.
-- The cascade runs on the exploded stats rows (C rows), declared via the
-  same SQL expression strings the DuckDB oracle uses (cascade.py).
+- The exact distinct count is a count of level-1 groups, so no Expand
+  operator; at the 100 TB tier ``exact_distinct=False`` swaps it for
+  ``approx_count_distinct`` (HLL sketch) — the oracle-checked path keeps
+  exact.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -80,7 +86,7 @@ def render_expr(col: str, kind: str) -> Column | None:
     ``1.23456785E7`` vs ``12345678.5``; 0.0005 is ``5.0E-4`` vs
     ``0.0005``). Both ranges change the pattern hit counts and
     ``sample_values`` of such a column, not only its pattern ratios;
-    the fix is ROADMAP.md open item 4.
+    the fix is ROADMAP.md open item 5.
     """
     c = _qcol(col)
     if kind == "string":
@@ -105,36 +111,10 @@ def lossless_render_expr(col: str, kind: str) -> Column | None:
     return render_expr(col, kind)
 
 
-def _scalar_stats(
-    df: DataFrame, columns: list[tuple[str, str]], exact_distinct: bool
-) -> DataFrame:
-    """Per-column stats for scalar columns via melt + two-level aggregation.
-
-    Plan shape (one scan, two keyed shuffles, NO Expand operator):
-
-      scan → explode to (cid, lossless_render)            [C× rows, map-side]
-           → groupBy(cid, render) count                   [shuffle 1: distincts]
-           → groupBy(cid): weighted regex hits, counts,   [shuffle 2: C rows]
-             distinct count, sorted sample
-
-    Why: regexes run on *distinct rendered values weighted by counts*, not
-    on raw rows — for low-cardinality columns (flags, dates, quantities)
-    that is orders of magnitude less regex work, and it is exactly
-    equivalent because the hit count is sum(cnt · matches(v)) either way.
-    The lossless rendering is injective, so count(distinct render) ==
-    count(distinct value). Map-side partial aggregation absorbs the C×
-    explode before the shuffle; high-cardinality columns degrade
-    gracefully to ~row-count work (hash agg spills as needed).
-    """
-    scalars = [
-        (i, c, kind)
-        for i, (c, kind) in enumerate(columns)
-        if render_expr(c, kind) is not None
-    ]
-    if not scalars:
-        return None
+def _melt(df: DataFrame, scalars: list[tuple[int, str, str]]) -> DataFrame:
+    """One ``(cid, lossless_render)`` row per scalar cell of ``df``."""
     df = spread(df)  # CPU-bound pass over a possibly single-task scan
-    pairs = df.select(
+    return df.select(
         F.explode(
             F.array(
                 *[
@@ -147,9 +127,42 @@ def _scalar_stats(
             )
         ).alias("p")
     ).select("p.*")
-    level1 = pairs.groupBy("cid", "render_l").agg(F.count(F.lit(1)).alias("cnt"))
 
-    ts_cids = [i for i, c, kind in scalars if kind == "timestamp"]
+
+def _scalar_stats(
+    melts: list[DataFrame],
+    scalars: list[tuple[int, str, str]],
+    exact_distinct: bool,
+) -> DataFrame:
+    """Stats rows of the scalar columns of every table: the two
+    aggregation levels (module docstring) over the union of the melts.
+
+    Why: regexes run on *distinct rendered values weighted by counts*, not
+    on raw rows — for low-cardinality columns (flags, dates, quantities)
+    that is orders of magnitude less regex work, and it is exactly
+    equivalent because the hit count is sum(cnt · matches(v)) either way.
+    The lossless rendering is injective, so count(distinct render) ==
+    count(distinct value). Map-side partial aggregation absorbs the C×
+    explode before the shuffle; high-cardinality columns degrade
+    gracefully to ~row-count work (hash agg spills as needed).
+
+    One neutral ``(cid, NULL, 0)`` row per column joins level 1, so a
+    column of an empty table still gets its stats row: a NULL rendering
+    adds nothing to any sum, count, distinct count or sample.
+    """
+    seed = melts[0].sparkSession.range(1).select(
+        F.explode(F.array(*[F.lit(i) for i, _, _ in scalars])).alias("cid"),
+        F.lit(None).cast("string").alias("render_l"),
+        F.lit(0).cast("long").alias("cnt"),
+    )
+    level1 = (
+        reduce(DataFrame.union, melts)
+        .groupBy("cid", "render_l")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .union(seed)
+    )
+
+    ts_cids = [i for i, _, kind in scalars if kind == "timestamp"]
     render = (
         F.when(F.col("cid").isin(ts_cids), F.substring("render_l", 1, 19)).otherwise(
             F.col("render_l")
@@ -193,16 +206,9 @@ def _scalar_stats(
     return level1.groupBy("cid").agg(*aggs)
 
 
-def _nonscalar_stats(df: DataFrame, columns: list[tuple[str, str]]) -> DataFrame:
+def _nonscalar_stats(df: DataFrame, nonscalars: list[tuple[int, str, str]]) -> DataFrame:
     """Counts/distincts for vector/binary columns (no string rendering):
     one tiny wide agg, reshaped to per-cid rows."""
-    nonscalars = [
-        (i, c, kind)
-        for i, (c, kind) in enumerate(columns)
-        if render_expr(c, kind) is None
-    ]
-    if not nonscalars:
-        return None
     aggs = [F.count(F.lit(1)).alias("n_total")]
     for i, c, _ in nonscalars:
         aggs.append(F.count(_qcol(c)).alias(f"c{i}__nonnull"))
@@ -223,6 +229,45 @@ def _nonscalar_stats(df: DataFrame, columns: list[tuple[str, str]]) -> DataFrame
     return wide.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
 
 
+def profile_tables(
+    tables: list[tuple[str, DataFrame, list[tuple[str, str]]]],
+    exact_distinct: bool = True,
+) -> DataFrame:
+    """Profile every column of every ``(table_name, df, columns)`` in one
+    plan → one row per column: ``table_name`` then
+    cascade.PROFILE_COLUMNS."""
+    names, melts, scalars, parts = [], [], [], []
+    for table_name, df, columns in tables:
+        cols = [(len(names) + j, c, kind) for j, (c, kind) in enumerate(columns)]
+        names += [
+            F.struct(
+                F.lit(table_name).alias("table_name"),
+                *[F.lit(v).alias(k) for k, v in P.name_literals(c, kind).items()],
+            )
+            for _, c, kind in cols
+        ]
+        table_scalars = [x for x in cols if render_expr(x[1], x[2]) is not None]
+        nonscalars = [x for x in cols if x not in table_scalars]
+        if table_scalars:
+            melts.append(_melt(df, table_scalars))
+            scalars += table_scalars
+        if nonscalars:
+            parts.append(_nonscalar_stats(df, nonscalars))
+    if scalars:
+        parts.insert(0, _scalar_stats(melts, scalars, exact_distinct))
+    stats = reduce(DataFrame.unionByName, parts)
+    stats_rel = stats.select(
+        "*", F.element_at(F.array(*names), F.col("cid") + 1).alias("lit")
+    ).select("*", "lit.*")
+
+    l1 = cascade.layer1_exprs()
+    out = stats_rel.selectExpr("*", *[f"{sql} AS {name}" for name, sql in l1.items()])
+    l2 = cascade.layer2_exprs()
+    return out.selectExpr(
+        "table_name", *[f"{sql} AS {name}" for name, sql in l2.items()]
+    )
+
+
 def profile_table(
     df: DataFrame,
     columns: list[tuple[str, str]] | None = None,
@@ -231,52 +276,15 @@ def profile_table(
     """Profile every column of ``df`` → one profile row per column.
 
     Output schema: cascade.PROFILE_COLUMNS. Equivalent of the reference's
-    ``analyze_dataframe`` (pattern_classifier.py:110-137), as one Spark job.
+    ``analyze_dataframe`` (pattern_classifier.py:110-137): the one-table
+    call of profile_tables. Adaptive execution runs each shuffle stage
+    as its own Spark job: collecting the profile of a scalar-only table
+    runs 4 jobs, one with a vector column 6 (region and embeddings at
+    sf0.1 on local[4]).
     """
     if columns is None:
         columns = [(f.name, kind_of(f.dataType)) for f in df.schema.fields]
-
-    stats = _scalar_stats(df, columns, exact_distinct)
-    ns_stats = _nonscalar_stats(df, columns)
-    if stats is None:
-        stats = ns_stats
-    elif ns_stats is not None:
-        stats = stats.unionByName(ns_stats)
-
-    spark = df.sparkSession
-    flags = spark.createDataFrame(
-        [
-            (
-                i,
-                c,
-                kind if kind in ("vector", "binary") else "scalar",
-                P.name_has(c, P.ID_NAME_PARTS),
-                "id" in c.lower(),
-                P.name_has(c, ("id", "key")),
-                P.name_has(c, P.BK_NAME_PARTS),
-                P.name_pii(c),
-                P.snake_case(c),
-            )
-            for i, (c, kind) in enumerate(columns)
-        ],
-        schema=(
-            "cid int, column_name string, kind string, f_idname boolean, "
-            "f_id_in_name boolean, f_pkname boolean, f_bkname boolean, "
-            "f_name_pii string, f_suggested string"
-        ),
-    )
-    stats_rel = (
-        flags.join(stats, "cid", "left")
-        .withColumn("n_total", F.coalesce("n_total", F.lit(0)))
-        .withColumn("n_nonnull", F.coalesce("n_nonnull", F.lit(0)))
-        .withColumn("n_distinct", F.coalesce("n_distinct", F.lit(0)))
-        .withColumn("sample_values", F.coalesce("sample_values", F.lit("")))
-    )
-
-    l1 = cascade.layer1_exprs()
-    out = stats_rel.selectExpr("*", *[f"{sql} AS {name}" for name, sql in l1.items()])
-    l2 = cascade.layer2_exprs(None)
-    return out.selectExpr(*[f"{sql} AS {name}" for name, sql in l2.items()])
+    return profile_tables([("", df, columns)], exact_distinct).drop("table_name")
 
 
 def profile_summary(profile_df: DataFrame) -> DataFrame:

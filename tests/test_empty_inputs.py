@@ -24,16 +24,38 @@ def empty_sf_dir(spark):
 
 
 def test_profiler_emits_all_columns_on_empty_table(spark, empty_sf_dir):
-    from ai_data_pipeline_spark.profiling.profiler import profile_table
+    from pyspark.sql import functions as F
 
-    rows = profile_table(
-        load_table(spark, empty_sf_dir, "customer"), TABLES["customer"]
-    ).collect()
+    from ai_data_pipeline_spark.profiling.profiler import profile_table, profile_tables
+
+    empty = load_table(spark, empty_sf_dir, "customer")
+    rows = profile_table(empty, TABLES["customer"]).collect()
     assert len(rows) == len(TABLES["customer"])
     for r in rows:
         assert r["total_rows"] == 0
         assert r["null_count"] == 0
         assert r["unique_count"] == 0
+
+    # one plan over many tables: an empty table beside a vector-only
+    # table and one with quote/backtick column names
+    vectors = spark.range(3).select(F.array(F.col("id").cast("float")).alias("v"))
+    odd = spark.range(4).select(
+        F.col("id").alias("weird`tick"), F.lit("x").alias("it's")
+    )
+    tables = [
+        ("customer", empty, TABLES["customer"]),
+        ("vectors", vectors, [("v", "vector")]),
+        ("odd", odd, [("weird`tick", "long"), ("it's", "string")]),
+    ]
+    by_table = {}
+    for r in profile_tables(tables).collect():
+        by_table.setdefault(r["table_name"], []).append(r)
+    assert {t: sorted(r["column_name"] for r in rs) for t, rs in by_table.items()} == {
+        t: sorted(c for c, _ in cols) for t, _, cols in tables
+    }
+    assert [r["total_rows"] for r in by_table["customer"]] == [0] * len(TABLES["customer"])
+    assert [r["total_rows"] for r in by_table["vectors"]] == [3]
+    assert [r["total_rows"] for r in by_table["odd"]] == [4, 4]
 
 
 @pytest.mark.parametrize(

@@ -1706,3 +1706,26 @@ def test_spread_is_the_only_parallelism_repartition():
         and ".repartition(" in src
     ]
     assert offenders == ["functions/expressions.py"]
+
+
+def test_profile_plan_has_no_join_and_one_aggregation_for_many_tables(spark):
+    """One profile plan serves one table or many: a single-table profile
+    looks its name literals up by ``cid`` instead of joining them in,
+    and ``profile_catalog`` runs the two-level aggregation once over all
+    tables — one exchange keyed on ``(cid, render_l)`` and one keyed on
+    ``cid``, whatever the number of tables."""
+    import re
+
+    import __spark_entry__ as entry_mod
+    from ai_data_pipeline_spark.catalog import TABLES
+    from ai_data_pipeline_spark.profiling.profiler import profile_table
+
+    single = profile_table(load_table(spark, SF_DIR, "customer"), TABLES["customer"])
+    optimized = single._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in optimized, optimized
+
+    plan = _plan(entry_mod.queries()["profile_catalog"](spark, SF_DIR))
+    keys = re.findall(r"Exchange hashpartitioning\(([^)]*?), \d+\)", plan)
+    keys = [re.sub(r"#\d+L?", "", k) for k in keys]
+    assert keys.count("cid, render_l") == 1, plan
+    assert keys.count("cid") == 1, plan
