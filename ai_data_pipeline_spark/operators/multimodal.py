@@ -7,60 +7,32 @@ Design (the part that matters at 100 TB):
   Spark untouched (no JVM<->Python crossing) until a decode stage;
 - decode/feature-extract runs in ``mapInPandas`` — per-partition Arrow
   batches, vectorized pandas/numpy inside, schema declared up front;
-- the image/audio codec libraries are NOT in this container, so
-  ``decode_image`` is a clearly-marked stub (NotImplementedError); the
-  deterministic byte-level feature path below exercises the exact same
-  plumbing (binary in → fixed-schema features out) and is oracle-checked
+- PNG, BMP, GIF and WAV decode for real through the stdlib-only codecs
+  of functions/codecs.py, driven by one roundtrip kernel (the
+  ``multimodal_*_roundtrip`` queries at the end of this module); no
+  JPEG/WebP/MP3 codec is a dependency, so the other operators read
+  documents.text bytes as stand-in payloads — the exact same plumbing
+  (binary in → fixed-schema features out), oracle-checked
   byte-for-byte against DuckDB blob functions.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from functools import partial
+from typing import NamedTuple
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
-from ai_data_pipeline_spark.functions import spread
+from ai_data_pipeline_spark.functions import codecs, spread
 from ai_data_pipeline_spark.registry import QueryDef
 
 FEATURE_SCHEMA = "doc_id long, source string, n_bytes long, first_byte int, last_byte int, byte_sum long"
-
-
-def decode_image(payload: bytes, target_size: tuple[int, int] | None = None):
-    """Decode an image payload by magic-number dispatch. PNG (8-bit
-    grayscale), BMP (indexed-8 grayscale DIB), and GIF87a (grayscale
-    LZW) decode FOR REAL via the stdlib-only codecs in
-    functions/codecs.py — see multimodal_png_roundtrip /
-    multimodal_bmp_roundtrip / multimodal_gif_roundtrip below, which
-    drive the full encode→decode→feature pipeline through mapInPandas
-    under an oracle. Other formats (JPEG/WebP/...) still raise: their
-    codecs are genuinely not in this container, and a silent fake
-    would poison features."""
-    from ai_data_pipeline_spark.functions.codecs import (
-        bmp_decode,
-        gif_decode,
-        png_decode,
-        resize_nearest,
-    )
-
-    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        img, _meta = png_decode(payload)
-        return resize_nearest(img, target_size) if target_size else img
-    if payload[:2] == b"BM":
-        img, _meta = bmp_decode(payload)
-        return resize_nearest(img, target_size) if target_size else img
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        img, _meta = gif_decode(payload)
-        return resize_nearest(img, target_size) if target_size else img
-    raise NotImplementedError(
-        "only PNG, BMP, and GIF decode are available in this "
-        "environment (stdlib-only codecs); JPEG/WebP need codec "
-        "libraries this container does not ship"
-    )
 
 
 def _byte_feature_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -70,8 +42,6 @@ def _byte_feature_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     byte sums come from one np.add.reduceat over the nonempty segment
     starts — no per-byte Python anywhere (int64 upcast before the
     reduction; summing uint8 would wrap at 255)."""
-    import numpy as np
-
     for pdf in it:
         payloads = pdf["payload"]
         n = len(payloads)
@@ -148,18 +118,6 @@ FROM feats GROUP BY source
 """
 
 
-def resize_image(payload: bytes, target_size: tuple[int, int] = (224, 224)):
-    """Decode (PNG) + nearest-neighbor resize + re-encode — a real
-    byte-in/byte-out thumbnailing kernel for the one format this
-    container can decode; other formats raise via decode_image's
-    dispatch. The resampler is exact index math (functions/codecs.py
-    resize_nearest), so results are engine-reproducible — no
-    library-specific interpolation kernels."""
-    from ai_data_pipeline_spark.functions.codecs import png_encode_gray
-
-    return png_encode_gray(decode_image(payload, target_size))
-
-
 FRAME_BYTES = 32  # bytes per pseudo-frame
 FRAME_STRIDE = 4  # keep every 4th frame
 
@@ -173,8 +131,6 @@ def _frame_sample_batches(it):
     as fixed-size frames, keep every FRAME_STRIDE-th frame (the video
     keyframe-sampling access pattern), and reduce each kept frame.
     Vectorized numpy per Arrow batch — no per-byte Python."""
-    import numpy as np
-
     for pdf in it:
         out = {"doc_id": [], "n_bytes": [], "n_frames": [], "n_sampled": [], "sampled_sum": []}
         for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
@@ -194,8 +150,8 @@ def _frame_sample_batches(it):
 def frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal frame sampling: binary payload -> every FRAME_STRIDE-th
     FRAME_BYTES-sized frame is kept and reduced. documents.text bytes
-    stand in for video payloads; real codecs slot into the same
-    mapInPandas stage (decode_image/resize_image stubs above)."""
+    stand in for video payloads; a real decoder slots into the same
+    mapInPandas stage, as in the codec roundtrips below."""
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.encode("text", "UTF-8").alias("payload")
     )
@@ -227,10 +183,8 @@ def _image_tile_batches(it):
     IMG_W×IMG_H uint8 grid (cropped / zero-padded — the letterbox
     convention), reduced to TILE_GRID² per-tile sums. This is the
     pooling/resize access pattern an image pipeline runs after decode,
-    with the decode stubbed (no codecs in this container) and the
+    with stand-in bytes in place of a decoded image and the
     layout math real. Vectorized: one reshape+sum per image."""
-    import numpy as np
-
     n_px = IMG_W * IMG_H
     th, tw = IMG_H // TILE_GRID, IMG_W // TILE_GRID
     for pdf in it:
@@ -519,23 +473,6 @@ FROM t CROSS JOIN i CROSS JOIN b
 """
 
 
-def decode_audio(payload: bytes, sample_rate: int = 16_000):
-    """Decode an audio payload by container dispatch. WAV (mono 16-bit
-    PCM) decodes FOR REAL via the stdlib RIFF parser in
-    functions/codecs.py — see multimodal_wav_roundtrip below, which
-    drives encode→decode→energy features through mapInPandas under an
-    oracle. Compressed formats (MP3/AAC/Opus) still raise: no codec
-    libraries in this container."""
-    from ai_data_pipeline_spark.functions.codecs import wav_decode
-
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        return wav_decode(payload)
-    raise NotImplementedError(
-        "only WAV/PCM decode is available in this environment; "
-        "MP3/AAC need codec libraries this container does not ship"
-    )
-
-
 AUDIO_FRAME = 64  # samples per analysis frame
 
 AUDIO_SCHEMA = (
@@ -548,8 +485,6 @@ def _audio_energy_batches(it):
     """Waveform analysis over opaque payloads: bytes as centered 8-bit
     PCM, per-frame energy = Σ(sample−128)², peak-frame detection —
     the VAD/silence-trim access pattern, vectorized with reduceat."""
-    import numpy as np
-
     for pdf in it:
         out = {
             "doc_id": [], "n_samples": [], "n_frames": [],
@@ -573,7 +508,7 @@ def _audio_energy_batches(it):
 def audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal audio path: binary payload → framed energy profile →
     peak frame. documents.text bytes stand in for PCM; a real decoder
-    (decode_audio stub) slots in front of the same kernel."""
+    (see multimodal_wav_roundtrip) slots in front of the same kernel."""
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.encode("text", "UTF-8").alias("payload")
     )
@@ -635,8 +570,6 @@ def _seg_sig_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     whose zero-padded tiles are constant across documents); bit j is set
     iff segment j's byte sum exceeds the payload mean (exact integer
     cross-product test). One np.add.reduceat per row."""
-    import numpy as np
-
     for pdf in it:
         doc_ids = pdf["doc_id"].to_numpy()
         sigs = np.zeros(len(doc_ids), dtype=np.int64)
@@ -754,8 +687,6 @@ def _frame_energy_batches(it: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFram
     """Per-frame byte-sum energies: one np.add.reduceat per payload
     (the same vectorized surface as the audio kernel); real codecs
     replace the byte-sum with a decoded-luma sum, same shape."""
-    import numpy as np
-
     for pdf in it:
         doc_ids, frames, energies = [], [], []
         for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
@@ -908,10 +839,12 @@ FROM parsed
 
 # --- real-codec roundtrips -------------------------------------------------
 # Deterministic media synthesized from doc_id arithmetic, encoded to a
-# REAL container (PNG via zlib DEFLATE with chunk CRCs; WAV via RIFF),
-# decoded back with the spec-parsing decoders in functions/codecs.py,
-# and feature-extracted — all inside one mapInPandas stage. The oracle
-# recomputes the features from the same closed-form pixel/sample
+# REAL container (PNG via zlib DEFLATE with chunk CRCs; BMP as an
+# indexed-8 DIB with padded bottom-up rows; GIF87a via LZW; WAV via
+# RIFF), decoded back with the spec-parsing decoders in
+# functions/codecs.py, and feature-extracted — all inside one
+# mapInPandas stage, one kernel driven by the codec table below. The
+# oracle recomputes the features from the same closed-form pixel/sample
 # definitions, so any codec defect (filtering, CRC, chunk walk, byte
 # order) surfaces as a value mismatch; the stage additionally asserts
 # decode(encode(x)) == x so corruption fails LOUDLY rather than
@@ -922,59 +855,166 @@ RS_H, RS_W = 8, 12  # nearest-neighbor resize target
 WAV_N = 256  # samples per synthesized clip
 WAV_RATE = 16_000
 
-PNG_RT_SCHEMA = (
-    "doc_id long, width int, height int, px_sum long, px_min int,"
-    " px_max int, rs_sum long"
+# BMP roundtrip: deliberately ODD width so the 4-byte row padding path
+# is exercised (stride 24 for width 23), and a top-row feature so a
+# decoder that forgot the bottom-up flip fails the oracle even though
+# whole-image sums would still match.
+BMP_W, BMP_H = 23, 14
+GIF_W, GIF_H = 21, 13
+
+_IMAGE_SCHEMA = (
+    "doc_id long, width int, height int, px_sum long, px_min int, px_max int"
+)
+PNG_RT_SCHEMA = _IMAGE_SCHEMA + ", rs_sum long"
+BMP_RT_SCHEMA = GIF_RT_SCHEMA = _IMAGE_SCHEMA + ", top_row_sum long"
+WAV_RT_SCHEMA = (
+    "doc_id long, n_samples long, sample_rate int, amp_sum long,"
+    " energy long, s_min int, s_max int"
 )
 
 
-def _png_roundtrip_batches(it):
-    import numpy as np
+class _Codec(NamedTuple):
+    """One roundtrip query: ``synth(doc_id, idx)`` builds the signal
+    from ``n`` sample indices, ``roundtrip(x)`` encodes and decodes it
+    to ``(decoded, meta)``, and ``features(decoded, meta)`` gives the
+    output columns after ``doc_id``."""
 
-    from ai_data_pipeline_spark.functions.codecs import (
-        png_decode,
-        png_encode_gray,
-        resize_nearest,
-    )
+    name: str
+    n: int
+    synth: Callable
+    roundtrip: Callable
+    features: Callable
+    schema: str
 
-    idx = np.arange(RT_W * RT_H, dtype=np.int64)
+
+def _gray_ramp(doc_id: int, idx, a: int, b: int, h: int, w: int):
+    """Row-major pixel i of doc d is (d·a + i·b) mod 256."""
+    return ((doc_id * a + idx * b) % 256).astype(np.uint8).reshape(h, w)
+
+
+def _image_features(img, meta) -> dict:
+    return {
+        "width": meta["width"],
+        "height": meta["height"],
+        "px_sum": int(img.astype(np.int64).sum()),
+        "px_min": int(img.min()),
+        "px_max": int(img.max()),
+    }
+
+
+def _png_features(img, meta) -> dict:
+    rs = codecs.resize_nearest(img, (RS_H, RS_W))
+    return {**_image_features(img, meta), "rs_sum": int(rs.astype(np.int64).sum())}
+
+
+def _top_row_features(img, meta) -> dict:
+    return {
+        **_image_features(img, meta),
+        "top_row_sum": int(img[0].astype(np.int64).sum()),
+    }
+
+
+def _wav_roundtrip(samples):
+    decoded, rate = codecs.wav_decode(codecs.wav_encode_pcm16(samples, rate=WAV_RATE))
+    if rate != WAV_RATE:
+        raise ValueError(f"WAV roundtrip changed the sample rate to {rate}")
+    return decoded, rate
+
+
+def _wav_features(s, rate) -> dict:
+    s64 = s.astype(np.int64)
+    return {
+        "n_samples": len(s),
+        "sample_rate": rate,
+        "amp_sum": int(s64.sum()),
+        "energy": int((s64 * s64).sum()),
+        "s_min": int(s.min()),
+        "s_max": int(s.max()),
+    }
+
+
+_CODECS = {
+    "png": _Codec(
+        "PNG",
+        RT_W * RT_H,
+        partial(_gray_ramp, a=31, b=7, h=RT_H, w=RT_W),
+        lambda img: codecs.png_decode(codecs.png_encode_gray(img)),
+        _png_features,
+        PNG_RT_SCHEMA,
+    ),
+    "bmp": _Codec(
+        "BMP",
+        BMP_W * BMP_H,
+        partial(_gray_ramp, a=13, b=5, h=BMP_H, w=BMP_W),
+        lambda img: codecs.bmp_decode(codecs.bmp_encode_gray(img)),
+        _top_row_features,
+        BMP_RT_SCHEMA,
+    ),
+    "gif": _Codec(
+        "GIF",
+        GIF_W * GIF_H,
+        partial(_gray_ramp, a=29, b=7, h=GIF_H, w=GIF_W),
+        lambda img: codecs.gif_decode(codecs.gif_encode_gray(img)),
+        _top_row_features,
+        GIF_RT_SCHEMA,
+    ),
+    "wav": _Codec(
+        "WAV",
+        WAV_N,
+        lambda doc_id, idx: (((doc_id * 7 + idx * 11) % 4096) - 2048).astype(np.int16),
+        _wav_roundtrip,
+        _wav_features,
+        WAV_RT_SCHEMA,
+    ),
+}
+
+
+def _roundtrip_batches(
+    it: Iterator[pd.DataFrame], codec: _Codec
+) -> Iterator[pd.DataFrame]:
+    """synth → encode → decode → assert identity → features, per doc_id.
+    Emitted stats come only from the decoded signal and its parsed
+    header, so the oracle checks the codec, not the generator."""
+    idx = np.arange(codec.n, dtype=np.int64)
+    columns = [c.split()[0] for c in codec.schema.split(",")]
     for pdf in it:
-        out = {
-            "doc_id": [], "width": [], "height": [], "px_sum": [],
-            "px_min": [], "px_max": [], "rs_sum": [],
-        }
-        for doc_id in pdf["doc_id"]:
-            doc_id = int(doc_id)
-            img = ((doc_id * 31 + idx * 7) % 256).astype(np.uint8).reshape(
-                RT_H, RT_W
-            )
-            decoded, meta = png_decode(png_encode_gray(img))
-            if not np.array_equal(decoded, img):
-                raise ValueError(f"PNG roundtrip broke identity for doc {doc_id}")
-            rs = resize_nearest(decoded, (RS_H, RS_W))
-            out["doc_id"].append(doc_id)
-            out["width"].append(meta["width"])
-            out["height"].append(meta["height"])
-            out["px_sum"].append(int(decoded.astype(np.int64).sum()))
-            out["px_min"].append(int(decoded.min()))
-            out["px_max"].append(int(decoded.max()))
-            out["rs_sum"].append(int(rs.astype(np.int64).sum()))
-        yield pd.DataFrame(out)
+        rows = []
+        for doc_id in pdf["doc_id"].tolist():
+            x = codec.synth(doc_id, idx)
+            decoded, meta = codec.roundtrip(x)
+            if not np.array_equal(decoded, x):
+                raise ValueError(
+                    f"{codec.name} roundtrip broke identity for doc {doc_id}"
+                )
+            rows.append({"doc_id": doc_id, **codec.features(decoded, meta)})
+        yield pd.DataFrame(rows, columns=columns)
+
+
+def _roundtrip(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One Arrow-batched Python stage over a doc_id-only scan, spread
+    first for every codec: the kernel costs 0.5-0.7 ms of CPU per doc
+    for GIF, ~0.12 ms for PNG and ~0.05 ms for BMP and WAV (one 4-vCPU
+    VM), so at sf1 (50k docs) a single-task scan would hold ~30 s of GIF
+    or ~6 s of PNG on one core. The round-robin exchange moves doc_ids
+    only, never media, and spread no-ops at cluster scale where the
+    scan already has many splits.
+
+    Scale: the media path at 100 TB is exactly this shape — binary in
+    object storage, decode + features in one Python stage, nothing but
+    fixed-width features ever shuffled."""
+    codec = _CODECS[name]
+    kernel = partial(_roundtrip_batches, codec=codec)
+    kernel.__name__ = f"_{name}_roundtrip_batches"  # the plan names the codec
+    d = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
+    return d.mapInPandas(kernel, schema=codec.schema)
 
 
 def png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real-PNG decode path: synthesize per-doc grayscale pixels, write
-    a spec-complete PNG (zlib + CRCs), parse it back (header, chunk
-    walk, inflate, unfilter), assert bit-identity, then feature-extract
-    the DECODED pixels (+ a nearest-neighbor thumbnail). Emitted stats
-    come only from parsed output — width/height from IHDR, sums from
-    decoded pixels — so the oracle checks the codec, not the generator.
-
-    Scale: the media path at 100 TB is exactly this shape — binary in
-    object storage, decode + features in one Arrow-batched Python
-    stage, nothing but fixed-width features ever shuffled."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(_png_roundtrip_batches, schema=PNG_RT_SCHEMA)
+    """Real-PNG decode path: a spec-complete PNG (zlib + CRCs) parsed
+    back (header, chunk walk, inflate, unfilter); width/height come
+    from IHDR, sums from decoded pixels, plus a nearest-neighbor
+    thumbnail sum."""
+    return _roundtrip(spark, sf_dir, "png")
 
 
 PNG_ROUNDTRIP_ORACLE = f"""
@@ -1002,203 +1042,57 @@ FROM base b JOIN rs USING (doc_id)
 """
 
 
-# BMP roundtrip: deliberately ODD width so the 4-byte row padding path
-# is exercised (stride 24 for width 23), and a top-row feature so a
-# decoder that forgot the bottom-up flip fails the oracle even though
-# whole-image sums would still match.
-BMP_W, BMP_H = 23, 14
-
-BMP_RT_SCHEMA = (
-    "doc_id long, width int, height int, px_sum long, px_min int,"
-    " px_max int, top_row_sum long"
+def _top_row_oracle(w: int, h: int, a: int, b: int) -> str:
+    """DuckDB mirror of the BMP/GIF roundtrips: a w×h ``_gray_ramp``
+    with multipliers a and b, plus the top-row feature."""
+    return f"""
+WITH px AS (
+  SELECT doc_id, i, (doc_id * {a} + i * {b}) % 256 AS p
+  FROM documents, (SELECT unnest(range(0, {w * h})) AS i)
 )
-
-
-def _bmp_roundtrip_batches(it):
-    import numpy as np
-
-    from ai_data_pipeline_spark.functions.codecs import (
-        bmp_decode,
-        bmp_encode_gray,
-    )
-
-    idx = np.arange(BMP_W * BMP_H, dtype=np.int64)
-    for pdf in it:
-        out = {
-            "doc_id": [], "width": [], "height": [], "px_sum": [],
-            "px_min": [], "px_max": [], "top_row_sum": [],
-        }
-        for doc_id in pdf["doc_id"]:
-            doc_id = int(doc_id)
-            img = ((doc_id * 13 + idx * 5) % 256).astype(np.uint8).reshape(
-                BMP_H, BMP_W
-            )
-            decoded, meta = bmp_decode(bmp_encode_gray(img))
-            if not np.array_equal(decoded, img):
-                raise ValueError(f"BMP roundtrip broke identity for doc {doc_id}")
-            d64 = decoded.astype(np.int64)
-            out["doc_id"].append(doc_id)
-            out["width"].append(meta["width"])
-            out["height"].append(meta["height"])
-            out["px_sum"].append(int(d64.sum()))
-            out["px_min"].append(int(decoded.min()))
-            out["px_max"].append(int(decoded.max()))
-            out["top_row_sum"].append(int(d64[0].sum()))
-        yield pd.DataFrame(out)
+SELECT doc_id, CAST({w} AS INT) AS width, CAST({h} AS INT) AS height,
+       CAST(sum(p) AS BIGINT) AS px_sum,
+       CAST(min(p) AS INT) AS px_min, CAST(max(p) AS INT) AS px_max,
+       CAST(sum(CASE WHEN i < {w} THEN p ELSE 0 END) AS BIGINT)
+         AS top_row_sum
+FROM px GROUP BY doc_id
+"""
 
 
 def bmp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real-BMP decode path: synthesize per-doc grayscale pixels, write
-    an indexed-8 BI_RGB DIB (identity palette, bottom-up padded rows),
-    parse it back (header validation, palette check, flip, de-pad),
-    assert bit-identity, then feature-extract the DECODED pixels. The
-    top-row sum pins scanline ORDER — a decoder that skipped the
-    bottom-up flip reproduces every whole-image stat but fails it.
-
-    Same 100 TB shape as multimodal_png_roundtrip: binary payloads
-    decode in one Arrow-batched Python stage; only fixed-width
-    features shuffle."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(_bmp_roundtrip_batches, schema=BMP_RT_SCHEMA)
+    """Real-BMP decode path: an indexed-8 BI_RGB DIB (identity palette,
+    bottom-up padded rows) parsed back (header validation, palette
+    check, flip, de-pad). The top-row sum pins scanline ORDER — a
+    decoder that skipped the bottom-up flip reproduces every
+    whole-image stat but fails it."""
+    return _roundtrip(spark, sf_dir, "bmp")
 
 
-BMP_ROUNDTRIP_ORACLE = f"""
-WITH px AS (
-  SELECT doc_id, i, (doc_id * 13 + i * 5) % 256 AS p
-  FROM documents, (SELECT unnest(range(0, {BMP_W * BMP_H})) AS i)
-)
-SELECT doc_id, CAST({BMP_W} AS INT) AS width, CAST({BMP_H} AS INT) AS height,
-       CAST(sum(p) AS BIGINT) AS px_sum,
-       CAST(min(p) AS INT) AS px_min, CAST(max(p) AS INT) AS px_max,
-       CAST(sum(CASE WHEN i < {BMP_W} THEN p ELSE 0 END) AS BIGINT)
-         AS top_row_sum
-FROM px GROUP BY doc_id
-"""
-
-
-GIF_W, GIF_H = 21, 13
-GIF_RT_SCHEMA = (
-    "doc_id long, width int, height int, px_sum long, px_min int,"
-    " px_max int, top_row_sum long"
-)
-
-
-def _gif_roundtrip_batches(it):
-    import numpy as np
-
-    from ai_data_pipeline_spark.functions.codecs import (
-        gif_decode,
-        gif_encode_gray,
-    )
-
-    idx = np.arange(GIF_W * GIF_H, dtype=np.int64)
-    for pdf in it:
-        out = {
-            "doc_id": [], "width": [], "height": [], "px_sum": [],
-            "px_min": [], "px_max": [], "top_row_sum": [],
-        }
-        for doc_id in pdf["doc_id"]:
-            doc_id = int(doc_id)
-            img = ((doc_id * 29 + idx * 7) % 256).astype(np.uint8).reshape(
-                GIF_H, GIF_W
-            )
-            decoded, meta = gif_decode(gif_encode_gray(img))
-            if not np.array_equal(decoded, img):
-                raise ValueError(f"GIF roundtrip broke identity for doc {doc_id}")
-            d64 = decoded.astype(np.int64)
-            out["doc_id"].append(doc_id)
-            out["width"].append(meta["width"])
-            out["height"].append(meta["height"])
-            out["px_sum"].append(int(d64.sum()))
-            out["px_min"].append(int(decoded.min()))
-            out["px_max"].append(int(decoded.max()))
-            out["top_row_sum"].append(int(d64[0].sum()))
-        yield pd.DataFrame(out)
+BMP_ROUNDTRIP_ORACLE = _top_row_oracle(BMP_W, BMP_H, 13, 5)
 
 
 def gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real-GIF decode path: synthesize per-doc grayscale pixels,
-    LZW-compress them into a GIF87a (identity palette, variable-width
-    codes, sub-block framing), parse it back (signature/palette/
-    framing validation, full LZW decode incl. the self-referential
-    code case), assert bit-identity, then feature-extract the DECODED
-    pixels. Unlike PNG/BMP, the payload here went through a REAL
-    entropy coder round-trip — a single corrupted code widens or
-    shifts every later code, so the identity assert covers the whole
-    bit stream. top_row_sum pins scanline order (GIF is top-down —
-    the opposite of BMP's bottom-up, so a decoder confusing the two
-    conventions fails exactly one of the twin queries).
-
-    Same 100 TB shape as the PNG/BMP twins: one Arrow-batched Python
-    stage; only fixed-width features shuffle. Unlike those twins, the
-    kernel is genuinely sequential per image (LZW), so the CPU-bound
-    stage is repartitioned first — the profiler discipline for
-    single-row-group test parquet that would otherwise scan (and
-    LZW-encode 50k images) in one task; no-ops at cluster scale where
-    the scan already has thousands of splits."""
-    d = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
-    return d.mapInPandas(_gif_roundtrip_batches, schema=GIF_RT_SCHEMA)
+    """Real-GIF decode path: pixels LZW-compressed into a GIF87a
+    (identity palette, variable-width codes, sub-block framing) and
+    parsed back (signature/palette/framing validation, full LZW decode
+    incl. the self-referential code case). Unlike PNG/BMP, the payload
+    went through a REAL entropy coder — a single corrupted code shifts
+    every later code, so the identity assert covers the whole bit
+    stream. top_row_sum pins scanline order (GIF is top-down, the
+    opposite of BMP, so a decoder confusing the two conventions fails
+    exactly one of the twin queries)."""
+    return _roundtrip(spark, sf_dir, "gif")
 
 
-GIF_ROUNDTRIP_ORACLE = f"""
-WITH px AS (
-  SELECT doc_id, i, (doc_id * 29 + i * 7) % 256 AS p
-  FROM documents, (SELECT unnest(range(0, {GIF_W * GIF_H})) AS i)
-)
-SELECT doc_id, CAST({GIF_W} AS INT) AS width, CAST({GIF_H} AS INT) AS height,
-       CAST(sum(p) AS BIGINT) AS px_sum,
-       CAST(min(p) AS INT) AS px_min, CAST(max(p) AS INT) AS px_max,
-       CAST(sum(CASE WHEN i < {GIF_W} THEN p ELSE 0 END) AS BIGINT)
-         AS top_row_sum
-FROM px GROUP BY doc_id
-"""
-
-
-WAV_RT_SCHEMA = (
-    "doc_id long, n_samples long, sample_rate int, amp_sum long,"
-    " energy long, s_min int, s_max int"
-)
-
-
-def _wav_roundtrip_batches(it):
-    import numpy as np
-
-    from ai_data_pipeline_spark.functions.codecs import (
-        wav_decode,
-        wav_encode_pcm16,
-    )
-
-    idx = np.arange(WAV_N, dtype=np.int64)
-    for pdf in it:
-        out = {
-            "doc_id": [], "n_samples": [], "sample_rate": [], "amp_sum": [],
-            "energy": [], "s_min": [], "s_max": [],
-        }
-        for doc_id in pdf["doc_id"]:
-            doc_id = int(doc_id)
-            s = (((doc_id * 7 + idx * 11) % 4096) - 2048).astype(np.int16)
-            decoded, rate = wav_decode(wav_encode_pcm16(s, rate=WAV_RATE))
-            if rate != WAV_RATE or not np.array_equal(decoded, s):
-                raise ValueError(f"WAV roundtrip broke identity for doc {doc_id}")
-            d64 = decoded.astype(np.int64)
-            out["doc_id"].append(doc_id)
-            out["n_samples"].append(len(decoded))
-            out["sample_rate"].append(rate)
-            out["amp_sum"].append(int(d64.sum()))
-            out["energy"].append(int((d64 * d64).sum()))
-            out["s_min"].append(int(decoded.min()))
-            out["s_max"].append(int(decoded.max()))
-        yield pd.DataFrame(out)
+GIF_ROUNDTRIP_ORACLE = _top_row_oracle(GIF_W, GIF_H, 29, 7)
 
 
 def wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real-WAV decode path: synthesize per-doc 16-bit PCM, wrap in a
-    RIFF container, parse it back (chunk walk, fmt validation, LE
-    samples), assert bit-identity, then compute the energy features a
-    speech-curation pipeline runs (sum/energy/range) from the DECODED
-    samples only."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(_wav_roundtrip_batches, schema=WAV_RT_SCHEMA)
+    """Real-WAV decode path: 16-bit PCM in a RIFF container parsed back
+    (chunk walk, fmt validation, LE samples); the energy features a
+    speech-curation pipeline runs (sum/energy/range) come from the
+    DECODED samples only."""
+    return _roundtrip(spark, sf_dir, "wav")
 
 
 WAV_ROUNDTRIP_ORACLE = f"""

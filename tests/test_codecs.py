@@ -368,3 +368,44 @@ def test_gif_decode_rejects_corruption():
         assert not np.array_equal(back, img)
     except ValueError:
         pass
+
+
+# --- the one roundtrip kernel of operators/multimodal.py, without Spark ----
+
+import pandas as pd  # noqa: E402
+
+from ai_data_pipeline_spark.operators.multimodal import (  # noqa: E402
+    _CODECS,
+    _roundtrip_batches,
+)
+
+
+def test_roundtrip_kernel_raises_on_broken_identity():
+    """A codec whose decode flips one sample must fail the batch, naming
+    the codec and the doc, instead of emitting plausible features."""
+
+    def flip_one_sample(x):
+        decoded, meta = _CODECS["wav"].roundtrip(x)
+        decoded = decoded.copy()
+        decoded[3] ^= 1
+        return decoded, meta
+
+    broken = _CODECS["wav"]._replace(roundtrip=flip_one_sample)
+    batch = pd.DataFrame({"doc_id": [42, 7]})
+    with pytest.raises(ValueError, match="WAV roundtrip broke identity for doc 42"):
+        list(_roundtrip_batches(iter([batch]), broken))
+
+
+def test_roundtrip_kernel_empty_batch_yields_declared_columns():
+    image = ["doc_id", "width", "height", "px_sum", "px_min", "px_max"]
+    expected = {
+        "png": image + ["rs_sum"],
+        "bmp": image + ["top_row_sum"],
+        "gif": image + ["top_row_sum"],
+        "wav": ["doc_id", "n_samples", "sample_rate", "amp_sum", "energy", "s_min", "s_max"],
+    }
+    assert set(_CODECS) == set(expected)
+    empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64")})
+    for name, codec in _CODECS.items():
+        (out,) = _roundtrip_batches(iter([empty]), codec)
+        assert list(out.columns) == expected[name] and len(out) == 0

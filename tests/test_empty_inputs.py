@@ -109,6 +109,7 @@ def test_profiler_emits_all_columns_on_empty_table(spark, empty_sf_dir):
         # fixture writer handles zero-row halves, unlike the events
         # three-batch source)
         ("multimodal", "multimodal_png_roundtrip"),
+        ("multimodal", "multimodal_bmp_roundtrip"),
         ("multimodal", "multimodal_wav_roundtrip"),
         ("clustering", "dedup_clusters_logstar"),
         ("curation", "corpus_priority_sample"),

@@ -1169,20 +1169,24 @@ def test_emb_drift_monitor_single_keyed_aggregate(spark):
 
 def test_codec_roundtrips_are_single_python_stage(spark):
     """The codec roundtrips must be ONE mapInPandas over a doc_id-only
-    scan — no shuffle, no join: the decode/feature stage is the only
-    work, and only fixed-width features leave it."""
+    scan — no join, no keyed shuffle: the decode/feature stage is the
+    only work, and only fixed-width features leave it. The one exchange
+    allowed is spread's round-robin, which moves doc_ids only."""
     from ai_data_pipeline_spark.operators.multimodal import (
         bmp_roundtrip,
+        gif_roundtrip,
         png_roundtrip,
         wav_roundtrip,
     )
 
-    for q in (png_roundtrip, bmp_roundtrip, wav_roundtrip):
+    for q in (png_roundtrip, bmp_roundtrip, gif_roundtrip, wav_roundtrip):
         df = q(spark, SF_DIR)
         plan = _plan(df)
         assert plan.count("MapInPandas") == 1
-        assert "Exchange" not in plan
         assert "Join" not in plan
+        assert "hashpartitioning" not in plan
+        exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+        assert all("RoundRobinPartitioning" in ln for ln in exchanges), exchanges
         # column pruning: the scan reads doc_id only (text never moves)
         assert "ReadSchema: struct<doc_id:bigint>" in _formatted(df)
 

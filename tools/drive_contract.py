@@ -3,7 +3,7 @@ report per-query status plus a final FAILURES count.
 
     python tools/drive_contract.py                          # all, sf0.01
     python tools/drive_contract.py q3_top_orders ann_ivf    # only these
-    DRIVE_SF_DIR=/root/testdata/sf0.1 python tools/drive_contract.py
+    SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python tools/drive_contract.py
 
 With no names it also runs ``entry()``; with names it runs only those.
 
@@ -42,7 +42,7 @@ from ai_data_pipeline_spark.catalog import TABLES  # noqa: E402
 from ai_data_pipeline_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entry_mod  # noqa: E402
 
-SF = os.environ.get("DRIVE_SF_DIR", "/root/testdata/sf0.01")
+SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 
 def norm(v):
