@@ -27,6 +27,21 @@ Scale design:
   groups are near-dup clusters. All bit arithmetic via portable
   hex-digit parsing (instr on a hex alphabet).
 
+The six shingle-pair queries share one set of builders:
+- ``_capped_pairs``: (doc_a, doc_b, inter, sz_a, sz_b) over the
+  df-capped shingle universe — dedup_ngram_jaccard, dedup_containment,
+  and (through ``_truth_pairs``, its Jaccard >= 0.5 subset) the truth
+  side of dedup_lsh_recall and dedup_lsh_band_tuning.
+- ``_banded_candidates``: the one banding of a signature relation —
+  called by all four MinHash queries.
+- ``_verified_candidates``: banded candidates with their digest-join
+  intersection, sizes and signature slots — dedup_minhash_lsh and
+  dedup_minhash_estimate.
+- ``_sized_pairs``: the one pair ⋈ per-doc-sizes join under both.
+The oracles share one ``sig`` column list, one ``bands`` union and the
+CTE blocks whose text is the same in two oracles (``_MINHASH_CANDS_DUCK``,
+``_CAPPED_PAIRS_DUCK``, ``_AUDIT_CANDS_DUCK``).
+
 Everything is built-in expressions (no UDFs); every operator has a DuckDB
 oracle with the same integer-exact decisions.
 """
@@ -47,7 +62,8 @@ from ai_data_pipeline_spark.registry import QueryDef
 from ai_data_pipeline_spark.session import session_scoped_cache
 
 MINHASH_K = 12
-MINHASH_BAND_R = 3  # rows per band -> 4 bands
+MINHASH_BAND_R = 3  # rows per band
+MINHASH_BANDS = MINHASH_K // MINHASH_BAND_R  # 4 bands
 JACCARD_NUM, JACCARD_DEN = 1, 2  # candidate-verify threshold 0.5
 NGRAM_NUM, NGRAM_DEN = 3, 10  # ngram-jaccard report threshold 0.3
 # Document-frequency cap for the standalone n-gram Jaccard self-join: a
@@ -118,29 +134,48 @@ def _df_capped_shingles(sh: DataFrame, cap: int) -> DataFrame:
     return sh.join(informative, "shingle", "left_semi")
 
 
-def _capped_pair_relations(capped: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(pair_inter, sizes) over a df-capped shingle relation — the
-    skew-bounded exhaustive pair-intersection sub-plan shared by the
-    Jaccard, containment, LSH-recall, and band-tuning queries (review
-    r13: previously four verbatim copies; a change to the cap
-    semantics must hit every consumer at once). No broadcast hints:
-    both relations have corpus cardinality — AQE picks broadcast at
-    test scale, shuffle join at 100 TB.
+def _sized_pairs(
+    pairs: DataFrame, per_doc: DataFrame, slots: bool = False
+) -> DataFrame:
+    """``pairs`` (doc_a, doc_b, …) joined on both sides to a per-doc
+    relation (doc_id, sz[, m0..m{K-1}]): doc_id and sz arrive as
+    doc_a/sz_a and doc_b/sz_b and, with ``slots``, signature slot m{j}
+    as a{j} / b{j} — the one pair ⋈ sizes join of the shingle-pair
+    queries. No broadcast hints: the per-doc relation has corpus
+    cardinality, which does NOT fit a broadcast at 100 TB; AQE picks
+    broadcast at test scale and a shuffle join at cluster scale."""
 
-    Round-14 (guide §2.4, measured TWICE): everything here is
-    deliberately LAZY. Materializing `capped` was TRIED and REVERTED —
-    a wide string relation loses to codegen-fused recompute (the r9
-    minhash-digest lesson: lsh_recall measured 2.39 s checkpointed vs
-    2.01 s inline). An eager checkpoint of `sizes` was ALSO tried and
-    then REVERTED on re-adjudication with an ALTERNATING A/B (the only
-    protocol that survives this host's throttle drift): containment
-    3.66 s lazy vs 5.08 s checkpointed, band_tuning 2.30 vs 3.96,
-    lsh_recall 3.10 vs 3.46 — the duplicate consumers sit ABOVE the
-    doc_id exchange, which AQE exchange reuse already dedupes in the
-    executed plan, so the checkpoint only added a blocking job."""
+    def side(s: str) -> DataFrame:
+        slot_cols = [F.col(f"m{j}").alias(f"{s}{j}") for j in range(MINHASH_K)]
+        return per_doc.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("sz").alias(f"sz_{s}"),
+            *(slot_cols if slots else []),
+        )
+
+    return pairs.join(side("a"), "doc_a").join(side("b"), "doc_b")
+
+
+def _capped_pairs(sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, inter, sz_a, sz_b) over the NGRAM_DF_CAP-capped
+    universe of a (doc_id, shingle) relation: the skew-bounded
+    exhaustive pair intersections (no shingle adds more than C(cap, 2)
+    rows to the self-join) with both sides' capped set sizes. Shared by
+    the Jaccard, containment, LSH-recall and band-tuning queries, so a
+    change to the cap semantics hits every consumer at once.
+
+    Everything here is deliberately lazy; alternating A/B runs measured
+    both eager variants as losses. Checkpointing the capped shingles
+    loses to codegen-fused recompute of a wide string relation
+    (lsh_recall 2.39 s checkpointed vs 2.01 s inline). Checkpointing the
+    sizes only adds a blocking job (containment 3.66 s lazy vs 5.08 s,
+    band_tuning 2.30 vs 3.96, lsh_recall 3.10 vs 3.46): their two
+    consumers sit above the doc_id exchange, which AQE exchange reuse
+    already dedupes in the executed plan."""
+    capped = _df_capped_shingles(sh, NGRAM_DF_CAP)
     sizes = capped.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a, b = capped.alias("a"), capped.alias("b")
-    pair_inter = (
+    inter = (
         a.join(
             b,
             (F.col("a.shingle") == F.col("b.shingle"))
@@ -149,15 +184,16 @@ def _capped_pair_relations(capped: DataFrame) -> tuple[DataFrame, DataFrame]:
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    return pair_inter, sizes
+    return _sized_pairs(inter, sizes)
 
 
-def _size_sides(sizes: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """The (doc_a, sz_a) / (doc_b, sz_b) join sides of the size
-    relation."""
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    return sa, sb
+def _truth_pairs(sh: DataFrame) -> DataFrame:
+    """The exhaustive truth set of the LSH audits: the capped pairs at
+    the verify threshold (capped Jaccard >= JACCARD_NUM/JACCARD_DEN)."""
+    return _capped_pairs(sh).filter(
+        JACCARD_DEN * F.col("inter")
+        >= JACCARD_NUM * (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
+    )
 
 
 def _hashed_digests(sh: DataFrame) -> DataFrame:
@@ -187,47 +223,35 @@ def _sig_relation(hashed: DataFrame) -> DataFrame:
     )
 
 
-def _band_relation(sig: DataFrame) -> DataFrame:
-    """(doc_id, band, bhash): one row per (doc, band) with the band's
-    bucket hash over its MINHASH_BAND_R signature slots."""
-    n_bands = MINHASH_K // MINHASH_BAND_R
-    return sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.col(f"m{b * MINHASH_BAND_R + r}")
-                                    for r in range(MINHASH_BAND_R)
-                                ],
-                            )
-                        ).alias("bhash"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.bhash")
+def _band_slots(b: int) -> list[str]:
+    """The MINHASH_BAND_R signature slots that band ``b`` hashes."""
+    return [f"m{b * MINHASH_BAND_R + r}" for r in range(MINHASH_BAND_R)]
 
 
-def _candidates_from_bands(bands: DataFrame) -> DataFrame:
-    """Distinct candidate pairs (doc_a < doc_b) from shared band
-    buckets — an equi-join on (band, bhash), never a cross join.
+def _banded_candidates(sig: DataFrame) -> DataFrame:
+    """Distinct candidate pairs (doc_a < doc_b) sharing a band bucket of
+    a signature relation: one (doc_id, band, bhash) row per band, bhash
+    the md5 of the band's MINHASH_BAND_R slots, then an equi-join on
+    (band, bhash) — never a cross join. The one banding construction:
+    the LSH query and the estimate audit reach it through
+    ``_verified_candidates``, the recall and band-tuning audits call it
+    directly.
 
-    Round-14: an eager checkpoint of the band relation (both self-join
-    sides) was tried — a same-window A/B first read it as a win
-    (minhash_lsh 1.35 → 1.08 s) — and then REVERTED on re-adjudication
-    with an ALTERNATING A/B: minhash_lsh 1.06 lazy vs 1.03
-    checkpointed (a wash), band_tuning 2.30 vs 3.96 and lsh_recall
-    3.10 vs 3.46 (losses). The signature subtree below both sides
-    hangs off the doc_id signature exchange, which AQE exchange reuse
-    dedupes in the executed self-join plan, so the checkpoint's
-    blocking job bought nothing the engine wasn't already doing."""
+    An eager checkpoint of the band relation (both self-join sides)
+    measured a wash on minhash_lsh (1.06 s lazy vs 1.03 s) and losses on
+    band_tuning (2.30 vs 3.96) and lsh_recall (3.10 vs 3.46) in
+    alternating A/B runs: the signature subtree below both sides hangs
+    off one doc_id exchange, which AQE exchange reuse already dedupes."""
+    keys = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.md5(F.concat_ws("|", *_band_slots(b))).alias("bhash"),
+        )
+        for b in range(MINHASH_BANDS)
+    ]
+    bands = sig.select("doc_id", F.explode(F.array(*keys)).alias("bk")).select(
+        "doc_id", "bk.band", "bk.bhash"
+    )
     ba, bb = bands.alias("a"), bands.alias("b")
     return (
         ba.join(
@@ -241,15 +265,93 @@ def _candidates_from_bands(bands: DataFrame) -> DataFrame:
     )
 
 
-def _banded_candidates(sh: DataFrame) -> DataFrame:
-    """Distinct banded candidate pairs (doc_a < doc_b) from the raw
-    shingle relation — THE dedup_minhash_lsh signature/banding
-    construction, shared by the headline LSH query, the estimate
-    audit, the recall audit, and the band-tuning audit (ADVICE r13:
-    previously the LSH/estimate queries carried verbatim copies; a
-    banding change now hits every consumer at once). Signatures are
-    fixed-width; shingle sets never ride the pair join."""
-    return _candidates_from_bands(_band_relation(_sig_relation(_hashed_digests(sh))))
+def _verified_candidates(sh: DataFrame) -> DataFrame:
+    """The banded candidate pairs of a (doc_id, shingle) relation with
+    their exact intersection and both sides' sizes and signature slots:
+    (doc_a, doc_b, inter, sz_a, a0..a{K-1}, sz_b, b0..b{K-1}). Catalyst
+    prunes the slots for a consumer that does not read them.
+
+    The intersection is a candidates ⋈ digest join: each side of the
+    count joins the (doc_id, dg) relation, dg being the full 256-bit
+    double-md5 ``hh`` the signatures come from, so the wire carries
+    bounded digests, never shingle sets — linear in total shingles at
+    100 TB. Counts on dg equal counts on the shingles, as the oracles'
+    shingle-equality join has them, unless two distinct shingles
+    collide on BOTH independent md5s (probability ~n²/2²⁵⁷). The inner
+    join drops zero-intersection pairs, as the oracles' inter CTE does."""
+    hashed = _hashed_digests(sh)
+    # sig feeds the bands AND the size/slot join sides — cache the
+    # fixed-width relation, not the shingles
+    sig = _sig_relation(hashed).cache()
+    shd = hashed.select("doc_id", F.col("hh").alias("dg"))
+    da = shd.select(F.col("doc_id").alias("doc_a"), "dg")
+    db = shd.select(F.col("doc_id").alias("doc_b"), "dg")
+    inter = (
+        _banded_candidates(sig)
+        .join(da, "doc_a")
+        .join(db, ["doc_b", "dg"])
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    return _sized_pairs(inter, sig, slots=True)
+
+
+# The shared oracle text. One sig column list and one bands union for
+# the four MinHash oracles; then the CTE blocks that two oracles spell
+# the same. Each block opens at a CTE name and ends inside that CTE's
+# parentheses, so the caller closes it with "), ".
+_SIG_COLS_DUCK = ", ".join(
+    f"min(substr(hh, {1 + 5 * j}, 5)) AS m{j}" for j in range(MINHASH_K)
+)
+_BAND_ROWS_DUCK = " UNION ALL ".join(
+    "SELECT doc_id, {} AS band, md5({}) AS bhash FROM sig".format(
+        b, " || '|' || ".join(_band_slots(b))
+    )
+    for b in range(MINHASH_BANDS)
+)
+# bands … cands over a `sig` CTE: every MinHash oracle
+_CANDS_DUCK = f"""bands AS (
+  {_BAND_ROWS_DUCK}
+), cands AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM bands a JOIN bands b
+    ON a.band = b.band AND a.bhash = b.bhash AND a.doc_id < b.doc_id
+"""
+# sh … cands: the LSH and estimate oracles
+_MINHASH_CANDS_DUCK = f"""sh AS (
+  SELECT doc_id, unnest({SHINGLES_DUCK}) AS shingle FROM {SHINGLES_DUCK_FROM}
+), shh AS (
+  SELECT doc_id, shingle,
+         md5('0|' || shingle) || md5('1|' || shingle) AS hh
+  FROM sh
+), sig AS (
+  SELECT doc_id, {_SIG_COLS_DUCK}, count(*) AS sz FROM shh GROUP BY doc_id
+), {_CANDS_DUCK}"""
+# sh0 … pair_inter: the capped exhaustive pairs of the recall and
+# band-tuning oracles
+_CAPPED_PAIRS_DUCK = f"""sh0 AS (
+  SELECT doc_id, unnest({SHINGLES_DUCK}) AS shingle FROM {SHINGLES_DUCK_FROM}
+), capped AS (
+  SELECT doc_id, shingle FROM sh0
+  WHERE shingle IN (
+    SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) <= {NGRAM_DF_CAP}
+  )
+), sizes AS (
+  SELECT doc_id, count(*) AS sz FROM capped GROUP BY doc_id
+), pair_inter AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
+  FROM capped a JOIN capped b
+    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+"""
+# shh … cands: the banded candidates of the recall and band-tuning
+# oracles (sig without sz, over sh0)
+_AUDIT_CANDS_DUCK = f"""shh AS (
+  SELECT doc_id, md5('0|' || shingle) || md5('1|' || shingle) AS hh
+  FROM sh0
+), sig AS (
+  SELECT doc_id, {_SIG_COLS_DUCK} FROM shh GROUP BY doc_id
+), {_CANDS_DUCK}"""
 
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -261,16 +363,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shingle can contribute more than C(NGRAM_DF_CAP, 2) rows to the
     self-join — the plan is skew-bounded at any corpus size. The
     oracle mirrors the same capped definition."""
-    sh = _df_capped_shingles(_doc_shingles(spark, sf_dir), NGRAM_DF_CAP)
-    inter, sizes = _capped_pair_relations(sh)
-    sa, sb = _size_sides(sizes)
-    # No broadcast hints: `sizes` has corpus cardinality (one row per doc),
-    # which does NOT fit in a broadcast at 100 TB. Let AQE choose — it
-    # picks broadcast at test scale and falls back to shuffle join at
-    # cluster scale, which is the correct plan in both regimes.
     out = (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _capped_pairs(_doc_shingles(spark, sf_dir))
         .withColumn("un", F.col("sz_a") + F.col("sz_b") - F.col("inter"))
         .filter(NGRAM_DEN * F.col("inter") >= NGRAM_NUM * F.col("un"))
     )
@@ -312,45 +406,12 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the signature relation carries ONLY fixed-width columns
     (12 minhash slots + a count) — never the shingle sets themselves, so
-    no shuffle in this plan is wider than O(docs × k). Candidate
-    verification is a candidates⋈shingle-digest join: each side of the
-    intersection count joins the (doc_id, 256-bit digest) relation, so
-    the wire carries bounded digests, not text — the same discipline as
-    the digest-keyed exact dedup, and linear in total shingles at
-    100 TB. (The digest is the full 256-bit double-md5 `hh` already
-    computed for the signatures; intersection counts on it equal counts
-    on the shingles themselves because the oracle's shingle-equality
-    join agrees with it — two distinct shingles colliding on BOTH
-    independent md5s has probability ~n²/2²⁵⁷, and the join is no wider
-    per row than the 128-bit prefix previously used plus 32 bytes.)"""
-    sh = _doc_shingles(spark, sf_dir)
-    hashed = _hashed_digests(sh)
-    # sig feeds both the band construction and the size join sides —
-    # cache the fixed-width relation, not the shingles
-    sig = _sig_relation(hashed).cache()
-    cands = _candidates_from_bands(_band_relation(sig))
-    # verify candidates with exact jaccard via a digest join: intersect
-    # |A ∩ B| by joining each candidate pair against the (doc_id, digest)
-    # relation on both sides — digests only on the wire, never sets.
-    # The join key is the FULL 256-bit hh (not a 128-bit prefix): same
-    # shuffle count, 32 extra bytes per row, and the md5-collision
-    # asterisk on "exact Jaccard" drops to double-collision odds.
-    shd = hashed.select("doc_id", F.col("hh").alias("dg"))
-    da = shd.select(F.col("doc_id").alias("doc_a"), "dg")
-    db = shd.select(F.col("doc_id").alias("doc_b"), "dg")
-    inter = (
-        cands.join(da, "doc_a")
-        .join(db, ["doc_b", "dg"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    # no broadcast hints: sig/inter have corpus cardinality — AQE picks
-    # broadcast locally, shuffle join at 100 TB
+    no shuffle in this plan is wider than O(docs × k). Candidates are
+    verified by ``_verified_candidates``' digest join: bounded digests
+    on the wire, not text — the same discipline as the digest-keyed
+    exact dedup, and linear in total shingles at 100 TB."""
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _verified_candidates(_doc_shingles(spark, sf_dir))
         .withColumn("un", F.col("sz_a") + F.col("sz_b") - F.col("inter"))
         .filter(JACCARD_DEN * F.col("inter") >= JACCARD_NUM * F.col("un"))
         .select(
@@ -361,35 +422,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_oracle() -> str:
-    sig_cols = ", ".join(
-        f"min(substr(hh, {1 + 5 * j}, 5)) AS m{j}" for j in range(MINHASH_K)
-    )
-    n_bands = MINHASH_K // MINHASH_BAND_R
-    band_rows = " UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, md5({cc}) AS bhash FROM sig".format(
-            b=b,
-            cc=" || '|' || ".join(
-                f"m{b * MINHASH_BAND_R + r}" for r in range(MINHASH_BAND_R)
-            ),
-        )
-        for b in range(n_bands)
-    )
     return rf"""
-WITH sh AS (
-  SELECT doc_id, unnest({SHINGLES_DUCK}) AS shingle FROM {SHINGLES_DUCK_FROM}
-), shh AS (
-  SELECT doc_id, shingle,
-         md5('0|' || shingle) || md5('1|' || shingle) AS hh
-  FROM sh
-), sig AS (
-  SELECT doc_id, {sig_cols}, count(*) AS sz FROM shh GROUP BY doc_id
-), bands AS (
-  {band_rows}
-), cands AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.bhash = b.bhash AND a.doc_id < b.doc_id
-), inter AS (
+WITH {_MINHASH_CANDS_DUCK}), inter AS (
   SELECT c.doc_a, c.doc_b, count(*) AS inter
   FROM cands c
   JOIN sh x ON x.doc_id = c.doc_a
@@ -414,50 +448,18 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact column comes from a verification sample; here the corpus
     is small enough to verify every candidate, so the audit is
     complete. All ratios are integer micro-units (floor division), so
-    the comparison is engine-exact. Same plan shape as
-    ``dedup_minhash_lsh`` (one shingle shuffle, banded candidate join,
-    candidates⋈shingle-digest verify — the signature relation is
-    fixed-width and digests only ride the verify shuffle, never shingle
-    sets); the extra cost is only the slice-equality sum per pair.
-    As with the LSH dedup, the "exact" column counts intersections on
-    the full 256-bit double-md5 digest `hh`: exact absent a
-    double-collision of independent md5s (~n²/2²⁵⁷), the price of never
-    shipping shingle sets over the wire."""
-    sh = _doc_shingles(spark, sf_dir)
-    hashed = _hashed_digests(sh)
-    # sig feeds the bands AND the slot-equality estimate columns below
-    sig = _sig_relation(hashed).cache()
-    cands = _candidates_from_bands(_band_relation(sig))
-    # exact-Jaccard verify as a candidates⋈shingle-digest join (same
-    # discipline as dedup_minhash_lsh): each side of the intersection
-    # count joins the (doc_id, full 256-bit digest) relation — the wire
-    # carries bounded digests, never shingle sets. The inner join drops
-    # zero-intersection pairs, exactly mirroring the oracle's inter CTE.
-    shd = hashed.select("doc_id", F.col("hh").alias("dg"))
-    da = shd.select(F.col("doc_id").alias("doc_a"), "dg")
-    db = shd.select(F.col("doc_id").alias("doc_b"), "dg")
-    inter = (
-        cands.join(da, "doc_a")
-        .join(db, ["doc_b", "dg"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sig.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sz").alias("sz_a"),
-        *[F.col(f"m{j}").alias(f"a{j}") for j in range(MINHASH_K)],
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sz").alias("sz_b"),
-        *[F.col(f"m{j}").alias(f"b{j}") for j in range(MINHASH_K)],
-    )
+    the comparison is engine-exact. The plan is ``dedup_minhash_lsh``'s
+    (``_verified_candidates``: one shingle shuffle, banded candidate
+    join, candidates⋈shingle-digest verify); the extra cost is only the
+    slice-equality sum per pair. As with the LSH dedup, the "exact"
+    column counts intersections on the full 256-bit double-md5 digest:
+    exact absent a double-collision of independent md5s (~n²/2²⁵⁷), the
+    price of never shipping shingle sets over the wire."""
     k_match = sum(
         (F.col(f"a{j}") == F.col(f"b{j}")).cast("long") for j in range(MINHASH_K)
     )
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _verified_candidates(_doc_shingles(spark, sf_dir))
         .withColumn("k_match", k_match)
         .withColumn("un", F.col("sz_a") + F.col("sz_b") - F.col("inter"))
         .select(
@@ -475,38 +477,11 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_estimate_oracle() -> str:
-    sig_cols = ", ".join(
-        f"min(substr(hh, {1 + 5 * j}, 5)) AS m{j}" for j in range(MINHASH_K)
-    )
-    n_bands = MINHASH_K // MINHASH_BAND_R
-    band_rows = " UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, md5({cc}) AS bhash FROM sig".format(
-            b=b,
-            cc=" || '|' || ".join(
-                f"m{b * MINHASH_BAND_R + r}" for r in range(MINHASH_BAND_R)
-            ),
-        )
-        for b in range(n_bands)
-    )
     k_match = " + ".join(
         f"CASE WHEN sa.m{j} = sb.m{j} THEN 1 ELSE 0 END" for j in range(MINHASH_K)
     )
     return rf"""
-WITH sh AS (
-  SELECT doc_id, unnest({SHINGLES_DUCK}) AS shingle FROM {SHINGLES_DUCK_FROM}
-), shh AS (
-  SELECT doc_id, shingle,
-         md5('0|' || shingle) || md5('1|' || shingle) AS hh
-  FROM sh
-), sig AS (
-  SELECT doc_id, {sig_cols}, count(*) AS sz FROM shh GROUP BY doc_id
-), bands AS (
-  {band_rows}
-), cands AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.bhash = b.bhash AND a.doc_id < b.doc_id
-), inter AS (
+WITH {_MINHASH_CANDS_DUCK}), inter AS (
   SELECT c.doc_a, c.doc_b, CAST(count(*) AS BIGINT) AS inter
   FROM cands c
   JOIN sh x ON x.doc_id = c.doc_a
@@ -530,10 +505,10 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     band-bucket candidate set against the exhaustive truth set — the
     go/no-go number for the (k, r, b) banding choice before a 100 TB
     dedup run. Truth = the df-capped exhaustive self-join's pairs at
-    the SAME threshold the LSH verify uses (capped Jaccard ≥
-    JACCARD_NUM/JACCARD_DEN — the cap is the declared similarity
-    universe of the standalone path: boilerplate shingles carry no
-    near-dup signal). Candidates = the raw banded pairs BEFORE
+    the SAME threshold the LSH verify uses (``_truth_pairs``: capped
+    Jaccard ≥ JACCARD_NUM/JACCARD_DEN — the cap is the declared
+    similarity universe of the standalone path: boilerplate shingles
+    carry no near-dup signal). Candidates = the raw banded pairs BEFORE
     verification, so the ratios price the banding stage itself:
     recall says what the bands miss (pairs no band agrees on),
     precision says what the verify stage must pay to reject.
@@ -549,23 +524,8 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 1-row aggregate. All ratios integer ppm on non-negative operands
     (div == //)."""
     sh = _doc_shingles(spark, sf_dir)
-    # truth: exhaustive capped-universe Jaccard at the verify threshold
-    pair_inter, sizes = _capped_pair_relations(
-        _df_capped_shingles(sh, NGRAM_DF_CAP)
-    )
-    sa, sb = _size_sides(sizes)
-    truth = (
-        pair_inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(
-            JACCARD_DEN * F.col("inter")
-            >= JACCARD_NUM * (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-        )
-        .select("doc_a", "doc_b")
-    )
-    # candidates: the banded pairs, pre-verify (same construction as
-    # dedup_minhash_lsh)
-    cands = _banded_candidates(sh)
+    truth = _truth_pairs(sh).select("doc_a", "doc_b")
+    cands = _banded_candidates(_sig_relation(_hashed_digests(sh)))
     joined = truth.withColumn("t", F.lit(1)).join(
         cands.withColumn("c", F.lit(1)), ["doc_a", "doc_b"], "full_outer"
     )
@@ -587,52 +547,14 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_recall_oracle() -> str:
-    sig_cols = ", ".join(
-        f"min(substr(hh, {1 + 5 * j}, 5)) AS m{j}" for j in range(MINHASH_K)
-    )
-    n_bands = MINHASH_K // MINHASH_BAND_R
-    band_rows = " UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, md5({cc}) AS bhash FROM sig".format(
-            b=b,
-            cc=" || '|' || ".join(
-                f"m{b * MINHASH_BAND_R + r}" for r in range(MINHASH_BAND_R)
-            ),
-        )
-        for b in range(n_bands)
-    )
     return rf"""
-WITH sh0 AS (
-  SELECT doc_id, unnest({SHINGLES_DUCK}) AS shingle FROM {SHINGLES_DUCK_FROM}
-), capped AS (
-  SELECT doc_id, shingle FROM sh0
-  WHERE shingle IN (
-    SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) <= {NGRAM_DF_CAP}
-  )
-), sizes AS (
-  SELECT doc_id, count(*) AS sz FROM capped GROUP BY doc_id
-), pair_inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-  FROM capped a JOIN capped b
-    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), truth AS (
+WITH {_CAPPED_PAIRS_DUCK}), truth AS (
   SELECT doc_a, doc_b
   FROM pair_inter
   JOIN sizes sa ON sa.doc_id = doc_a
   JOIN sizes sb ON sb.doc_id = doc_b
   WHERE {JACCARD_DEN}*inter >= {JACCARD_NUM}*(sa.sz + sb.sz - inter)
-), shh AS (
-  SELECT doc_id, md5('0|' || shingle) || md5('1|' || shingle) AS hh
-  FROM sh0
-), sig AS (
-  SELECT doc_id, {sig_cols} FROM shh GROUP BY doc_id
-), bands AS (
-  {band_rows}
-), cands AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.bhash = b.bhash AND a.doc_id < b.doc_id
-), joined AS (
+), {_AUDIT_CANDS_DUCK}), joined AS (
   SELECT coalesce(t.t, 0) AS t, coalesce(c.c, 0) AS c
   FROM (SELECT doc_a, doc_b, 1 AS t FROM truth) t
   FULL OUTER JOIN (SELECT doc_a, doc_b, 1 AS c FROM cands) c
@@ -695,17 +617,8 @@ def _containment_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _containment_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The raw containment-pair relation (pre-census) — kept as a
     separate builder so plan tests see the un-checkpointed subtree."""
-    pair_inter, sizes = _capped_pair_relations(
-        _df_capped_shingles(_containment_shingles(spark, sf_dir), NGRAM_DF_CAP)
-    )
-    sa, sb = _size_sides(sizes)
-    return (
-        pair_inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(
-            CONTAIN_DEN * F.col("inter")
-            >= CONTAIN_NUM * F.least("sz_a", "sz_b")
-        )
+    return _capped_pairs(_containment_shingles(spark, sf_dir)).filter(
+        CONTAIN_DEN * F.col("inter") >= CONTAIN_NUM * F.least("sz_a", "sz_b")
     )
 
 
@@ -731,9 +644,10 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     path would never emit), with ``planted_catch_ok`` asserting it is
     nonzero — measured 8 / 7 / 60 missed pairs at sf0.001/0.01/0.1.
 
-    Scale: the same df-capped self-join shape as ``dedup_ngram_pairs``
-    / ``dedup_lsh_recall`` truth — no shingle contributes more than
-    C(NGRAM_DF_CAP, 2) pair rows, intersection is a keyed count with
+    Scale: the same df-capped self-join (``_capped_pairs``) as
+    ``dedup_ngram_jaccard`` / ``dedup_lsh_recall`` truth — no shingle
+    contributes more than C(NGRAM_DF_CAP, 2) pair rows, intersection is
+    a keyed count with
     map-side combines, sizes join back by doc key, and the planting
     adds |docs|/CONTAIN_PLANT_MOD wrapper docs via one equi-join (no
     new shuffle class). The scored relation feeds both the census and
@@ -841,13 +755,12 @@ def _scurve_ppm(s: str) -> str:
     of the house determinism rule — no pow(), no transcendentals), so
     Spark and DuckDB produce bit-identical doubles and the floor is
     engine-exact."""
-    b = MINHASH_K // MINHASH_BAND_R
     s3 = s
     for _ in range(MINHASH_BAND_R - 1):
         s3 = f"({s3} * {s})"
     q = f"(CAST(1 AS DOUBLE) - {s3})"
     q4 = q
-    for _ in range(b - 1):
+    for _ in range(MINHASH_BANDS - 1):
         q4 = f"({q4} * {q})"
     p = f"(CAST(1 AS DOUBLE) - {q4})"
     return f"CAST(floor({p} * CAST(1000000 AS DOUBLE)) AS BIGINT)"
@@ -894,7 +807,6 @@ def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     999 + 1 rows); the observed side composes the already-bounded
     truth/candidate plans of ``dedup_lsh_recall``; 1-row relations
     glue via broadcast crossJoin."""
-    n_bands = MINHASH_K // MINHASH_BAND_R
     # --- analytic side: S-curve over a generated permille grid
     s_expr = "(CAST(id AS DOUBLE) / CAST(1000 AS DOUBLE))"
     grid = spark.range(1, 1000).select(
@@ -907,26 +819,14 @@ def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # --- observed side: truth pairs with exact similarity (ppm) and
     # whether the bands caught them (the dedup_lsh_recall relations)
     sh = _doc_shingles(spark, sf_dir)
-    pair_inter, sizes = _capped_pair_relations(
-        _df_capped_shingles(sh, NGRAM_DF_CAP)
+    truth = _truth_pairs(sh).select(
+        "doc_a",
+        "doc_b",
+        F.expr("(inter * 1000000) div (sz_a + sz_b - inter)").alias("exact_ppm"),
     )
-    sa, sb = _size_sides(sizes)
-    truth = (
-        pair_inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(
-            JACCARD_DEN * F.col("inter")
-            >= JACCARD_NUM * (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.expr(
-                "(inter * 1000000) div (sz_a + sz_b - inter)"
-            ).alias("exact_ppm"),
-        )
+    cands = _banded_candidates(_sig_relation(_hashed_digests(sh))).withColumn(
+        "c", F.lit(1)
     )
-    cands = _banded_candidates(sh).withColumn("c", F.lit(1))
     pair_p = "(CAST(exact_ppm AS DOUBLE) / CAST(1000000 AS DOUBLE))"
     above = (
         truth.crossJoin(F.broadcast(t_half))
@@ -964,7 +864,7 @@ def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         t_half.crossJoin(F.broadcast(obs))
         .select(
-            F.lit(n_bands).cast("int").alias("n_bands"),
+            F.lit(MINHASH_BANDS).cast("int").alias("n_bands"),
             F.lit(MINHASH_BAND_R).cast("int").alias("rows_per_band"),
             *curve_cols,
             "t_half_permille",
@@ -978,19 +878,6 @@ def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_band_tuning_oracle() -> str:
-    n_bands = MINHASH_K // MINHASH_BAND_R
-    sig_cols = ", ".join(
-        f"min(substr(hh, {1 + 5 * j}, 5)) AS m{j}" for j in range(MINHASH_K)
-    )
-    band_rows = " UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, md5({cc}) AS bhash FROM sig".format(
-            b=b,
-            cc=" || '|' || ".join(
-                f"m{b * MINHASH_BAND_R + r}" for r in range(MINHASH_BAND_R)
-            ),
-        )
-        for b in range(n_bands)
-    )
     curve_cols = ",\n       ".join(
         f"{_scurve_ppm(f'(CAST({g} AS DOUBLE) / CAST(1000 AS DOUBLE))')}"
         f" AS p_ppm_s{g}"
@@ -1005,39 +892,14 @@ WITH grid AS (
 ), t_half AS (
   SELECT CAST(min(s_permille) AS INT) AS t_half_permille
   FROM grid WHERE p_ppm >= 500000
-), sh0 AS (
-  SELECT doc_id, unnest({SHINGLES_DUCK}) AS shingle FROM {SHINGLES_DUCK_FROM}
-), capped AS (
-  SELECT doc_id, shingle FROM sh0
-  WHERE shingle IN (
-    SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) <= {NGRAM_DF_CAP}
-  )
-), sizes AS (
-  SELECT doc_id, count(*) AS sz FROM capped GROUP BY doc_id
-), pair_inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-  FROM capped a JOIN capped b
-    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), truth AS (
+), {_CAPPED_PAIRS_DUCK}), truth AS (
   SELECT doc_a, doc_b,
          (inter * 1000000) // (sa.sz + sb.sz - inter) AS exact_ppm
   FROM pair_inter
   JOIN sizes sa ON sa.doc_id = doc_a
   JOIN sizes sb ON sb.doc_id = doc_b
   WHERE {JACCARD_DEN}*inter >= {JACCARD_NUM}*(sa.sz + sb.sz - inter)
-), shh AS (
-  SELECT doc_id, md5('0|' || shingle) || md5('1|' || shingle) AS hh
-  FROM sh0
-), sig AS (
-  SELECT doc_id, {sig_cols} FROM shh GROUP BY doc_id
-), bands AS (
-  {band_rows}
-), cands AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.bhash = b.bhash AND a.doc_id < b.doc_id
-), above AS (
+), {_AUDIT_CANDS_DUCK}), above AS (
   SELECT coalesce(c.c, 0) AS c, {_scurve_ppm(pair_p)} AS pair_p_ppm
   FROM truth CROSS JOIN t_half
   LEFT JOIN (SELECT doc_a, doc_b, 1 AS c FROM cands) c USING (doc_a, doc_b)
@@ -1054,7 +916,7 @@ WITH grid AS (
               AS INT) AS tuned_ok
   FROM above
 )
-SELECT CAST({n_bands} AS INT) AS n_bands,
+SELECT CAST({MINHASH_BANDS} AS INT) AS n_bands,
        CAST({MINHASH_BAND_R} AS INT) AS rows_per_band,
        {curve_cols},
        t_half_permille,

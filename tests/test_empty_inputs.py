@@ -69,6 +69,9 @@ def test_profiler_emits_all_columns_on_empty_table(spark, empty_sf_dir):
         ("dedup", "dedup_sentences"),
         ("dedup", "dedup_incremental"),
         ("dedup", "dedup_minhash_lsh"),
+        ("dedup", "dedup_minhash_estimate"),
+        ("dedup", "dedup_lsh_recall"),
+        ("dedup", "dedup_ngram_jaccard"),
         ("text", "text_stats"),
         ("text", "text_readability"),
         ("corpus", "corpus_repetition_signals"),
@@ -163,8 +166,9 @@ def test_operator_runs_clean_on_empty_tables(spark, empty_sf_dir, family, qname)
     import __spark_entry__ as entry_mod
 
     qs = entry_mod.queries()
-    n = qs[qname](spark, empty_sf_dir).count()
-    assert n >= 0  # executes without error; emptiness is the norm here
+    # executes without error; emptiness is the norm here. collect(), not
+    # count(): a count lets Catalyst prune every unreferenced aggregate
+    qs[qname](spark, empty_sf_dir).collect()
 
 
 def test_trained_codebook_tiny_corpus_matches_standin_size(spark):

@@ -1500,6 +1500,40 @@ def test_ngram_df_cap_screens_hot_shingles(spark):
     assert max_df is not None and max_df <= NGRAM_DF_CAP
 
 
+def test_shingle_pair_queries_agree_on_shared_relations(spark):
+    """The shingle-pair queries built on the same relations must agree:
+    the LSH dedup emits exactly the estimate audit's candidates whose
+    exact Jaccard is >= 0.5 (both verify the same banded candidates);
+    the recall audit's truth set is the Jaccard >= 0.5 subset of the
+    n-gram Jaccard pairs (both use the same capped pairs); and the
+    band-tuning audit's truth pairs above the S-curve crossing are a
+    subset of that truth set."""
+    from ai_data_pipeline_spark.operators.dedup import (
+        dedup_lsh_band_tuning,
+        dedup_lsh_recall,
+        dedup_minhash_estimate,
+        dedup_minhash_lsh,
+        dedup_ngram_jaccard,
+    )
+
+    lsh = {(r["doc_a"], r["doc_b"]) for r in dedup_minhash_lsh(spark, SF_DIR).collect()}
+    est = {
+        (r["doc_a"], r["doc_b"])
+        for r in dedup_minhash_estimate(spark, SF_DIR).collect()
+        if r["exact_ppm"] >= 500_000
+    }
+    assert lsh and lsh == est
+
+    n_truth = dedup_lsh_recall(spark, SF_DIR).collect()[0]["n_truth"]
+    ngram_half = sum(
+        2 * r["inter"] >= r["un"] for r in dedup_ngram_jaccard(spark, SF_DIR).collect()
+    )
+    assert n_truth > 0 and n_truth == ngram_half
+
+    tuning = dedup_lsh_band_tuning(spark, SF_DIR).collect()[0]
+    assert tuning["n_truth_above"] <= n_truth
+
+
 def test_cls_linear_classifier_separates_and_bounds(spark):
     """The closed-form hashed-feature classifier must (a) emit a model
     no larger than FEATURE_BUCKETS rows, (b) score every document
