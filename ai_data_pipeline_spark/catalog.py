@@ -78,19 +78,22 @@ TABLES: dict[str, list[tuple[str, str]]] = {
     "embeddings": [("vec_id", "long"), ("embedding", "vector"), ("label", "int")],
 }
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Columnar parquet scan — Catalyst pushes filters/projections into it.
-
-    Pandas-written parquet may carry TIMESTAMP(NANOS) columns, which Spark
-    does not read natively; we read them as raw nanosecond longs
-    (legacy.parquet.nanosAsLong) and convert to microsecond timestamps.
-    Parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) columns are inferred as
-    TIMESTAMP_NTZ by Spark 4; we cast those back to TIMESTAMP (session TZ is
-    UTC, so the wall-clock values are unchanged and oracle parity holds),
-    keeping the catalog schema (TABLES) authoritative.
-    """
+def raw_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The table's parquet scan as encoded. Pandas-written parquet may
+    carry TIMESTAMP(NANOS) columns, which Spark does not read natively;
+    they read as raw nanosecond longs (legacy.parquet.nanosAsLong)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def normalize_timestamps(df: DataFrame, name: str) -> DataFrame:
+    """Turn the declared timestamp columns of table ``name`` into
+    TIMESTAMP, whatever their encoding: nanosecond longs convert to
+    microsecond timestamps, and TIMESTAMP(MICROS, isAdjustedToUTC=false)
+    columns, which Spark 4 infers as TIMESTAMP_NTZ, cast back to
+    TIMESTAMP (session TZ is UTC, so the wall-clock values are unchanged
+    and oracle parity holds). Works on batch and streaming frames alike,
+    keeping the catalog schema (TABLES) authoritative."""
     declared = dict(TABLES.get(name, []))
     for field in df.schema.fields:
         if declared.get(field.name) != "timestamp":
@@ -102,3 +105,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif isinstance(field.dataType, TimestampNTZType):
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Columnar parquet scan — Catalyst pushes filters/projections into
+    it — with its timestamp columns normalized."""
+    return normalize_timestamps(raw_table(spark, sf_dir, name), name)

@@ -280,9 +280,11 @@ def _verified_candidates(sh: DataFrame) -> DataFrame:
     collide on BOTH independent md5s (probability ~n²/2²⁵⁷). The inner
     join drops zero-intersection pairs, as the oracles' inter CTE does."""
     hashed = _hashed_digests(sh)
-    # sig feeds the bands AND the size/slot join sides — cache the
-    # fixed-width relation, not the shingles
-    sig = _sig_relation(hashed).cache()
+    # sig feeds the bands AND the size/slot join sides — checkpoint the
+    # fixed-width relation, not the shingles. Call-scoped: a cached
+    # relation would stay registered for the session and rewrite the
+    # plans of later queries that share the subtree
+    sig = _sig_relation(hashed).localCheckpoint()
     shd = hashed.select("doc_id", F.col("hh").alias("dg"))
     da = shd.select(F.col("doc_id").alias("doc_a"), "dg")
     db = shd.select(F.col("doc_id").alias("doc_b"), "dg")

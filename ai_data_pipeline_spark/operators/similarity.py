@@ -1033,7 +1033,7 @@ def emb_kmeans_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     only; the same loop trains on 10⁹ vectors with K in the thousands
     (assignment then goes through the pandas-UDF kernel and AQE picks
     shuffle strategy, but the relation algebra is unchanged)."""
-    assigned, _ = _lloyd_fp(_vfp(spark, sf_dir).cache())
+    assigned, _ = _lloyd_fp(_vfp(spark, sf_dir).localCheckpoint())
     return assigned.select("vec_id", "cell")
 
 

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ai_data_pipeline_spark.catalog import load_table
 from ai_data_pipeline_spark.registry import QueryDef
 from ai_data_pipeline_spark.sources.readers import scratch_dir
+from ai_data_pipeline_spark.streaming.windows import run_to_completion
 
 BINFILE_DOC_LIMIT = 200  # docs materialized as files (bounds file count)
 
@@ -197,23 +198,13 @@ def pyds_stream_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     then aggregated per category. The oracle regenerates the stream
     content from range() — dropped or duplicated offsets cannot hide
     in the checksums."""
-    from pyspark.sql import functions as FF
-
     _register_synthetic_stream(spark)
     df = spark.readStream.format("synthetic_stream").load()
-    q = (
-        df.writeStream.format("memory")
-        .queryName("drv_pyds_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT * FROM drv_pyds_stream")
+    got = run_to_completion(df, "drv_pyds_stream", output_mode="append")
     return got.groupBy("category").agg(
-        FF.count(FF.lit(1)).alias("n"),
-        FF.sum("score").alias("sum_score"),
-        FF.sum("id").alias("sum_id"),
+        F.count(F.lit(1)).alias("n"),
+        F.sum("score").alias("sum_score"),
+        F.sum("id").alias("sum_id"),
     )
 
 

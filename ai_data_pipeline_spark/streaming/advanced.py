@@ -20,30 +20,16 @@ a Delta MERGE at 100 TB; nothing is collected to the driver.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ai_data_pipeline_spark.sources.readers import scratch_dir
+from ai_data_pipeline_spark.catalog import load_table
 from ai_data_pipeline_spark.streaming.windows import (
+    batch_file_stream,
+    drain_batches,
     read_events_stream,
     run_to_completion,
-)
-
-# Schema of the three-batch source files _three_batch_source_dir writes
-# ITSELF (always NTZ by construction — independent of the driver
-# testdata's physical encoding, which windows._events_schema probes).
-_NTZ_EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampNTZType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
 )
 
 LATE_CUTOFF_HOURS = 3  # second batch = everything older than max_ts - 3h
@@ -51,9 +37,9 @@ WATERMARK = "10 minutes"
 TOPK_PER_WINDOW = 3
 
 
-def _three_batch_source_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Split events into three parquet files forming three micro-batches
-    (the file stream source orders by modification time):
+def _three_batch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events split into three micro-batches, read in this order
+    (staged mtimes):
 
     - file_0: on-time rows (within 3 h of the stream maximum) — these
       advance the watermark to max_ts − 10 min;
@@ -66,55 +52,22 @@ def _three_batch_source_dir(spark: SparkSession, sf_dir: str) -> str:
       (verified via numRowsDroppedByWatermark = |file_2| in the state
       operator metrics).
 
-    Memoized per (session, sf_dir): the fixture is a deterministic
-    function of the immutable events table, and rebuilding it (a
-    cutoff collect + three coalesce(1) parquet writes, ~2-4 s at
-    sf0.1) on EVERY call was pure setup waste dominating the streaming
-    queries' measured time (VERDICT r12 task #3 — the
-    stream_first_touch 1.65x drift was this fixture cost under host
-    throttle, not the stateful drain). The source dir is read-only to
-    its consumers; each query keeps its own checkpoint/sink scratch.
-    """
-    from ai_data_pipeline_spark.catalog import load_table
-    from ai_data_pipeline_spark.session import session_scoped_cache
+    The files are memoized per (session, sf_dir): building them costs a
+    cutoff collect and three parquet writes."""
 
-    cache = session_scoped_cache(spark, "three_batch_source")
-    if sf_dir in cache:
-        return cache[sf_dir]
+    def batches() -> list[DataFrame]:
+        events = load_table(spark, sf_dir, "events")
+        cutoff = events.agg(
+            (F.max(F.unix_micros("ts")) - LATE_CUTOFF_HOURS * 3600 * 1_000_000).alias("c")
+        ).collect()[0]["c"]
+        late = F.unix_micros("ts") < cutoff
+        return [
+            events.filter(~late),
+            events.filter(late & (F.col("event_id") % 2 == 0)),
+            events.filter(late & (F.col("event_id") % 2 == 1)),
+        ]
 
-    events = load_table(spark, sf_dir, "events")
-    cutoff = events.agg(
-        (F.max(F.unix_micros("ts")) - LATE_CUTOFF_HOURS * 3600 * 1_000_000).alias("c")
-    ).collect()[0]["c"]
-    tmp = scratch_dir("late_")
-    # Files are written with an NTZ `ts` matching _NTZ_EVENTS_SCHEMA.
-    raw = events.select(
-        "event_id",
-        F.col("ts").cast("timestamp_ntz").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    )
-    late = F.unix_micros(F.col("ts").cast("timestamp")) < cutoff
-    parts = [
-        raw.filter(~late),
-        raw.filter(late & (F.col("event_id") % 2 == 0)),
-        raw.filter(late & (F.col("event_id") % 2 == 1)),
-    ]
-    src = f"{tmp}/src"
-    os.makedirs(src, exist_ok=True)
-    now = 1_700_000_000
-    for i, df in enumerate(parts):
-        df.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/b{i}")
-        part = next(
-            f for f in os.listdir(f"{tmp}/b{i}") if f.endswith(".parquet")
-        )
-        dst = f"{src}/file_{i}.parquet"
-        os.rename(f"{tmp}/b{i}/{part}", dst)
-        os.utime(dst, (now + i * 60, now + i * 60))  # mtime order = batch order
-    cache[sf_dir] = src
-    return src
+    return batch_file_stream(spark, batches, memo=("late_events", sf_dir), staged=True)
 
 
 def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -126,15 +79,7 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     (counts only grow; values are ≥ 0); the oracle aggregates the
     on-time and even-id-late subsets — the odd-id-late rows must be
     absent, which is the semantic under test."""
-    src = _three_batch_source_dir(spark, sf_dir)
-    raw = (
-        spark.readStream.schema(_NTZ_EVENTS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", False)
-        .load(src)
-    )
-    events = raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    events = _three_batch_stream(spark, sf_dir)
     agg = (
         events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "5 minutes"), "event_type")
@@ -230,19 +175,8 @@ def stream_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the post-drain rollup (keyed MIN over the emission log) is
     exact. State is one 2-long tuple per live key; in production an
     EventTimeTimeout would retire keys the watermark passed."""
-    src = _three_batch_source_dir(spark, sf_dir)
-    raw = (
-        spark.readStream.schema(_NTZ_EVENTS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", False)
-        .load(src)
-    )
-    ev = raw.select(
-        "user_id",
-        "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-        "event_id",
+    ev = _three_batch_stream(spark, sf_dir).select(
+        "user_id", "event_type", F.unix_micros("ts").alias("us"), "event_id"
     )
     upd = ev.groupBy("user_id", "event_type").applyInPandasWithState(
         _first_touch_fn,
@@ -292,26 +226,10 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    store = scratch_dir("topk_") + "/store"
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        # keyed MERGE stand-in: append this batch's update rows (each
-        # carries the full new per-key aggregate, so replays are
-        # idempotent under last-writer-wins); rows never touch the
-        # driver — executors write straight to the store.
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(store)
-        )
-
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    # keyed MERGE stand-in: each batch's update rows carry the full new
+    # per-key aggregate, so replays are idempotent under
+    # last-writer-wins
+    store = drain_batches(agg, lambda batch_df: batch_df, output_mode="update")
     from pyspark.sql import Window as W
 
     # last-writer-wins per key: the highest batch_id carries the final
@@ -320,8 +238,7 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.desc("batch_id")
     )
     final = (
-        spark.read.parquet(store)
-        .withColumn("rn", F.row_number().over(latest))
+        store.withColumn("rn", F.row_number().over(latest))
         .filter(F.col("rn") == 1)
         .select("win_start_sec", "event_type", "n_events")
     )
@@ -412,20 +329,7 @@ def stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory writes across the cluster; the batch_id partition column
     doubles as the reprocessing unit (overwrite one directory to replay
     one batch)."""
-    events = read_events_stream(spark, sf_dir)
-    sink = scratch_dir("sink_") + "/events_lake"
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{sink}/batch_id={batch_id}")
-
-    q = (
-        events.writeStream.outputMode("append")
-        .foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    lake = spark.read.option("basePath", sink).parquet(sink)
+    lake = drain_batches(read_events_stream(spark, sf_dir), lambda batch_df: batch_df)
     return lake.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum("event_id").alias("sum_event_id"),
@@ -487,8 +391,6 @@ def stream_index_dedup(
     is a bucketed or Bloom-pruned digest table and the log/compaction
     pair is exactly a streaming table + materialized-view topology;
     nothing passes through the driver."""
-    from ai_data_pipeline_spark.catalog import load_table
-
     docs = load_table(spark, sf_dir, "documents")
     fp = F.md5(F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " "))
     base = docs.select("doc_id", "lang", fp.alias("fp"))
@@ -505,44 +407,15 @@ def stream_index_dedup(
     planted_in_stream = odds.filter(F.col("doc_id") % 20 == 1).select(
         (F.col("doc_id") + 2 * STREAM_IDX_OFFSET).alias("doc_id"), "lang", "fp"
     )
-    sink = scratch_dir("sidx_") + "/candidates"
-    # Source fixture memoized per (session, sf_dir, order) — the
-    # _three_batch_source_dir discipline (round-14): the two batch
-    # files are a deterministic function of the immutable documents
-    # table; rebuilding them (two coalesce(1) writes) on every call was
-    # setup waste. The per-call dedup work (index build, per-batch
-    # anti-join, log, compaction) all still runs below.
-    from ai_data_pipeline_spark.session import session_scoped_cache
-
-    cache = session_scoped_cache(spark, "stream_index_dedup_source")
-    memo_key = (sf_dir, _reverse_batches)
-    if memo_key in cache:
-        src = cache[memo_key]
-    else:
-        tmp = scratch_dir("sidxsrc_")
-        src = f"{tmp}/src"
-        os.makedirs(src, exist_ok=True)
-        batches = [odds, planted_vs_index.unionByName(planted_in_stream)]
-        if _reverse_batches:  # adversarial order, pinned identical by test
-            batches = batches[::-1]
-        for i, b in enumerate(batches):
-            b.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/b{i}")
-            part = next(
-                f for f in os.listdir(f"{tmp}/b{i}") if f.endswith(".parquet")
-            )
-            # no os.utime staging: batch order is deliberately left to
-            # the file source — the result must not depend on it
-            os.rename(f"{tmp}/b{i}/{part}", f"{src}/file_{i}.parquet")
-        cache[memo_key] = src
-
-    stream = (
-        spark.readStream.schema("doc_id long, lang string, fp string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    batches = [odds, planted_vs_index.unionByName(planted_in_stream)]
+    if _reverse_batches:  # adversarial order, pinned identical by test
+        batches.reverse()
+    stream = batch_file_stream(
+        spark, lambda: batches, memo=("index_dedup", sf_dir, _reverse_batches)
     )
 
-    def accept(batch_df: DataFrame, batch_id: int) -> None:
-        keep = (
+    def accept(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.groupBy("fp")
             .agg(
                 F.expr(
@@ -557,18 +430,10 @@ def stream_index_dedup(
             )
             .join(idx, "fp", "left_anti")
         )
-        keep.write.mode("overwrite").parquet(f"{sink}/batch_id={batch_id}")
 
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(accept)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    log = drain_batches(stream, accept)
     # compaction view: global min-doc_id keeper per fingerprint over
     # the candidate log — batch- and order-invariant by construction
-    log = spark.read.option("basePath", sink).parquet(sink)
     acc = (
         log.groupBy("fp")
         .agg(
@@ -667,105 +532,43 @@ def _profile_partials(df: DataFrame) -> DataFrame:
     )
 
 
-_PROFILE_PARTIAL_SCHEMA = (
-    "col string, n long, n_null long, min_s string, max_s string,"
-    " sum_dec decimal(38,0)"
-)
+def _profile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents as a two-file stream (even/odd doc_id halves = two
+    micro-batches), memoized per (session, sf_dir)."""
 
+    def batches() -> list[DataFrame]:
+        docs = load_table(spark, sf_dir, "documents")
+        return [
+            docs.filter(F.col("doc_id") % 2 == 0),
+            docs.filter(F.col("doc_id") % 2 == 1),
+        ]
 
-def _profile_stream_source_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Two-file document stream source (even/odd doc_id halves = two
-    micro-batches) for stream_profile_documents. Memoized per
-    (session, sf_dir) — the _three_batch_source_dir discipline
-    (VERDICT r12 task #3 / round-14 guide §2.4): the fixture is a
-    deterministic function of the immutable documents table, and
-    rebuilding it (two coalesce(1) parquet writes) on every call was
-    setup waste dominating the measured streaming query. The source
-    dir is read-only to its consumer; each call keeps its own
-    partial-log sink."""
-    from ai_data_pipeline_spark.catalog import load_table
-    from ai_data_pipeline_spark.session import session_scoped_cache
-
-    cache = session_scoped_cache(spark, "profile_stream_source")
-    if sf_dir in cache:
-        return cache[sf_dir]
-
-    docs = load_table(spark, sf_dir, "documents")
-    tmp = scratch_dir("sprofsrc_")
-    src = f"{tmp}/src"
-    os.makedirs(src, exist_ok=True)
-    halves = [
-        docs.filter(F.col("doc_id") % 2 == 0),
-        docs.filter(F.col("doc_id") % 2 == 1),
-    ]
-    for i, b in enumerate(halves):
-        b.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/b{i}")
-        part = next(
-            f for f in os.listdir(f"{tmp}/b{i}") if f.endswith(".parquet")
-        )
-        os.rename(f"{tmp}/b{i}/{part}", f"{src}/file_{i}.parquet")
-    cache[sf_dir] = src
-    return src
+    return batch_file_stream(spark, batches, memo=("profile_documents", sf_dir))
 
 
 def stream_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming profiler — the profiler family run as an INCREMENTAL
     maintenance job over a document file stream (closing the loop
-    between the profiling and streaming surfaces, VERDICT r8 stretch
-    (c)): each micro-batch reduces to one mergeable partial-profile row
-    per column (count, null count, truncated min/max rendering, DECIMAL
-    sum for numeric columns), appended to an idempotent
-    batch_id-partitioned partial log; the current profile is the log's
-    merge view (sum counts, min/max renderings, sum sums). Batch
-    equivalence is the oracle: merged streaming partials must equal the
-    one-shot profile of the full table, for any batching and any batch
-    order (all merge operations are commutative monoids).
+    between the profiling and streaming surfaces): each micro-batch
+    reduces to one mergeable partial-profile row per column (count,
+    null count, truncated min/max rendering, DECIMAL sum for numeric
+    columns), appended to an idempotent batch_id-partitioned partial
+    log; the current profile is the log's merge view (sum counts,
+    min/max renderings, sum sums). Batch equivalence is the oracle:
+    merged streaming partials must equal the one-shot profile of the
+    full table, for any batching and any batch order (all merge
+    operations are commutative monoids).
 
     Scale: this is how a 100 TB lake keeps profiles fresh — per-batch
     partials are O(columns), the log grows by rows-per-batch × columns,
     and the merge view is a keyed aggregate over metadata-sized input;
     re-profiling the full corpus per update would be the anti-pattern.
-    A seed partial of neutral rows (n=0) makes the view well-defined
-    even before the first batch lands (the zero-row ingest edge).
-    min_s/max_s order RENDERINGS (byte-wise lexicographic in both
-    engines), the representation under which prefix truncation and
-    cross-batch merging are exactly monotone."""
-    src = _profile_stream_source_dir(spark, sf_dir)
-    sink = scratch_dir("sprof_") + "/partials"
-
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, n_chars long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
-    def profile_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _profile_partials(batch_df).write.mode("overwrite").parquet(
-            f"{sink}/batch_id={batch_id}"
-        )
-
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(profile_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    seed = spark.createDataFrame(
-        [(c, 0, 0, None, None, None) for c, _ in _PROFILE_COLS],
-        _PROFILE_PARTIAL_SCHEMA,
-    )
-    log = (
-        spark.read.schema(_PROFILE_PARTIAL_SCHEMA + ", batch_id int")
-        .option("basePath", sink)
-        .parquet(sink)
-        .drop("batch_id")
-        .unionByName(seed)
-        if os.path.isdir(sink)
-        else seed
-    )
+    Every micro-batch, an empty one included, logs one row per column
+    (a global aggregate always yields a row), so the view is defined on
+    a zero-row table too. min_s/max_s order RENDERINGS (byte-wise
+    lexicographic in both engines), the representation under which
+    prefix truncation and cross-batch merging are exactly monotone."""
+    log = drain_batches(_profile_stream(spark, sf_dir), _profile_partials)
     # the partial log keeps sum_dec in DECIMAL(38,0) (mergeable past
     # int64); the merged VIEW emits it as BIGINT on both engines —
     # the r8/r9 driver value hash rejects DECIMAL output columns in

@@ -38,14 +38,11 @@ rebuild, no driver participation.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.registry import QueryDef
 from ai_data_pipeline_spark.session import session_scoped_cache
-from ai_data_pipeline_spark.sources.readers import scratch_dir
 from ai_data_pipeline_spark.operators.similarity import (
     N_CELLS,
     N_QUERIES,
@@ -55,6 +52,7 @@ from ai_data_pipeline_spark.operators.similarity import (
     _split,
     _vectors,
 )
+from ai_data_pipeline_spark.streaming.windows import batch_file_stream, drain_batches
 
 UPDATE_MOD = 7  # vec_id % 7 == 3 gets a version-1 re-embedding
 UPDATE_REM = 3
@@ -78,36 +76,13 @@ def _ivf_assignment_log(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id") % UPDATE_MOD == UPDATE_REM
     ).select("vec_id", F.lit(1).alias("version"), F.reverse("v").alias("v"))
 
-    tmp = scratch_dir("sivf_")
-    src, sink = f"{tmp}/src", f"{tmp}/log"
-    os.makedirs(src, exist_ok=True)
-    for i, b in enumerate([batch0, batch1]):
-        b.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/b{i}")
-        part = next(f for f in os.listdir(f"{tmp}/b{i}") if f.endswith(".parquet"))
-        # no mtime staging: the result must not depend on batch order
-        os.rename(f"{tmp}/b{i}/{part}", f"{src}/file_{i}.parquet")
-
-    stream = (
-        spark.readStream.schema("vec_id long, version int, v array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        # nearest cell per (vec_id, version): the ann_ivf max_by shape
-        assigned = _assign_cos(batch_df, cents, ["vec_id", "version"], [])
-        assigned.write.mode("overwrite").parquet(f"{sink}/batch_id={batch_id}")
-
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(merge)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    # unstaged: the result must not depend on batch order
+    stream = batch_file_stream(spark, lambda: [batch0, batch1])
     log = (
-        spark.read.option("basePath", sink)
-        .parquet(sink)
+        # nearest cell per (vec_id, version): the ann_ivf max_by shape
+        drain_batches(
+            stream, lambda b: _assign_cos(b, cents, ["vec_id", "version"], [])
+        )
         .select("vec_id", "version", "cell_id")
         .localCheckpoint()  # fixed-width index rows: the materialized view
     )

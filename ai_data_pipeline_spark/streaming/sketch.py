@@ -33,20 +33,18 @@ K+1 rows per batch; the merge touches only the log.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
 from ai_data_pipeline_spark.registry import QueryDef
 from ai_data_pipeline_spark.session import session_scoped_cache
-from ai_data_pipeline_spark.sources.readers import scratch_dir
 from ai_data_pipeline_spark.operators.sketches import (
     MG_K,
     _mg_threshold,
     merge_mg_summaries,
 )
+from ai_data_pipeline_spark.streaming.windows import batch_file_stream, drain_batches
 
 # Decade-of-month buckets 0,1,2 with day 31 CLAMPED into bucket 2 —
 # without the clamp a 31st-day event maps to bucket 3, which the
@@ -64,64 +62,32 @@ def _mg_summary_log(spark: SparkSession, sf_dir: str):
     if sf_dir in cache:
         return cache[sf_dir]
 
-    e = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.col("ts").cast("timestamp_ntz").alias("ts"),
-        "user_id",
-    )
-    tmp = scratch_dir("smg_")
-    src, sink = f"{tmp}/src", f"{tmp}/log"
-    os.makedirs(src, exist_ok=True)
-    for b in range(3):
-        part_df = e.filter(F.expr(_BUCKET_EXPR) == b)
-        part_df.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/b{b}")
-        part = next(
-            f for f in os.listdir(f"{tmp}/b{b}") if f.endswith(".parquet")
-        )
-        # no mtime staging: the result must not depend on batch order
-        os.rename(f"{tmp}/b{b}/{part}", f"{src}/file_{b}.parquet")
-
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp_ntz, user_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    e = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
+    # unstaged: the result must not depend on batch order
+    stream = batch_file_stream(
+        spark, lambda: [e.filter(F.expr(_BUCKET_EXPR) == b) for b in range(3)]
     )
 
-    def summarize(batch_df: DataFrame, batch_id: int) -> None:
+    def summarize(batch_df: DataFrame) -> DataFrame:
+        # one log for both: summary rows (bucket, user_id, g) carry no
+        # t, and the per-bucket budget rows (bucket, t) carry no g
         counts = (
             batch_df.groupBy(
                 F.expr(_BUCKET_EXPR).alias("bucket"), "user_id"
             ).agg(F.count(F.lit(1)).alias("c"))
         )
         t_tbl = _mg_threshold(counts, ["bucket"], "user_id")
-        counts.join(t_tbl, "bucket").filter(F.col("c") > F.col("t")).select(
-            "bucket", "user_id", (F.col("c") - F.col("t")).alias("g")
-        ).write.mode("overwrite").format("parquet").save(
-            f"{sink}/summary/batch={batch_id}"
+        none = F.lit(None).cast("long")
+        return (
+            counts.join(t_tbl, "bucket")
+            .filter(F.col("c") > F.col("t"))
+            .select("bucket", "user_id", (F.col("c") - F.col("t")).alias("g"), none.alias("t"))
+            .unionByName(t_tbl.select("bucket", none.alias("user_id"), none.alias("g"), "t"))
         )
-        t_tbl.select("bucket", "t").write.mode("overwrite").format(
-            "parquet"
-        ).save(f"{sink}/budget/batch={batch_id}")
 
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(summarize)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    summaries = (
-        spark.read.option("basePath", f"{sink}/summary")
-        .parquet(f"{sink}/summary")
-        .select("user_id", "g")
-        .localCheckpoint()  # K rows/batch: the materialized summary
-    )
-    budgets = (
-        spark.read.option("basePath", f"{sink}/budget")
-        .parquet(f"{sink}/budget")
-        .select("t")
-        .localCheckpoint()
-    )
+    log = drain_batches(stream, summarize).localCheckpoint()  # ≤ K+1 rows/batch
+    summaries = log.filter(F.col("t").isNull()).select("user_id", "g")
+    budgets = log.filter(F.col("g").isNull()).select("t")
     cache[sf_dir] = (summaries, budgets)
     return cache[sf_dir]
 

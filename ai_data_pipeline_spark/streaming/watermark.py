@@ -52,7 +52,6 @@ deterministically instead of corrupting closed windows.
 from __future__ import annotations
 
 import datetime as _dt
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,14 +59,10 @@ from pyspark.sql import functions as F
 from ai_data_pipeline_spark.catalog import load_table
 from ai_data_pipeline_spark.registry import QueryDef
 from ai_data_pipeline_spark.session import session_scoped_cache
-from ai_data_pipeline_spark.sources.readers import scratch_dir
+from ai_data_pipeline_spark.streaming.windows import batch_file_stream, drain_batches
 
 WM_DELAY_DAYS = 2
 WM_MID_AGE_DAYS = 10  # admitted tier reaches back this many days from D0
-# withWatermark REQUIRES TIMESTAMP (Spark 4 rejects TIMESTAMP_NTZ as an
-# event-time column: EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE); the session
-# runs UTC, so instant-semantics timestamps preserve wall-clock here.
-_SCHEMA = "event_id long, ts timestamp, user_id long"
 
 
 def _late_drop_log(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -78,6 +73,9 @@ def _late_drop_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     if sf_dir in cache:
         return cache[sf_dir]
 
+    # ts is TIMESTAMP, as withWatermark requires (Spark 4 rejects
+    # TIMESTAMP_NTZ as an event-time column:
+    # EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE)
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id"
     )
@@ -86,10 +84,6 @@ def _late_drop_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch cuts and the nudge row derive from.
     max_ts = e.agg(F.max("ts")).collect()[0][0]
 
-    tmp = scratch_dir("swm_")
-    src, sink = f"{tmp}/src", f"{tmp}/log"
-    os.makedirs(src, exist_ok=True)
-
     if max_ts is None:
         parts = [e, e, e, e]  # empty corpus: four empty batches
     else:
@@ -97,7 +91,7 @@ def _late_drop_log(spark: SparkSession, sf_dir: str) -> DataFrame:
         day = F.col("ts").cast("date")
         lo = F.lit(d0 - _dt.timedelta(days=WM_MID_AGE_DAYS))
         hi = F.lit(d0 - _dt.timedelta(days=WM_DELAY_DAYS + 1))
-        nudge = spark.createDataFrame([(-1, max_ts, -1)], _SCHEMA)
+        nudge = spark.createDataFrame([(-1, max_ts, -1)], e.schema)
         parts = [
             e.filter((day >= lo) & (day <= hi)),
             e.filter(day > hi),
@@ -105,21 +99,8 @@ def _late_drop_log(spark: SparkSession, sf_dir: str) -> DataFrame:
             e.filter(day < lo),  # the planted late rows
         ]
 
-    for b, part_df in enumerate(parts):
-        part_df.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/b{b}")
-        part = next(
-            f for f in os.listdir(f"{tmp}/b{b}") if f.endswith(".parquet")
-        )
-        dst = f"{src}/file_{b}.parquet"
-        os.rename(f"{tmp}/b{b}/{part}", dst)
-        # mtime staging ON PURPOSE: arrival order is the contract here
-        os.utime(dst, (1_000_000_000 + 100 * b, 1_000_000_000 + 100 * b))
-
-    stream = (
-        spark.readStream.schema(_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    # mtime staging ON PURPOSE: arrival order is the contract here
+    stream = batch_file_stream(spark, lambda: parts, staged=True)
     agg = (
         stream.withWatermark("ts", f"{WM_DELAY_DAYS} days")
         # the nudge row advances event time at the watermark node but is
@@ -129,24 +110,15 @@ def _late_drop_log(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
 
-    def log_updates(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.select(
-            F.col("w.start").cast("date").alias("window_day"), "n_events"
-        ).write.mode("overwrite").format("parquet").save(
-            f"{sink}/batch={batch_id}"
-        )
-
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(log_updates)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     log = (
-        spark.read.option("basePath", sink)
-        .parquet(sink)
-        .select("window_day", "n_events", F.col("batch").cast("long").alias("b"))
+        drain_batches(
+            agg,
+            lambda upd: upd.select(
+                F.col("w.start").cast("date").alias("window_day"), "n_events"
+            ),
+            output_mode="update",
+        )
+        .select("window_day", "n_events", F.col("batch_id").cast("long").alias("b"))
         .localCheckpoint()  # |touched windows| rows per batch
     )
     cache[sf_dir] = log

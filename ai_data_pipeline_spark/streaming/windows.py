@@ -11,63 +11,39 @@ oracle-checked batch query ``q_events_window`` pins down.
 Scale posture: watermark bounds state; windowed agg state is keyed by
 (window, event_type) — low cardinality; file source here, Kafka in
 production (same plan shape).
+
+This module also holds the micro-batch harness every streaming query
+in the package runs on: ``batch_file_stream`` (one parquet file per
+micro-batch), ``drain_batches`` (the foreachBatch log drain) and
+``run_to_completion`` (the memory-sink drain).
 """
 
 from __future__ import annotations
+
+import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-def _events_schema(sf_dir: str) -> tuple[T.StructType, str]:
-    """Declared streaming schema + ts normalization mode, chosen by
-    probing the parquet physical type. The driver testdata's timestamp
-    encoding has already changed once between rounds (TIMESTAMP(NANOS)
-    → TIMESTAMP(MICROS, adj=false)); probing keeps the streaming path
-    robust to a re-encode either way, mirroring catalog.load_table's
-    dual normalization."""
-    import pyarrow.parquet as pq
-
-    t = pq.read_schema(f"{sf_dir}/events.parquet").field("ts").type
-    unit = getattr(t, "unit", None)
-    tz = getattr(t, "tz", None)
-    if unit == "ns":
-        ts_field, mode = T.LongType(), "nanos"  # read raw ns longs
-    elif tz is None:
-        ts_field, mode = T.TimestampNTZType(), "ntz"
-    else:
-        ts_field, mode = T.TimestampType(), "utc"
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_field),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    return schema, mode
-
+from ai_data_pipeline_spark.catalog import load_table, normalize_timestamps, raw_table
+from ai_data_pipeline_spark.session import session_scoped_cache
+from ai_data_pipeline_spark.sources.readers import scratch_dir
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-based streaming source over the events parquet (one file =
-    one micro-batch under availableNow); ts normalized per the probed
-    physical encoding (session TZ is UTC, so wall-clock is preserved)."""
-    schema, mode = _events_schema(sf_dir)
-    if mode == "nanos":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    one micro-batch under availableNow), under the schema the parquet
+    itself reports and with ts normalized exactly as load_table does
+    (session TZ is UTC, so wall-clock is preserved)."""
+    schema = raw_table(spark, sf_dir, "events").schema
     raw = (
         spark.readStream.schema(schema)
         .format("parquet")
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir)
     )
-    if mode == "nanos":
-        return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    if mode == "ntz":
-        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    return normalize_timestamps(raw, "events")
 
 
 def windowed_counts_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
@@ -190,6 +166,92 @@ def user_stats_batch(events: DataFrame) -> DataFrame:
     )
 
 
+# --- the micro-batch harness ----------------------------------------------
+#
+# Every streaming query in the package runs on these three: a file
+# stream over a list of batch DataFrames, a foreachBatch drain into a
+# batch_id-partitioned log, and a memory-sink drain.
+
+_STAGED_MTIME = 1_700_000_000  # staged files get mtimes 60 s apart from here
+
+
+def batch_file_stream(
+    spark: SparkSession,
+    batches: Callable[[], list[DataFrame]],
+    memo: tuple | None = None,
+    staged: bool = False,
+) -> DataFrame:
+    """A file stream with one micro-batch per DataFrame of ``batches()``:
+    each is written as one ``file_<i>.parquet`` and read back with
+    maxFilesPerTrigger=1, under the schema of the batches it wrote.
+
+    Unstaged, the order in which the file source takes the files is
+    left to it, so a query whose answer must not depend on arrival
+    order is exercised without that assumption. ``staged`` sets the
+    mtimes in list order (the file source orders by modification time)
+    for the queries whose contract IS the arrival order.
+
+    With a ``memo`` key the files are written once per (session, key)
+    and reused: the batches are a deterministic function of an
+    immutable sf_dir, the files are read-only to their consumers, and
+    each consumer keeps its own sink and checkpoint. ``batches`` is
+    called only when the files are built."""
+    cache = session_scoped_cache(spark, "batch_file_source")
+    hit = cache.get(memo)
+    if hit is None:
+        dfs = batches()
+        tmp = scratch_dir("batches_")
+        src = f"{tmp}/src"
+        os.makedirs(src)
+        for i, df in enumerate(dfs):
+            df.coalesce(1).write.parquet(f"{tmp}/b{i}")
+            part = next(f for f in os.listdir(f"{tmp}/b{i}") if f.endswith(".parquet"))
+            dst = f"{src}/file_{i}.parquet"
+            os.rename(f"{tmp}/b{i}/{part}", dst)
+            if staged:
+                os.utime(dst, (_STAGED_MTIME + 60 * i,) * 2)
+        hit = (src, dfs[0].schema)
+        if memo is not None:
+            cache[memo] = hit
+    src, schema = hit
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+
+
+def drain_batches(
+    stream: DataFrame,
+    per_batch: Callable[[DataFrame], DataFrame],
+    output_mode: str = "append",
+) -> DataFrame:
+    """Drain a finite stream with availableNow through foreachBatch and
+    return the log it wrote. Each micro-batch's ``per_batch(batch_df)``
+    lands in its own ``batch_id=<n>`` directory with per-directory
+    overwrite, so a replayed batch replaces itself instead of
+    duplicating: the foreachBatch half of exactly-once (the
+    checkpoint's offset log is the other half). Executors write
+    straight to the log; nothing passes through the driver. The log
+    reads back under the schema the batches wrote, plus ``batch_id``,
+    so no schema-inference pass runs."""
+    sink = scratch_dir("log_")
+    written = {}
+
+    def write(batch_df: DataFrame, batch_id: int) -> None:
+        out = per_batch(batch_df)
+        written["schema"] = out.schema
+        out.write.mode("overwrite").parquet(f"{sink}/batch_id={batch_id}")
+
+    (
+        stream.writeStream.outputMode(output_mode)
+        .foreachBatch(write)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    schema = T.StructType(
+        written["schema"].fields + [T.StructField("batch_id", T.IntegerType())]
+    )
+    return stream.sparkSession.read.schema(schema).option("basePath", sink).parquet(sink)
+
+
 def run_to_completion(
     stream_df: DataFrame, query_name: str, output_mode: str = "complete"
 ) -> DataFrame:
@@ -197,14 +259,14 @@ def run_to_completion(
     return the materialized result (complete mode for aggregations;
     update mode for stateful operators, whose memory-sink rows are the
     per-batch emissions)."""
-    q = (
+    (
         stream_df.writeStream.outputMode(output_mode)
         .format("memory")
         .queryName(query_name)
         .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    q.awaitTermination()
     return stream_df.sparkSession.sql(f"SELECT * FROM {query_name}")
 
 
@@ -431,8 +493,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast hint would pin an OOM plan at cluster scale; at test
     scale the runtime still picks broadcast from actual sizes. On
     finite input it equals the batch join, which is the oracle."""
-    from ai_data_pipeline_spark.catalog import load_table
-
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"),
         F.col("c_mktsegment").alias("segment"),

@@ -102,15 +102,11 @@ def test_profiler_emits_all_columns_on_empty_table(spark, empty_sf_dir):
         ("corpus", "corpus_split_leakage"),
         # empty-sink read-back (schema-explicit reader contract) and
         # the MLlib LSH empty-index guard — both found by running the
-        # FULL contract against empty tables; the stream_* family is
-        # excluded because its fixture writer (not the operator)
-        # requires at least one source row to build stream files
+        # FULL contract against empty tables
         ("readers", "partitioned_roundtrip_events"),
         ("similarity", "ann_mllib_brp"),
         # round-9: codec roundtrips, log-star components, the decimal
-        # priority-sample rewrite, and the streaming profiler (whose
-        # fixture writer handles zero-row halves, unlike the events
-        # three-batch source)
+        # priority-sample rewrite, and the streaming profiler
         ("multimodal", "multimodal_png_roundtrip"),
         ("multimodal", "multimodal_bmp_roundtrip"),
         ("multimodal", "multimodal_wav_roundtrip"),
@@ -160,6 +156,19 @@ def test_profiler_emits_all_columns_on_empty_table(spark, empty_sf_dir):
         ("aqp", "aqp_bootstrap_ratio"),
         ("similarity", "ann_ivf_pq_rerank"),
         ("unigram", "corpus_unigram_converge"),
+        # every query that writes its own micro-batch files through the
+        # shared batch-file source (zero-row batch files included), and
+        # the Python-source stream drained by the shared memory sink. The
+        # ten read_events_stream queries stay out: this fixture writes
+        # events.parquet as a directory, which their glob-filtered file
+        # stream never reads, so they would pass without reading a file
+        ("streaming", "stream_index_dedup"),
+        ("streaming", "stream_late_data_drop"),
+        ("streaming", "stream_first_touch"),
+        ("streaming.ivf", "stream_ivf_index_upsert"),
+        ("streaming.ivf", "stream_ivf_cell_migration"),
+        ("streaming.sketch", "stream_mg_heavy_hitters"),
+        ("sources", "pyds_stream_agg"),
     ],
 )
 def test_operator_runs_clean_on_empty_tables(spark, empty_sf_dir, family, qname):

@@ -48,37 +48,42 @@ def test_lm_quality_ctx_rollup_same_types(spark):
 
 def test_profile_stream_source_memoized_per_session(spark):
     """The two-file document source is built once per (session,
-    sf_dir) and reused; the files must persist for the reuse."""
+    sf_dir) in the batch-file source's memo and reused; the files must
+    persist for the reuse."""
     import os
 
-    from ai_data_pipeline_spark.streaming.advanced import (
-        _profile_stream_source_dir,
-    )
+    from ai_data_pipeline_spark.session import session_scoped_cache
+    from ai_data_pipeline_spark.streaming.advanced import _profile_stream
 
-    a = _profile_stream_source_dir(spark, SF_DIR)
-    b = _profile_stream_source_dir(spark, SF_DIR)
-    assert a == b
-    assert sorted(os.listdir(a)) == ["file_0.parquet", "file_1.parquet"]
+    cache = session_scoped_cache(spark, "batch_file_source")
+    key = ("profile_documents", SF_DIR)
+    _profile_stream(spark, SF_DIR)
+    src, schema = cache[key]
+    again = _profile_stream(spark, SF_DIR)
+    assert cache[key] == (src, schema)
+    assert src in again._jdf.queryExecution().analyzed().toString()
+    assert sorted(os.listdir(src)) == ["file_0.parquet", "file_1.parquet"]
 
 
 def test_stream_index_dedup_recomputes_per_call_with_memoized_source(spark):
-    """The source fixture is memoized but the dedup computation is NOT:
-    two invocations must independently drain their own candidate logs
-    and agree exactly (and with the reversed-batch adversarial order,
-    which keys a separate memo entry)."""
+    """The source files are memoized but the dedup computation is NOT:
+    two invocations must drain their own candidate logs from the same
+    source files and agree exactly (and with the reversed-batch
+    adversarial order, which keys a separate memo entry)."""
     from ai_data_pipeline_spark.session import session_scoped_cache
     from ai_data_pipeline_spark.streaming.advanced import stream_index_dedup
 
-    r1 = sorted(map(tuple, stream_index_dedup(spark, SF_DIR).collect()))
-    cache = session_scoped_cache(spark, "stream_index_dedup_source")
-    assert (SF_DIR, False) in cache
-    r2 = sorted(map(tuple, stream_index_dedup(spark, SF_DIR).collect()))
+    def run(reverse=False):
+        df = stream_index_dedup(spark, SF_DIR, _reverse_batches=reverse)
+        return sorted(map(tuple, df.collect())), set(df.inputFiles())
+
+    cache = session_scoped_cache(spark, "batch_file_source")
+    r1, log1 = run()
+    src = cache[("index_dedup", SF_DIR, False)]
+    r2, log2 = run()
+    assert cache[("index_dedup", SF_DIR, False)] == src
+    assert log1 and log2 and not log1 & log2  # each call wrote its own log
     assert r1 == r2
-    r3 = sorted(
-        map(
-            tuple,
-            stream_index_dedup(spark, SF_DIR, _reverse_batches=True).collect(),
-        )
-    )
+    r3, _ = run(reverse=True)
     assert r1 == r3  # arrival-order invariance, memoized per order key
-    assert (SF_DIR, True) in cache
+    assert cache[("index_dedup", SF_DIR, True)][0] != src[0]

@@ -47,3 +47,24 @@ def test_two_sessions_do_not_share_entries():
     a, b = _FakeSession(), _FakeSession()
     session_scoped_cache(a, "ns")["k"] = "a"
     assert "k" not in session_scoped_cache(b, "ns")
+
+
+def test_operators_leave_no_session_cache_entry(spark):
+    """Shared intermediates are call-scoped localCheckpoints, never a
+    .cache() that nothing unpersists: such an entry lives as long as
+    the session in Spark's CacheManager and rewrites the plans of later
+    queries that share its subtree (here the MinHash signature relation
+    that dedup_lsh_recall also builds)."""
+    from ai_data_pipeline_spark.operators.dedup import (
+        dedup_lsh_recall,
+        dedup_minhash_lsh,
+    )
+    from ai_data_pipeline_spark.operators.similarity import emb_kmeans_fixed_point
+    from tests.conftest import SF_DIR
+
+    spark.catalog.clearCache()  # start from an empty CacheManager
+    dedup_minhash_lsh(spark, SF_DIR).collect()
+    emb_kmeans_fixed_point(spark, SF_DIR).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    plan = dedup_lsh_recall(spark, SF_DIR)._jdf.queryExecution().executedPlan()
+    assert "InMemoryTableScan" not in plan.toString()

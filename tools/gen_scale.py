@@ -119,18 +119,17 @@ def replicate(spark, src: str, dst: str, factor: int) -> None:
 
             out = reduce(lambda a, b: a.unionByName(b), parts)
         # match the driver testdata's physical timestamp encoding
-        # (TIMESTAMP MICROS adjustedToUTC=false == Spark NTZ): Spark's
-        # default TimestampType write is INT96, which the streaming
-        # schema probes (and load_table's normalization table) do not
-        # handle — they expect exactly the testdata encodings
+        # (TIMESTAMP MICROS adjustedToUTC=false == Spark NTZ) rather
+        # than Spark's default INT96, so generated tables exercise the
+        # same catalog.normalize_timestamps path as the testdata
         for f_name, kind in TABLES.get(table, []):
             if kind == "timestamp":
                 out = out.withColumn(
                     f_name, F.col(f_name).cast("timestamp_ntz")
                 )
         # single FILE per table (not a directory), matching the driver
-        # testdata layout — the streaming fixture writers and schema
-        # probes read {table}.parquet as a plain file
+        # testdata layout — read_events_stream's glob-filtered file
+        # stream reads {table}.parquet as a plain file
         tmp_dir = f"{dst}/_tmp_{table}"
         out.coalesce(1).write.mode("overwrite").parquet(tmp_dir)
         part = next(
