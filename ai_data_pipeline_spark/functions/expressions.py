@@ -11,12 +11,46 @@ is identical in Spark and DuckDB, decimal summation is exact and
 order-independent (double summation is not, and partial-aggregation
 order differs between engines), and the final double cast is
 deterministic.
+
+Key hashing: a key becomes a deterministic integer or digest that is
+identical in both engines only through the builders below, each a
+Spark ``Column`` with its DuckDB SQL twin beside it (``hex_int`` /
+``hex_int_sql``, ``text_fingerprint`` / ``text_fingerprint_sql``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+# Java's \s and DuckDB's (RE2) \s disagree on \x0B; spelling the class
+# out makes both engines collapse the same characters.
+WHITESPACE_RUN = r"[\t\n\x0B\f\r ]+"
+
+
+def hex_int(hex: Column, n: int, start: int = 1) -> Column:
+    """The ``n`` hex digits of ``hex`` from 1-based ``start`` as a long —
+    an md5 prefix turned into a bucket, a sample draw or a parsed header
+    field. Both engines agree only while ``n <= 15``: 16 digits can
+    exceed int64, and then Spark raises CAST_INVALID_INPUT and DuckDB a
+    ConversionException."""
+    return F.conv(F.substring(hex, start, n), 16, 10).cast("long")
+
+
+def hex_int_sql(hex: str, n: int, start: int = 1) -> str:
+    """DuckDB twin of ``hex_int``."""
+    return f"CAST(('0x' || substr({hex}, {start}, {n})) AS BIGINT)"
+
+
+def text_fingerprint(col: Column) -> Column:
+    """Exact-content fingerprint: md5 of the lowercased, trimmed text
+    with every whitespace run collapsed to one space."""
+    return F.md5(F.regexp_replace(F.trim(F.lower(col)), WHITESPACE_RUN, " "))
+
+
+def text_fingerprint_sql(col: str) -> str:
+    """DuckDB twin of ``text_fingerprint``."""
+    return f"md5(regexp_replace(trim(lower({col})), '{WHITESPACE_RUN}', ' ', 'g'))"
 
 
 def dec_sum(col: Column, scale: int = 4) -> Column:

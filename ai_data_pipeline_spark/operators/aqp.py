@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
+from ai_data_pipeline_spark.functions.expressions import hex_int, hex_int_sql
 from ai_data_pipeline_spark.registry import QueryDef
 
 AQP_HEX = 12  # 48-bit hash: uniform mod small denominators, int64-safe
@@ -46,18 +47,13 @@ AQP_Z = 5  # CI half-width in standard errors (house 5σ flag convention)
 AQP_BUDGET = 10_000  # rows of sampling budget the allocation splits
 
 
-def _row_hash_expr() -> F.Column:
-    key = F.concat_ws(
+def _row_key() -> F.Column:
+    return F.concat_ws(
         "-", F.col("l_orderkey").cast("string"), F.col("l_linenumber").cast("string")
     )
-    return F.conv(F.substring(F.md5(key), 1, AQP_HEX), 16, 10).cast("long")
 
 
-def _row_hash_sql() -> str:
-    return (
-        "CAST(('0x' || substr(md5(CAST(l_orderkey AS VARCHAR) || '-' || "
-        f"CAST(l_linenumber AS VARCHAR)), 1, {AQP_HEX})) AS BIGINT)"
-    )
+_ROW_KEY_SQL = "CAST(l_orderkey AS VARCHAR) || '-' || CAST(l_linenumber AS VARCHAR)"
 
 
 # Revenue in exact integer cents: the double product is IEEE-identical
@@ -100,7 +96,7 @@ def aqp_sample_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     base = (
         li.select(
-            _row_hash_expr().alias("h"),
+            hex_int(F.md5(_row_key()), AQP_HEX).alias("h"),
             _rev_cents_expr().alias("cents"),
         )
         .withColumn("member", (F.col("h") % AQP_DENOM == 0).cast("long"))
@@ -138,7 +134,7 @@ def aqp_sample_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sample_estimate_oracle() -> str:
     return f"""
 WITH base AS (
-  SELECT {_row_hash_sql()} AS h, {_REV_CENTS_SQL} AS cents
+  SELECT {hex_int_sql(f'md5({_ROW_KEY_SQL})', AQP_HEX)} AS h, {_REV_CENTS_SQL} AS cents
   FROM lineitem
 ), agg AS (
   SELECT count(*) AS n_total,
@@ -175,7 +171,7 @@ def aqp_sample_staircase(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate, realized error, and checked 5σ coverage."""
     li = load_table(spark, sf_dir, "lineitem")
     base = li.select(
-        _row_hash_expr().alias("h"), _rev_cents_expr().alias("cents")
+        hex_int(F.md5(_row_key()), AQP_HEX).alias("h"), _rev_cents_expr().alias("cents")
     ).withColumn("dollars", F.expr("cents div 100"))
     # Sample-side sums coalesce to 0 (empty-input agreement with the
     # oracle's `coalesce(... FILTER ..., 0)` — see aqp_sample_estimate).
@@ -243,7 +239,7 @@ def _staircase_oracle() -> str:
     union = "\n  UNION ALL\n".join(per_denom)
     return f"""
 WITH base AS (
-  SELECT {_row_hash_sql()} AS h, {_REV_CENTS_SQL} AS cents,
+  SELECT {hex_int_sql(f'md5({_ROW_KEY_SQL})', AQP_HEX)} AS h, {_REV_CENTS_SQL} AS cents,
          {_REV_CENTS_SQL} // 100 AS dollars
   FROM lineitem
 ), tall AS (
@@ -382,7 +378,7 @@ def aqp_group_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = (
         li.select(
             "l_returnflag",
-            _row_hash_expr().alias("h"),
+            hex_int(F.md5(_row_key()), AQP_HEX).alias("h"),
             _rev_cents_expr().alias("cents"),
         )
         .withColumn("member", (F.col("h") % AQP_DENOM == 0).cast("long"))
@@ -414,7 +410,7 @@ def aqp_group_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _group_estimate_oracle() -> str:
     return f"""
 WITH base AS (
-  SELECT l_returnflag, {_row_hash_sql()} AS h, {_REV_CENTS_SQL} AS cents
+  SELECT l_returnflag, {hex_int_sql(f'md5({_ROW_KEY_SQL})', AQP_HEX)} AS h, {_REV_CENTS_SQL} AS cents
   FROM lineitem
 ), agg AS (
   SELECT l_returnflag,
@@ -440,18 +436,6 @@ FROM agg
 """
 
 
-# Single-key hashing reuses the KMV tier's helpers (sketches.py) —
-# ONE copy of the cross-engine md5-prefix contract; KMV_HEX == AQP_HEX
-# is asserted at import so the two tiers cannot silently diverge.
-from ai_data_pipeline_spark.operators.sketches import (  # noqa: E402
-    KMV_HEX as _SKETCH_HEX,
-    _kmv_hash_expr as _okey_hash_expr,
-    _kmv_hash_sql as _okey_hash_sql,
-)
-
-assert _SKETCH_HEX == AQP_HEX
-
-
 def aqp_universe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AQP across a JOIN — the case row-independent sampling gets
     wrong: Bernoulli-sample both sides at 1/64 and the join of the
@@ -469,11 +453,12 @@ def aqp_universe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     o = orders.filter(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")).select(
-        "o_orderkey", _okey_hash_expr("o_orderkey").alias("ho")
+        "o_orderkey",
+        hex_int(F.md5(F.col("o_orderkey").cast("string")), AQP_HEX).alias("ho"),
     )
     l = li.select(
         "l_orderkey",
-        _okey_hash_expr("l_orderkey").alias("hl"),
+        hex_int(F.md5(F.col("l_orderkey").cast("string")), AQP_HEX).alias("hl"),
         _rev_cents_expr().alias("cents"),
     )
     # side A: join of the two key-samples
@@ -519,10 +504,10 @@ def aqp_universe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _universe_join_oracle() -> str:
     return f"""
 WITH o AS (
-  SELECT o_orderkey, {_okey_hash_sql("o_orderkey")} AS ho
+  SELECT o_orderkey, {hex_int_sql('md5(CAST(o_orderkey AS VARCHAR))', AQP_HEX)} AS ho
   FROM orders WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
 ), l AS (
-  SELECT l_orderkey, {_okey_hash_sql("l_orderkey")} AS hl,
+  SELECT l_orderkey, {hex_int_sql('md5(CAST(l_orderkey AS VARCHAR))', AQP_HEX)} AS hl,
          {_REV_CENTS_SQL} AS cents
   FROM lineitem
 ), a AS (
@@ -576,7 +561,7 @@ def aqp_jackknife(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit band. One pruned scan, one 8-row aggregate."""
     li = load_table(spark, sf_dir, "lineitem")
     base = li.select(
-        _row_hash_expr().alias("h"), _rev_cents_expr().alias("cents")
+        hex_int(F.md5(_row_key()), AQP_HEX).alias("h"), _rev_cents_expr().alias("cents")
     ).filter(F.col("h") % AQP_DENOM == 0)
     # ONE sample pass: per-subsample sum plus the pooled second moment
     # (dollars²) the analytic SE needs.
@@ -630,7 +615,7 @@ def _jackknife_oracle() -> str:
     se_ht = f"{_ci_cents_sql('ssq', AQP_DENOM)} // {AQP_Z}"
     return f"""
 WITH base AS (
-  SELECT {_row_hash_sql()} AS h, {_REV_CENTS_SQL} AS cents
+  SELECT {hex_int_sql(f'md5({_ROW_KEY_SQL})', AQP_HEX)} AS h, {_REV_CENTS_SQL} AS cents
   FROM lineitem
 ), samp AS (
   SELECT h, cents FROM base WHERE h % {AQP_DENOM} = 0
@@ -727,18 +712,11 @@ def aqp_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (1.03 s lazy vs 1.05 s checkpointed): the duplicate scan
     # parallelizes while the checkpoint serializes a blocking job.
     base = li.select(
-        F.concat_ws(
-            "-",
-            F.col("l_orderkey").cast("string"),
-            F.col("l_linenumber").cast("string"),
-        ).alias("key"),
-        _row_hash_expr().alias("h"),
+        _row_key().alias("key"),
+        hex_int(F.md5(_row_key()), AQP_HEX).alias("h"),
         _rev_cents_expr().alias("cents"),
     ).filter(F.col("h") % AQP_DENOM == 0)
-    u = (
-        f"CAST(conv(substring(md5(concat(key, '|', CAST(b AS STRING))), 1,"
-        f" {AQP_HEX}), 16, 10) AS BIGINT) % 1000000"
-    )
+    u = hex_int(F.md5(F.concat("key", F.lit("|"), F.col("b").cast("string"))), AQP_HEX)
     # the draw is projected ONCE as a column and the CASE ladder
     # compares the column — without this, each of the 8 WHEN branches
     # re-inlines the md5/conv expression and an engine without CSE
@@ -749,7 +727,7 @@ def aqp_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cents",
             F.explode(F.expr(f"sequence(0, {AQP_BOOT_B - 1})")).alias("b"),
         )
-        .withColumn("u", F.expr(u))
+        .withColumn("u", u % 1000000)
         .select("b", (F.expr(_boot_weight_sql("u")) * F.col("cents")).alias("wc"))
     )
     per_rep = reps.groupBy("b").agg(
@@ -793,16 +771,13 @@ def aqp_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bootstrap_oracle() -> str:
-    u = (
-        "CAST(('0x' || substr(md5(key || '|' || CAST(b AS VARCHAR)), 1,"
-        f" {AQP_HEX})) AS BIGINT) % 1000000"
-    )
+    u = hex_int_sql("md5(key || '|' || CAST(b AS VARCHAR))", AQP_HEX) + " % 1000000"
     se_ht = f"{_ci_cents_sql('ssq', AQP_DENOM)} // {AQP_Z}"
     return f"""
 WITH base AS (
   SELECT CAST(l_orderkey AS VARCHAR) || '-' || CAST(l_linenumber AS VARCHAR)
            AS key,
-         {_row_hash_sql()} AS h, {_REV_CENTS_SQL} AS cents
+         {hex_int_sql(f'md5({_ROW_KEY_SQL})', AQP_HEX)} AS h, {_REV_CENTS_SQL} AS cents
   FROM lineitem
 ), samp AS (
   SELECT key, cents FROM base WHERE h % {AQP_DENOM} = 0
@@ -882,7 +857,7 @@ def aqp_bootstrap_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     rows = li.select(
         F.col("l_orderkey").alias("okey"),
-        _okey_hash_expr("l_orderkey").alias("h"),
+        hex_int(F.md5(F.col("l_orderkey").cast("string")), AQP_HEX).alias("h"),
         _rev_cents_expr().alias("cents"),
     )
     pop = rows.agg(
@@ -909,17 +884,15 @@ def aqp_bootstrap_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.expr("(cents div 10000) * (cents div 10000)")), F.lit(0)
         ).alias("syy_u"),
     )
-    u = (
-        f"CAST(conv(substring(md5(concat(CAST(okey AS STRING), '|', "
-        f"CAST(b AS STRING))), 1, {AQP_HEX}), 16, 10) AS BIGINT) % 1000000"
-    )
+    key = F.concat(F.col("okey").cast("string"), F.lit("|"), F.col("b").cast("string"))
+    u = hex_int(F.md5(key), AQP_HEX)
     reps = (
         samp.select(
             "okey",
             "cents",
             F.explode(F.expr(f"sequence(0, {AQP_BOOT_B - 1})")).alias("b"),
         )
-        .withColumn("u", F.expr(u))
+        .withColumn("u", u % 1000000)
         .select("b", F.expr(_boot_weight_sql("u")).alias("w"), "cents")
     )
     per_rep = (
@@ -994,13 +967,11 @@ def aqp_bootstrap_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bootstrap_ratio_oracle() -> str:
-    u = (
-        "CAST(('0x' || substr(md5(CAST(okey AS VARCHAR) || '|' || "
-        f"CAST(b AS VARCHAR)), 1, {AQP_HEX})) AS BIGINT) % 1000000"
-    )
+    key = "CAST(okey AS VARCHAR) || '|' || CAST(b AS VARCHAR)"
+    u = hex_int_sql(f"md5({key})", AQP_HEX) + " % 1000000"
     return f"""
 WITH rws AS (
-  SELECT l_orderkey AS okey, {_okey_hash_sql("l_orderkey")} AS h,
+  SELECT l_orderkey AS okey, {hex_int_sql('md5(CAST(l_orderkey AS VARCHAR))', AQP_HEX)} AS h,
          {_REV_CENTS_SQL} AS cents
   FROM lineitem
 ), pop AS (

@@ -26,10 +26,11 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
+from ai_data_pipeline_spark.functions.expressions import hex_int, hex_int_sql
 from ai_data_pipeline_spark.operators.text import (
     token_arrays,
     word_ngrams,
@@ -151,6 +152,25 @@ FROM cnt GROUP BY doc_id
 """
 
 
+def _split() -> Column:
+    """train/val/test by md5(doc_id) bucket 0-99 against SPLIT_PCT."""
+    bucket = hex_int(F.md5(F.col("doc_id").cast("string")), 4) % 100
+    return (
+        F.when(bucket < SPLIT_PCT[0], "train")
+        .when(bucket < SPLIT_PCT[1], "val")
+        .otherwise("test")
+    )
+
+
+def _split_sql() -> str:
+    """DuckDB twin of ``_split``."""
+    bucket = f"{hex_int_sql('md5(CAST(doc_id AS VARCHAR))', 4)} % 100"
+    return (
+        f"CASE WHEN {bucket} < {SPLIT_PCT[0]} THEN 'train' "
+        f"WHEN {bucket} < {SPLIT_PCT[1]} THEN 'val' ELSE 'test' END"
+    )
+
+
 def corpus_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic train/val/test assignment by content-stable hash:
     md5(doc_id) bucket 0-99 → 96/2/2 split, rolled up per (split,
@@ -158,19 +178,9 @@ def corpus_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-runs — rand(seed) does not (partition-order dependent), which is
     why this is THE split idiom for 100 TB corpora."""
     d = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long")
-        % 100
-    )
-    split = (
-        F.when(bucket < SPLIT_PCT[0], "train")
-        .when(bucket < SPLIT_PCT[1], "val")
-        .otherwise("test")
-    )
     return (
         d.select(
-            split.alias("split"),
+            _split().alias("split"),
             "source",
             F.size(F.split(F.col("text"), r"\s+")).alias("n_tok"),
             "doc_id",
@@ -189,13 +199,10 @@ SPLIT_ASSIGN_ORACLE = rf"""
 WITH b AS (
   SELECT doc_id, source,
          len(string_split_regex(text, '\s+')) AS n_tok,
-         CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS BIGINT)
-           % 100 AS bucket
+         {_split_sql()} AS split
   FROM documents
 )
-SELECT CASE WHEN bucket < {SPLIT_PCT[0]} THEN 'train'
-            WHEN bucket < {SPLIT_PCT[1]} THEN 'val'
-            ELSE 'test' END AS split,
+SELECT split,
        source,
        count(*) AS n_docs,
        CAST(sum(n_tok) AS BIGINT) AS n_tokens,
@@ -233,19 +240,9 @@ def corpus_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     split keys. The same bucketed-candidate discipline as the dedup
     family — no pair blowup, no corpus broadcast."""
     d = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long")
-        % 100
-    )
-    split = (
-        F.when(bucket < SPLIT_PCT[0], "train")
-        .when(bucket < SPLIT_PCT[1], "val")
-        .otherwise("test")
-    )
     base = d.select(
         "doc_id",
-        split.alias("split"),
+        _split().alias("split"),
         F.split(F.lower(F.col("text")), r"\s+").alias("l"),
     )
     grams = (
@@ -287,11 +284,7 @@ def corpus_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 SPLIT_LEAKAGE_ORACLE = rf"""
 WITH b AS (
   SELECT doc_id,
-         CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))
-                   AS BIGINT) % 100 < {SPLIT_PCT[0]} THEN 'train'
-              WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))
-                   AS BIGINT) % 100 < {SPLIT_PCT[1]} THEN 'val'
-              ELSE 'test' END AS split,
+         {_split_sql()} AS split,
          string_split_regex(lower(text), '\s+') AS l
   FROM documents
 ), grams AS (
@@ -401,9 +394,7 @@ def corpus_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(F.split(F.col("text"), r"\s+")).alias("n_tok"),
         (
-            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-            .cast("long")
-            % PACK_STREAMS
+            hex_int(F.md5(F.col("doc_id").cast("string")), 4) % PACK_STREAMS
         ).alias("stream"),
         F.md5(F.col("doc_id").cast("string")).alias("ord"),
     )
@@ -443,7 +434,7 @@ PACKING_ORACLE = rf"""
 WITH d AS (
   SELECT doc_id,
          len(string_split_regex(text, '\s+')) AS n_tok,
-         CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS BIGINT)
+         {hex_int_sql('md5(CAST(doc_id AS VARCHAR))', 4)}
            % {PACK_STREAMS} AS stream,
          md5(CAST(doc_id AS VARCHAR)) AS ord
   FROM documents
@@ -577,9 +568,7 @@ def corpus_domain_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(F.split(F.col("text"), r"\s+")).alias("n_tok"),
         F.md5(F.col("doc_id").cast("string")).alias("h"),
-    ).withColumn(
-        "bkt", F.conv(F.substring("h", 1, DOMAIN_CAP_BUCKET_HEX), 16, 10).cast("int")
-    )
+    ).withColumn("bkt", hex_int(F.col("h"), DOMAIN_CAP_BUCKET_HEX))
     bcounts = d.groupBy("source", "bkt").agg(F.count(F.lit(1)).alias("bn"))
     wb = Window.partitionBy("source").orderBy("bkt")  # ≤ 256 rows/domain
     cum = bcounts.withColumn("cum", F.sum("bn").over(wb))

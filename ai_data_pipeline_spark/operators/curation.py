@@ -45,7 +45,11 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
-from ai_data_pipeline_spark.functions.expressions import topk_per_key
+from ai_data_pipeline_spark.functions.expressions import (
+    hex_int,
+    hex_int_sql,
+    topk_per_key,
+)
 from ai_data_pipeline_spark.operators.text import token_arrays, word_ngrams
 from ai_data_pipeline_spark.registry import QueryDef
 
@@ -243,10 +247,7 @@ def corpus_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "shard",
-            F.pmod(
-                F.conv(F.substring("h", 1, 8), 16, 10).cast("long"),
-                F.lit(N_SHARDS),
-            ),
+            F.pmod(hex_int(F.col("h"), 8), F.lit(N_SHARDS)),
         )
     )
     stats = d.groupBy("shard").agg(
@@ -277,7 +278,7 @@ WITH d AS (
   FROM documents
 ), s AS (
   SELECT doc_id, n_chars, n_tokens, h,
-         CAST(('0x' || substr(h, 1, 8)) AS BIGINT) % {N_SHARDS} AS shard
+         {hex_int_sql('h', 8)} % {N_SHARDS} AS shard
   FROM d
 ), agg AS (
   SELECT shard, count(*) AS n_docs,
@@ -526,9 +527,7 @@ def corpus_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.lit(EPOCH_W_MIN),
     )
-    u60 = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    u60 = hex_int(F.md5(F.col("doc_id").cast("string")), 15)
     scored = (
         docs.join(sc, "doc_id", "left")
         .select("doc_id", "source", w.alias("w_ppm"), u60.alias("u60"))
@@ -562,8 +561,7 @@ scored AS (
   SELECT d.doc_id, d.source,
          greatest(least({EPOCH_W_BASE} + COALESCE(sc.score_ppm, 0),
                         {EPOCH_W_MAX}), {EPOCH_W_MIN}) AS w_ppm,
-         CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))
-              AS BIGINT) AS u60
+         {hex_int_sql('md5(CAST(d.doc_id AS VARCHAR))', 15)} AS u60
   FROM documents d LEFT JOIN sc ON d.doc_id = sc.doc_id
 )
 SELECT doc_id, source, w_ppm, u60,

@@ -30,6 +30,12 @@ from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
 from ai_data_pipeline_spark.functions import codecs, spread
+from ai_data_pipeline_spark.functions.expressions import (
+    hex_int,
+    hex_int_sql,
+    text_fingerprint,
+    text_fingerprint_sql,
+)
 from ai_data_pipeline_spark.registry import QueryDef
 
 FEATURE_SCHEMA = "doc_id long, source string, n_bytes long, first_byte int, last_byte int, byte_sum long"
@@ -314,12 +320,6 @@ FROM flagged GROUP BY doc_id
 CROSSMODAL_OFF = 10_000_000  # planted-twin doc_id re-key offset
 
 
-def _crossmodal_fp_sql(text: str) -> str:
-    """Exact-text fingerprint (normalized md5) — the stream_index_dedup
-    normalization, shared verbatim by both engines."""
-    return f"md5(regexp_replace(trim(lower({text})), '\\s+', ' ', 'g'))"
-
-
 def _augmented_corpus(docs: DataFrame) -> DataFrame:
     """documents + three deterministic planted twin channels (the
     er_fuzzy_linkage discipline — each channel provably fires at every
@@ -382,9 +382,7 @@ def crossmodal_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     aug = _augmented_corpus(docs)
     fp = aug.select(
         "doc_id",
-        F.md5(
-            F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
-        ).alias("fp"),
+        text_fingerprint(F.col("text")).alias("fp"),
     )
     ph = _phash_relation(aug).select("doc_id", "phash")
     j = fp.join(ph, "doc_id").localCheckpoint()  # fixed-width, 3 consumers
@@ -453,7 +451,7 @@ WITH aug AS (
                        THEN (1 << tile) ELSE 0 END) AS BIGINT) AS phash
   FROM flagged GROUP BY doc_id
 ), joined AS (
-  SELECT a.doc_id, {_crossmodal_fp_sql("a.text")} AS fp, ph.phash
+  SELECT a.doc_id, {text_fingerprint_sql("a.text")} AS fp, ph.phash
   FROM aug a JOIN ph USING (doc_id)
 ), t AS (
   SELECT CAST(coalesce(sum(n * (n - 1) // 2), 0) AS BIGINT) AS n_pairs_text
@@ -794,12 +792,8 @@ def header_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("payload").alias("n_bytes"),
         F.hex(F.col("payload")).alias("h"),
     )
-    w = F.when(
-        F.col("n_bytes") >= 8, F.conv(F.substring("h", 1, 8), 16, 10).cast("long")
-    )
-    hgt = F.when(
-        F.col("n_bytes") >= 8, F.conv(F.substring("h", 9, 8), 16, 10).cast("long")
-    )
+    w = F.when(F.col("n_bytes") >= 8, hex_int(F.col("h"), 8))
+    hgt = F.when(F.col("n_bytes") >= 8, hex_int(F.col("h"), 8, start=9))
     return hx.select(
         "doc_id",
         "n_bytes",
@@ -824,9 +818,9 @@ WITH hx AS (
 ), parsed AS (
   SELECT doc_id, n_bytes,
          CASE WHEN n_bytes >= 8
-              THEN CAST('0x' || substr(h, 1, 8) AS BIGINT) END AS hdr_w,
+              THEN {hex_int_sql('h', 8)} END AS hdr_w,
          CASE WHEN n_bytes >= 8
-              THEN CAST('0x' || substr(h, 9, 8) AS BIGINT) END AS hdr_h
+              THEN {hex_int_sql('h', 8, start=9)} END AS hdr_h
   FROM hx
 )
 SELECT doc_id, n_bytes, hdr_w, hdr_h,

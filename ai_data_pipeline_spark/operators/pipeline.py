@@ -11,7 +11,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
-from ai_data_pipeline_spark.functions.expressions import spread
+from ai_data_pipeline_spark.functions.expressions import (
+    hex_int,
+    hex_int_sql,
+    spread,
+    text_fingerprint,
+    text_fingerprint_sql,
+)
 from ai_data_pipeline_spark.operators.text import TOKEN_RX, TOKEN_RX_SQL
 from ai_data_pipeline_spark.registry import QueryDef
 
@@ -161,11 +167,7 @@ def quality_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("mean_bits_ppm") <= LM_TAIL_BITS_PPM, RESAMPLE_KEEP_PM["middle"])
         .otherwise(RESAMPLE_KEEP_PM["tail"])
     )
-    coin = F.pmod(
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long"),
-        F.lit(1000),
-    )
+    coin = F.pmod(hex_int(F.md5(F.col("doc_id").cast("string")), 8), F.lit(1000))
     kept = (coin < rate).cast("long")
     return (
         lm.join(cls, "doc_id")
@@ -204,7 +206,7 @@ j AS (
               WHEN lm.mean_bits_ppm <= {LM_TAIL_BITS_PPM}
                 THEN {RESAMPLE_KEEP_PM["middle"]}
               ELSE {RESAMPLE_KEEP_PM["tail"]} END AS rate,
-         CAST(('0x' || substr(md5(CAST(lm.doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
+         {hex_int_sql('md5(CAST(lm.doc_id AS VARCHAR))', 8)}
            % 1000 AS coin
   FROM lm JOIN cls ON lm.doc_id = cls.doc_id
 )
@@ -244,9 +246,7 @@ def doc_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "lang",
         F.size(F.split(F.col("text"), r"\s+")).alias("n_tokens"),
-        F.md5(
-            F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
-        ).alias("fp"),
+        text_fingerprint(F.col("text")).alias("fp"),
     )
     groups = d.groupBy("fp").agg(
         F.min("doc_id").alias("keep_doc_id"), F.count(F.lit(1)).alias("n_dups")
@@ -294,7 +294,7 @@ cls AS ({CLS_SCORE_ORACLE}),
 d AS (
   SELECT doc_id, source, lang,
          len(string_split_regex(text, '\s+')) AS n_tokens,
-         md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp
+         {text_fingerprint_sql("text")} AS fp
   FROM documents
 ), groups AS (
   SELECT fp, min(doc_id) AS keep_doc_id, count(*) AS n_dups

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ai_data_pipeline_spark.catalog import load_table
+from ai_data_pipeline_spark.functions.expressions import hex_int, hex_int_sql
 from ai_data_pipeline_spark.registry import QueryDef
 
 CM_DEPTH = 4
@@ -40,23 +41,14 @@ BLOOM_M = 4096
 HH_MIN_EVENTS = 30  # heavy-hitter candidate cut for the CM demo
 
 
-def _hash_bucket_expr(col: str, row: int, width: int) -> F.Column:
-    """Deterministic bucket: low 8 hex digits of md5(row|key) mod width
-    — engine-portable (conv/md5 in Spark, hex parse in DuckDB)."""
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{row}|"), F.col(col).cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % width
-    )
+def _row_md5(col: str, row: int) -> F.Column:
+    """md5 of ``row|key``: one independent hash per sketch row; its
+    first 8 hex digits mod the width give the row's bucket."""
+    return F.md5(F.concat(F.lit(f"{row}|"), F.col(col).cast("string")))
 
 
-def _hash_bucket_sql(col: str, row: int, width: int) -> str:
-    return (
-        f"(CAST(('0x' || substr(md5('{row}|' || CAST({col} AS VARCHAR)), 1, 8)) AS BIGINT) % {width})"
-    )
+def _row_md5_sql(col: str, row: int) -> str:
+    return f"md5('{row}|' || CAST({col} AS VARCHAR))"
 
 
 def sketch_countmin_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -70,7 +62,7 @@ def sketch_countmin_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     for j in range(CM_DEPTH):
         part = e.groupBy(
             F.lit(j).alias("cm_row"),
-            _hash_bucket_expr("user_id", j, CM_WIDTH).alias("bucket"),
+            (hex_int(_row_md5("user_id", j), 8) % CM_WIDTH).alias("bucket"),
         ).agg(F.count(F.lit(1)).alias("cnt"))
         cells = part if cells is None else cells.unionByName(part)
     exact = e.groupBy("user_id").agg(F.count(F.lit(1)).alias("exact_cnt"))
@@ -79,7 +71,7 @@ def sketch_countmin_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "exact_cnt",
         *[
-            _hash_bucket_expr("user_id", j, CM_WIDTH).alias(f"b{j}")
+            (hex_int(_row_md5("user_id", j), 8) % CM_WIDTH).alias(f"b{j}")
             for j in range(CM_DEPTH)
         ],
     )
@@ -98,12 +90,14 @@ def sketch_countmin_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _countmin_oracle() -> str:
     cell_parts = " UNION ALL ".join(
-        f"SELECT {j} AS cm_row, {_hash_bucket_sql('user_id', j, CM_WIDTH)} AS bucket,"
+        f"SELECT {j} AS cm_row,"
+        f" ({hex_int_sql(_row_md5_sql('user_id', j), 8)} % {CM_WIDTH}) AS bucket,"
         f" count(*) AS cnt FROM events GROUP BY 2"
         for j in range(CM_DEPTH)
     )
     probe_cols = ", ".join(
-        f"{_hash_bucket_sql('user_id', j, CM_WIDTH)} AS b{j}" for j in range(CM_DEPTH)
+        f"({hex_int_sql(_row_md5_sql('user_id', j), 8)} % {CM_WIDTH}) AS b{j}"
+        for j in range(CM_DEPTH)
     )
     joins = " ".join(
         f"JOIN (SELECT bucket AS b{j}, cnt AS c{j} FROM cells WHERE cm_row = {j}) t{j} USING (b{j})"
@@ -133,14 +127,17 @@ def sketch_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys = load_table(spark, sf_dir, "lineitem").select("l_suppkey").distinct()
     bits = None
     for j in range(BLOOM_K):
-        part = s.select(_hash_bucket_expr("s_suppkey", j, BLOOM_M).alias("bit"))
+        part = s.select((hex_int(_row_md5("s_suppkey", j), 8) % BLOOM_M).alias("bit"))
         bits = part if bits is None else bits.unionByName(part)
     bits = bits.distinct()
     probe_bits = keys.select(
         "l_suppkey",
         F.explode(
             F.array(
-                *[_hash_bucket_expr("l_suppkey", j, BLOOM_M) for j in range(BLOOM_K)]
+                *[
+                    hex_int(_row_md5("l_suppkey", j), 8) % BLOOM_M
+                    for j in range(BLOOM_K)
+                ]
             )
         ).alias("bit"),
     )
@@ -167,12 +164,14 @@ def sketch_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bloom_oracle() -> str:
     bit_parts = " UNION ".join(
-        f"SELECT DISTINCT {_hash_bucket_sql('s_suppkey', j, BLOOM_M)} AS bit"
+        f"SELECT DISTINCT ({hex_int_sql(_row_md5_sql('s_suppkey', j), 8)} % {BLOOM_M})"
+        " AS bit"
         f" FROM supplier WHERE s_acctbal < 0"
         for j in range(BLOOM_K)
     )
     probe_bits = ", ".join(
-        f"{_hash_bucket_sql('l_suppkey', j, BLOOM_M)}" for j in range(BLOOM_K)
+        f"({hex_int_sql(_row_md5_sql('l_suppkey', j), 8)} % {BLOOM_M})"
+        for j in range(BLOOM_K)
     )
     return f"""
 WITH bits AS (
@@ -491,19 +490,11 @@ KMV_K = 256  # σ ≈ 1/√K ≈ 6.2%; (K−1)·SPACE ≈ 7.2e16 stays inside in
 KMV_HEX = 12
 KMV_SPACE = 16**KMV_HEX
 _KMV_NUM = (KMV_K - 1) * KMV_SPACE  # precomputed: DuckDB literals are INT32
+_USER_MD5_SQL = "md5(CAST(user_id AS VARCHAR))"
 
 
-def _kmv_hash_expr(col: str) -> F.Column:
-    return F.conv(
-        F.substring(F.md5(F.col(col).cast("string")), 1, KMV_HEX), 16, 10
-    ).cast("long")
-
-
-def _kmv_hash_sql(col: str) -> str:
-    return (
-        f"CAST(('0x' || substr(md5(CAST({col} AS VARCHAR)), 1, {KMV_HEX}))"
-        " AS BIGINT)"
-    )
+def _user_md5() -> F.Column:
+    return F.md5(F.col("user_id").cast("string"))
 
 
 def sketch_kmv_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -515,7 +506,7 @@ def sketch_kmv_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "events")
     hashes = e.select(
-        "event_type", _kmv_hash_expr("user_id").alias("h")
+        "event_type", hex_int(_user_md5(), KMV_HEX).alias("h")
     ).distinct()
     bottom = topk_per_key(hashes, ["event_type"], [F.asc("h")], KMV_K)
     sk = bottom.groupBy("event_type").agg(
@@ -544,7 +535,7 @@ def sketch_kmv_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kmv_users_oracle() -> str:
     return f"""
 WITH h AS (
-  SELECT DISTINCT event_type, {_kmv_hash_sql("user_id")} AS h FROM events
+  SELECT DISTINCT event_type, {hex_int_sql(_USER_MD5_SQL, KMV_HEX)} AS h FROM events
 ), b AS (
   SELECT event_type, h,
          row_number() OVER (PARTITION BY event_type ORDER BY h) AS rk
@@ -587,12 +578,12 @@ def sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("event_type") == "purchase")
             & (F.col("value") > KMV_PURCHASE_MIN_VALUE)
         )
-        .select(_kmv_hash_expr("user_id").alias("h"))
+        .select(hex_int(_user_md5(), KMV_HEX).alias("h"))
         .distinct()
     )
     b = (
         e.filter(F.col("event_type") == "error")
-        .select(_kmv_hash_expr("user_id").alias("h"))
+        .select(hex_int(_user_md5(), KMV_HEX).alias("h"))
         .distinct()
     )
 
@@ -656,10 +647,10 @@ def sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kmv_jaccard_oracle() -> str:
     return f"""
 WITH a AS (
-  SELECT DISTINCT {_kmv_hash_sql("user_id")} AS h FROM events
+  SELECT DISTINCT {hex_int_sql(_USER_MD5_SQL, KMV_HEX)} AS h FROM events
   WHERE event_type = 'purchase' AND value > {KMV_PURCHASE_MIN_VALUE}
 ), b AS (
-  SELECT DISTINCT {_kmv_hash_sql("user_id")} AS h FROM events
+  SELECT DISTINCT {hex_int_sql(_USER_MD5_SQL, KMV_HEX)} AS h FROM events
   WHERE event_type = 'error'
 ), ka AS (
   SELECT h FROM a ORDER BY h LIMIT {KMV_K}
@@ -715,7 +706,7 @@ def sketch_kmv_merge_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     hashes = e.select(
         F.date_format("ts", "yyyy-MM-dd").alias("day"),
-        _kmv_hash_expr("user_id").alias("h"),
+        hex_int(_user_md5(), KMV_HEX).alias("h"),
     )
     daily = topk_per_key(hashes.distinct(), ["day"], [F.asc("h")], KMV_K)
     merged = topk_per_key(
@@ -759,7 +750,7 @@ def _kmv_merge_oracle() -> str:
     return f"""
 WITH h AS (
   SELECT DISTINCT strftime(ts, '%Y-%m-%d') AS day,
-         {_kmv_hash_sql("user_id")} AS h
+         {hex_int_sql(_USER_MD5_SQL, KMV_HEX)} AS h
   FROM events
 ), daily AS (
   SELECT day, h,

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
+from ai_data_pipeline_spark.functions.expressions import hex_int, hex_int_sql
 from ai_data_pipeline_spark.registry import QueryDef
 
 # (name, column, fixed-point scale). Moment sums and the n·sp − s·s
@@ -183,10 +184,7 @@ def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.explode(F.split(F.col("text"), r"\s+")).alias("tok"))
         .filter(F.col("tok") != "")
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("long")
-        % FEATURE_BUCKETS
-    )
+    bucket = hex_int(F.md5(F.col("tok")), 8) % FEATURE_BUCKETS
     return d.groupBy("doc_id", bucket.alias("bucket")).agg(
         F.count(F.lit(1)).alias("tf")
     )
@@ -197,7 +195,7 @@ WITH toks AS (
   SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok FROM documents
 )
 SELECT doc_id,
-       (CAST(('0x' || substr(md5(tok), 1, 8)) AS BIGINT) % {FEATURE_BUCKETS}) AS bucket,
+       ({hex_int_sql('md5(tok)', 8)} % {FEATURE_BUCKETS}) AS bucket,
        count(*) AS tf
 FROM toks WHERE tok <> ''
 GROUP BY 1, 2
@@ -286,10 +284,7 @@ def _hashed_presence(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("lang") == "en").cast("int").alias("y"),
         F.explode(F.split(F.col("text"), r"\s+")).alias("tok"),
     ).filter(F.col("tok") != "")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("long")
-        % FEATURE_BUCKETS
-    )
+    bucket = hex_int(F.md5(F.col("tok")), 8) % FEATURE_BUCKETS
     return d.select("doc_id", "lang", "y", bucket.alias("bucket")).distinct()
 
 
@@ -371,7 +366,7 @@ def cls_linear_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 CLS_PRES_DUCK = rf"""
   SELECT DISTINCT doc_id, lang,
          CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-         (CAST(('0x' || substr(md5(tok), 1, 8)) AS BIGINT)
+         ({hex_int_sql('md5(tok)', 8)}
             % {FEATURE_BUCKETS}) AS bucket
   FROM (SELECT doc_id, lang, unnest(string_split_regex(text, '\s+')) AS tok
         FROM documents)

@@ -18,7 +18,11 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
-from ai_data_pipeline_spark.functions.expressions import spread
+from ai_data_pipeline_spark.functions.expressions import (
+    spread,
+    text_fingerprint,
+    text_fingerprint_sql,
+)
 from ai_data_pipeline_spark.registry import QueryDef
 from ai_data_pipeline_spark.session import session_scoped_cache
 
@@ -239,16 +243,15 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     whitespace-collapsed) text — groups exact near-identical docs.
     Returns fingerprint groups with >= 1 member and the min doc_id kept."""
     d = load_table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
     return (
-        d.select("doc_id", F.md5(norm).alias("fingerprint"))
+        d.select("doc_id", text_fingerprint(F.col("text")).alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(F.min("doc_id").alias("keep_doc_id"), F.count(F.lit(1)).alias("n_dups"))
     )
 
 
-FINGERPRINT_ORACLE = r"""
-SELECT md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fingerprint,
+FINGERPRINT_ORACLE = f"""
+SELECT {text_fingerprint_sql("text")} AS fingerprint,
        min(doc_id) AS keep_doc_id, count(*) AS n_dups
 FROM documents GROUP BY 1
 """

@@ -14,9 +14,3 @@ class QueryDef:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None = None  # DuckDB SQL; None → rows-only check
-
-
-def build(defs: list[QueryDef]):
-    queries = {d.name: d.fn for d in defs}
-    oracles = {d.name: d.oracle for d in defs if d.oracle is not None}
-    return queries, oracles

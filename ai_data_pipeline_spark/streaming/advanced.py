@@ -25,6 +25,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ai_data_pipeline_spark.catalog import load_table
+from ai_data_pipeline_spark.functions.expressions import (
+    text_fingerprint,
+    text_fingerprint_sql,
+)
 from ai_data_pipeline_spark.streaming.windows import (
     batch_file_stream,
     drain_batches,
@@ -392,8 +396,7 @@ def stream_index_dedup(
     pair is exactly a streaming table + materialized-view topology;
     nothing passes through the driver."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " "))
-    base = docs.select("doc_id", "lang", fp.alias("fp"))
+    base = docs.select("doc_id", "lang", text_fingerprint(F.col("text")).alias("fp"))
     idx = (
         base.filter(F.col("doc_id") % 2 == 0)
         .select("fp")
@@ -460,7 +463,7 @@ def stream_index_dedup(
 STREAM_IDX_DEDUP_ORACLE = rf"""
 WITH d AS (
   SELECT doc_id, lang,
-         md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp
+         {text_fingerprint_sql("text")} AS fp
   FROM documents
 ), stream AS (
   SELECT doc_id, lang, fp FROM d WHERE doc_id % 2 = 1

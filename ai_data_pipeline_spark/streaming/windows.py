@@ -35,14 +35,17 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-based streaming source over the events parquet (one file =
     one micro-batch under availableNow), under the schema the parquet
     itself reports and with ts normalized exactly as load_table does
-    (session TZ is UTC, so wall-clock is preserved)."""
+    (session TZ is UTC, so wall-clock is preserved). A table written by
+    Spark is a directory of part files and streams as that directory;
+    the file source takes only directories, so a single file streams
+    its parent under a file-name filter."""
     schema = raw_table(spark, sf_dir, "events").schema
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
+    reader = spark.readStream.schema(schema).format("parquet")
+    path = f"{sf_dir}/events.parquet"
+    if os.path.isdir(path):
+        raw = reader.load(path)
+    else:
+        raw = reader.option("pathGlobFilter", "events.parquet").load(sf_dir)
     return normalize_timestamps(raw, "events")
 
 

@@ -56,3 +56,70 @@ def test_coverage_doc_names_every_contract_query():
     ).read()
     missing = [n for n in QUERIES if f"`{n}`" not in cov]
     assert not missing, f"queries absent from COVERAGE.md: {missing}"
+
+
+def test_key_hash_twins_agree_across_engines(spark):
+    """Each key-hash builder and its DuckDB twin give the same value on
+    crafted rows: whitespace that the corpus never holds (\\x0B is in
+    Java's \\s but not in DuckDB's), and hex prefixes at every width
+    both engines can parse."""
+    import hashlib
+
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from ai_data_pipeline_spark.functions.expressions import (
+        hex_int,
+        hex_int_sql,
+        text_fingerprint,
+        text_fingerprint_sql,
+    )
+
+    texts = [
+        "a\x0bb",
+        "a b",
+        "a\tb",
+        "a\fb",
+        "a\nb",
+        "a\rb",
+        "a b",
+        "  Mixed \t\x0b CASE\r\n text  ",
+        "x\x0b\x0b\x0by",
+        "",
+    ]
+    hexes = [hashlib.md5(t.encode()).hexdigest() for t in texts]
+    hexes += ["f" * 32, "0" * 32, "0123456789abcdef" * 2]
+    widths = [(n, start) for n in (2, 4, 8, 12, 15) for start in (1, 9)]
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INTEGER, text VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", list(enumerate(texts)))
+    con.execute("CREATE TABLE h (i INTEGER, h VARCHAR)")
+    con.executemany("INSERT INTO h VALUES (?, ?)", list(enumerate(hexes)))
+    duck_fp = con.execute(
+        f"SELECT i, {text_fingerprint_sql('text')} FROM t ORDER BY i"
+    ).fetchall()
+    hex_cols = ", ".join(hex_int_sql("h", n, start) for n, start in widths)
+    duck_hex = con.execute(f"SELECT i, {hex_cols} FROM h ORDER BY i").fetchall()
+    con.close()
+
+    spark_fp = (
+        spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+        .select("i", text_fingerprint(F.col("text")))
+        .orderBy("i")
+        .collect()
+    )
+    spark_hex = (
+        spark.createDataFrame(list(enumerate(hexes)), "i int, h string")
+        .select("i", *[hex_int(F.col("h"), n, start) for n, start in widths])
+        .orderBy("i")
+        .collect()
+    )
+
+    assert [tuple(r) for r in spark_fp] == duck_fp
+    assert duck_fp[0][1] == duck_fp[1][1]  # \x0B collapses like a space
+    expected = [
+        (i, *[int(h[start - 1 : start - 1 + n], 16) for n, start in widths])
+        for i, h in enumerate(hexes)
+    ]
+    assert [tuple(r) for r in spark_hex] == duck_hex == expected

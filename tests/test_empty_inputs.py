@@ -157,11 +157,20 @@ def test_profiler_emits_all_columns_on_empty_table(spark, empty_sf_dir):
         ("similarity", "ann_ivf_pq_rerank"),
         ("unigram", "corpus_unigram_converge"),
         # every query that writes its own micro-batch files through the
-        # shared batch-file source (zero-row batch files included), and
-        # the Python-source stream drained by the shared memory sink. The
-        # ten read_events_stream queries stay out: this fixture writes
-        # events.parquet as a directory, which their glob-filtered file
-        # stream never reads, so they would pass without reading a file
+        # shared batch-file source (zero-row batch files included), the
+        # Python-source stream drained by the shared memory sink, and the
+        # ten queries on the events file stream, which reads this
+        # fixture's events.parquet directory as a directory stream
+        ("streaming", "stream_tumbling_counts"),
+        ("streaming", "stream_session_windows"),
+        ("streaming", "stream_stateful_user_counts"),
+        ("streaming", "stream_dedup_pairs"),
+        ("streaming", "stream_sliding_counts"),
+        ("streaming", "stream_stream_join"),
+        ("streaming", "stream_static_enrich"),
+        ("streaming", "stream_topk_per_window"),
+        ("streaming", "stream_chained_windows"),
+        ("streaming", "stream_sink_parquet"),
         ("streaming", "stream_index_dedup"),
         ("streaming", "stream_late_data_drop"),
         ("streaming", "stream_first_touch"),

@@ -1712,6 +1712,27 @@ def test_spread_is_the_only_parallelism_repartition():
     assert offenders == ["functions/expressions.py"]
 
 
+def test_key_hash_is_spelled_only_in_expressions():
+    """The cross-engine key-hash contract lives in one place: no module
+    but functions/expressions.py parses a hex prefix (``F.conv(``,
+    ``conv(substring``, ``'0x' ||``) or spells the text-fingerprint
+    normalization (``regexp_replace(…trim(…lower``)."""
+    import pathlib
+    import re
+
+    spelled = re.compile(
+        r"F\.conv\(|conv\(substring|'0x' \|\||"
+        r"regexp_replace\(\s*(?:F\.)?trim\(\s*(?:F\.)?lower"
+    )
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "ai_data_pipeline_spark"
+    offenders = [
+        path.relative_to(pkg).as_posix()
+        for path in sorted(pkg.rglob("*.py"))
+        if spelled.search(path.read_text())
+    ]
+    assert offenders == ["functions/expressions.py"]
+
+
 def test_profile_plan_has_no_join_and_one_aggregation_for_many_tables(spark):
     """One profile plan serves one table or many: a single-table profile
     looks its name literals up by ``cid`` instead of joining them in,
