@@ -16,6 +16,10 @@ Key hashing: a key becomes a deterministic integer or digest that is
 identical in both engines only through the builders below, each a
 Spark ``Column`` with its DuckDB SQL twin beside it (``hex_int`` /
 ``hex_int_sql``, ``text_fingerprint`` / ``text_fingerprint_sql``).
+
+Tokenization: whitespace is the one class ``WHITESPACE`` in every
+cross-engine regex, and text becomes whitespace tokens only through
+``ws_split`` / ``ws_split_sql``; ``split_sql`` is the one DuckDB split.
 """
 
 from __future__ import annotations
@@ -24,8 +28,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Java's \s and DuckDB's (RE2) \s disagree on \x0B; spelling the class
-# out makes both engines collapse the same characters.
-WHITESPACE_RUN = r"[\t\n\x0B\f\r ]+"
+# out makes both engines (and Python's re) match the same characters.
+# WHITESPACE is a class body, to be placed inside [...].
+WHITESPACE = r"\t\n\x0B\f\r "
+WHITESPACE_RUN = f"[{WHITESPACE}]+"
 
 
 def hex_int(hex: Column, n: int, start: int = 1) -> Column:
@@ -37,8 +43,8 @@ def hex_int(hex: Column, n: int, start: int = 1) -> Column:
     return F.conv(F.substring(hex, start, n), 16, 10).cast("long")
 
 
-def hex_int_sql(hex: str, n: int, start: int = 1) -> str:
-    """DuckDB twin of ``hex_int``."""
+def hex_int_sql(hex: str, n: int, start: int | str = 1) -> str:
+    """DuckDB twin of ``hex_int``; ``start`` may be a SQL expression."""
     return f"CAST(('0x' || substr({hex}, {start}, {n})) AS BIGINT)"
 
 
@@ -51,6 +57,25 @@ def text_fingerprint(col: Column) -> Column:
 def text_fingerprint_sql(col: str) -> str:
     """DuckDB twin of ``text_fingerprint``."""
     return f"md5(regexp_replace(trim(lower({col})), '{WHITESPACE_RUN}', ' ', 'g'))"
+
+
+def split_sql(col: str, rx: str) -> str:
+    """DuckDB twin of ``F.split(col, rx)``: ``string_split_regex``, which
+    like Spark keeps the empty tokens at either end. ``rx`` must not
+    hold a quote."""
+    return f"string_split_regex({col}, '{rx}')"
+
+
+def ws_split(col: Column) -> Column:
+    """The whitespace tokens of ``col``: split on runs of ``WHITESPACE``.
+    Both engines split alike, leading and trailing empty tokens included:
+    ``' a  b '`` gives ``['', 'a', 'b', '']`` in each."""
+    return F.split(col, WHITESPACE_RUN)
+
+
+def ws_split_sql(col: str) -> str:
+    """DuckDB twin of ``ws_split``."""
+    return split_sql(col, WHITESPACE_RUN)
 
 
 def dec_sum(col: Column, scale: int = 4) -> Column:

@@ -30,8 +30,15 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
-from ai_data_pipeline_spark.functions.expressions import hex_int, hex_int_sql
+from ai_data_pipeline_spark.functions.expressions import (
+    hex_int,
+    hex_int_sql,
+    split_sql,
+    ws_split,
+    ws_split_sql,
+)
 from ai_data_pipeline_spark.operators.text import (
+    TOKEN_ARRAYS_SQL,
     token_arrays,
     word_ngrams,
     word_ngrams_duck,
@@ -87,7 +94,7 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DECONTAMINATE_ORACLE = rf"""
-WITH toks AS (SELECT doc_id, string_split_regex(text, '\s+') AS l FROM documents),
+WITH toks AS ({TOKEN_ARRAYS_SQL}),
 grams AS (
   SELECT doc_id, unnest(list_distinct({word_ngrams_duck(DECON_N)})) AS gram FROM toks
 ),
@@ -133,7 +140,7 @@ def corpus_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 REPETITION_ORACLE = rf"""
-WITH toks AS (SELECT doc_id, string_split_regex(text, '\s+') AS l FROM documents),
+WITH toks AS ({TOKEN_ARRAYS_SQL}),
 bg AS (
   SELECT doc_id, unnest([array_to_string(l[i:i+1], ' ')
          for i in range(1, greatest(len(l)-1, 1)+1)]) AS bigram
@@ -182,7 +189,7 @@ def corpus_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select(
             _split().alias("split"),
             "source",
-            F.size(F.split(F.col("text"), r"\s+")).alias("n_tok"),
+            F.size(ws_split(F.col("text"))).alias("n_tok"),
             "doc_id",
         )
         .groupBy("split", "source")
@@ -198,7 +205,7 @@ def corpus_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 SPLIT_ASSIGN_ORACLE = rf"""
 WITH b AS (
   SELECT doc_id, source,
-         len(string_split_regex(text, '\s+')) AS n_tok,
+         len({ws_split_sql('text')}) AS n_tok,
          {_split_sql()} AS split
   FROM documents
 )
@@ -243,7 +250,7 @@ def corpus_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = d.select(
         "doc_id",
         _split().alias("split"),
-        F.split(F.lower(F.col("text")), r"\s+").alias("l"),
+        ws_split(F.lower(F.col("text"))).alias("l"),
     )
     grams = (
         base.select(
@@ -285,7 +292,7 @@ SPLIT_LEAKAGE_ORACLE = rf"""
 WITH b AS (
   SELECT doc_id,
          {_split_sql()} AS split,
-         string_split_regex(lower(text), '\s+') AS l
+         {ws_split_sql('lower(text)')} AS l
   FROM documents
 ), grams AS (
   SELECT DISTINCT doc_id, split,
@@ -329,7 +336,7 @@ def corpus_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     per_source = d.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(F.split(F.col("text"), r"\s+"))).alias("n_tokens"),
+        F.sum(F.size(ws_split(F.col("text")))).alias("n_tokens"),
     )
     n_sources = per_source.agg(
         F.count(F.lit(1)).alias("n_sources")
@@ -358,7 +365,7 @@ def corpus_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 MIXING_ORACLE = rf"""
 WITH per_source AS (
   SELECT source, count(*) AS n_docs,
-         CAST(sum(len(string_split_regex(text, '\s+'))) AS BIGINT) AS n_tokens
+         CAST(sum(len({ws_split_sql('text')})) AS BIGINT) AS n_tokens
   FROM documents GROUP BY 1
 ), ns AS (SELECT count(*) AS n_sources FROM per_source),
 w AS (
@@ -392,7 +399,7 @@ def corpus_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer-exact: offsets are cumulative int sums, chop is int div."""
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.size(F.split(F.col("text"), r"\s+")).alias("n_tok"),
+        F.size(ws_split(F.col("text"))).alias("n_tok"),
         (
             hex_int(F.md5(F.col("doc_id").cast("string")), 4) % PACK_STREAMS
         ).alias("stream"),
@@ -433,7 +440,7 @@ def corpus_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 PACKING_ORACLE = rf"""
 WITH d AS (
   SELECT doc_id,
-         len(string_split_regex(text, '\s+')) AS n_tok,
+         len({ws_split_sql('text')}) AS n_tok,
          {hex_int_sql('md5(CAST(doc_id AS VARCHAR))', 4)}
            % {PACK_STREAMS} AS stream,
          md5(CAST(doc_id AS VARCHAR)) AS ord
@@ -516,7 +523,7 @@ def corpus_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 OOV_ORACLE = rf"""
 WITH toks AS (
-  SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok FROM documents
+  SELECT doc_id, unnest({ws_split_sql('text')}) AS tok FROM documents
 ), vocab AS (
   SELECT tok FROM (
     SELECT tok, row_number() OVER (ORDER BY count(*) DESC, tok) AS rnk
@@ -566,7 +573,7 @@ def corpus_domain_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "source",
         "doc_id",
-        F.size(F.split(F.col("text"), r"\s+")).alias("n_tok"),
+        F.size(ws_split(F.col("text"))).alias("n_tok"),
         F.md5(F.col("doc_id").cast("string")).alias("h"),
     ).withColumn("bkt", hex_int(F.col("h"), DOMAIN_CAP_BUCKET_HEX))
     bcounts = d.groupBy("source", "bkt").agg(F.count(F.lit(1)).alias("bn"))
@@ -607,7 +614,7 @@ def corpus_domain_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
 DOMAIN_CAPS_ORACLE = rf"""
 WITH ranked AS (
   SELECT source, doc_id,
-         len(string_split_regex(text, '\s+')) AS n_tok,
+         len({ws_split_sql('text')}) AS n_tok,
          row_number() OVER (PARTITION BY source
                             ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
   FROM documents
@@ -667,7 +674,7 @@ def corpus_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_ORACLE = rf"""
 WITH wf AS (
   SELECT w, count(*) AS f FROM (
-    SELECT unnest(string_split_regex(text, '\s+')) AS w FROM documents
+    SELECT unnest({ws_split_sql('text')}) AS w FROM documents
   ) GROUP BY w HAVING len(w) >= 2
 ), pairs AS (
   SELECT w[i:i+1] AS pair, f
@@ -731,7 +738,7 @@ def corpus_token_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 RARITY_ORACLE = rf"""
 WITH toks AS (
-  SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok FROM documents
+  SELECT doc_id, unnest({ws_split_sql('text')}) AS tok FROM documents
 ), tf AS (
   SELECT tok, count(*) AS tf FROM toks GROUP BY tok
 ), gtot AS (
@@ -780,7 +787,7 @@ def corpus_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     the training aggregation per step."""
     d = load_table(spark, sf_dir, "documents")
     lang_words = (
-        d.select("lang", F.explode(F.split(F.col("text"), r"\s+")).alias("w"))
+        d.select("lang", F.explode(ws_split(F.col("text"))).alias("w"))
         .groupBy("lang", "w")
         .agg(F.count(F.lit(1)).alias("f"))
         .filter(F.length("w") >= 2)  # the trained vocabulary's domain
@@ -836,7 +843,7 @@ def corpus_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_APPLY_ORACLE = rf"""
 WITH RECURSIVE wf AS (
   SELECT w, count(*) AS f FROM (
-    SELECT unnest(string_split_regex(text, '\s+')) AS w FROM documents
+    SELECT unnest({ws_split_sql('text')}) AS w FROM documents
   ) GROUP BY w HAVING len(w) >= 2
 ), ranked AS (
   SELECT pair, row_number() OVER (ORDER BY sum(f) DESC, pair) AS rnk
@@ -851,7 +858,7 @@ WITH RECURSIVE wf AS (
   FROM ranked WHERE rnk <= {BPE_TOP_PAIRS}
 ), lw AS (
   SELECT lang, w, count(*) AS f FROM (
-    SELECT lang, unnest(string_split_regex(text, '\s+')) AS w FROM documents
+    SELECT lang, unnest({ws_split_sql('text')}) AS w FROM documents
   ) GROUP BY lang, w HAVING len(w) >= 2
 ), rec AS (
   SELECT lang, w, f, 0 AS step,
@@ -903,9 +910,8 @@ def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "source",
         F.md5(
-            F.expr(
-                "concat_ws(' ', slice(split(text, '\\\\s+'), 1,"
-                f" {OVERLAP_PREFIX_TOKENS}))"
+            F.concat_ws(
+                " ", F.slice(ws_split(F.col("text")), 1, OVERLAP_PREFIX_TOKENS)
             )
         ).alias("h"),
     ).distinct()
@@ -944,7 +950,7 @@ SOURCE_OVERLAP_ORACLE = rf"""
 WITH d AS (
   SELECT DISTINCT source,
          md5(array_to_string(
-           (string_split_regex(text, '\s+'))[1:{OVERLAP_PREFIX_TOKENS}], ' ')) AS h
+           ({ws_split_sql('text')})[1:{OVERLAP_PREFIX_TOKENS}], ' ')) AS h
   FROM documents
 ), sizes AS (
   SELECT source, count(*) AS n FROM d GROUP BY source
@@ -1005,7 +1011,7 @@ def corpus_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CHUNK_OVERLAP_ORACLE = rf"""
-WITH toks AS (SELECT doc_id, string_split_regex(text, '\s+') AS l FROM documents),
+WITH toks AS ({TOKEN_ARRAYS_SQL}),
 spans AS (
   SELECT doc_id, len(l) AS n_tokens,
          unnest(range(0, CAST(ceil(greatest(len(l) - {CHUNK_LEN - CHUNK_STRIDE}, 1)
@@ -1070,7 +1076,7 @@ def corpus_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 NGRAM_NOVELTY_ORACLE = rf"""
-WITH toks AS (SELECT doc_id, string_split_regex(text, '\s+') AS l FROM documents),
+WITH toks AS ({TOKEN_ARRAYS_SQL}),
 grams AS (
   SELECT DISTINCT doc_id, md5(gram) AS h FROM (
     SELECT doc_id, unnest(list_distinct({word_ngrams_duck(DECON_N)})) AS gram FROM toks
@@ -1148,7 +1154,7 @@ def corpus_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BOILERPLATE_ORACLE = rf"""
 WITH toks AS (
-  SELECT doc_id, string_split_regex(text, '\s+') AS l FROM documents
+  {TOKEN_ARRAYS_SQL}
 ), grams AS (
   SELECT doc_id,
          unnest([array_to_string(l[i:i+{BOILER_N - 1}], ' ')
@@ -1200,7 +1206,7 @@ def corpus_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     per_source = d.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(F.split(F.col("text"), r"\s+"))).alias("n_tokens"),
+        F.sum(F.size(ws_split(F.col("text")))).alias("n_tokens"),
     )
     weighted = per_source.withColumn(
         "sqrt_fp",
@@ -1231,7 +1237,7 @@ def corpus_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 TEMPERATURE_MIX_ORACLE = rf"""
 WITH per_source AS (
   SELECT source, count(*) AS n_docs,
-         CAST(sum(len(string_split_regex(text, '\s+'))) AS BIGINT) AS n_tokens
+         CAST(sum(len({ws_split_sql('text')})) AS BIGINT) AS n_tokens
   FROM documents GROUP BY 1
 ), weighted AS (
   SELECT source, n_docs, n_tokens,
@@ -1286,10 +1292,10 @@ def _lm_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", F.explode(F.expr(_LM_BIGRAMS_SPARK)).alias("bg"))
 
 
-_LM_BG_DUCK = r"""
+_LM_BG_DUCK = rf"""
   SELECT doc_id, unnest([l[i] || ' ' || l[i+1] for i in range(1, len(l))]) AS bg
   FROM (SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '[^a-z]+'),
+               list_filter({split_sql('lower(text)', '[^a-z]+')},
                            t -> t <> '') AS l
         FROM documents)
 """
@@ -1439,7 +1445,7 @@ ctx AS (
 ),
 vocab AS (
   SELECT count(DISTINCT tok) AS v FROM (
-    SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'),
+    SELECT unnest(list_filter({split_sql('lower(text)', '[^a-z]+')},
                               t -> t <> '')) AS tok
     FROM documents WHERE doc_id % {LM_HOLD_MOD} <> 0)
 ),
@@ -1478,7 +1484,7 @@ def corpus_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(38,0) / HUGEINT: n_docs·max_tok·10⁶ overflows int64 once a
     band holds ~10⁹ docs of ~10⁴ tokens, well inside 100 TB reality."""
     d = load_table(spark, sf_dir, "documents").select(
-        F.size(F.split(F.col("text"), r"\s+")).cast("long").alias("n_tok")
+        F.size(ws_split(F.col("text"))).cast("long").alias("n_tok")
     )
     per = d.groupBy(F.length(F.bin(F.col("n_tok"))).cast("long").alias("bucket")).agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1504,9 +1510,9 @@ def corpus_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-LENGTH_BUCKETS_ORACLE = r"""
+LENGTH_BUCKETS_ORACLE = rf"""
 WITH d AS (
-  SELECT len(string_split_regex(text, '\s+')) AS n_tok FROM documents
+  SELECT len({ws_split_sql('text')}) AS n_tok FROM documents
 ), per AS (
   SELECT length(bin(n_tok)) AS bucket, count(*) AS n_docs,
          CAST(sum(n_tok) AS BIGINT) AS sum_tokens,
@@ -1556,7 +1562,7 @@ def corpus_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("total_chars"),
         F.sum(
-            F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("decimal(38,0)")
+            F.size(ws_split(F.trim(F.col("text")))).cast("decimal(38,0)")
         )
         .cast("long")
         .alias("total_ws_tokens"),
@@ -1573,13 +1579,13 @@ def corpus_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DATASET_CARD_ORACLE = r"""
+DATASET_CARD_ORACLE = rf"""
 SELECT count(*) AS n_docs,
        count(DISTINCT source) AS n_sources,
        count(DISTINCT lang) AS n_langs,
        count(DISTINCT text) AS n_distinct_texts,
        CAST(CAST(sum(n_chars) AS HUGEINT) AS BIGINT) AS total_chars,
-       CAST(CAST(sum(len(regexp_split_to_array(trim(text), '\s+')))
+       CAST(CAST(sum(len({ws_split_sql('trim(text)')}))
                  AS HUGEINT) AS BIGINT) AS total_ws_tokens,
        CAST(sum(CASE WHEN length(trim(text)) = 0 THEN 1 ELSE 0 END)
             AS BIGINT) AS n_empty,

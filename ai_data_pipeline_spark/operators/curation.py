@@ -49,8 +49,14 @@ from ai_data_pipeline_spark.functions.expressions import (
     hex_int,
     hex_int_sql,
     topk_per_key,
+    ws_split,
+    ws_split_sql,
 )
-from ai_data_pipeline_spark.operators.text import token_arrays, word_ngrams
+from ai_data_pipeline_spark.operators.text import (
+    TOKEN_ARRAYS_SQL,
+    token_arrays,
+    word_ngrams,
+)
 from ai_data_pipeline_spark.registry import QueryDef
 
 # Span-dedup gram width: a position is duplicated if the K-token gram
@@ -127,7 +133,7 @@ def _dup_spans_oracle() -> str:
     k = DUP_SPAN_K
     return f"""
 WITH toks AS (
-  SELECT doc_id, string_split_regex(text, '\\s+') AS l FROM documents
+  {TOKEN_ARRAYS_SQL}
 ), occ AS (
   SELECT doc_id, i AS pos, pos + {k - 1} AS e,
          md5(array_to_string(l[i:i+{k - 1}], ' ')) AS h
@@ -242,7 +248,7 @@ def corpus_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "n_chars",
-            F.size(F.split(F.col("text"), r"\s+")).alias("n_tokens"),
+            F.size(ws_split(F.col("text"))).alias("n_tokens"),
             F.md5(F.col("doc_id").cast("string")).alias("h"),
         )
         .withColumn(
@@ -273,7 +279,7 @@ def corpus_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 SHARD_MANIFEST_ORACLE = f"""
 WITH d AS (
   SELECT doc_id, n_chars,
-         len(string_split_regex(text, '\\s+')) AS n_tokens,
+         len({ws_split_sql('text')}) AS n_tokens,
          md5(CAST(doc_id AS VARCHAR)) AS h
   FROM documents
 ), s AS (
@@ -346,7 +352,7 @@ def corpus_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.size(F.split(F.col("text"), r"\s+")).alias("n_toks"),
+        F.size(ws_split(F.col("text"))).alias("n_toks"),
     )
     sc = cls_linear_score(spark, sf_dir).select("doc_id", "score_ppm")
     src = (
@@ -414,7 +420,7 @@ def _epoch_plan_oracle() -> str:
 WITH sc AS ({CLS_SCORE_ORACLE}),
 d AS (
   SELECT doc_id, source,
-         len(string_split_regex(text, '\\s+')) AS n_toks
+         len({ws_split_sql('text')}) AS n_toks
   FROM documents
 ), j AS (
   SELECT d.source, d.n_toks, COALESCE(sc.score_ppm, 0) AS score_ppm
@@ -621,7 +627,7 @@ def corpus_tombstone_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat_ws(
                 " ",
                 F.slice(
-                    F.split(F.trim(F.lower(F.col("text"))), r"\s+"),
+                    ws_split(F.trim(F.lower(F.col("text")))),
                     1,
                     TOMBSTONE_PREFIX_TOKENS,
                 ),
@@ -664,7 +670,7 @@ TOMBSTONE_ORACLE = rf"""
 WITH fp AS (
   SELECT doc_id, lang, length(text) AS n_chars_m,
          md5(array_to_string(
-           list_slice(string_split_regex(trim(lower(text)), '\s+'),
+           list_slice({ws_split_sql('trim(lower(text))')},
                       1, {TOMBSTONE_PREFIX_TOKENS}), ' ')) AS f
   FROM documents
 ), req AS (

@@ -52,8 +52,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
-from ai_data_pipeline_spark.functions.expressions import spread
+from ai_data_pipeline_spark.functions.expressions import (
+    WHITESPACE_RUN,
+    split_sql,
+    spread,
+    ws_split,
+    ws_split_sql,
+)
 from ai_data_pipeline_spark.operators.text import (
+    TOKEN_ARRAYS_SQL,
     token_arrays,
     word_ngrams,
     word_ngrams_duck,
@@ -79,7 +86,6 @@ NGRAM_DF_CAP = 128
 
 SHINGLE_N = 3  # word-trigram shingles
 SHINGLES_DUCK = f"list_distinct({word_ngrams_duck(SHINGLE_N)})"
-SHINGLES_DUCK_FROM = r"(SELECT doc_id, string_split_regex(text, '\s+') AS l FROM documents)"
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -321,7 +327,7 @@ _CANDS_DUCK = f"""bands AS (
 """
 # sh … cands: the LSH and estimate oracles
 _MINHASH_CANDS_DUCK = f"""sh AS (
-  SELECT doc_id, unnest({SHINGLES_DUCK}) AS shingle FROM {SHINGLES_DUCK_FROM}
+  SELECT doc_id, unnest({SHINGLES_DUCK}) AS shingle FROM ({TOKEN_ARRAYS_SQL})
 ), shh AS (
   SELECT doc_id, shingle,
          md5('0|' || shingle) || md5('1|' || shingle) AS hh
@@ -332,7 +338,7 @@ _MINHASH_CANDS_DUCK = f"""sh AS (
 # sh0 … pair_inter: the capped exhaustive pairs of the recall and
 # band-tuning oracles
 _CAPPED_PAIRS_DUCK = f"""sh0 AS (
-  SELECT doc_id, unnest({SHINGLES_DUCK}) AS shingle FROM {SHINGLES_DUCK_FROM}
+  SELECT doc_id, unnest({SHINGLES_DUCK}) AS shingle FROM ({TOKEN_ARRAYS_SQL})
 ), capped AS (
   SELECT doc_id, shingle FROM sh0
   WHERE shingle IN (
@@ -378,7 +384,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DEDUP_NGRAM_ORACLE = rf"""
 WITH sh0 AS (
-  SELECT doc_id, unnest({SHINGLES_DUCK}) AS shingle FROM {SHINGLES_DUCK_FROM}
+  SELECT doc_id, unnest({SHINGLES_DUCK}) AS shingle FROM ({TOKEN_ARRAYS_SQL})
 ), sh AS (
   -- same df cap as the Spark plan: boilerplate shingles are out of the
   -- Jaccard universe entirely (intersection AND sizes)
@@ -610,7 +616,7 @@ def _containment_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the spread's exchange binds the split (see text.token_arrays)
     psh = _shingles(
         spread(
-            planted.select("doc_id", F.split(F.col("text"), r"\s+").alias("l"))
+            planted.select("doc_id", ws_split(F.col("text")).alias("l"))
         )
     )
     return base.unionByName(psh)
@@ -708,7 +714,7 @@ WITH aug AS MATERIALIZED (
   WHERE a.doc_id % {CONTAIN_PLANT_MOD} = 0
 ), sh0 AS MATERIALIZED (
   SELECT doc_id, unnest({SHINGLES_DUCK}) AS shingle
-  FROM (SELECT doc_id, string_split_regex(text, '\s+') AS l FROM aug)
+  FROM (SELECT doc_id, {ws_split_sql('text')} AS l FROM aug)
 ), capped AS MATERIALIZED (
   SELECT doc_id, shingle FROM sh0
   WHERE shingle IN (
@@ -941,7 +947,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens = d.select(
         "doc_id",
         F.explode(
-            F.array_distinct(F.split(F.col("text"), r"\s+"))
+            F.array_distinct(ws_split(F.col("text")))
         ).alias("tok"),
     ).filter(F.col("tok") != "")
     h = F.md5(F.col("tok"))
@@ -982,7 +988,7 @@ def _simhash_oracle() -> str:
     )
     return rf"""
 WITH tokens AS (
-  SELECT doc_id, unnest(list_distinct(string_split_regex(text, '\s+'))) AS tok
+  SELECT doc_id, unnest(list_distinct({ws_split_sql('text')})) AS tok
   FROM documents
 ), toks AS (
   SELECT doc_id, tok FROM tokens WHERE tok <> ''
@@ -1027,7 +1033,7 @@ def dedup_chunk_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DEDUP_CHUNK_ORACLE = rf"""
 WITH toks AS (
-  SELECT doc_id, string_split_regex(text, '\s+') AS l FROM documents
+  {TOKEN_ARRAYS_SQL}
 ), raw_chunks AS (
   SELECT doc_id,
          unnest([array_to_string(l[(i - 1) * {CHUNK_TOKENS} + 1 : i * {CHUNK_TOKENS}], ' ')
@@ -1048,6 +1054,7 @@ HAVING count(DISTINCT doc_id) > 1
 
 SENT_MIN_CHARS = 20  # ignore trivial fragments (C4 keeps >= 3-word lines)
 SENT_DUP_NUM, SENT_DUP_DEN = 3, 10  # flag docs with >= 30% duplicated sentences
+SENTENCE_END = r"\." + WHITESPACE_RUN
 
 
 def dedup_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1071,7 +1078,7 @@ def dedup_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     sents = (
         d.select(
             "doc_id",
-            F.explode(F.split(F.col("text"), r"\.\s+")).alias("s"),
+            F.explode(F.split(F.col("text"), SENTENCE_END)).alias("s"),
         )
         .select("doc_id", F.lower(F.trim(F.col("s"))).alias("s"))
         .filter(F.length("s") >= SENT_MIN_CHARS)
@@ -1101,7 +1108,7 @@ def dedup_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
 DEDUP_SENTENCES_ORACLE = rf"""
 WITH sents AS (
   SELECT DISTINCT doc_id, md5(s) AS h FROM (
-    SELECT doc_id, lower(trim(unnest(string_split_regex(text, '\.\s+')))) AS s
+    SELECT doc_id, lower(trim(unnest({split_sql('text', SENTENCE_END)}))) AS s
     FROM documents
   ) WHERE length(s) >= {SENT_MIN_CHARS}
 ), freq AS (

@@ -95,15 +95,8 @@ def byte_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # DuckDB mirror: hex-string view of the same utf-8 bytes (substring on
-# BLOB is unsupported, so all byte access goes through hex(encode(text))).
-_D = "(instr('0123456789ABCDEF', {c}) - 1)"
-
-
-def _hexpair_to_int(h: str, pos: str) -> str:
-    d1 = _D.format(c=f"substr({h}, {pos}, 1)")
-    d2 = _D.format(c=f"substr({h}, ({pos})+1, 1)")
-    return f"(16*{d1} + {d2})"
-
+# BLOB is unsupported, so all byte access goes through hex(encode(text)));
+# the byte at hex position p is hex_int_sql(h, 2, p).
 
 BYTE_FEATURES_ORACLE = f"""
 WITH hx AS (
@@ -111,10 +104,10 @@ WITH hx AS (
 ), feats AS (
   SELECT doc_id, source,
     length(h) // 2 AS n_bytes,
-    CASE WHEN length(h) = 0 THEN -1 ELSE {_hexpair_to_int('h', '1')} END AS first_byte,
+    CASE WHEN length(h) = 0 THEN -1 ELSE {hex_int_sql('h', 2, 1)} END AS first_byte,
     CASE WHEN length(h) = 0 THEN -1
-         ELSE {_hexpair_to_int('h', 'length(h)-1')} END AS last_byte,
-    coalesce(list_sum([{_hexpair_to_int('h', 'i')} for i in range(1, length(h)+1, 2)]), 0) AS byte_sum
+         ELSE {hex_int_sql('h', 2, 'length(h)-1')} END AS last_byte,
+    coalesce(list_sum([{hex_int_sql('h', 2, 'i')} for i in range(1, length(h)+1, 2)]), 0) AS byte_sum
   FROM hx
 )
 SELECT source, count(*) AS n_docs, CAST(sum(n_bytes) AS BIGINT) AS sum_bytes,
@@ -171,8 +164,7 @@ WITH hx AS (
 SELECT doc_id, n AS n_bytes,
   (n + {FRAME_BYTES - 1}) // {FRAME_BYTES} AS n_frames,
   ((n + {FRAME_BYTES - 1}) // {FRAME_BYTES} + {FRAME_STRIDE - 1}) // {FRAME_STRIDE} AS n_sampled,
-  CAST(coalesce(list_sum([ (16*(instr('0123456789ABCDEF', substr(h, i, 1))-1)
-                      + (instr('0123456789ABCDEF', substr(h, i+1, 1))-1))
+  CAST(coalesce(list_sum([ {hex_int_sql('h', 2, 'i')}
                      for i in range(1, length(h)+1, 2)
                      if ((((i-1)//2) // {FRAME_BYTES}) % {FRAME_STRIDE} = 0) ]), 0) AS BIGINT) AS sampled_sum
 FROM hx
@@ -237,7 +229,7 @@ WITH hx AS (
   SELECT doc_id, (unnest(range(1, least(length(h), {2 * IMG_W * IMG_H}) + 1, 2)) - 1) // 2 AS pos, h
   FROM hx
 ), px AS (
-  SELECT doc_id, pos, {_hexpair_to_int('h', '2*pos + 1')} AS b FROM bytes
+  SELECT doc_id, pos, {hex_int_sql('h', 2, '2*pos + 1')} AS b FROM bytes
 ), tiles AS (
   SELECT doc_id, {_tile_expr()} AS tile, CAST(sum(b) AS BIGINT) AS px_sum
   FROM px GROUP BY 1, 2
@@ -298,7 +290,7 @@ WITH hx AS (
   SELECT doc_id, (unnest(range(1, least(length(h), {2 * IMG_W * IMG_H}) + 1, 2)) - 1) // 2 AS pos, h
   FROM hx
 ), px AS (
-  SELECT doc_id, pos, {_hexpair_to_int('h', '2*pos + 1')} AS b FROM bytes
+  SELECT doc_id, pos, {hex_int_sql('h', 2, '2*pos + 1')} AS b FROM bytes
 ), tiles AS (
   SELECT doc_id, {_tile_expr()} AS tile, CAST(sum(b) AS BIGINT) AS px_sum
   FROM px GROUP BY 1, 2
@@ -437,7 +429,7 @@ WITH aug AS (
   SELECT doc_id, (unnest(range(1, least(length(h), {2 * IMG_W * IMG_H}) + 1, 2)) - 1) // 2 AS pos, h
   FROM hx
 ), px AS (
-  SELECT doc_id, pos, {_hexpair_to_int('h', '2*pos + 1')} AS b FROM bytes
+  SELECT doc_id, pos, {hex_int_sql('h', 2, '2*pos + 1')} AS b FROM bytes
 ), tiles AS (
   SELECT doc_id, {_tile_expr()} AS tile, CAST(sum(b) AS BIGINT) AS px_sum
   FROM px GROUP BY 1, 2
@@ -523,7 +515,7 @@ WITH hx AS (
   FROM hx
 ), samples AS (
   SELECT doc_id, pos,
-         {_hexpair_to_int('h', '2*pos + 1')} - 128 AS s
+         {hex_int_sql('h', 2, '2*pos + 1')} - 128 AS s
   FROM bytes
 ), frames AS (
   SELECT doc_id, pos // {AUDIO_FRAME} AS frame, sum(s * s) AS energy,
@@ -650,7 +642,7 @@ WITH hx AS (
   FROM hx
 ), px AS (
   SELECT doc_id, (pos * {SEG_BITS}) // n AS seg,
-         {_hexpair_to_int('h', '2*pos + 1')} AS b
+         {hex_int_sql('h', 2, '2*pos + 1')} AS b
   FROM bytes
 ), segs AS (
   SELECT doc_id, seg, CAST(sum(b) AS BIGINT) AS seg_sum FROM px GROUP BY 1, 2
@@ -749,7 +741,7 @@ WITH hx AS (
   FROM hx
 ), fe AS (
   SELECT doc_id, pos // {FRAME_BYTES} AS frame,
-         CAST(sum({_hexpair_to_int('h', '2*pos + 1')}) AS BIGINT) AS energy
+         CAST(sum({hex_int_sql('h', 2, '2*pos + 1')}) AS BIGINT) AS energy
   FROM bytes GROUP BY 1, 2
 ), flagged AS (
   SELECT doc_id, frame, energy,

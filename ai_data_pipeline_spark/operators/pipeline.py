@@ -17,6 +17,8 @@ from ai_data_pipeline_spark.functions.expressions import (
     spread,
     text_fingerprint,
     text_fingerprint_sql,
+    ws_split,
+    ws_split_sql,
 )
 from ai_data_pipeline_spark.operators.text import TOKEN_RX, TOKEN_RX_SQL
 from ai_data_pipeline_spark.registry import QueryDef
@@ -245,7 +247,7 @@ def doc_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         "lang",
-        F.size(F.split(F.col("text"), r"\s+")).alias("n_tokens"),
+        F.size(ws_split(F.col("text"))).alias("n_tokens"),
         text_fingerprint(F.col("text")).alias("fp"),
     )
     groups = d.groupBy("fp").agg(
@@ -293,7 +295,7 @@ WITH lmq AS ({LM_QUALITY_ORACLE}),
 cls AS ({CLS_SCORE_ORACLE}),
 d AS (
   SELECT doc_id, source, lang,
-         len(string_split_regex(text, '\s+')) AS n_tokens,
+         len({ws_split_sql('text')}) AS n_tokens,
          {text_fingerprint_sql("text")} AS fp
   FROM documents
 ), groups AS (

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
 from ai_data_pipeline_spark.functions import dec_sum  # canonical home; re-exported
+from ai_data_pipeline_spark.functions.expressions import WHITESPACE
 from ai_data_pipeline_spark.registry import QueryDef
 
 SESSION_GAP_US = 1800 * 1_000_000  # 30 min
@@ -234,20 +235,24 @@ FROM numbered GROUP BY user_id, session_seq
 """
 
 
+# the integer value of the "k" key in a JSON props string (group 1)
+_K_RX = rf'"k":[{WHITESPACE}]*(-?\d+)'
+
+
 def q_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured extraction from the JSON props column."""
     e = load_table(spark, sf_dir, "events")
-    k = F.regexp_extract("props", r'"k":\s*(-?\d+)', 1).cast("long")
+    k = F.regexp_extract("props", _K_RX, 1).cast("long")
     return e.groupBy("event_type").agg(
         F.sum(k).alias("sum_k"),
         F.count(F.when(k.isNotNull(), 1)).alias("n_with_k"),
     )
 
 
-Q_EVENTS_JSON_ORACLE = r"""
+Q_EVENTS_JSON_ORACLE = f"""
 SELECT event_type,
-  CAST(SUM(TRY_CAST(regexp_extract(props, '"k":\s*(-?\d+)', 1) AS BIGINT)) AS BIGINT) AS sum_k,
-  count(CASE WHEN regexp_extract(props, '"k":\s*(-?\d+)', 1) <> '' THEN 1 END) AS n_with_k
+  CAST(SUM(TRY_CAST(regexp_extract(props, '{_K_RX}', 1) AS BIGINT)) AS BIGINT) AS sum_k,
+  count(CASE WHEN regexp_extract(props, '{_K_RX}', 1) <> '' THEN 1 END) AS n_with_k
 FROM events GROUP BY event_type
 """
 

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
-from ai_data_pipeline_spark.functions.expressions import topk_per_key
+from ai_data_pipeline_spark.functions.expressions import split_sql, topk_per_key
 from ai_data_pipeline_spark.operators.similarity import (
     EMB_DIM,
     _cos_sql,
@@ -154,7 +154,7 @@ def _rrf_oracle() -> str:
 WITH terms AS (
   SELECT DISTINCT doc_id, term FROM (
     SELECT doc_id,
-           unnest(string_split_regex(lower(text), '[^a-z]+')) AS term
+           unnest({split_sql('lower(text)', '[^a-z]+')}) AS term
     FROM documents)
   WHERE length(term) >= {MIN_TERM_LEN}
 ), nd AS (

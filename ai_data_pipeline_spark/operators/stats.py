@@ -28,7 +28,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
-from ai_data_pipeline_spark.functions.expressions import hex_int, hex_int_sql
+from ai_data_pipeline_spark.functions.expressions import (
+    hex_int,
+    hex_int_sql,
+    ws_split,
+    ws_split_sql,
+)
 from ai_data_pipeline_spark.registry import QueryDef
 
 # (name, column, fixed-point scale). Moment sums and the n·sp − s·s
@@ -181,7 +186,7 @@ def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a race."""
     d = (
         load_table(spark, sf_dir, "documents")
-        .select("doc_id", F.explode(F.split(F.col("text"), r"\s+")).alias("tok"))
+        .select("doc_id", F.explode(ws_split(F.col("text"))).alias("tok"))
         .filter(F.col("tok") != "")
     )
     bucket = hex_int(F.md5(F.col("tok")), 8) % FEATURE_BUCKETS
@@ -192,7 +197,7 @@ def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 FEATURE_HASHING_ORACLE = rf"""
 WITH toks AS (
-  SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok FROM documents
+  SELECT doc_id, unnest({ws_split_sql('text')}) AS tok FROM documents
 )
 SELECT doc_id,
        ({hex_int_sql('md5(tok)', 8)} % {FEATURE_BUCKETS}) AS bucket,
@@ -282,7 +287,7 @@ def _hashed_presence(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         (F.col("lang") == "en").cast("int").alias("y"),
-        F.explode(F.split(F.col("text"), r"\s+")).alias("tok"),
+        F.explode(ws_split(F.col("text"))).alias("tok"),
     ).filter(F.col("tok") != "")
     bucket = hex_int(F.md5(F.col("tok")), 8) % FEATURE_BUCKETS
     return d.select("doc_id", "lang", "y", bucket.alias("bucket")).distinct()
@@ -368,7 +373,7 @@ CLS_PRES_DUCK = rf"""
          CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
          ({hex_int_sql('md5(tok)', 8)}
             % {FEATURE_BUCKETS}) AS bucket
-  FROM (SELECT doc_id, lang, unnest(string_split_regex(text, '\s+')) AS tok
+  FROM (SELECT doc_id, lang, unnest({ws_split_sql('text')}) AS tok
         FROM documents)
   WHERE tok <> ''
 """

@@ -8,8 +8,9 @@ Cross-engine exactness: integer counts + decimal-exact ratios.
 
 This module imports no other operator module, so it also holds the
 front end every document operator shares: ``token_arrays`` (the one
-whitespace tokenization of ``documents``) and ``word_ngrams`` (the one
-sliding word-n-gram expression over it).
+whitespace tokenization of ``documents``, with ``TOKEN_ARRAYS_SQL`` its
+DuckDB twin) and ``word_ngrams`` (the one sliding word-n-gram expression
+over it).
 """
 
 from __future__ import annotations
@@ -19,9 +20,12 @@ from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
 from ai_data_pipeline_spark.functions.expressions import (
+    split_sql,
     spread,
     text_fingerprint,
     text_fingerprint_sql,
+    ws_split,
+    ws_split_sql,
 )
 from ai_data_pipeline_spark.registry import QueryDef
 from ai_data_pipeline_spark.session import session_scoped_cache
@@ -40,7 +44,7 @@ TOKEN_RX_SQL = TOKEN_RX.replace("'", "''")  # SQL-literal-escaped
 
 
 def token_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``(doc_id, l)`` with ``l = split(text, '\\s+')``: the whitespace
+    """``(doc_id, l)`` with ``l = ws_split(text)``: the whitespace
     tokens of ``documents``, spread and localCheckpointed once per
     (session, sf_dir) and read by every word-n-gram, chunking and
     vocabulary operator — the shared intermediate a curation pipeline
@@ -57,10 +61,14 @@ def token_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     if sf_dir not in cache:
         cache[sf_dir] = spread(
             load_table(spark, sf_dir, "documents").select(
-                "doc_id", F.split(F.col("text"), r"\s+").alias("l")
+                "doc_id", ws_split(F.col("text")).alias("l")
             )
         ).localCheckpoint()
     return cache[sf_dir]
+
+
+# DuckDB twin of ``token_arrays`` (without the spread and checkpoint).
+TOKEN_ARRAYS_SQL = f"SELECT doc_id, {ws_split_sql('text')} AS l FROM documents"
 
 
 def word_ngrams(n: int) -> str:
@@ -100,7 +108,7 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic quality score — aggregated per (lang, source)."""
     d = spread(load_table(spark, sf_dir, "documents"))
     n_tokens = F.regexp_count(F.col("text"), F.lit(TOKEN_RX))
-    n_ws = F.size(F.split(F.col("text"), r"\s+"))
+    n_ws = F.size(ws_split(F.col("text")))
     n_punct = F.length(F.regexp_replace("text", r"[^.,;:!?]", ""))
     stop_en = _stopword_count_expr("text", LANG_STOPWORDS["en"])
     per_doc = d.select(
@@ -133,7 +141,7 @@ WITH per_doc AS (
   SELECT doc_id, lang, source,
     length(text) AS n_chars_m,
     len(regexp_extract_all(text, '{TOKEN_RX_SQL}', 0)) AS n_tokens,
-    len(regexp_split_to_array(text, '\s+')) AS n_ws_tokens,
+    len({ws_split_sql('text')}) AS n_ws_tokens,
     length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS n_punct,
     {stop} AS n_stop_en
   FROM documents
@@ -297,7 +305,7 @@ def winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 WINNOW_ORACLE = rf"""
 WITH toks AS (
-  SELECT doc_id, string_split_regex(text, '\s+') AS l FROM documents
+  {TOKEN_ARRAYS_SQL}
 ), grams AS (
   SELECT doc_id, i - 1 AS pos,
          md5(array_to_string(l[i:i+{WINNOW_K - 1}], ' ')) AS h
@@ -356,7 +364,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TFIDF_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z]+')) AS term
+  SELECT doc_id, unnest({split_sql('lower(text)', '[^a-z]+')}) AS term
   FROM documents
 ), tf AS (
   SELECT doc_id, term, count(*) AS tf FROM toks
@@ -404,7 +412,7 @@ def vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 VOCAB_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z]+')) AS term
+  SELECT doc_id, unnest({split_sql('lower(text)', '[^a-z]+')}) AS term
   FROM documents
 ), vocab AS (
   SELECT term, count(*) AS total_tf, count(DISTINCT doc_id) AS doc_freq
@@ -614,7 +622,7 @@ def _vocab_coverage_oracle() -> str:
     ks = ", ".join(str(k) for k in COVERAGE_KS)
     return f"""
 WITH toks AS (
-  SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS term
+  SELECT unnest({split_sql('lower(text)', '[^a-z]+')}) AS term
   FROM documents
 ), tf AS (
   SELECT term, count(*) AS tf FROM toks WHERE term <> '' GROUP BY term
@@ -718,7 +726,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BM25_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z]+')) AS term
+  SELECT doc_id, unnest({split_sql('lower(text)', '[^a-z]+')}) AS term
   FROM documents
 ), ft AS (
   SELECT doc_id, term FROM toks WHERE length(term) >= {MIN_TERM_LEN}

@@ -63,6 +63,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
 from ai_data_pipeline_spark.catalog import load_table
+from ai_data_pipeline_spark.functions.expressions import ws_split, ws_split_sql
 from ai_data_pipeline_spark.operators.text import token_arrays
 from ai_data_pipeline_spark.registry import QueryDef
 from ai_data_pipeline_spark.session import session_scoped_cache
@@ -289,7 +290,7 @@ def corpus_unigram_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = load_table(spark, sf_dir, "documents")
     lw = (
-        d.select("lang", F.explode(F.split(F.col("text"), r"\s+")).alias("w"))
+        d.select("lang", F.explode(ws_split(F.col("text"))).alias("w"))
         .filter((F.length("w") >= 1) & (F.length("w") <= UNI_MAX_WORD))
         .groupBy("lang", "w")
         .agg(F.count(F.lit(1)).alias("f"))
@@ -573,7 +574,7 @@ def corpus_unigram_converge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _WF_SQL = rf"""
   SELECT w, count(*) AS f FROM (
-    SELECT unnest(string_split_regex(text, '\s+')) AS w FROM documents
+    SELECT unnest({ws_split_sql('text')}) AS w FROM documents
   ) WHERE len(w) >= 1 AND len(w) <= {UNI_MAX_WORD} GROUP BY w
 """
 
@@ -737,7 +738,7 @@ def _apply_oracle() -> str:
 {_viterbi_sql("vp2", "wf", "rec2", "walk2").lstrip()},
 lw AS (
   SELECT lang, w, count(*) AS f FROM (
-    SELECT lang, unnest(string_split_regex(text, '\s+')) AS w FROM documents
+    SELECT lang, unnest({ws_split_sql('text')}) AS w FROM documents
   ) WHERE len(w) >= 1 AND len(w) <= {UNI_MAX_WORD} GROUP BY lang, w
 ),
 wdk AS (

@@ -36,6 +36,8 @@ from __future__ import annotations
 
 import re
 
+from ai_data_pipeline_spark.functions.expressions import WHITESPACE
+
 # --------------------------------------------------------------------------
 # Semantic types
 # --------------------------------------------------------------------------
@@ -61,6 +63,9 @@ PII_ORDER = {PII_NONE: 0, PII_LOW: 1, PII_MEDIUM: 2, PII_HIGH: 3}
 # Patterns: (semantic_type, pattern_name, regex)
 # --------------------------------------------------------------------------
 
+# one phone-number separator: a whitespace character, hyphen or dot
+_SEP = rf"[{WHITESPACE}\-\.]"
+
 PATTERNS: list[tuple[str, str, str]] = [
     (EMAIL, "email_std", r"(?i)^[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}$"),
     # the reference's SECOND, looser email shape (pattern_classifier.py:29)
@@ -73,9 +78,9 @@ PATTERNS: list[tuple[str, str, str]] = [
     (DATE, "date_iso_slash", r"^\d{4}/\d{1,2}/\d{1,2}$"),
     (DATE, "datetime_iso", r"^\d{4}-\d{2}-\d{2}[ T]\d{2}:\d{2}(:\d{2})?(\.\d+)?$"),
     (DATE, "date_monthname", r"(?i)^[a-z]{3,9}\.? \d{1,2},? \d{4}$"),
-    (PHONE, "phone_nanp", r"^(\+?\d{1,2}[\s\-\.])?(\(\d{3}\)[\s\-\.]?|\d{3}[\s\-\.])?\d{3}[\s\-\.]\d{4}$"),
+    (PHONE, "phone_nanp", rf"^(\+?\d{{1,2}}{_SEP})?(\(\d{{3}}\){_SEP}?|\d{{3}}{_SEP})?\d{{3}}{_SEP}\d{{4}}$"),
     (PHONE, "phone_intl", r"^\+\d{7,15}$"),
-    (PHONE, "phone_loose", r"^\+?[\d\s\-\(\)\.]{10,18}$"),
+    (PHONE, "phone_loose", rf"^\+?[\d{WHITESPACE}\-\(\)\.]{{10,18}}$"),
     (NUMERIC, "num_int", r"^-?\d+$"),
     (NUMERIC, "num_dec", r"^-?(\d+\.\d*|\.\d+)$"),
     (NUMERIC, "num_sci", r"(?i)^-?\d+(\.\d+)?e[+-]?\d+$"),

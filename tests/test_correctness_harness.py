@@ -59,10 +59,11 @@ def test_coverage_doc_names_every_contract_query():
 
 
 def test_key_hash_twins_agree_across_engines(spark):
-    """Each key-hash builder and its DuckDB twin give the same value on
-    crafted rows: whitespace that the corpus never holds (\\x0B is in
-    Java's \\s but not in DuckDB's), and hex prefixes at every width
-    both engines can parse."""
+    """Each key-hash and tokenizer builder and its DuckDB twin give the
+    same value on crafted rows, and so does every profile pattern under
+    ``rlike`` / ``regexp_matches``: whitespace that the corpus never
+    holds (\\x0B is in Java's \\s but not in DuckDB's), and hex prefixes
+    at every width both engines can parse."""
     import hashlib
 
     import duckdb
@@ -73,7 +74,11 @@ def test_key_hash_twins_agree_across_engines(spark):
         hex_int_sql,
         text_fingerprint,
         text_fingerprint_sql,
+        ws_split,
+        ws_split_sql,
     )
+    from ai_data_pipeline_spark.profiling.oracle import _sq
+    from ai_data_pipeline_spark.profiling.patterns import PATTERNS
 
     texts = [
         "a\x0bb",
@@ -86,6 +91,9 @@ def test_key_hash_twins_agree_across_engines(spark):
         "  Mixed \t\x0b CASE\r\n text  ",
         "x\x0b\x0b\x0by",
         "",
+        "a\x0bb c",
+        " a  b ",
+        "555\x0b123-4567",
     ]
     hexes = [hashlib.md5(t.encode()).hexdigest() for t in texts]
     hexes += ["f" * 32, "0" * 32, "0123456789abcdef" * 2]
@@ -96,16 +104,23 @@ def test_key_hash_twins_agree_across_engines(spark):
     con.executemany("INSERT INTO t VALUES (?, ?)", list(enumerate(texts)))
     con.execute("CREATE TABLE h (i INTEGER, h VARCHAR)")
     con.executemany("INSERT INTO h VALUES (?, ?)", list(enumerate(hexes)))
-    duck_fp = con.execute(
-        f"SELECT i, {text_fingerprint_sql('text')} FROM t ORDER BY i"
+    matches = ", ".join(f"regexp_matches(text, {_sq(rx)})" for _, _, rx in PATTERNS)
+    duck_txt = con.execute(
+        f"SELECT i, {text_fingerprint_sql('text')}, {ws_split_sql('text')},"
+        f" {matches} FROM t ORDER BY i"
     ).fetchall()
     hex_cols = ", ".join(hex_int_sql("h", n, start) for n, start in widths)
     duck_hex = con.execute(f"SELECT i, {hex_cols} FROM h ORDER BY i").fetchall()
     con.close()
 
-    spark_fp = (
+    spark_txt = (
         spark.createDataFrame(list(enumerate(texts)), "i int, text string")
-        .select("i", text_fingerprint(F.col("text")))
+        .select(
+            "i",
+            text_fingerprint(F.col("text")),
+            ws_split(F.col("text")),
+            *[F.col("text").rlike(rx) for _, _, rx in PATTERNS],
+        )
         .orderBy("i")
         .collect()
     )
@@ -116,8 +131,13 @@ def test_key_hash_twins_agree_across_engines(spark):
         .collect()
     )
 
-    assert [tuple(r) for r in spark_fp] == duck_fp
-    assert duck_fp[0][1] == duck_fp[1][1]  # \x0B collapses like a space
+    assert [tuple(r) for r in spark_txt] == duck_txt
+    assert duck_txt[0][1] == duck_txt[1][1]  # \x0B collapses like a space
+    by_text = dict(zip(texts, duck_txt))
+    assert by_text["a\x0bb c"][2] == ["a", "b", "c"]
+    assert by_text[" a  b "][2] == ["", "a", "b", ""]
+    nanp = 3 + [name for _, name, _ in PATTERNS].index("phone_nanp")
+    assert by_text["555\x0b123-4567"][nanp] is True
     expected = [
         (i, *[int(h[start - 1 : start - 1 + n], 16) for n, start in widths])
         for i, h in enumerate(hexes)

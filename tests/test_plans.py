@@ -1715,15 +1715,34 @@ def test_spread_is_the_only_parallelism_repartition():
 def test_key_hash_is_spelled_only_in_expressions():
     """The cross-engine key-hash contract lives in one place: no module
     but functions/expressions.py parses a hex prefix (``F.conv(``,
-    ``conv(substring``, ``'0x' ||``) or spells the text-fingerprint
-    normalization (``regexp_replace(…trim(…lower``)."""
+    ``conv(substring``, ``'0x' ||``, a hex-digit ``instr`` lookup) or
+    spells the text-fingerprint normalization
+    (``regexp_replace(…trim(…lower``)."""
     import pathlib
     import re
 
     spelled = re.compile(
-        r"F\.conv\(|conv\(substring|'0x' \|\||"
+        r"F\.conv\(|conv\(substring|'0x' \|\||instr\('0123456789ABCDEF'|"
         r"regexp_replace\(\s*(?:F\.)?trim\(\s*(?:F\.)?lower"
     )
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "ai_data_pipeline_spark"
+    offenders = [
+        path.relative_to(pkg).as_posix()
+        for path in sorted(pkg.rglob("*.py"))
+        if spelled.search(path.read_text())
+    ]
+    assert offenders == ["functions/expressions.py"]
+
+
+def test_whitespace_is_spelled_only_in_expressions():
+    """What counts as whitespace is decided in one place: no module but
+    functions/expressions.py holds a regex ``\\s`` (Java's includes
+    \\x0B, DuckDB's does not) or calls DuckDB's split
+    (``string_split_regex(``, ``regexp_split_to_array(``)."""
+    import pathlib
+    import re
+
+    spelled = re.compile(r"\\s|string_split_regex\(|regexp_split_to_array\(")
     pkg = pathlib.Path(__file__).resolve().parent.parent / "ai_data_pipeline_spark"
     offenders = [
         path.relative_to(pkg).as_posix()
