@@ -19,7 +19,9 @@ Spark ``Column`` with its DuckDB SQL twin beside it (``hex_int`` /
 
 Tokenization: whitespace is the one class ``WHITESPACE`` in every
 cross-engine regex, and text becomes whitespace tokens only through
-``ws_split`` / ``ws_split_sql``; ``split_sql`` is the one DuckDB split.
+``ws_split`` / ``ws_split_sql`` and lowercase-letter terms only through
+``term_split`` / ``term_split_sql``; ``split_sql`` is the one DuckDB
+split.
 """
 
 from __future__ import annotations
@@ -76,6 +78,25 @@ def ws_split(col: Column) -> Column:
 def ws_split_sql(col: str) -> str:
     """DuckDB twin of ``ws_split``."""
     return split_sql(col, WHITESPACE_RUN)
+
+
+# a term is a run of lowercase letters a-z, after lowercasing
+TERM_BREAK = "[^a-z]+"
+
+
+def term_split(col: str, nonempty: bool = False) -> Column:
+    """The terms of the text in SQL column ``col``: lowercased, split on
+    runs of ``TERM_BREAK``. Like ``ws_split`` both engines keep the empty
+    end tokens (``'Hi, you!'`` gives ``['hi', 'you', '']``) unless
+    ``nonempty`` filters them out. Written as SQL text, as its twin is."""
+    terms = f"split(lower({col}), '{TERM_BREAK}')"
+    return F.expr(f"filter({terms}, t -> t <> '')" if nonempty else terms)
+
+
+def term_split_sql(col: str, nonempty: bool = False) -> str:
+    """DuckDB twin of ``term_split``."""
+    terms = split_sql(f"lower({col})", TERM_BREAK)
+    return f"list_filter({terms}, t -> t <> '')" if nonempty else terms
 
 
 def dec_sum(col: Column, scale: int = 4) -> Column:

@@ -33,7 +33,8 @@ from ai_data_pipeline_spark.catalog import load_table
 from ai_data_pipeline_spark.functions.expressions import (
     hex_int,
     hex_int_sql,
-    split_sql,
+    term_split,
+    term_split_sql,
     ws_split,
     ws_split_sql,
 )
@@ -1287,7 +1288,7 @@ def _lm_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     substring_index recover the context unambiguously)."""
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.expr(r"filter(split(lower(text), '[^a-z]+'), t -> t <> '')").alias("l"),
+        term_split("text", nonempty=True).alias("l"),
     )
     return d.select("doc_id", F.explode(F.expr(_LM_BIGRAMS_SPARK)).alias("bg"))
 
@@ -1295,8 +1296,7 @@ def _lm_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LM_BG_DUCK = rf"""
   SELECT doc_id, unnest([l[i] || ' ' || l[i+1] for i in range(1, len(l))]) AS bg
   FROM (SELECT doc_id,
-               list_filter({split_sql('lower(text)', '[^a-z]+')},
-                           t -> t <> '') AS l
+               {term_split_sql('text', nonempty=True)} AS l
         FROM documents)
 """
 
@@ -1396,11 +1396,7 @@ def corpus_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % LM_HOLD_MOD != 0)
-        .select(
-            F.explode(
-                F.expr(r"filter(split(lower(text), '[^a-z]+'), t -> t <> '')")
-            ).alias("tok")
-        )
+        .select(F.explode(term_split("text", nonempty=True)).alias("tok"))
         .agg(F.countDistinct("tok").alias("v"))
     )
     surp = F.greatest(
@@ -1445,8 +1441,7 @@ ctx AS (
 ),
 vocab AS (
   SELECT count(DISTINCT tok) AS v FROM (
-    SELECT unnest(list_filter({split_sql('lower(text)', '[^a-z]+')},
-                              t -> t <> '')) AS tok
+    SELECT unnest({term_split_sql('text', nonempty=True)}) AS tok
     FROM documents WHERE doc_id % {LM_HOLD_MOD} <> 0)
 ),
 scored AS (

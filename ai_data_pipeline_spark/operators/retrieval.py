@@ -40,9 +40,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
-from ai_data_pipeline_spark.functions.expressions import split_sql, topk_per_key
+from ai_data_pipeline_spark.functions.expressions import (
+    term_split,
+    term_split_sql,
+    topk_per_key,
+)
 from ai_data_pipeline_spark.operators.similarity import (
-    EMB_DIM,
     _cos_sql,
     _cosine_udf,
 )
@@ -63,7 +66,7 @@ def _doc_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents")
         .select(
             "doc_id",
-            F.explode(F.split(F.lower(F.col("text")), "[^a-z]+")).alias("term"),
+            F.explode(term_split("text")).alias("term"),
         )
         .filter(F.length("term") >= MIN_TERM_LEN)
         .distinct()
@@ -154,7 +157,7 @@ def _rrf_oracle() -> str:
 WITH terms AS (
   SELECT DISTINCT doc_id, term FROM (
     SELECT doc_id,
-           unnest({split_sql('lower(text)', '[^a-z]+')}) AS term
+           unnest({term_split_sql('text')}) AS term
     FROM documents)
   WHERE length(term) >= {MIN_TERM_LEN}
 ), nd AS (

@@ -48,11 +48,3 @@ def salted_join(
     )
     return salted_big.join(salted_small, cond, how).drop(SALT_COL)
 
-
-def salted_count(df: DataFrame, key: str, n_salt: int = 16, seed: int = 42) -> DataFrame:
-    """Two-phase aggregation for a skewed groupBy key: partial counts on
-    (key, salt), then final on key — the map-side combine pattern made
-    explicit when a single key's partial state overwhelms one reducer."""
-    salted = df.withColumn(SALT_COL, F.floor(F.rand(seed) * n_salt).cast("int"))
-    partial = salted.groupBy(key, SALT_COL).agg(F.count(F.lit(1)).alias("_c"))
-    return partial.groupBy(key).agg(F.sum("_c").alias("n"))

@@ -20,8 +20,9 @@ from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import load_table
 from ai_data_pipeline_spark.functions.expressions import (
-    split_sql,
     spread,
+    term_split,
+    term_split_sql,
     text_fingerprint,
     text_fingerprint_sql,
     ws_split,
@@ -345,7 +346,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     terms = d.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.col("text")), "[^a-z]+")).alias("term"),
+        F.explode(term_split("text")).alias("term"),
     ).filter(F.length("term") >= MIN_TERM_LEN)
     tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -364,7 +365,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TFIDF_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, unnest({split_sql('lower(text)', '[^a-z]+')}) AS term
+  SELECT doc_id, unnest({term_split_sql('text')}) AS term
   FROM documents
 ), tf AS (
   SELECT doc_id, term, count(*) AS tf FROM toks
@@ -394,7 +395,7 @@ def vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     terms = d.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.col("text")), "[^a-z]+")).alias("term"),
+        F.explode(term_split("text")).alias("term"),
     ).filter(F.col("term") != "")
     vocab = terms.groupBy("term").agg(
         F.count(F.lit(1)).alias("total_tf"),
@@ -412,7 +413,7 @@ def vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 VOCAB_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, unnest({split_sql('lower(text)', '[^a-z]+')}) AS term
+  SELECT doc_id, unnest({term_split_sql('text')}) AS term
   FROM documents
 ), vocab AS (
   SELECT term, count(*) AS total_tf, count(DISTINCT doc_id) AS doc_freq
@@ -580,7 +581,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     over those max(k)=2000 rows. The grand total broadcasts."""
     d = load_table(spark, sf_dir, "documents")
     terms = d.select(
-        F.explode(F.split(F.lower(F.col("text")), "[^a-z]+")).alias("term")
+        F.explode(term_split("text")).alias("term")
     ).filter(F.col("term") != "")
     tf = terms.groupBy("term").agg(F.count(F.lit(1)).alias("tf"))
     totals = tf.agg(
@@ -622,7 +623,7 @@ def _vocab_coverage_oracle() -> str:
     ks = ", ".join(str(k) for k in COVERAGE_KS)
     return f"""
 WITH toks AS (
-  SELECT unnest({split_sql('lower(text)', '[^a-z]+')}) AS term
+  SELECT unnest({term_split_sql('text')}) AS term
   FROM documents
 ), tf AS (
   SELECT term, count(*) AS tf FROM toks WHERE term <> '' GROUP BY term
@@ -683,7 +684,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     terms = d.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.col("text")), "[^a-z]+")).alias("term"),
+        F.explode(term_split("text")).alias("term"),
     ).filter(F.length("term") >= MIN_TERM_LEN)
     tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dl = terms.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
@@ -726,7 +727,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BM25_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, unnest({split_sql('lower(text)', '[^a-z]+')}) AS term
+  SELECT doc_id, unnest({term_split_sql('text')}) AS term
   FROM documents
 ), ft AS (
   SELECT doc_id, term FROM toks WHERE length(term) >= {MIN_TERM_LEN}

@@ -41,6 +41,14 @@ def _sq(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
 
 
+def spark_sq(s: str) -> str:
+    """Spark SQL twin of ``_sq``: Spark unescapes backslashes in string
+    literals (``'^\\d+$'`` would parse as ``^d+$``) and DuckDB does not,
+    so a literal that may hold one (a regex, a column name) doubles
+    them."""
+    return _sq(s.replace("\\", "\\\\"))
+
+
 def matched_sql(semantic_type: str) -> str:
     """ANY single pattern of this type matched >= 80% of non-null values
     (pattern_classifier.py:149-154)."""

@@ -13,7 +13,10 @@ from ai_data_pipeline_spark.profiling.cascade import _sq
 from ai_data_pipeline_spark.profiling.profiler import SAMPLE_N, SAMPLE_TRUNC
 
 
-def duck_render(col: str, kind: str) -> str | None:
+def duck_render(col: str, kind: str) -> str:
+    """The matching rendering of ``col`` — what the regexes and the
+    sample see; its Spark twin is ``profiler.render_sql``. A non-scalar
+    column renders as NULL: it adds no pattern hit and no sample."""
     if kind == "string":
         return col
     if kind in ("int", "long", "double", "boolean"):
@@ -22,12 +25,10 @@ def duck_render(col: str, kind: str) -> str | None:
         return f"strftime({col}, '%Y-%m-%d %H:%M:%S')"
     if kind == "date":
         return f"strftime({col}, '%Y-%m-%d')"
-    return None
+    return "CAST(NULL AS VARCHAR)"
 
 
 def _col_stats_sql(table: str, col: str, kind: str) -> str:
-    rend = duck_render(col, kind)
-    scalar = rend is not None
     lits = {
         k: _sq(v) if isinstance(v, str) else str(v)
         for k, v in P.name_literals(col, kind).items()
@@ -38,25 +39,19 @@ def _col_stats_sql(table: str, col: str, kind: str) -> str:
         "count(*) AS n_total",
         f"count({col}) AS n_nonnull",
         f"count(DISTINCT {col}) AS n_distinct",
+        *[
+            f"count(*) FILTER (WHERE regexp_matches(render, {_sq(rx)})) AS h_{name}"
+            for _, name, rx in P.PATTERNS
+        ],
+        "coalesce(array_to_string(list_slice(list_sort("
+        f"array_agg(DISTINCT substr(render, 1, {SAMPLE_TRUNC})) "
+        f"FILTER (WHERE render IS NOT NULL)), 1, {SAMPLE_N}), ','), '') AS sample_values",
+        *[f"{v} AS {k}" for k, v in lits.items()],
     ]
-    for pname, rx in ((n, x) for _, n, x in P.PATTERNS):
-        if scalar:
-            sel.append(
-                f"count(*) FILTER (WHERE regexp_matches(render, {_sq(rx)})) AS h_{pname}"
-            )
-        else:
-            sel.append(f"CAST(NULL AS BIGINT) AS h_{pname}")
-    if scalar:
-        sel.append(
-            "coalesce(array_to_string(list_slice(list_sort("
-            f"array_agg(DISTINCT substr(render, 1, {SAMPLE_TRUNC})) "
-            f"FILTER (WHERE render IS NOT NULL)), 1, {SAMPLE_N}), ','), '') AS sample_values"
-        )
-    else:
-        sel.append("'' AS sample_values")
-    sel += [f"{v} AS {k}" for k, v in lits.items()]
-    src = f"(SELECT {col}, {rend} AS render FROM {table}) __t" if scalar else table
-    return "SELECT " + ", ".join(sel) + f" FROM {src}"
+    return (
+        "SELECT " + ", ".join(sel)
+        + f" FROM (SELECT {col}, {duck_render(col, kind)} AS render FROM {table}) __t"
+    )
 
 
 def profile_oracle_sql(table: str, columns: list[tuple[str, str]]) -> str:

@@ -96,17 +96,13 @@ PATTERNS: list[tuple[str, str, str]] = [
     # extension beyond the reference: single-letter t/f renderings
     # (reference would profile such a column as text)
     (BOOLEAN, "bool_t_f", r"(?i)^(t|f)$"),
-    # identifier patterns exist but are NOT in the claim loop (parity with
-    # pattern_classifier.py:146-147 which skips IDENTIFIER; identifiers are
-    # claimed by the name+uniqueness heuristic).
-    (IDENTIFIER, "id_uuid", r"(?i)^[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}$"),
-    (IDENTIFIER, "id_prefix_num", r"^[A-Z]{2,5}[-_]?\d{2,10}$"),
+    # no identifier patterns: parity with pattern_classifier.py:146-147,
+    # whose claim loop skips IDENTIFIER — identifiers are claimed by the
+    # name+uniqueness heuristic (cascade.py), so a uuid or prefixed-number
+    # pattern sum would be computed and never read.
     # business-key code shapes (pattern_classifier.py:205)
     (BUSINESS_KEY, "bk_code", r"^([A-Z]{2,4}|[A-Z][0-9]{1,3})$"),
 ]
-
-PATTERN_NAMES = [name for _, name, _ in PATTERNS]
-
 
 def patterns_of(semantic_type: str) -> list[tuple[str, str]]:
     return [(name, rx) for typ, name, rx in PATTERNS if typ == semantic_type]

@@ -2,21 +2,25 @@
 
 Re-expresses the reference's per-column pandas loops
 (pattern_classifier.py:110-137 / base.py:121-152) as one melt and one
-two-level aggregation over every profiled table:
+two-level aggregation over every column of every profiled table, each
+built from SQL text the way the cascade is:
 
-    melt:    each table's scalar columns → (cid, lossless rendering) rows,
-             cid a global column id                      [map-side]
+    melt:    every column of every kind → (cid, lossless rendering)
+             rows, cid a global column id                [map-side]
     level 1: groupBy(cid, render_l) count               [shuffle 1]
     level 2: groupBy(cid): counts, distinct count, one
              weighted regex-hit count per pattern (21),
              sorted sample                               [shuffle 2]
 
 No per-column passes, no driver-side data loops: what leaves the
-executors is one small stats row per column. Vector/binary columns have
-no string rendering; each table holding them adds one wide aggregate.
-The stats rows then pick up their name literals from a literal array
-indexed by cid, and the cascade runs on them as the same SQL expression
-strings the DuckDB oracle uses (cascade.py).
+executors is one small stats row per column. Vector, binary and other
+non-scalar columns melt like the rest — their rendering counts their
+distinct values — but match no pattern and give no sample. The stats
+rows then pick up their name literals from one literal array indexed
+by cid, and the cascade runs on them as the same SQL expression strings
+the DuckDB oracle uses (cascade.py). Since every piece is SQL text, a
+plan build sends a few hundred py4j commands whatever the column count,
+not one Column-API round trip per column and pattern.
 
 Scale notes (100 TB posture):
 - The scan is columnar parquet; Catalyst prunes to exactly the profiled
@@ -31,15 +35,17 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ai_data_pipeline_spark.functions import spread
 from ai_data_pipeline_spark.profiling import cascade, patterns as P
+from ai_data_pipeline_spark.profiling.cascade import spark_sq
 
 SAMPLE_TRUNC = 40
 SAMPLE_N = 5
+SCALAR_KINDS = ("string", "int", "long", "double", "boolean", "timestamp", "date")
 
 
 def kind_of(dtype: T.DataType) -> str:
@@ -60,82 +66,78 @@ def kind_of(dtype: T.DataType) -> str:
         return "date"
     if isinstance(dtype, T.StringType):
         return "string"
-    if isinstance(dtype, T.ArrayType):
+    if isinstance(dtype, T.ArrayType) and isinstance(dtype.elementType, T.NumericType):
         return "vector"
     if isinstance(dtype, T.BinaryType):
         return "binary"
     return "other"
 
 
-def _qcol(name: str) -> Column:
-    """Backtick-quoted column reference: profiled inputs are arbitrary
-    uploads, so names may contain dots/spaces that F.col would otherwise
-    parse as struct access (op35 robustness)."""
-    return F.col("`" + name.replace("`", "``") + "`")
+def render_sql(col: str, kind: str) -> str:
+    """Lossless Spark SQL rendering of column ``col`` of ``kind``: the
+    melted string. Distinct renderings are distinct values, so
+    ``count(DISTINCT col)`` is a count of level-1 groups. Its DuckDB twin
+    is ``oracle.duck_render``, which gives the *matching* rendering
+    (what the regexes and the sample see); level 2 recovers that from
+    this one by truncating timestamps to their first 19 characters and
+    by dropping every non-scalar kind to NULL.
 
+    - Scalar kinds agree byte for byte with ``duck_render``: a plain cast
+      for ints, doubles and booleans, explicit formatting for dates and
+      timestamps (microsecond precision here, Spark's resolution).
+      Known divergence: Java renders doubles with |x| >= 1e7 and with
+      0 < |x| < 1e-3 in scientific notation where DuckDB does not
+      (12345678.5 is ``1.23456785E7`` vs ``12345678.5``; 0.0005 is
+      ``5.0E-4`` vs ``0.0005``). Both ranges change the pattern hit
+      counts and ``sample_values`` of such a column, not only its
+      pattern ratios; the fix is ROADMAP.md open item 7.
+    - Vectors add a float zero to each element, which folds -0.0 into
+      0.0, and every NaN renders as ``NaN``: the distinct count is the
+      one ``count(DISTINCT array<float>)`` gives in Spark and DuckDB.
+    - Binary renders as ``hex``. Any other type (maps, structs,
+      intervals, arrays of non-numbers) renders as the JSON of a
+      one-field struct, which ``to_json`` writes for every type.
 
-def render_expr(col: str, kind: str) -> Column | None:
-    """String rendering used for pattern matching — the Spark analogue of
-    the reference's ``sample.astype(str)`` (pattern_classifier.py:73).
-
-    Renderings are chosen to agree byte-for-byte with the DuckDB oracle's
-    (oracle.py): plain cast for ints/doubles/bools, explicit second-
-    precision formatting for timestamps. Known divergence, open: Java
-    renders doubles with |x| >= 1e7 AND with 0 < |x| < 1e-3 in
-    scientific notation where DuckDB does not (12345678.5 is
-    ``1.23456785E7`` vs ``12345678.5``; 0.0005 is ``5.0E-4`` vs
-    ``0.0005``). Both ranges change the pattern hit counts and
-    ``sample_values`` of such a column, not only its pattern ratios;
-    the fix is ROADMAP.md open item 5.
+    The name is backtick-quoted: profiled inputs are arbitrary uploads,
+    whose names may hold dots, spaces or backticks.
     """
-    c = _qcol(col)
+    c = "`" + col.replace("`", "``") + "`"
     if kind == "string":
         return c
     if kind in ("int", "long", "double", "boolean"):
-        return c.cast("string")
+        return f"CAST({c} AS STRING)"
     if kind == "timestamp":
-        return F.date_format(c, "yyyy-MM-dd HH:mm:ss")
+        return f"date_format({c}, 'yyyy-MM-dd HH:mm:ss.SSSSSS')"
     if kind == "date":
-        return F.date_format(c, "yyyy-MM-dd")
-    return None  # vector/binary/other: no string rendering
+        return f"date_format({c}, 'yyyy-MM-dd')"
+    if kind == "vector":
+        return f"CAST(transform({c}, x -> x + CAST(0 AS FLOAT)) AS STRING)"
+    if kind == "binary":
+        return f"hex({c})"
+    return f"CASE WHEN {c} IS NOT NULL THEN to_json(named_struct('v', {c})) END"
 
 
-def lossless_render_expr(col: str, kind: str) -> Column | None:
-    """Injective string rendering — distinct renderings == distinct values,
-    so ``count(distinct col)`` can be computed on the melted string stream.
-    Identical to render_expr except timestamps keep microsecond precision
-    (Spark's native resolution). The *matching* rendering is recovered from
-    it by truncation (first 19 chars for timestamps)."""
-    if kind == "timestamp":
-        return F.date_format(_qcol(col), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-    return render_expr(col, kind)
+def _melt(df: DataFrame, cols: list[tuple[int, str, str]]) -> DataFrame:
+    """One ``(cid, render_l)`` row per cell of ``df``."""
+    cells = ", ".join(
+        f"named_struct('cid', {i}, 'render_l', {render_sql(c, kind)})"
+        for i, c, kind in cols
+    )
+    # spread: CPU-bound pass over a possibly single-task scan
+    return spread(df).selectExpr(f"inline(array({cells}))")
 
 
-def _melt(df: DataFrame, scalars: list[tuple[int, str, str]]) -> DataFrame:
-    """One ``(cid, lossless_render)`` row per scalar cell of ``df``."""
-    df = spread(df)  # CPU-bound pass over a possibly single-task scan
-    return df.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("cid"),
-                        lossless_render_expr(c, kind).alias("render_l"),
-                    )
-                    for i, c, kind in scalars
-                ]
-            )
-        ).alias("p")
-    ).select("p.*")
+def _in(ids: list[int]) -> str:
+    return "cid IN (" + ", ".join(map(str, ids)) + ")"
 
 
-def _scalar_stats(
+def _stats(
     melts: list[DataFrame],
-    scalars: list[tuple[int, str, str]],
+    cols: list[tuple[int, str, str]],
     exact_distinct: bool,
 ) -> DataFrame:
-    """Stats rows of the scalar columns of every table: the two
-    aggregation levels (module docstring) over the union of the melts.
+    """Stats rows of every column of every table: the two aggregation
+    levels (module docstring) over the union of the melts.
 
     Why: regexes run on *distinct rendered values weighted by counts*, not
     on raw rows — for low-cardinality columns (flags, dates, quantities)
@@ -149,11 +151,15 @@ def _scalar_stats(
     One neutral ``(cid, NULL, 0)`` row per column joins level 1, so a
     column of an empty table still gets its stats row: a NULL rendering
     adds nothing to any sum, count, distinct count or sample.
+
+    Every aggregate is its own output column, so Catalyst prunes the
+    ones the cascade does not read.
     """
-    seed = melts[0].sparkSession.range(1).select(
-        F.explode(F.array(*[F.lit(i) for i, _, _ in scalars])).alias("cid"),
-        F.lit(None).cast("string").alias("render_l"),
-        F.lit(0).cast("long").alias("cnt"),
+    ids = ", ".join(str(i) for i, _, _ in cols)
+    seed = melts[0].sparkSession.range(1).selectExpr(
+        f"explode(array({ids})) AS cid",
+        "CAST(NULL AS STRING) AS render_l",
+        "CAST(0 AS BIGINT) AS cnt",
     )
     level1 = (
         reduce(DataFrame.union, melts)
@@ -162,71 +168,43 @@ def _scalar_stats(
         .union(seed)
     )
 
-    ts_cids = [i for i, _, kind in scalars if kind == "timestamp"]
-    render = (
-        F.when(F.col("cid").isin(ts_cids), F.substring("render_l", 1, 19)).otherwise(
-            F.col("render_l")
-        )
-        if ts_cids
-        else F.col("render_l")
+    ts = [i for i, _, kind in cols if kind == "timestamp"]
+    nonscalar = [i for i, _, kind in cols if kind not in SCALAR_KINDS]
+    cases = (f" WHEN {_in(ts)} THEN substring(render_l, 1, 19)" if ts else "") + (
+        f" WHEN {_in(nonscalar)} THEN NULL" if nonscalar else ""
     )
-    level1 = level1.withColumn("render", render)
+    render = f"CASE{cases} ELSE render_l END" if cases else "render_l"
 
+    # rsd 0.02 (~2.7k registers, a few KB/column, still mergeable): keeps
+    # the sketch within the ±5% bound the property tests pin (default
+    # 0.05 measured 6.6% off on l_shipdate at sf0.001)
     n_distinct = (
-        F.count("render_l")
-        # rsd 0.02 (~2.7k registers, a few KB/column, still mergeable):
-        # keeps the sketch within the ±5% bound the property tests pin
-        # (default 0.05 measured 6.6% off on l_shipdate at sf0.001)
-        if exact_distinct
-        else F.approx_count_distinct("render_l", 0.02)
+        "count(render_l)" if exact_distinct else "approx_count_distinct(render_l, 0.02)"
     )
     aggs = [
-        F.sum("cnt").alias("n_total"),
-        F.sum(F.when(F.col("render_l").isNotNull(), F.col("cnt")).otherwise(0)).alias(
-            "n_nonnull"
-        ),
-        n_distinct.alias("n_distinct"),
+        "sum(cnt) AS n_total",
+        "sum(CASE WHEN render_l IS NOT NULL THEN cnt ELSE 0 END) AS n_nonnull",
+        f"{n_distinct} AS n_distinct",
+        *[
+            f"sum(CASE WHEN render RLIKE {spark_sq(rx)} THEN cnt ELSE 0 END) AS h_{name}"
+            for _, name, rx in P.PATTERNS
+        ],
+        "concat_ws(',', slice(array_sort(collect_set("
+        f"substring(render, 1, {SAMPLE_TRUNC}))), 1, {SAMPLE_N})) AS sample_values",
     ]
-    for pname, rx in ((n, x) for _, n, x in P.PATTERNS):
-        aggs.append(
-            F.sum(
-                F.when(F.col("render").rlike(rx), F.col("cnt")).otherwise(0)
-            ).alias(f"h_{pname}")
-        )
-    aggs.append(
-        F.concat_ws(
-            ",",
-            F.slice(
-                F.array_sort(F.collect_set(F.substring("render", 1, SAMPLE_TRUNC))),
-                1,
-                SAMPLE_N,
-            ),
-        ).alias("sample_values")
+    return (
+        level1.selectExpr("*", f"{render} AS render")
+        .groupBy("cid")
+        .agg(*[F.expr(a) for a in aggs])
     )
-    return level1.groupBy("cid").agg(*aggs)
 
 
-def _nonscalar_stats(df: DataFrame, nonscalars: list[tuple[int, str, str]]) -> DataFrame:
-    """Counts/distincts for vector/binary columns (no string rendering):
-    one tiny wide agg, reshaped to per-cid rows."""
-    aggs = [F.count(F.lit(1)).alias("n_total")]
-    for i, c, _ in nonscalars:
-        aggs.append(F.count(_qcol(c)).alias(f"c{i}__nonnull"))
-        aggs.append(F.countDistinct(_qcol(c)).alias(f"c{i}__distinct"))
-    wide = df.agg(*aggs)
-    structs = []
-    for i, c, _ in nonscalars:
-        fields = [
-            F.lit(i).alias("cid"),
-            F.col("n_total").alias("n_total"),
-            F.col(f"c{i}__nonnull").alias("n_nonnull"),
-            F.col(f"c{i}__distinct").alias("n_distinct"),
-        ]
-        for pname in P.PATTERN_NAMES:
-            fields.append(F.lit(None).cast("long").alias(f"h_{pname}"))
-        fields.append(F.lit("").alias("sample_values"))
-        structs.append(F.struct(*fields))
-    return wide.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
+def _name_struct(table_name: str, col: str, kind: str) -> str:
+    """The name literals of one column as a Spark ``named_struct``."""
+    fields = {"table_name": table_name, **P.name_literals(col, kind)}
+    return "named_struct(" + ", ".join(
+        f"'{k}', {spark_sq(v) if isinstance(v, str) else v}" for k, v in fields.items()
+    ) + ")"
 
 
 def profile_tables(
@@ -236,28 +214,15 @@ def profile_tables(
     """Profile every column of every ``(table_name, df, columns)`` in one
     plan → one row per column: ``table_name`` then
     cascade.PROFILE_COLUMNS."""
-    names, melts, scalars, parts = [], [], [], []
+    cols, names, melts = [], [], []
     for table_name, df, columns in tables:
-        cols = [(len(names) + j, c, kind) for j, (c, kind) in enumerate(columns)]
-        names += [
-            F.struct(
-                F.lit(table_name).alias("table_name"),
-                *[F.lit(v).alias(k) for k, v in P.name_literals(c, kind).items()],
-            )
-            for _, c, kind in cols
-        ]
-        table_scalars = [x for x in cols if render_expr(x[1], x[2]) is not None]
-        nonscalars = [x for x in cols if x not in table_scalars]
-        if table_scalars:
-            melts.append(_melt(df, table_scalars))
-            scalars += table_scalars
-        if nonscalars:
-            parts.append(_nonscalar_stats(df, nonscalars))
-    if scalars:
-        parts.insert(0, _scalar_stats(melts, scalars, exact_distinct))
-    stats = reduce(DataFrame.unionByName, parts)
-    stats_rel = stats.select(
-        "*", F.element_at(F.array(*names), F.col("cid") + 1).alias("lit")
+        table_cols = [(len(cols) + j, c, kind) for j, (c, kind) in enumerate(columns)]
+        if table_cols:
+            melts.append(_melt(df, table_cols))
+        cols += table_cols
+        names += [_name_struct(table_name, c, kind) for _, c, kind in table_cols]
+    stats_rel = _stats(melts, cols, exact_distinct).selectExpr(
+        "*", f"element_at(array({', '.join(names)}), cid + 1) AS lit"
     ).select("*", "lit.*")
 
     l1 = cascade.layer1_exprs()
@@ -278,8 +243,8 @@ def profile_table(
     Output schema: cascade.PROFILE_COLUMNS. Equivalent of the reference's
     ``analyze_dataframe`` (pattern_classifier.py:110-137): the one-table
     call of profile_tables. Adaptive execution runs each shuffle stage
-    as its own Spark job: collecting the profile of a scalar-only table
-    runs 4 jobs, one with a vector column 6 (region and embeddings at
+    as its own Spark job: collecting the profile of a table runs 4 jobs,
+    with or without vector columns (region, lineitem and embeddings at
     sf0.1 on local[4]).
     """
     if columns is None:

@@ -67,24 +67,6 @@ def windowed_counts_stream(events: DataFrame, watermark: str = "10 minutes") -> 
     )
 
 
-def windowed_counts_batch(events: DataFrame) -> DataFrame:
-    """Batch-equivalent of windowed_counts_stream (same window origin:
-    Spark's window() aligns tumbling windows to the epoch)."""
-    return (
-        events.groupBy(F.window("ts", "5 minutes"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.unix_timestamp("window.start").alias("win_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
 def session_windows_stream(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Per-user session windows (inactivity gap) — streaming-native
     equivalent of the batch sessionize operator."""
@@ -157,15 +139,6 @@ def user_stats_stateful(events: DataFrame, timeout: str = "NoTimeout") -> DataFr
             outputMode="update",
             timeoutConf=timeout,
         )
-    )
-
-
-def user_stats_batch(events: DataFrame) -> DataFrame:
-    """Batch equivalent of the stateful operator's final state (counts are
-    exactly comparable; double sums compared at reduced precision)."""
-    return events.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("value").alias("sum_value"),
     )
 
 

@@ -1735,14 +1735,15 @@ def test_key_hash_is_spelled_only_in_expressions():
 
 
 def test_whitespace_is_spelled_only_in_expressions():
-    """What counts as whitespace is decided in one place: no module but
-    functions/expressions.py holds a regex ``\\s`` (Java's includes
-    \\x0B, DuckDB's does not) or calls DuckDB's split
-    (``string_split_regex(``, ``regexp_split_to_array(``)."""
+    """What counts as whitespace or as a term is decided in one place: no
+    module but functions/expressions.py holds a regex ``\\s`` (Java's
+    includes \\x0B, DuckDB's does not) or the term break ``[^a-z]``, or
+    calls DuckDB's split (``string_split_regex(``,
+    ``regexp_split_to_array(``)."""
     import pathlib
     import re
 
-    spelled = re.compile(r"\\s|string_split_regex\(|regexp_split_to_array\(")
+    spelled = re.compile(r"\\s|\[\^a-z\]|string_split_regex\(|regexp_split_to_array\(")
     pkg = pathlib.Path(__file__).resolve().parent.parent / "ai_data_pipeline_spark"
     offenders = [
         path.relative_to(pkg).as_posix()
@@ -1773,3 +1774,41 @@ def test_profile_plan_has_no_join_and_one_aggregation_for_many_tables(spark):
     keys = [re.sub(r"#\d+L?", "", k) for k in keys]
     assert keys.count("cid, render_l") == 1, plan
     assert keys.count("cid") == 1, plan
+
+
+def test_profile_plan_runs_one_rlike_per_pattern(spark):
+    """Every pattern sum the stats row carries is one the cascade reads,
+    so the optimized lineitem profile holds exactly one ``RLIKE`` per
+    pattern: none is computed and pruned, none is evaluated twice."""
+    from ai_data_pipeline_spark.catalog import TABLES
+    from ai_data_pipeline_spark.profiling.patterns import PATTERNS
+    from ai_data_pipeline_spark.profiling.profiler import profile_table
+
+    df = profile_table(load_table(spark, SF_DIR, "lineitem"), TABLES["lineitem"])
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert optimized.count("RLIKE") == len(PATTERNS), optimized
+
+
+def test_profile_build_sends_few_py4j_commands(spark):
+    """The profile plan is built from SQL text, not one Column-API round
+    trip per column and pattern: a repeat build of the customer profile
+    sends at most 500 py4j commands to the JVM."""
+    from ai_data_pipeline_spark.catalog import TABLES
+    from ai_data_pipeline_spark.profiling.profiler import profile_table
+
+    df = load_table(spark, SF_DIR, "customer")
+    profile_table(df, TABLES["customer"])
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(*args, **kwargs):
+        sent.append(1)
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        profile_table(df, TABLES["customer"])
+    finally:
+        client.send_command = send
+    assert 0 < len(sent) <= 500, len(sent)

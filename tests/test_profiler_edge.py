@@ -22,6 +22,7 @@ def test_special_character_column_names(spark):
         (F.col("id") % 2 == 0).alias("is.premium"),
         F.concat(F.lit("u"), F.col("id").cast("string")).alias("user-name"),
         F.col("id").alias("weird`tick"),
+        F.col("id").alias("back\\slash"),
     )
     p = _profiles(df)
     assert p["Customer ID"]["suggested_name"] == "customer_id"
@@ -29,6 +30,9 @@ def test_special_character_column_names(spark):
     assert p["is.premium"]["data_type"] == "boolean"
     assert p["user-name"]["suggested_name"] == "user_name"
     assert p["weird`tick"]["total_rows"] == 10
+    # Spark SQL literals unescape backslashes: the name must survive them
+    assert p["back\\slash"]["column_name"] == "back\\slash"
+    assert p["back\\slash"]["suggested_name"] == "back_slash"
 
 
 def test_onoff_column_claims_boolean(spark):
@@ -56,11 +60,14 @@ def test_loose_email_shape_claims_email(spark):
 
 def test_unprofilable_type_degrades_gracefully(spark):
     df = spark.range(10).select(
-        "id", F.create_map(F.lit("a"), F.col("id")).alias("m")
+        "id",
+        F.create_map(F.lit("a"), F.col("id")).alias("m"),
+        F.array(F.concat(F.lit("w"), F.col("id").cast("string"))).alias("words"),
     )
     p = _profiles(df)
-    assert p["m"]["total_rows"] == 10
-    assert p["m"]["data_type"] == "text"  # fallback, no pattern evidence
+    for c in ("m", "words"):  # a map, and an array that is not a vector
+        assert p[c]["total_rows"] == 10 and p[c]["unique_count"] == 10
+        assert p[c]["data_type"] == "text"  # fallback, no pattern evidence
 
 
 def test_empty_table_profiles(spark):

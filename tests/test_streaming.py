@@ -4,17 +4,45 @@ aggregation result."""
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
 from ai_data_pipeline_spark.catalog import load_table
 from ai_data_pipeline_spark.streaming.windows import (
     read_events_stream,
     run_to_completion,
     session_windows_stream,
-    user_stats_batch,
     user_stats_stateful,
-    windowed_counts_batch,
     windowed_counts_stream,
 )
 from tests.conftest import SF_DIR
+
+
+def windowed_counts_batch(events: DataFrame) -> DataFrame:
+    """Batch-equivalent of windowed_counts_stream (same window origin:
+    Spark's window() aligns tumbling windows to the epoch)."""
+    return (
+        events.groupBy(F.window("ts", "5 minutes"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
+        )
+        .select(
+            F.unix_timestamp("window.start").alias("win_start"),
+            "event_type",
+            "n_events",
+            "sum_value",
+        )
+    )
+
+
+def user_stats_batch(events: DataFrame) -> DataFrame:
+    """Batch equivalent of the stateful operator's final state (counts are
+    exactly comparable; double sums compared at reduced precision)."""
+    return events.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum("value").alias("sum_value"),
+    )
 
 
 def _sorted_rows(df):
